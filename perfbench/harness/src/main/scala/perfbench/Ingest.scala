@@ -11,14 +11,15 @@ import graft.streaming.{ChunkStoreIngest, CuratedIngest, QualityGate}
 
 /** Streaming curated ingest: an AvailableNow drain through
   * `CuratedIngest.runCuratedIngest` (quality gate → exact dedup → chunk
-  * store) over the files `run.py` generated, one file per micro-batch. Each batch reads the
-  * digest table and chunk manifest that earlier batches of the same
-  * drain wrote.
+  * store) over the files `run.py` generated, one file per micro-batch.
+  * Each batch reads the digest table and chunk manifest that earlier
+  * batches of the same drain wrote. The untimed warm-up drains the
+  * input's `warm/` files, every timed drain its `stream/` files.
   */
 object Ingest {
 
-  /** Seconds one drain takes on a 4-core host, which sizes the runs. */
-  val NominalDrainS = 10.0
+  /** Timed drains per phase. */
+  val MinDrains = 1
 
   private lazy val weights: IndexedSeq[Long] = graft.operators.TextAnalysis.classifierWeights()
 
@@ -56,7 +57,7 @@ object Ingest {
   private def phase(ctx: Ctx, src: String, listener: BatchListener, tracer: Tracer,
       label: String): (Phase, Seq[Drain]) = {
     val drains = ArrayBuffer.empty[Drain]
-    ctx.timedPasses(tracer, NominalDrainS) { p => drains += drain(ctx, src, listener, tracer, s"$label-$p") }
+    ctx.timedPasses(tracer, MinDrains) { p => drains += drain(ctx, src, listener, tracer, s"$label-$p") }
     (Phase(tracer.enabled, drains.map(_.wallS).sum, drains.flatMap(_.ops).toSeq), drains.toSeq)
   }
 
@@ -64,9 +65,9 @@ object Ingest {
     val spark = ctx.spark
     val listener = new BatchListener
     spark.streams.addListener(listener)
-    val src = ctx.input
+    val src = s"${ctx.input}/stream"
     val w0 = System.nanoTime()
-    drain(ctx, src, listener, new Tracer(false), "warm")
+    drain(ctx, s"${ctx.input}/warm", listener, new Tracer(false), "warm")
     val warmupS = (System.nanoTime() - w0) / 1e9
 
     val (untraced, untracedDrains) = phase(ctx, src, listener, new Tracer(false), "timed")

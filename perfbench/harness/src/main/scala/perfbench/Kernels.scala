@@ -12,20 +12,22 @@ import graft.functions.{sketch, text}
   */
 object Kernels {
 
-  private def bowScore = "bow_score" -> sketch.bowScore(col("text"),
-    graft.operators.TextAnalysis.classifierWeights())
+  private def bowScore = sketch.bowScore(col("text"), graft.operators.TextAnalysis.classifierWeights())
 
-  /** kernel name -> the expression as the lazy queries write it. */
-  def lazyQueries: Seq[(String, Column)] = Seq(
-    "winnow" -> sketch.winnow(col("text"), k = 8, w = 4),
-    "char_entropy_q" -> sketch.charEntropyQ(col("text")),
-    "token_max_freq" -> sketch.tokenMaxFreq(text.tokens(col("text"))),
-    bowScore,
-    "token_count" -> sketch.tokenCount(col("text")))
+  /** query -> the kernel it calls, as the query writes it. */
+  private val byQuery: Seq[(String, (String, Column))] = Seq(
+    "text_winnow" -> ("winnow" -> sketch.winnow(col("text"), k = 8, w = 4)),
+    "text_entropy" -> ("char_entropy_q" -> sketch.charEntropyQ(col("text"))),
+    "doc_repetition" -> ("token_max_freq" -> sketch.tokenMaxFreq(text.tokens(col("text")))),
+    "text_classifier" -> ("bow_score" -> bowScore),
+    "text_tokens" -> ("token_count" -> sketch.tokenCount(col("text"))))
+
+  /** The kernels the queries `names` call. */
+  def of(names: Seq[String]): Seq[(String, Column)] = byQuery.filter(q => names.contains(q._1)).map(_._2)
 
   /** The quality gate's and the chunk store's kernels, as ingest calls them. */
   def ingest: Seq[(String, Column)] = Seq(
-    bowScore,
+    "bow_score" -> bowScore,
     "cdc_chunks" -> sketch.cdcChunks(col("text"), 8, 64))
 
   /** Input rows per evaluation: the text column is repeated up to this
@@ -48,6 +50,7 @@ object Kernels {
   }
 
   def table(ctx: Ctx, texts: DataFrame, kernels: Seq[(String, Column)]): Map[String, Double] = {
+    if (kernels.isEmpty) return Map.empty
     val spark = ctx.spark
     val copies = math.max(1L, Rows / math.max(texts.count(), 1L))
     val input = texts.select(col("text"))

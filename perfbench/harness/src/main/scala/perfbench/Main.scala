@@ -20,9 +20,10 @@ final case class Phase(traced: Boolean, wallS: Double, ops: Seq[Op]) {
       "ok" -> o.ok, "items" -> o.items, "err" -> o.err)))
 }
 
-/** What a workload hands back: set-up parts, timed phases, the heap
-  * retained after the untraced phase, checks it ran itself, per-layer metrics of the traced phase, and anything the
-  * Python side needs for its DuckDB checks.
+/** What a workload hands back: set-up parts, timed phases (untraced;
+  * with tracing on also traced, then untraced again), the heap retained
+  * after the first phase, checks it ran itself, per-layer metrics of the traced phase,
+  * and anything the Python side needs for its DuckDB checks.
   */
 final case class Outcome(
     setup: Map[String, Double],
@@ -52,9 +53,11 @@ final case class Ctx(
   def traced[T](body: Tracer => T): T = {
     val tracer = new Tracer(true)
     spark.sparkContext.addSparkListener(counters)
+    spark.listenerManager.register(counters.scans)
     try body(tracer)
     finally {
       counters.drain()
+      spark.listenerManager.unregister(counters.scans)
       spark.sparkContext.removeSparkListener(counters)
     }
   }
@@ -65,15 +68,18 @@ final case class Ctx(
     p.toString
   }
 
-  /** A phase runs the whole passes that fill `seconds` at the workload's
-    * nominal pass time, at least one: the work per run is fixed by
-    * `seconds`, not by how fast this machine happens to be.
+  /** A phase runs whole passes: at least `minPasses`, and more until
+    * `seconds` of timed wall time have passed.
     */
-  def timedPasses(tracer: Tracer, nominalPassS: Double)(pass: Int => Unit): Double = {
-    val passes = math.max(1, math.round(seconds / nominalPassS).toInt)
+  def timedPasses(tracer: Tracer, minPasses: Int)(pass: Int => Unit): Double = {
     val t0 = System.nanoTime()
-    (0 until passes).foreach(p => tracer.span("pass") { pass(p) })
-    (System.nanoTime() - t0) / 1e9
+    def elapsed = (System.nanoTime() - t0) / 1e9
+    var p = 0
+    while (p < minPasses || elapsed < seconds) {
+      tracer.span("pass") { pass(p) }
+      p += 1
+    }
+    elapsed
   }
 }
 
@@ -93,12 +99,14 @@ object Main {
     val work = opts("work")
     val cores = opts.getOrElse("cores", "4").toInt
     val t0 = System.nanoTime()
-    val spark = session(work, cores)
+    // the archive's training run loads no graft code, extensions included
+    val spark = session(work, cores, graftExtensions = workload != "train")
     val sessionS = (System.nanoTime() - t0) / 1e9
     val ctx = Ctx(spark, opts("seed").toLong, opts("seconds").toDouble, opts("trace") == "1",
       work, opts.getOrElse("data", ""), opts.getOrElse("input", ""), cores)
     val outcome = workload match {
       case "reindex"       => Reindex.run(ctx)
+      case "queries"       => Queries.run(ctx, Queries.Mixed)
       case "queries_eager" => Queries.run(ctx, Queries.Eager)
       case "queries_lazy"  => Queries.run(ctx, Queries.Lazy)
       case "ingest"        => Ingest.run(ctx)
@@ -123,11 +131,12 @@ object Main {
     * and every directory Spark or graft writes to under the run's own
     * work directory (fresh asset warehouse included).
     */
-  def session(work: String, cores: Int): SparkSession = {
-    val s = SparkSession.builder()
+  def session(work: String, cores: Int, graftExtensions: Boolean = true): SparkSession = {
+    val b = SparkSession.builder()
+    if (graftExtensions) b.config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val s = b
       .master(s"local[$cores]")
       .appName("graft-perfbench")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

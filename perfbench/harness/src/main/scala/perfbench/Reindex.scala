@@ -19,8 +19,8 @@ object Reindex {
   val KeepPattern = "docs-.*"
   val Kept: Seq[String] = Indices.filter(_.matches(KeepPattern))
   val Buckets = 4
-  /** Seconds one pass takes on a 4-core host, which sizes the runs. */
-  val NominalPassS = 12.0
+  /** Timed passes per phase; each holds 24 subtasks. */
+  val MinPasses = 1
   /** Every index holds a multiple of 10 consecutive ids, so the 1-in-10
     * drop mutator keeps exactly 90%.
     */
@@ -84,7 +84,7 @@ object Reindex {
 
   private def phase(ctx: Ctx, task: Task, tracer: Tracer, label: String): (Phase, Seq[PassResult]) = {
     val passes = ArrayBuffer.empty[PassResult]
-    ctx.timedPasses(tracer, NominalPassS) { p => passes += pass(ctx, task, tracer, s"$label-$p") }
+    ctx.timedPasses(tracer, MinPasses) { p => passes += pass(ctx, task, tracer, s"$label-$p") }
     (Phase(tracer.enabled, passes.map(_.wallS).sum, passes.flatMap(_.ops).toSeq), passes.toSeq)
   }
 
@@ -138,7 +138,9 @@ object Reindex {
     val nSubs = subs.size.max(1).toDouble
     val subStages = c.stagesIn(subs)
     val subWall = subs.map(_.dur).sum
-    val bytesRead = subStages.map(_.bytesRead).sum / n
+    // the files each subtask's scan was handed, from its write's plan
+    val scans = passes.flatMap(p => c.scans.under(p.spec.destDir))
+    val bytesRead = scans.map(_.bytes).sum / n
     val sourceBytes = Kept.map(t => FileTree.bytes(s"$src/$t")).sum
     val outFiles = passes.map(p => FileTree.parquetFiles(p.spec.destDir)).sum / n
     Map(
@@ -146,6 +148,7 @@ object Reindex {
       "planner.jobs" -> c.jobsIn(add) / n,
       "planner.subtasks" -> subs.size / n,
       "sources.bytes_read" -> bytesRead,
+      "sources.files_read" -> scans.map(_.files).sum / n,
       "sources.read_amplification" -> bytesRead / math.max(sourceBytes, 1L),
       "transform.keep_ratio" -> passes.map(_.written).sum.toDouble / math.max(passes.map(_.planned).sum, 1L),
       "transfer.s" -> subWall / nSubs,

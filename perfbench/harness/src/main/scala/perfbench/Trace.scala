@@ -6,7 +6,12 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One benchmark-side span. Times are epoch milliseconds with a
   * sub-millisecond fraction (derived from `System.nanoTime`), so they
@@ -101,7 +106,6 @@ final case class StageStat(
     runMs: Long,
     shuffleWrite: Long,
     spill: Long,
-    bytesRead: Long,
     bytesWritten: Long,
     recordsWritten: Long
 )
@@ -112,6 +116,7 @@ final case class StageStat(
 final class Counters extends SparkListener {
   val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
   val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageStat]()
+  val scans = new Scans
 
   override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.add(e.time.toDouble); () }
 
@@ -124,7 +129,6 @@ final class Counters extends SparkListener {
       runMs = m.executorRunTime,
       shuffleWrite = m.shuffleWriteMetrics.bytesWritten,
       spill = m.memoryBytesSpilled + m.diskBytesSpilled,
-      bytesRead = m.inputMetrics.bytesRead,
       bytesWritten = m.outputMetrics.bytesWritten,
       recordsWritten = m.outputMetrics.recordsWritten))
     ()
@@ -140,16 +144,51 @@ final class Counters extends SparkListener {
     stages.asScala.toSeq.filter(st => spans.exists(s => st.submitted >= s.start - 1 && st.submitted <= s.end + 1))
 
   /** Wait until the listener bus has delivered what it will deliver: the
-    * job count stops changing for half a second.
+    * event counts stop changing for half a second.
     */
   def drain(): Unit = {
     var last = -1
     var stable = 0
     while (stable < 5) {
       Thread.sleep(100)
-      val n = jobs.size + stages.size
+      val n = jobs.size + stages.size + scans.writes.size
       if (n == last) stable += 1 else { stable = 0; last = n }
     }
+  }
+}
+
+/** What the file scans of one successful file write opened, from the
+  * executed plan's scan metrics: `files` and `bytes` are the files and
+  * their bytes on disk that the scans were handed.
+  */
+final case class WriteScan(output: String, files: Long, bytes: Long)
+
+/** Records the scans behind every successful file write, keyed by the
+  * write's output path, so a write is attributed by where it landed
+  * rather than by when the listener bus delivered it.
+  */
+final class Scans extends QueryExecutionListener with AdaptiveSparkPlanHelper {
+  val writes = new java.util.concurrent.ConcurrentLinkedQueue[WriteScan]()
+
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+    val plan = qe.executedPlan
+    val output = plan.collectFirst {
+      case w: DataWritingCommandExec if w.cmd.isInstanceOf[InsertIntoHadoopFsRelationCommand] =>
+        w.cmd.asInstanceOf[InsertIntoHadoopFsRelationCommand].outputPath.toUri.getPath
+    }
+    output.foreach { out =>
+      val scans = collectWithSubqueries(plan) { case s: FileSourceScanExec => s }
+      def metric(s: FileSourceScanExec, k: String) = s.metrics.get(k).map(_.value).getOrElse(0L)
+      writes.add(WriteScan(out, scans.map(metric(_, "numFiles")).sum, scans.map(metric(_, "filesSize")).sum))
+    }
+  }
+
+  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+
+  /** Writes whose output lies under `root`. */
+  def under(root: String): Seq[WriteScan] = {
+    val prefix = java.nio.file.Paths.get(root).toAbsolutePath.toString
+    writes.asScala.toSeq.filter(_.output.startsWith(prefix))
   }
 }
 

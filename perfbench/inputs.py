@@ -14,8 +14,10 @@ INDICES = [f"docs-{i:02d}" for i in range(6)] + ["tmp-00", "tmp-01"]
 DOCS_PER_INDEX = 25_000  # a multiple of 10: the 1-in-10 drop keeps exactly 90%
 FILES_PER_INDEX = 4
 
-# ingest: one file per micro-batch
-INGEST_FILES = 2
+# ingest: one file per micro-batch; an untimed warm-up drain, then the
+# timed drain
+WARM_FILES = 1
+STREAM_FILES = 3
 DOCS_PER_FILE = 30
 
 MASK64 = (1 << 64) - 1
@@ -60,6 +62,13 @@ def bow_weight(word):
 
 
 def ingest(path, seed):
+    """The warm-up drain's files under `warm/`, the timed drain's under
+    `stream/`, each set drawn with its own seed stream."""
+    ingest_files(os.path.join(path, "warm"), np.random.default_rng([seed, 0]), WARM_FILES)
+    ingest_files(os.path.join(path, "stream"), np.random.default_rng([seed, 1]), STREAM_FILES)
+
+
+def ingest_files(path, rng, count):
     """Per file: 15% of docs copy a doc of the same file and 15% a doc of
     an earlier file (the first file copies within itself instead), 20%
     are junk that fails the quality gate, and half of the rest embed a
@@ -67,7 +76,6 @@ def ingest(path, seed):
     first-seen copy of a text is also its lowest id. Modification times
     follow file order, which is the order the stream picks the files up
     in."""
-    rng = np.random.default_rng(seed)
     letters = list("abcdefghijklmnopqrstuvwxyz")
     vocab = sorted({"".join(rng.choice(letters, int(rng.integers(3, 9)))) for _ in range(4000)})
     good = [w for w in vocab if bow_weight(w) > 500]
@@ -85,7 +93,7 @@ def ingest(path, seed):
              + ["span"] * (n - 2 * dups - junk - plain))
     files = []
     doc_id = 0
-    for _ in range(INGEST_FILES):
+    for _ in range(count):
         order = [roles[j] for j in rng.permutation(n)]
         first = next(j for j, r in enumerate(order) if r in ("plain", "span"))
         order[0], order[first] = order[first], order[0]

@@ -38,12 +38,12 @@ import inputs
 ROOT = Path.cwd()
 BENCH = Path(__file__).resolve().parent
 HARNESS = BENCH / "harness"
-WORKLOADS = ["reindex", "queries_lazy", "ingest", "queries_eager"]
+WORKLOADS = ["reindex", "queries", "ingest", "queries_lazy", "queries_eager"]
 CORES = 4
 HEAP = "3g"
-# a run of a workload listed in BENCHMARK.json ends within 180 s;
-# queries_eager is run by hand and gets longer
-RUN_TIMEOUT_S = {"queries_eager": 600}
+# a run of a workload listed in BENCHMARK.json ends within 180 s; the
+# full query mixes are run by hand and get longer
+RUN_TIMEOUT_S = {"queries_eager": 600, "queries_lazy": 600}
 DEFAULT_TIMEOUT_S = 165
 
 JVM_OPENS = [
@@ -122,21 +122,25 @@ def build(out):
 
 
 def train_archive(out, classpath):
-    """Record a class-data-sharing archive from a short training run, so
-    each run's JVM starts from pre-parsed classes. A run without the
-    archive only starts slower."""
+    """Record a class-data-sharing archive of the Spark, Scala and JDK
+    classes a short Spark-only training run loads (no graft code runs
+    in it), so every run's JVM starts from pre-parsed classes. Runs
+    require the archive (-Xshare:on), so no run falls back silently to
+    a slower start."""
     archive = out / "app.jsa"
     archive.unlink(missing_ok=True)
     work = out / "train"
     shutil.rmtree(work, ignore_errors=True)
     work.mkdir(parents=True)
     try:
-        run_harness(classpath, "train", 0, 1, 0, work, default_data(), "",
-                    jvm_extra=[f"-XX:ArchiveClassesAtExit={archive}"])
+        run_harness(classpath, "train", 0, 1, 0, work, "", "",
+                    share=[f"-XX:ArchiveClassesAtExit={archive}"])
     except RuntimeError as e:
-        print(f"perfbench: no class-data-sharing archive ({e})", file=sys.stderr)
+        fail(f"build failed: the class-data-sharing training run failed ({e})")
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    if not archive.exists():
+        fail("build failed: the class-data-sharing training run wrote no archive")
 
 
 # ------------------------------------------------------------ harness run
@@ -154,14 +158,13 @@ def run_group(cmd, log, timeout, **kw):
             p.wait()
             raise RuntimeError(f"{cmd[0]} exceeded {timeout}s")
 
-def run_harness(classpath, workload, seed, seconds, trace, work, data, input_dir,
-                jvm_extra=None):
+
+def run_harness(classpath, workload, seed, seconds, trace, work, data, input_dir, share=None):
     out = work / "result.json"
     java = str(Path(os.environ["JAVA_HOME"]) / "bin" / "java") if os.environ.get("JAVA_HOME") else "java"
-    archive = build_dir() / "app.jsa"
-    if jvm_extra is None:
-        jvm_extra = [f"-XX:SharedArchiveFile={archive}"] if archive.exists() else []
-    cmd = [java, f"-Xmx{HEAP}", f"-Djava.io.tmpdir={work / 'tmp'}"] + jvm_extra
+    if share is None:
+        share = ["-Xshare:on", f"-XX:SharedArchiveFile={build_dir() / 'app.jsa'}"]
+    cmd = [java, f"-Xmx{HEAP}", f"-Djava.io.tmpdir={work / 'tmp'}"] + share
     for p in JVM_OPENS:
         cmd += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
     cmd += ["-cp", classpath, "perfbench.Main", "--workload", workload, "--seed", str(seed),
@@ -173,7 +176,7 @@ def run_harness(classpath, workload, seed, seconds, trace, work, data, input_dir
     code = run_group(cmd, log, RUN_TIMEOUT_S.get(workload, DEFAULT_TIMEOUT_S))
     if code != 0 or not out.exists():
         tail = [l for l in log.read_text(errors="replace").splitlines()
-                if "Exception" in l or "Error" in l][:5]
+                if "Exception" in l or "Error" in l or "shared archive" in l][:5]
         raise RuntimeError(f"harness exited {code}: " + " | ".join(tail))
     return json.loads(out.read_text())
 
@@ -395,7 +398,8 @@ def run_workload(workload, seed, seconds, trace, data):
     for o in phases[0]["ops"]:
         by_op.setdefault(o["name"], []).append(o["lat_s"])
     report = {"workload": workload, "e2e": e2e, "untraced": untraced, "checks": checks,
-              "setup": setup, "by_op": by_op}
+              "setup": setup, "by_op": by_op,
+              "outputs": result["extra"].get("query_outputs", {})}
     if trace:
         # the traced phase sits between two untraced ones, so warm-up
         # still going on in the first does not read as tracing overhead
@@ -426,9 +430,10 @@ def print_report(rep, trace):
     print(f"{w}: failed_ratio = {u['failed'] / max(u['attempted'], 1):.6g} "
           f"({u['failed']} of {u['attempted']} operations)")
     print(f"{w}: latency samples = {u['samples']}")
-    if w.startswith("queries"):
-        for name, lats in sorted(rep["by_op"].items()):
-            print(f"{w}: latency {name} = " + " ".join(f"{x:.3f}" for x in lats) + " s")
+    for name, o in sorted(rep["outputs"].items()):
+        print(f"{w}: warm-up {name} = {o['warmup_s']:.3f} s")
+    for name, lats in sorted(rep["by_op"].items()):
+        print(f"{w}: latency {name} = " + " ".join(f"{x:.3f}" for x in lats) + " s")
     print(f"{w}: setup parts = " + ", ".join(f"{k} {v:.3g} s" for k, v in sorted(rep["setup"].items())))
     if trace:
         for k, v in sorted(rep["layers"].items()):
