@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
   * CDC family (the LBFS/venti shape: store every distinct chunk ONCE,
   * represent documents as manifests of chunk digests). Completes the
   * batch↔stream pairings: exact dedup ([[IngestDedup]]), near dedup
-  * ([[NearDupIngest]]), quality gate ([[QualityGate]]), and now
+  * ([[NearDupIngest]]), quality gate ([[QualityGate]]), and
   * content-defined chunk storage ([[graft.operators.Dedup.cdcDedup]] /
   * `dedup_cdc_incremental` are the batch-side accounting twins).
   *
@@ -23,27 +23,34 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Replay idempotence is the [[IngestDedup]] layout: both tables write
   * deterministic `batch=<id>` partitions with overwrite semantics and
-  * the standing-store scan EXCLUDES the batch's own partition, so a
+  * the standing-store probe EXCLUDES the batch's own partition, so a
   * crash-replay rewrites the same files and converges. Reassembly
   * (manifest ⋈ store, concat by pos) reproduces every ingested
   * document byte-for-byte — the StreamingSpec lossless pin.
   *
-  * Scale shape — the anti-join probe is fronted by a THREE-stage
-  * screen, all wired here (not prose):
+  * Scale shape — per batch, the work tracks the batch, not the store's
+  * history:
   *   - store partitions carry `hp` (2-hex digest prefix) under each
-  *     `batch=<id>` dir, so the standing-digest scan is PRUNED to the
-  *     partitions whose prefixes actually occur in the batch — the
-  *     [[IngestDedup.priorDigests]] file-level pruning, verbatim;
-  *   - each batch publishes tiny per-shard BLOOM sidecars (hp, bf)
-  *     next to the store; at probe time the batch's chunks pay one
-  *     lazy CASE dispatch on `hp` (each row probes only its shard's
-  *     filters — the [[graft.operators.Dedup.incrementalBloomSharded]]
-  *     kernel, applied to chunk digests: a chunk digest is a digest).
-  *     Bloom misses are PROVABLY novel and skip the exact join;
-  *   - only Bloom maybes pay the exact anti-join, against the pruned
-  *     digest scan. No false negatives per shard, false positives
-  *     re-checked exactly → store contents and manifests are
-  *     byte-identical to the unscreened path (StreamingSpec pin).
+  *     `batch=<id>` dir, and each batch publishes tiny per-shard BLOOM
+  *     sidecars (hp, bf) next to the store;
+  *   - the batch's distinct chunks pay one lazy CASE dispatch on `hp`
+  *     against the standing sidecars of the prefixes they touch (each
+  *     row probes only its shard's filters — the
+  *     [[graft.operators.Dedup.incrementalBloomSharded]] kernel applied
+  *     to chunk digests). Bloom misses are PROVABLY novel and skip the
+  *     exact join;
+  *   - only Bloom MAYBES pay the exact anti-join, and the standing store
+  *     is probed only under the maybes' own prefixes ([[PrefixProbe]]:
+  *     one driver-side glob, then exactly those `hp=` leaves) — exact,
+  *     because equal digests share their prefix. A batch with no maybes
+  *     plans no store scan at all;
+  *   - the layout check before the write ([[requireHpCompatible]]) is a
+  *     driver-side listing of the newest batch, and the probe and
+  *     sidecar reads declare their schemas: no partition discovery over
+  *     the whole store, no schema-inference job.
+  * No false negatives per shard, false positives re-checked exactly →
+  * store contents and manifests are byte-identical to the unscreened
+  * path (StreamingSpec pin).
   * Blooms are written BEFORE the store partition: a crash between the
   * two leaves a filter claiming chunks the store doesn't hold, which
   * the exact join refutes on replay — convergent; the reverse order
@@ -65,51 +72,33 @@ object ChunkStoreIngest {
         length(col("chunk")).cast("long").as("len"), col("chunk"))
       .withColumn("hp", substring(col("digest"), 1, 2))
 
-  /** Standing store digests (empty before the first batch), excluding
-    * `batchId`'s own partition for replay safety and PRUNED to the
-    * digest-prefix partitions in `prefixes` (file-level pruning on the
-    * `hp=` directories — the probe never lists, let alone reads, a
-    * shard the batch doesn't touch).
-    */
-  private[graft] def storedDigests(
-      spark: SparkSession, storeDir: String, batchId: Long,
-      prefixes: Seq[String] = Seq.empty): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) {
-      val base = spark.read.parquet(storeDir)
-        .filter(col("batch") =!= lit(batchId))
-      // format tolerance: a store written before the hp layout has no
-      // prefix column — scan it unpruned (correct, just unscreened).
-      // A MIXED-depth store (old flat batches + new hp-partitioned
-      // ones) is rejected by partition discovery itself and needs a
-      // one-off rewrite; [[requireHpCompatible]] fails the batch
-      // BEFORE the first incompatible write can create that state.
-      val pruned =
-        if (prefixes.nonEmpty && base.columns.contains("hp"))
-          base.filter(col("hp").isin(prefixes: _*))
-        else base
-      pruned.select(col("digest"))
-    } else
-      spark.emptyDataFrame
-        .select(lit("").as("digest")).limit(0)
-  }
-
   /** Fail fast BEFORE writing the first hp-partitioned batch into a
     * store laid out in the pre-hp flat format. Mixing the two layouts
     * (flat parquet files under `batch=N` next to `batch=M/hp=xx/` dirs)
     * makes every subsequent partition discovery throw — wedging the
     * stream until a manual rewrite — so the incompatible WRITE is the
     * thing to stop, with a migration message, not the later read.
-    * A uniform pre-write store reads cleanly, so schema inspection is
-    * a reliable probe: a store without the `hp` column is flat.
+    * Driver-local, no Spark job: every write path runs this check, so a
+    * store is uniform and its NEWEST batch directory that holds data
+    * decides — `hp=` subdirectories mean hp layout, bare data files mean
+    * flat. Batches that stored nothing hold neither and are skipped.
     */
   private[graft] def requireHpCompatible(
       spark: SparkSession, storeDir: String): Unit = {
     val path = new org.apache.hadoop.fs.Path(storeDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path) &&
-        !spark.read.parquet(storeDir).columns.contains("hp"))
+    // partition discovery's visibility rule: `_*` and `.*` are hidden
+    def entries(dir: org.apache.hadoop.fs.Path) =
+      fs.listStatus(dir).toSeq.map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    val newestWithData =
+      if (!fs.exists(path)) None
+      else entries(path)
+        .flatMap { case n @ s"batch=$id" => id.toLongOption.map(_ -> n); case _ => None }
+        .sortBy(-_._1).iterator
+        .map { case (_, n) => entries(new org.apache.hadoop.fs.Path(path, n)) }
+        .find(_.nonEmpty)
+    if (newestWithData.exists(_.exists(!_.startsWith("hp="))))
       throw new IllegalStateException(
         s"chunk store at $storeDir uses the pre-hp flat layout; " +
           "writing an hp-partitioned batch into it would create a " +
@@ -144,7 +133,7 @@ object ChunkStoreIngest {
     // on any corpus-proportional drift (compaction is the lever when a
     // deployment approaches it)
     graft.engine.DriverBudget.collect("ChunkStore.standingBlooms", 1L << 20)(
-      spark.read.parquet(dir)
+      spark.read.schema("hp STRING, bf BINARY, batch LONG").parquet(dir)
         .filter(col("batch") =!= lit(batchId))
         .filter(col("hp").isin(prefixes: _*))
         .select(col("hp"), col("bf")))
@@ -271,8 +260,8 @@ object ChunkStoreIngest {
         .select(col("digest"), col("hp"), col("len"), col("chunk"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        // tier 1+2: prefix spread (drives partition pruning) and the
-        // sharded Bloom screen over the standing sidecars
+        // tier 1+2: prefix spread (selects the standing sidecars) and
+        // the sharded Bloom screen over them
         val prefixes = graft.engine.DriverBudget.collect(
             "ChunkStore.batchPrefixes", 256L)(
             batchDistinct.select(col("hp")).distinct())
@@ -280,12 +269,23 @@ object ChunkStoreIngest {
         val blooms = standingBlooms(spark, storeDir, batchId, prefixes)
         val probed = batchDistinct.withColumn("__cand",
           if (blooms.isEmpty) lit(false) else bloomCandidate(blooms))
-        // tier 3: only Bloom maybes pay the exact anti-join, against
-        // the prefix-pruned standing scan; misses are provably novel
-        val maybe = probed.filter(col("__cand"))
-          .join(storedDigests(spark, storeDir, batchId, prefixes), Seq("digest"), "left_anti")
-        val novel = probed.filter(!col("__cand"))
-          .unionByName(maybe)
+        // tier 3: only Bloom maybes pay the exact anti-join, against the
+        // standing store under the MAYBES' prefixes alone (equal digests
+        // share their prefix, so this is exact); misses are provably
+        // novel, and with no maybes the store is never scanned
+        val maybePrefixes =
+          if (blooms.isEmpty) Seq.empty
+          else graft.engine.DriverBudget.collect("ChunkStore.maybePrefixes", 256L)(
+              probed.filter(col("__cand")).select(col("hp")).distinct())
+            .map(_.getString(0)).toSeq
+        val screened =
+          if (maybePrefixes.isEmpty) probed
+          else probed.filter(!col("__cand")).unionByName(
+            probed.filter(col("__cand")).join(
+              PrefixProbe.scan(spark, storeDir, "digest STRING, hp STRING, batch LONG",
+                batchId, maybePrefixes).select(col("digest")),
+              Seq("digest"), "left_anti"))
+        val novel = screened
           .select(col("digest"), col("hp"), col("len"), col("chunk"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {

@@ -105,11 +105,12 @@ object CuratedIngest {
       val gatedIn = gated.count()
       val landedCount = IngestDedup.processBatch(gated, batchId, destDir, digestDir)
       // chunk-store what actually LANDED: the written partition is the
-      // replay-convergent truth (empty when every gated doc was a dup)
+      // replay-convergent truth (empty when every gated doc was a dup),
+      // read back under the schema it was written with — no inference
       val stored =
         if (landedCount == 0L) 0L
         else {
-          val landed = spark.read.parquet(s"$destDir/batch=$batchId")
+          val landed = spark.read.schema(gated.schema).parquet(s"$destDir/batch=$batchId")
           ChunkStoreIngest.processBatch(
             landed, batchId, storeDir, manifestDir, k, divisor)._2
         }

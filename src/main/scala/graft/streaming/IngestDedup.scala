@@ -13,14 +13,14 @@ import org.apache.spark.sql.streaming.Trigger
   *   - The digest table is 16 bytes per ingested doc and is the ONLY
   *     thing the batch joins against — never the accumulated corpus.
   *   - Digests are PARTITIONED BY PREFIX (`hp` = first two hex chars of
-  *     the md5, 256 buckets): each micro-batch reads only the digest
-  *     partitions whose prefixes actually occur in the batch — file-level
-  *     partition pruning on the scan, so a batch that touches p of 256
-  *     prefixes reads p/256 of the digest table instead of all of it.
-  *     (A full-coverage batch still reads everything — the bound is the
-  *     batch's prefix spread, which is what makes SMALL continuous
-  *     batches cheap against a 100 TB history. At that scale the prefix
-  *     would widen to 4 hex chars / 65k buckets.)
+  *     the md5, 256 buckets) under each `batch=<id>` directory. A batch
+  *     touching p of 256 prefixes lists and reads only the `hp=`
+  *     directories of those p prefixes ([[PrefixProbe]]: one driver-side
+  *     glob, no listing job), so per-batch listing is O(touched
+  *     partitions), not O(history), and the read is p/256 of the digest
+  *     table. A full-coverage batch still reads everything — the bound is
+  *     the batch's prefix spread, which is what keeps SMALL continuous
+  *     batches cheap against a long history.
   *   - Both destination docs and new digests write into a
   *     deterministic `batch=<id>` subdirectory with overwrite
   *     semantics, so a foreachBatch REPLAY after a crash (at-least-once
@@ -32,31 +32,14 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object IngestDedup {
 
-  /** Digest-table scan that tolerates the empty-first-batch case. The
-    * `batch` partition column is part of the schema so a replaying batch
-    * can exclude ITS OWN previously-written digests — without that, a
-    * crash-replay would anti-join its docs against itself and overwrite
-    * the destination partition with nothing (silent data loss).
-    */
-  private def storedDigests(spark: org.apache.spark.sql.SparkSession, digestDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(digestDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // EXPLICIT schema, never inference: a micro-batch whose docs were
-    // all dropped upstream (gates, dedup) commits a batch=<id> partition
-    // with zero data files — legitimate, but schema inference over a
-    // footerless tree throws UNABLE_TO_INFER_SCHEMA and would poison
-    // every later batch's digest scan (spec-pinned). hp/batch are
-    // partition columns; h is the only column inside the files.
-    if (fs.exists(path))
-      spark.read.schema("h STRING, hp STRING, batch LONG").parquet(digestDir)
-    else spark.emptyDataFrame
-      .select(lit("").as("h"), lit("").as("hp"), lit(0L).as("batch")).limit(0)
-  }
-
   /** The prior-digest scan one batch anti-joins against: everything
-    * ingested by OTHER batches, pruned to the digest-prefix partitions
-    * in `prefixes`. Exposed for the spec that asserts the pruning
-    * actually reaches the file scan (files read < files on disk).
+    * ingested by OTHER batches (a crash-replay must not anti-join its
+    * docs against its own earlier write, or it would overwrite the
+    * destination partition with nothing), pruned to the digest-prefix
+    * partitions in `prefixes` — a [[PrefixProbe]] over the digest
+    * table. `hp`/`batch` are partition columns; `h` is the only column
+    * inside the files. Exposed for the spec that asserts the pruning
+    * reaches the file scan and the listing launches no job.
     */
   private[graft] def priorDigests(
       spark: org.apache.spark.sql.SparkSession,
@@ -64,9 +47,7 @@ object IngestDedup {
       batchId: Long,
       prefixes: Seq[String]
   ): DataFrame =
-    storedDigests(spark, digestDir)
-      .filter(col("batch") =!= lit(batchId)) // replay: self-exclusion
-      .filter(col("hp").isin(prefixes: _*))  // partition pruning by prefix
+    PrefixProbe.scan(spark, digestDir, "h STRING, hp STRING, batch LONG", batchId, prefixes)
       .select(col("h"))
 
   /** Process one micro-batch: returns (docs written). Exposed for the

@@ -3,14 +3,17 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import scala.util.control.NonFatal
 
 /** Optimization-round profiler: for each named query, run it the way the
   * bench does (warmup + timed iterations against the noop sink) but split
-  * the wall time into PLANNING (analysis+optimization+physical planning,
-  * forced via `queryExecution.executedPlan`) and EXECUTION, and report
-  * executed stage count / task count / shuffle bytes / task-time sum from
-  * a listener. This tells us, per query, whether the driver (Catalyst) or
-  * the cluster (stages) is the bottleneck — guide §1 "measure first".
+  * the wall time into `plan` (the query function building its DataFrame
+  * — construct-time jobs included — plus analysis, optimization and
+  * physical planning, forced via `queryExecution.executedPlan`) and
+  * EXECUTION, and report executed stage count / task count / shuffle
+  * bytes / task-time sum from a listener. This tells us, per query,
+  * whether the driver (construct and Catalyst) or the cluster (stages)
+  * is the bottleneck — guide §1 "measure first".
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *          sbt "runMain graft.tools.Profile q1 q2 ..."
@@ -45,7 +48,7 @@ object Profile {
         case Some(fn) =>
           // warmup (uncounted): codegen + JIT + parquet footer cache
           try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable => System.err.println(s"$name warmup failed: $e") }
+          catch { case NonFatal(e) => System.err.println(s"$name warmup failed: $e") }
           var bestPlan = Double.MaxValue
           var bestExec = Double.MaxValue
           var lastStages = 0; var lastTasks = 0; var lastShuffle = 0L; var lastTaskTime = 0L
@@ -72,7 +75,7 @@ object Profile {
                 lastShuffle = shuffleWrite.get(); lastTaskTime = taskTimeMs.get()
               }
             } catch {
-              case e: Throwable => System.err.println(s"$name iteration failed: $e")
+              case NonFatal(e) => System.err.println(s"$name iteration failed: $e")
             }
           }
           if (bestPlan == Double.MaxValue)

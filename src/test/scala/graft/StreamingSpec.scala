@@ -13,6 +13,63 @@ import graft.streaming.{EventStream, NoveltyGate, ProfileGate, QualityGate}
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Spark jobs `body` launches from this thread, counted under a
+    * private job group. A sentinel job in a second group flushes the
+    * listener bus: events arrive in order, so once the sentinel's start
+    * is seen every job `body` launched has been counted.
+    */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.incrementAndGet()
+        else if (g == s"$group-flush") flushed.countDown()
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every file scan in the plans the queries `body` runs executed —
+    * through adaptive stages and into the plans of frames it cached —
+    * collected by a query-execution listener and flushed like
+    * [[jobsLaunchedBy]] (both listeners share the listener bus).
+    */
+  private def fileScansOf(body: => Unit): Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case f: FileSourceScanExec => Seq(f)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case other => (other.children ++ other.subqueries).flatMap(scans)
+    }
+    val found = new java.util.concurrent.ConcurrentLinkedQueue[FileSourceScanExec]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        scans(qe.executedPlan).foreach(found.add)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try jobsLaunchedBy(body)
+    finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(found).asScala.toSeq
+  }
+
   test("events ts-variant adaptivity: a nanos-long events table streams identically to batch") {
     // synthesize the TIMESTAMP(NANOS) variant as it reaches the engine:
     // ts on disk is an int64 of epoch nanos (what nanosAsLong decodes
@@ -404,7 +461,13 @@ class StreamingSpec extends SparkSpec {
     // read only that partition's files, not the whole history
     val one = Seq((1001L, "a new single document")).toDF("doc_id", "text")
     val hp = one.select(substring(md5(col("text")), 1, 2)).as[String].head()
-    val pruned = IngestDedup.priorDigests(spark, digests, 1L, Seq(hp))
+    var pruned: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { pruned = IngestDedup.priorDigests(spark, digests, 1L, Seq(hp)) } == 0,
+      "resolving the prior-digest scan must list on the driver, not launch a listing job")
+    // a replay of batch 0 itself must not see its own digests
+    assert(IngestDedup.priorDigests(spark, digests, 0L, Seq(hp)).count() == 0L,
+      "the replaying batch's own partition must be excluded")
+    assert(pruned.count() > 0L, "other batches' digests under the prefix are visible")
     val scannedFiles = pruned.queryExecution.executedPlan.collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.selectedPartitions.totalNumberOfFiles.toInt
@@ -1791,6 +1854,128 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(storeDir).count() == 1L)
     assert(!new java.io.File(manifestDir).exists(),
       "the batch must fail before any write")
+  }
+
+  /** A chunk store with two prior batches (several documents each, so
+    * each batch spreads over many `hp=` leaves) and a `blob` generator
+    * for the third batch's content; returns (store, manifest, prior
+    * texts, blob).
+    */
+  private def twoBatchChunkStore(name: String, seed: Int)
+      : (String, String, Map[Long, String], Int => String) = {
+    import graft.streaming.ChunkStoreIngest
+    val storeDir = Files.createTempDirectory(name).toString + "/store"
+    val manifestDir = Files.createTempDirectory(s"${name}_m").toString + "/manifest"
+    val rnd = new scala.util.Random(seed)
+    def blob(n: Int) = (1 to n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+    val texts = (1L to 8L).map(id => id -> blob(320)).toMap
+    Seq(Seq(1L, 2L, 3L, 4L), Seq(5L, 6L, 7L, 8L)).zipWithIndex.foreach { case (ids, b) =>
+      ChunkStoreIngest.processBatch(ids.map(id => (id, texts(id))).toDF("doc_id", "text"),
+        b.toLong, storeDir, manifestDir, divisor = 16)
+    }
+    (storeDir, manifestDir, texts, blob _)
+  }
+
+  /** Scans among `scans` that read the chunk store itself (not its
+    * sibling Bloom sidecar). */
+  private def storeScans(scans: Seq[org.apache.spark.sql.execution.FileSourceScanExec],
+      storeDir: String) =
+    scans.filter(_.relation.location.rootPaths.exists { p =>
+      val path = p.toUri.getPath
+      path == storeDir || path.startsWith(storeDir + "/")
+    })
+
+  /** Distinct (digest, hp) of batch `b`'s manifest with their screen
+    * verdict against the standing sidecars that batch consulted. */
+  private def screenedDigests(storeDir: String, manifestDir: String, b: Long) = {
+    import graft.streaming.ChunkStoreIngest
+    val digests = spark.read.parquet(manifestDir).filter(col("batch") === b)
+      .select(col("digest"), substring(col("digest"), 1, 2).as("hp")).distinct()
+    val prefixes = digests.select("hp").distinct().as[String].collect().toSeq
+    ChunkStoreIngest.probeForSpec(digests, ChunkStoreIngest.standingBlooms(spark, storeDir, b, prefixes))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq
+  }
+
+  test("chunk-store layout check is driver-local: zero Spark jobs on a store with history") {
+    import graft.streaming.ChunkStoreIngest
+    val (storeDir, manifestDir, texts, blob) = twoBatchChunkStore("graft_cslayout", 17)
+    assert(jobsLaunchedBy(ChunkStoreIngest.requireHpCompatible(spark, storeDir)) == 0,
+      "the hp-layout check must list the store on the driver, never read it with Spark")
+    // the third batch goes through the same check and lands normally
+    val t9 = blob(200)
+    ChunkStoreIngest.processBatch(Seq((9L, texts(2L)), (10L, t9)).toDF("doc_id", "text"),
+      2L, storeDir, manifestDir, divisor = 16)
+    val store = spark.read.parquet(storeDir)
+    assert(store.count() == store.select("digest").distinct().count())
+    assert(ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      texts ++ Map(9L -> texts(2L), 10L -> t9))
+  }
+
+  test("chunk-store exact anti-join scans only the Bloom-maybe prefixes of the standing store") {
+    import graft.streaming.ChunkStoreIngest
+    val (storeDir, manifestDir, texts, blob) = twoBatchChunkStore("graft_csmaybe", 29)
+    // doc 9 repeats a batch-0 doc (every chunk a maybe), doc 10 is fresh
+    // (its chunks mostly screen as misses)
+    val t10 = blob(480)
+    val scans = fileScansOf {
+      ChunkStoreIngest.processBatch(Seq((9L, texts(3L)), (10L, t10)).toDF("doc_id", "text"),
+        2L, storeDir, manifestDir, divisor = 16)
+    }
+    val screened = screenedDigests(storeDir, manifestDir, 2L)
+    val maybePrefixes = screened.filter(_._3).map(_._2).toSet
+    def leafFiles(batch: Int, hp: String) =
+      Option(new java.io.File(s"$storeDir/batch=$batch/hp=$hp")
+        .listFiles((_, n) => n.endsWith(".parquet"))).map(_.length).getOrElse(0)
+    val priorHps = (0 to 1).flatMap(b => new java.io.File(s"$storeDir/batch=$b").list()
+      .filter(_.startsWith("hp=")).map(d => b -> d.stripPrefix("hp=")))
+    val onDisk = priorHps.map { case (b, hp) => leafFiles(b, hp) }.sum
+    val underMaybes = priorHps.filter(bh => maybePrefixes(bh._2))
+      .map { case (b, hp) => leafFiles(b, hp) }.sum
+    val underBatch = priorHps.filter(bh => screened.exists(_._2 == bh._2))
+      .map { case (b, hp) => leafFiles(b, hp) }.sum
+    // the fixture separates the two prunings: some standing leaves share
+    // a prefix with the batch without holding a maybe
+    assert(maybePrefixes.nonEmpty && underMaybes < underBatch,
+      s"fixture: maybe leaves $underMaybes must be fewer than batch-prefix leaves $underBatch")
+    val probe = storeScans(scans, storeDir)
+    assert(probe.nonEmpty, "the maybes must be checked against the standing store")
+    probe.foreach { f =>
+      val selected = f.selectedPartitions.totalNumberOfFiles.toInt
+      assert(selected == underMaybes && selected < onDisk,
+        s"the exact probe must read only the $underMaybes files under the maybe prefixes " +
+          s"(of $onDisk on disk), read $selected")
+    }
+    // and the narrowed probe stays exact
+    val store = spark.read.parquet(storeDir)
+    assert(store.count() == store.select("digest").distinct().count(),
+      "every digest stored exactly once")
+    val prior = store.filter(col("batch") < 2).select("digest").as[String].collect().toSet
+    assert(store.filter(col("batch") === 2).count() == screened.count(d => !prior(d._1)).toLong,
+      "batch 2 stores exactly its digests the prior batches lack")
+    assert(ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      texts ++ Map(9L -> texts(3L), 10L -> t10))
+  }
+
+  test("chunk-store batch whose chunks all screen as Bloom misses plans no store scan") {
+    import graft.streaming.ChunkStoreIngest
+    val (storeDir, manifestDir, texts, blob) = twoBatchChunkStore("graft_csmiss", 43)
+    val t9 = blob(240)
+    val scans = fileScansOf {
+      ChunkStoreIngest.processBatch(Seq((9L, t9)).toDF("doc_id", "text"),
+        2L, storeDir, manifestDir, divisor = 16)
+    }
+    val screened = screenedDigests(storeDir, manifestDir, 2L)
+    assert(screened.nonEmpty && screened.forall(!_._3),
+      s"fixture: every chunk of the fresh doc must screen as a miss: ${screened.filter(_._3)}")
+    assert(storeScans(scans, storeDir).isEmpty,
+      "with no Bloom maybes the standing store must not be scanned")
+    val store = spark.read.parquet(storeDir)
+    assert(store.filter(col("batch") === 2).count() == screened.size.toLong,
+      "every chunk of the batch is novel and stored")
+    assert(ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap == texts + (9L -> t9))
   }
 
   test("composed curated ingest: gate → exact dedup → chunk store equals the batch composition; reassembly lossless") {
