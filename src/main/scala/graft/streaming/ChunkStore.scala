@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** DEDUPLICATING CHUNK-STORE ingest — the storage-dedup sink of the
   * CDC family (the LBFS/venti shape: store every distinct chunk ONCE,
@@ -16,7 +16,9 @@ import org.apache.spark.sql.streaming.Trigger
   *   1. chunk every document ([[graft.functions.CdcChunks]] — local
   *      boundaries, so shared spans produce shared chunks);
   *   2. write the batch MANIFEST (doc_id, pos, digest, len) — the
-  *      document's recipe; chunk TEXT never enters the manifest;
+  *      document's recipe; chunk TEXT never enters the manifest. A
+  *      document with no chunks (empty or null text) gets one row with a
+  *      null digest, so it is restored as it landed;
   *   3. append to the STORE only chunks whose digest is novel versus
   *      the standing store (prior batches) and within-batch first
   *      occurrences — an anti-join on skinny digests.
@@ -45,9 +47,9 @@ import org.apache.spark.sql.streaming.Trigger
   *     because equal digests share their prefix. A batch with no maybes
   *     plans no store scan at all;
   *   - the layout check before the write ([[requireHpCompatible]]) is a
-  *     driver-side listing of the newest batch, and the probe and
-  *     sidecar reads declare their schemas: no partition discovery over
-  *     the whole store, no schema-inference job.
+  *     driver-side listing of the newest batch, and the store and
+  *     sidecar reads go through [[PrefixProbe]] with declared schemas: no
+  *     partition discovery over the whole store, no schema-inference job.
   * No false negatives per shard, false positives re-checked exactly →
   * store contents and manifests are byte-identical to the unscreened
   * path (StreamingSpec pin).
@@ -58,19 +60,39 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object ChunkStoreIngest {
 
-  /** (doc_id, pos, digest, hp, len, chunk) rows of one batch — `pos` is
+  /** CDC window width: the rolling hash spans 8 characters. */
+  private val CdcK = 8
+
+  /** Data columns of a store leaf (`batch=<id>/hp=<xx>`). */
+  private[graft] val StoreSchema: StructType =
+    StructType.fromDDL("digest STRING, len BIGINT, chunk STRING")
+
+  /** Data columns of a Bloom sidecar leaf (`batch=<id>`). */
+  private[graft] val BloomSchema: StructType = StructType.fromDDL("hp STRING, bf BINARY")
+
+  /** (doc_id, pos, digest, len, chunk, hp) rows of one batch — `pos` is
     * the chunk's 0-based position in its document, the reassembly key;
     * `hp` is the 2-hex digest prefix, the shard/pruning key shared with
     * the store layout and the Bloom sidecars.
     */
-  private def chunkRows(batch: DataFrame, k: Int, divisor: Int): DataFrame =
+  private def chunkRows(batch: DataFrame, divisor: Int): DataFrame =
     batch
       .select(col("doc_id"),
-        posexplode(graft.functions.sketch.cdcChunks(col("text"), k, divisor))
+        posexplode(graft.functions.sketch.cdcChunks(col("text"), CdcK, divisor))
           .as(Seq("pos", "chunk")))
       .select(col("doc_id"), col("pos"), md5(col("chunk")).as("digest"),
         length(col("chunk")).cast("long").as("len"), col("chunk"))
       .withColumn("hp", substring(col("digest"), 1, 2))
+
+  /** Manifest rows of the batch's documents without chunks — empty or
+    * null text, the only inputs CDC maps to no chunk: pos 0, null
+    * digest, `len` the text length (0, or null for null text).
+    * [[reassemble]] restores each as it landed.
+    */
+  private def chunklessRows(batch: DataFrame): DataFrame =
+    batch.filter(col("text").isNull || col("text") === "")
+      .select(col("doc_id"), lit(0).as("pos"), lit(null).cast("string").as("digest"),
+        length(col("text")).cast("long").as("len"))
 
   /** Fail fast BEFORE writing the first hp-partitioned batch into a
     * store laid out in the pre-hp flat format. Mixing the two layouts
@@ -118,25 +140,24 @@ object ChunkStoreIngest {
     * rows (hp, bf) from every OTHER batch's sidecar partition. Tiny —
     * batches × touched-prefixes rows of kilobyte blobs, kept bounded by
     * [[compactBlooms]] (the maintenance job that folds all batches'
-    * filters into one row per shard). Returns an empty seq before any
-    * batch.
+    * filters into one row per shard). Empty, with no Spark job, before
+    * any batch.
     */
   private[graft] def standingBlooms(
       spark: SparkSession, storeDir: String, batchId: Long,
       prefixes: Seq[String]): Seq[(String, Array[Byte])] = {
-    val dir = bloomDir(storeDir)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path) || prefixes.isEmpty) return Seq.empty
+    val dir = new org.apache.hadoop.fs.Path(bloomDir(storeDir))
+    // no sidecar yet: skip the query, whose prefix filter over an empty
+    // local frame would be compiled afresh for every batch's prefix set
+    if (prefixes.isEmpty || !dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+      Seq.empty
     // one filter row per (touched prefix, prior batch): ≤ 256 prefixes
     // × batch history — 1<<20 covers years of batches and still trips
     // on any corpus-proportional drift (compaction is the lever when a
     // deployment approaches it)
-    graft.engine.DriverBudget.collect("ChunkStore.standingBlooms", 1L << 20)(
-      spark.read.schema("hp STRING, bf BINARY, batch LONG").parquet(dir)
-        .filter(col("batch") =!= lit(batchId))
-        .filter(col("hp").isin(prefixes: _*))
-        .select(col("hp"), col("bf")))
+    else graft.engine.DriverBudget.collect("ChunkStore.standingBlooms", 1L << 20)(
+        PrefixProbe.scan(spark, dir.toString, BloomSchema, batchId)
+          .filter(col("hp").isin(prefixes: _*)))
       .map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
       .toSeq
   }
@@ -238,16 +259,16 @@ object ChunkStoreIngest {
       batchId: Long,
       storeDir: String,
       manifestDir: String,
-      k: Int = 8,
       divisor: Int = 64
   ): (Long, Long) = {
     val spark = batch.sparkSession
     requireHpCompatible(spark, storeDir)
-    val rows = chunkRows(batch, k, divisor)
+    val rows = chunkRows(batch, divisor)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val manifestRows = graft.sources.WriteMetrics.countingWrite(
-        rows.select(col("doc_id"), col("pos"), col("digest"), col("len")))(
+        rows.select(col("doc_id"), col("pos"), col("digest"), col("len"))
+          .unionByName(chunklessRows(batch)))(
         _.write.mode(SaveMode.Overwrite).parquet(s"$manifestDir/batch=$batchId"))
       // within-batch first occurrence (smallest (doc_id, pos) wins —
       // deterministic under replay)
@@ -282,8 +303,8 @@ object ChunkStoreIngest {
           if (maybePrefixes.isEmpty) probed
           else probed.filter(!col("__cand")).unionByName(
             probed.filter(col("__cand")).join(
-              PrefixProbe.scan(spark, storeDir, "digest STRING, hp STRING, batch LONG",
-                batchId, maybePrefixes).select(col("digest")),
+              PrefixProbe.scan(spark, storeDir, StoreSchema, batchId, maybePrefixes)
+                .select(col("digest")),
               Seq("digest"), "left_anti"))
         val novel = screened
           .select(col("digest"), col("hp"), col("len"), col("chunk"))
@@ -310,15 +331,19 @@ object ChunkStoreIngest {
   }
 
   /** Reassemble documents from manifest ⋈ store — the restore path and
-    * the lossless invariant's executable definition. One digest-keyed
-    * equi-join; per-doc concat is bounded by document length.
+    * the lossless invariant's executable definition: every manifested
+    * document comes back with its landed text, a chunkless one as `""`
+    * (`len` 0) or null (`len` null). One digest-keyed join; per-doc
+    * concat is bounded by document length.
     */
   def reassemble(spark: SparkSession, storeDir: String, manifestDir: String): DataFrame =
     spark.read.parquet(manifestDir)
-      .join(spark.read.parquet(storeDir).select("digest", "chunk"), Seq("digest"))
+      .join(spark.read.schema(StoreSchema).parquet(storeDir).select("digest", "chunk"),
+        Seq("digest"), "left")
       .groupBy(col("doc_id"))
-      .agg(concat_ws("", array_sort(collect_list(struct(col("pos"), col("chunk"))))
-        .getField("chunk")).as("text"))
+      .agg(when(count(col("len")) > 0,
+        concat_ws("", array_sort(collect_list(struct(col("pos"), col("chunk"))))
+          .getField("chunk"))).as("text"))
 
   /** Drain a doc stream (columns `doc_id`, `text`) into the store with
     * AvailableNow semantics.
@@ -328,16 +353,9 @@ object ChunkStoreIngest {
       storeDir: String,
       manifestDir: String,
       checkpoint: String,
-      k: Int = 8,
       divisor: Int = 64
-  ): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, storeDir, manifestDir, k, divisor); ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    EventStream.runAvailableNowForeach(docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, storeDir, manifestDir, divisor); ()
+    }
 }

@@ -223,12 +223,12 @@ object EventStream {
   case class PathState(path: String, depth: Int, seq: Long, lastT: Long, ooo: Long)
 
   /** Per-update emission of [[pathPrefixStream]]; `seq` is monotone so
-    * a consumer picks each user's latest row, `ooo` is the r17
+    * a consumer picks each user's latest row, `ooo` is the
     * ordering-violation counter.
     */
   case class PathUpdate(user_id: Long, path: String, depth: Long, seq: Long, ooo: Long)
 
-  /** ENTRY-PATH STREAM (round 17) — the stateful twin of
+  /** ENTRY-PATH STREAM — the stateful twin of
     * [[graft.operators.Relational.qTopPaths]]' per-user half: each
     * user's first-`k`-event-type path maintained in
     * `mapGroupsWithState` with O(k) state (the joined prefix plus the
@@ -276,7 +276,7 @@ object EventStream {
       }
   }
 
-  /** SESSION-STATS STREAM (round 17) — the incremental form of
+  /** SESSION-STATS STREAM — the incremental form of
     * [[graft.operators.Relational.qSessionStats]]: the session-length
     * histogram maintained OVER THE CLOSED-SESSIONS STREAM
     * ([[sessionizeStreamTimeout]]'s output — a session enters the
@@ -431,7 +431,7 @@ object EventStream {
         (unix_micros(col("window.start")) / lit(3600000000L)).cast("long").as("win_start"),
         col("event_type"), col("n_events"), col("n_users"), col("sum_v"))
 
-  /** VALUE-HISTOGRAM STREAM (round 16) — the incremental form of
+  /** VALUE-HISTOGRAM STREAM — the incremental form of
     * [[graft.operators.Relational.qValueHistogram]]: the cent-doubling
     * rollup as a Complete-mode streaming aggregation. Identical
     * expression tree (floor(value·100+0.5) cents, integer-log2 bucket
@@ -453,7 +453,7 @@ object EventStream {
         min(col("vc")).as("min_cents"),
         max(col("vc")).as("max_cents"))
 
-  /** HOURLY-PROFILE STREAM (round 18) — the incremental form of
+  /** HOURLY-PROFILE STREAM — the incremental form of
     * [[graft.operators.Relational.qHourlyProfile]]'s cell table: the
     * (UTC hour-of-day × type) rollup as a Complete-mode streaming
     * aggregation, identical cent/hour expression trees so parity with
@@ -486,7 +486,7 @@ object EventStream {
   case class LifespanState(n: Long, minTus: Long, maxTus: Long)
   case class LifespanUpdate(user_id: Long, n: Long, span_s: Long)
 
-  /** USER-LIFESPAN STREAM (round 18) — the per-user stage of
+  /** USER-LIFESPAN STREAM — the per-user stage of
     * [[graft.operators.Relational.qUserLifespan]] as custom keyed
     * state (`mapGroupsWithState`): each trigger emits the user's
     * updated (event count, active span in whole seconds) under the
@@ -537,7 +537,7 @@ object EventStream {
     */
   case class BurstUpdate(user_id: Long, fano_q: Long, n: Long, ooo: Boolean)
 
-  /** USER-BURSTINESS STREAM (round 19) — the per-user stage of
+  /** USER-BURSTINESS STREAM — the per-user stage of
     * [[graft.operators.Relational.qUserBurstiness]] as custom keyed
     * state: hourly event counts fold into (h, Σc, Σc²) as hours close
     * (a user's next active hour opening closes the previous one — no
@@ -613,7 +613,7 @@ object EventStream {
   case class SpanUpdate(user_id: Long, n_spans: Long, covered_us: Long,
       longest_us: Long, seq: Long, ooo: Boolean)
 
-  /** INTERVAL-MERGE STREAM (round 19) — the per-user stage of
+  /** INTERVAL-MERGE STREAM — the per-user stage of
     * [[graft.operators.Intervals.coverageQuery]] (uptime accounting /
     * activity coverage) as custom keyed state: every event opens a
     * 30-minute activity interval; overlapping/touching intervals
@@ -680,8 +680,7 @@ object EventStream {
   case class TypeDiversityState(types: Set[String], n: Long)
   case class TypeDiversityUpdate(user_id: Long, n_types: Long, n: Long)
 
-  /** USER TYPE-DIVERSITY STREAM (round 19 — the r18 verdict's item 5):
-    * the per-user stage of
+  /** USER TYPE-DIVERSITY STREAM — the per-user stage of
     * [[graft.operators.Relational.qUserTypeDiversity]] as custom keyed
     * state (`mapGroupsWithState`): each trigger emits the user's
     * updated (distinct-type count, event count). Nulls are excluded
@@ -736,8 +735,7 @@ object EventStream {
   case class DecayUpdate(user_id: Long, n_events: Long, max_day: Long,
       buckets: Map[Long, Long])
 
-  /** DECAY-SCORE STREAM (round 20 — the r19 verdict's item 5): the
-    * per-user stage of
+  /** DECAY-SCORE STREAM — the per-user stage of
     * [[graft.operators.Relational.qDecayScoreDay]] as custom keyed
     * state. Like the lifespan/diversity/burstiness twins the state is
     * an order-free monoid — per-day cent sums commute, the frontier is
@@ -756,7 +754,7 @@ object EventStream {
     import spark.implicits._
     events
       .select(col("user_id"),
-        // day bucket FLOOR-divides like the batch query (r21, ADVICE):
+        // day bucket FLOOR-divides like the batch query:
         // truncating DIV would shift pre-epoch events one bucket high
         // and break the twin's exact-parity claim on such a corpus.
         // floor(floor(ns/1000)/86400e6) == floor(ns/86400e9), so one
@@ -835,7 +833,7 @@ object EventStream {
   case class RfmUpdate(user_id: Long, recency_us: Long, frequency: Long,
       monetary_c: Long)
 
-  /** RFM STREAM (round 20) — the per-user stage of
+  /** RFM STREAM — the per-user stage of
     * [[graft.operators.Relational.qRfm]] as custom keyed state: the
     * maintained customer-state table every segmentation dashboard
     * reads, kept exact under streaming ingest at 24 bytes per user.
@@ -875,7 +873,7 @@ object EventStream {
         .select(col("user_id"), col("recency_us"), col("frequency"), col("monetary_c")))
 
   /** MAINTENANCE COMPACTION for the maintained-table twins' Update-mode
-    * sinks (r22, carried from the r20 verdict): keep each key's LATEST
+    * sinks: keep each key's LATEST
     * row by a strictly-monotone per-key sequence column — every twin
     * emits one (`frequency` for rfm, `n_events` for decay, `n` for
     * lifespan/burstiness/type-diversity, `seq` for path prefixes) — so
@@ -901,13 +899,13 @@ object EventStream {
     * arrival: three optional first-transition times, 24 bytes per
     * user, never an event list.
     */
-  /** MIGRATION NOTE (r17): `lastT`/`ooo` widened this state schema
-    * (and [[LastType]]'s / added [[PathState]]) — a checkpoint written
-    * by the r16 operators fails state-store schema compatibility on
-    * restart. Upgrading deployments restart these queries from a fresh
-    * checkpoint (replaying the source or accepting a state rebuild);
-    * there is no in-place migration, by design — the defaults keep new
-    * checkpoints self-describing.
+  /** State schema note: `lastT`/`ooo` (also in [[LastType]] and
+    * [[PathState]]) are part of the carried state — a checkpoint written
+    * without them fails state-store schema compatibility on restart.
+    * Such deployments restart these queries from a fresh checkpoint
+    * (replaying the source or accepting a state rebuild); there is no
+    * in-place migration, by design — the defaults keep new checkpoints
+    * self-describing.
     */
   case class FunnelState(t1: Option[Long], t2: Option[Long], t3: Option[Long], seq: Long,
       lastT: Long = Long.MinValue, ooo: Long = 0L)
@@ -917,13 +915,13 @@ object EventStream {
     * spec) can pick each user's LATEST row from an Update-mode sink.
     * `ooo` counts the micro-batches whose earliest event for this user
     * PRECEDED the carried fold frontier — the ordering contract's
-    * violation counter (r17): a non-zero value says this user's funnel
+    * violation counter: a non-zero value says this user's funnel
     * may differ from the batch answer, instead of being silently wrong.
     */
   case class FunnelUpdate(user_id: Long, t1: Option[Long], t2: Option[Long],
       t3: Option[Long], seq: Long, ooo: Long)
 
-  /** FUNNEL-STEPS STREAM (round 16) — the stateful twin of
+  /** FUNNEL-STEPS STREAM — the stateful twin of
     * [[graft.operators.Relational.qFunnelSteps]]: per user, the first
     * view time, the first click strictly after it, and the first
     * purchase strictly after that, maintained in
@@ -941,8 +939,8 @@ object EventStream {
     * batch query answers that case). StreamingSpec pins equality with
     * the oracle-checked batch query on a time-split source.
     *
-    * VIOLATION DETECTION (r17): the contract is no longer assumed
-    * silently — the state carries the fold frontier (the latest event
+    * VIOLATION DETECTION: the contract is not assumed silently — the
+    * state carries the fold frontier (the latest event
     * time already folded), and a batch whose earliest event for the
     * user precedes it increments the emitted `ooo` counter. Production
     * alerts on `max(ooo) > 0` instead of discovering a mis-ordered
@@ -991,7 +989,7 @@ object EventStream {
 
   /** One observed consecutive-event transition. `ooo` marks rows whose
     * user's ordering contract has been violated — STICKY from the
-    * first violating micro-batch on (r17 review fix): once an
+    * first violating micro-batch on: once an
     * out-of-order event corrupted the carried last-type, every LATER
     * transition's predecessor is suspect too, not just the violating
     * batch's rows, so the flag rides the state, and a consumer can
@@ -1000,7 +998,7 @@ object EventStream {
   case class Transition(user_id: Long, from_type: String, to_type: String,
       ooo: Boolean = false)
 
-  /** EVENT-TRANSITION STREAM (round 16) — the stateful twin of
+  /** EVENT-TRANSITION STREAM — the stateful twin of
     * [[graft.operators.Relational.qEventTransitions]]: each user's
     * consecutive-event (from → to) pairs emitted AS THEY HAPPEN from
     * `flatMapGroupsWithState` holding only the user's last event type.
@@ -1030,7 +1028,7 @@ object EventStream {
         (user, it, state) =>
           val sorted = it.toArray.sortBy(e => (e._4, e._2))
           val s0 = state.getOption
-          // ordering-contract check (r17): an event before the carried
+          // ordering-contract check: an event before the carried
           // frontier means the carried last-type is not this batch's
           // true predecessor. The violation count rides the STATE, so
           // every transition after the corruption stays flagged — the
@@ -1061,7 +1059,7 @@ object EventStream {
   /** One observed consecutive-event gap in whole seconds. `ooo` is
     * sticky from the first violating micro-batch on (the carried
     * frontier is suspect from then on — the [[Transition]] contract).
-    * `corrupt` (round 20, tightened round 21) is PER-GAP, not sticky:
+    * `corrupt` is PER-GAP, not sticky:
     * true for any gap a processed event could lie strictly inside —
     * in a violating batch, every gap whose predecessor is not strictly
     * ahead of the carried frontier (the frontier-anchored first gap
@@ -1076,7 +1074,7 @@ object EventStream {
   case class GapObs(user_id: Long, gap_s: Long, ooo: Boolean = false,
       corrupt: Boolean = false)
 
-  /** INTER-EVENT GAP STREAM (round 18) — the per-user stage of
+  /** INTER-EVENT GAP STREAM — the per-user stage of
     * [[graft.operators.Relational.qGapHist]] as
     * `flatMapGroupsWithState`: each consecutive same-user gap (under
     * the batch query's (time, event_id) order, whole seconds on the
@@ -1112,9 +1110,9 @@ object EventStream {
           // carried frontier, so in a VIOLATING batch any gap whose
           // predecessor is not strictly ahead of the frontier is
           // suspect — including batch-local gaps between two late
-          // events that straddle processed ones (r21, ADVICE: the r20
-          // first-gap-only rule under-marked exactly those). A
-          // predecessor strictly past the frontier is provably clean.
+          // events that straddle processed ones (a first-gap-only rule
+          // under-marks exactly those). A predecessor strictly past
+          // the frontier is provably clean.
           val frontier0 = s0.fold(Long.MinValue)(_.lastTus)
           val out = scala.collection.mutable.ArrayBuffer.empty[GapObs]
           sorted.foreach { case (_, eid, t) =>
@@ -1146,18 +1144,17 @@ object EventStream {
     * — the flagged late-discard scenario cannot occur in a
     * watermark-free global aggregate (see [[sessionStatsStream]]).
     *
-    * CORRUPT gaps are EXCLUDED (round 19, narrowed round 20): a gap
+    * CORRUPT gaps are EXCLUDED: a gap
     * emitted against a wrong frontier can be negative, and
     * `bin(gap_s + 1)` on a negative value lands in bucket 0
     * (gap_s = −1) or bucket 63 (gap_s < −1) — folding it in would
     * silently pollute exactly the calibration chart the flag was
-    * designed to protect. The r19 form dropped every gap of an
-    * ooo-STICKY user, so one disordered micro-batch permanently
-    * removed all of that user's later (exact) gaps and a long-lived
-    * stream with an early hiccup drifted from the truth one user at a
-    * time; the per-gap `corrupt` flag keeps those exact emissions in
-    * the buckets while the wrong-valued ones still vanish (and remain
-    * countable on the flagged [[gapStream]] rows).
+    * designed to protect. Only corrupt gaps are excluded, not every gap
+    * of an ooo-STICKY user: dropping those would let one disordered
+    * micro-batch permanently remove all of that user's later (exact)
+    * gaps. The per-gap `corrupt` flag keeps those exact emissions in the
+    * buckets while the wrong-valued ones vanish (and remain countable
+    * on the flagged [[gapStream]] rows).
     */
   def gapHistStream(gaps: DataFrame): DataFrame =
     gaps
@@ -1244,12 +1241,13 @@ object EventStream {
       }
   }
 
-  /** Production sink: `foreachBatch` parquet upsert — each micro-batch is
-    * merged last-write-wins into the destination by key (the K1
-    * `doc_as_upsert` semantics on a stream). The merge materializes
-    * before the overwrite so re-reading the path being replaced is safe;
-    * at scale this becomes overwrite-by-partition on the routing column
-    * so only touched partitions rewrite.
+  /** Production sink: parquet upsert — each micro-batch is merged
+    * last-write-wins into the destination by key (the K1 `doc_as_upsert`
+    * semantics on a stream). The destination is read under the batch's
+    * own schema (every merge writes that schema), and the merge
+    * materializes before the overwrite so re-reading the path being
+    * replaced is safe; at scale this becomes overwrite-by-partition on
+    * the routing column so only touched partitions rewrite.
     */
   def runParquetUpsert(
       events: DataFrame,
@@ -1257,57 +1255,49 @@ object EventStream {
       checkpoint: String,
       keys: Seq[String],
       versionCols: Seq[String]
-  ): StreamingQuery = {
-    val q = events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val dest = new org.apache.hadoop.fs.Path(destDir)
-        val fs = dest.getFileSystem(hconf)
-        val old = new org.apache.hadoop.fs.Path(destDir + ".old")
-        // crash recovery: a previous run may have died between
-        // rename(dest -> old) and rename(tmp -> dest); `.old` is then the
-        // ONLY copy of merged history — restore it before reading, never
-        // treat the missing dest as "no existing data"
-        if (!fs.exists(dest) && fs.exists(old) && !fs.rename(old, dest))
-          throw new java.io.IOException(s"upsert recovery: cannot restore $old to $dest")
-        // explicit existence check — a transient read failure (corrupt
-        // footer, FS hiccup) must FAIL the batch, not silently discard
-        // all previously merged data
-        val existing =
-          if (fs.exists(dest)) Some(spark.read.parquet(destDir)) else None
-        val unioned = existing.fold(batch.toDF())(_.unionByName(batch.toDF()))
-        val merged = graft.operators.Relational.upsertLatest(
-          unioned, keys, versionCols.map(c => org.apache.spark.sql.functions.col(c).desc)
-        )
-        // write the merge to a temp dir, then swap: the path being read is
-        // never overwritten in place, so lost cache blocks / lineage
-        // recompute can never observe a half-overwritten source
-        val tmp = new org.apache.hadoop.fs.Path(destDir + ".merging")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        // safe: dest exists here (recovery above restored it if needed),
-        // so any surviving `.old` is stale debris from a completed swap
-        if (fs.exists(old)) fs.delete(old, true)
-        if (existing.isDefined && !fs.rename(dest, old))
-          throw new java.io.IOException(s"upsert swap: cannot move $dest aside")
-        if (!fs.rename(tmp, dest)) {
-          if (existing.isDefined) fs.rename(old, dest)
-          throw new java.io.IOException(s"upsert swap failed for $dest")
-        }
-        fs.delete(old, true)
-        ()
+  ): StreamingQuery =
+    runAvailableNowForeach(events, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val dest = new org.apache.hadoop.fs.Path(destDir)
+      val fs = dest.getFileSystem(hconf)
+      val old = new org.apache.hadoop.fs.Path(destDir + ".old")
+      // crash recovery: a previous run may have died between
+      // rename(dest -> old) and rename(tmp -> dest); `.old` is then the
+      // ONLY copy of merged history — restore it before reading, never
+      // treat the missing dest as "no existing data"
+      if (!fs.exists(dest) && fs.exists(old) && !fs.rename(old, dest))
+        throw new java.io.IOException(s"upsert recovery: cannot restore $old to $dest")
+      // explicit existence check — a transient read failure (corrupt
+      // footer, FS hiccup) must FAIL the batch, not silently discard
+      // all previously merged data
+      val existing =
+        if (fs.exists(dest)) Some(spark.read.schema(batch.schema).parquet(destDir)) else None
+      val unioned = existing.fold(batch)(_.unionByName(batch))
+      val merged = graft.operators.Relational.upsertLatest(
+        unioned, keys, versionCols.map(c => org.apache.spark.sql.functions.col(c).desc)
+      )
+      // write the merge to a temp dir, then swap: the path being read is
+      // never overwritten in place, so lost cache blocks / lineage
+      // recompute can never observe a half-overwritten source
+      val tmp = new org.apache.hadoop.fs.Path(destDir + ".merging")
+      merged.write.mode("overwrite").parquet(tmp.toString)
+      // safe: dest exists here (recovery above restored it if needed),
+      // so any surviving `.old` is stale debris from a completed swap
+      if (fs.exists(old)) fs.delete(old, true)
+      if (existing.isDefined && !fs.rename(dest, old))
+        throw new java.io.IOException(s"upsert swap: cannot move $dest aside")
+      if (!fs.rename(tmp, dest)) {
+        if (existing.isDefined) fs.rename(old, dest)
+        throw new java.io.IOException(s"upsert swap failed for $dest")
       }
-      .start()
-    q.awaitTermination()
-    q
-  }
+      fs.delete(old, true)
+      ()
+    }
 
   /** Drain-everything run into a named in-memory sink; returns the query
-    * after completion. `foreachBatch` would be the parquet-upsert sink in
-    * production — memory keeps the test harness self-contained.
+    * after completion. [[runAvailableNowForeach]] is the production
+    * runner — memory keeps the test harness self-contained.
     */
   def runAvailableNow(
       out: DataFrame,
@@ -1326,24 +1316,28 @@ object EventStream {
     q
   }
 
-  /** RESTART-CAPABLE drain-everything runner — the production shape of
-    * [[runAvailableNow]] (the memory sink cannot recover from an
-    * existing checkpoint AT ALL, so only a foreachBatch/file sink ever
-    * reaches the state-store schema check on restart). The stateful
-    * twins deploy behind this; it is also the runner the migration
-    * guard is specified against.
+  /** The one AvailableNow runner: drains everything available through
+    * `foreachBatch`, handing `sink` each micro-batch and its batch id,
+    * and returns the query after completion. Restart-capable — unlike
+    * the memory sink of [[runAvailableNow]], it recovers from an existing
+    * checkpoint, so it is where the state-store schema check runs on
+    * restart ([[guardStateSchema]]). A crash re-delivers the last batch
+    * under the same id, so a sink that writes `batch=<id>` partitions
+    * with overwrite semantics replays convergently. The ingest modules
+    * and the parquet upsert run on it with the default Append mode; the
+    * stateful twins pass Update.
     */
   def runAvailableNowForeach(
       out: DataFrame,
       checkpoint: String,
-      outputMode: OutputMode = OutputMode.Update
-  )(sink: DataFrame => Unit): StreamingQuery = guardStateSchema(checkpoint) {
+      outputMode: OutputMode = OutputMode.Append
+  )(sink: (DataFrame, Long) => Unit): StreamingQuery = guardStateSchema(checkpoint) {
     val q = out.writeStream
       .outputMode(outputMode)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(batch.toDF())
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        sink(batch.toDF(), batchId)
       }
       .start()
     q.awaitTermination()
@@ -1351,10 +1345,9 @@ object EventStream {
   }
 
   /** True when `e`'s cause chain is a state-store SCHEMA
-    * incompatibility — the error an r16 checkpoint produces under the
-    * r17 state widening (lastT/ooo frontier fields), surfaced by Spark
-    * as a generic schema-compat failure buried in a
-    * StreamingQueryException.
+    * incompatibility — the error a checkpoint written without the
+    * lastT/ooo frontier fields produces, surfaced by Spark as a generic
+    * schema-compat failure buried in a StreamingQueryException.
     */
   private[graft] def stateSchemaIncompatible(e: Throwable): Boolean = {
     var cur = e
@@ -1375,17 +1368,16 @@ object EventStream {
     false
   }
 
-  /** OPERATOR-FACING MIGRATION GUARD (round 18, r17 ADVICE): r17
-    * widened the carried state of every frontier-detecting twin
-    * ([[FunnelState]]/[[LastType]]/PathState gained `lastT`/`ooo`), so
-    * an r16 checkpoint fails state-store schema compatibility on
-    * restart — previously with nothing but Spark's internal
-    * schema-diff wall of text. This wrapper catches that failure AT
-    * QUERY START and rethrows with the actionable contract: there is
-    * no in-place migration BY DESIGN (the defaults keep new
+  /** OPERATOR-FACING MIGRATION GUARD: the carried state of every
+    * frontier-detecting twin ([[FunnelState]]/[[LastType]]/PathState)
+    * includes `lastT`/`ooo`, so a checkpoint written without them fails
+    * state-store schema compatibility on restart, and Spark reports that
+    * as an internal schema-diff wall of text. This wrapper catches that
+    * failure AT QUERY START and rethrows with the actionable contract:
+    * there is no in-place migration BY DESIGN (the defaults keep new
     * checkpoints self-describing); restart from a fresh checkpoint and
-    * replay the source, or accept a state rebuild. The old checkpoint
-    * is never touched.
+    * replay the source, or accept a state rebuild. The old checkpoint is
+    * never touched.
     */
   def guardStateSchema[T](checkpoint: String)(body: => T): T =
     try body

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Streaming dedup ingest: the continuous form of
   * [[graft.operators.Dedup.incremental]] — every micro-batch is checked
@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.Trigger
   *     batches cheap against a long history.
   *   - Both destination docs and new digests write into a
   *     deterministic `batch=<id>` subdirectory with overwrite
-  *     semantics, so a foreachBatch REPLAY after a crash (at-least-once
+  *     semantics, so a micro-batch REPLAY after a crash (at-least-once
   *     delivery) rewrites the same files instead of appending
   *     duplicates — idempotence by layout, the parquet analog of the
   *     reference's overwrite-by-slice bulk contract.
@@ -32,14 +32,18 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object IngestDedup {
 
+  /** Data columns of a digest leaf (`batch=<id>/hp=<xx>`): `hp` and
+    * `batch` live in the path, `h` is the only column in the files.
+    */
+  private[graft] val DigestSchema: StructType = StructType.fromDDL("h STRING")
+
   /** The prior-digest scan one batch anti-joins against: everything
     * ingested by OTHER batches (a crash-replay must not anti-join its
     * docs against its own earlier write, or it would overwrite the
     * destination partition with nothing), pruned to the digest-prefix
     * partitions in `prefixes` — a [[PrefixProbe]] over the digest
-    * table. `hp`/`batch` are partition columns; `h` is the only column
-    * inside the files. Exposed for the spec that asserts the pruning
-    * reaches the file scan and the listing launches no job.
+    * table. Exposed for the spec that asserts the pruning reaches the
+    * file scan and the listing launches no job.
     */
   private[graft] def priorDigests(
       spark: org.apache.spark.sql.SparkSession,
@@ -47,8 +51,7 @@ object IngestDedup {
       batchId: Long,
       prefixes: Seq[String]
   ): DataFrame =
-    PrefixProbe.scan(spark, digestDir, "h STRING, hp STRING, batch LONG", batchId, prefixes)
-      .select(col("h"))
+    PrefixProbe.scan(spark, digestDir, DigestSchema, batchId, prefixes)
 
   /** Process one micro-batch: returns (docs written). Exposed for the
     * spec to drive directly; the streaming query calls it per batch.
@@ -106,14 +109,8 @@ object IngestDedup {
       destDir: String,
       digestDir: String,
       checkpoint: String
-  ): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, destDir, digestDir); ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    EventStream.runAvailableNowForeach(docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, destDir, digestDir); ()
+    }
 }

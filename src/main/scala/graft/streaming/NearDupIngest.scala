@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Dedup
 
@@ -30,31 +29,14 @@ import graft.operators.Dedup
   *     doc_id, deterministic, replay-stable.
   *   - Both destination docs and index rows write into deterministic
   *     `batch=<id>` subdirectories with overwrite semantics, and the
-  *     prior-index scan excludes the batch's OWN partition — the
-  *     [[IngestDedup]] replay-idempotence layout (a crash-replay
-  *     rewrites the same files and converges; without self-exclusion it
-  *     would near-dup against itself and write nothing).
+  *     prior-index read ([[PrefixProbe]], declared as the schema of the
+  *     index rows the batch itself writes) excludes the batch's OWN
+  *     partition — the [[IngestDedup]] replay-idempotence layout (a
+  *     crash-replay rewrites the same files and converges; without
+  *     self-exclusion it would near-dup against itself and write
+  *     nothing).
   */
 object NearDupIngest {
-
-  /** Prior batches' accreted index rows (empty on the first batch),
-    * excluding `batchId`'s own partition for replay safety.
-    */
-  private[graft] def priorIndex(
-      spark: SparkSession, idxDir: String, batchId: Long): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(idxDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path))
-      spark.read.parquet(idxDir)
-        .filter(col("batch") =!= lit(batchId))
-        .select(col("doc_id"), col("n"), col("pg"), col("hs"))
-    else
-      spark.emptyDataFrame // schema-compatible empty: built from nothing
-        .select(lit(0L).as("doc_id"), lit(0).as("n"),
-          array().cast("array<bigint>").as("pg"),
-          array().cast("array<bigint>").as("hs"))
-        .limit(0)
-  }
 
   /** Process one micro-batch (columns `doc_id`, `text`): write novel
     * docs + their index rows, return docs written. Exposed for the spec
@@ -74,7 +56,7 @@ object NearDupIngest {
     val newIdx = Dedup.ngramIndex(batch.select(col("doc_id"), col("text")), k, Some(corpusDf))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val standing = corpusIdx.unionByName(priorIndex(spark, idxDir, batchId))
+      val standing = corpusIdx.unionByName(PrefixProbe.scan(spark, idxDir, newIdx.schema, batchId))
       val crossDrop = Dedup.verifiedCrossPairs(standing, newIdx, threshold)
         .select(col("id_new").as("doc_id"))
       // within-batch: the full exact join over the batch's own index;
@@ -116,16 +98,10 @@ object NearDupIngest {
     // the ORDER the corpus index is pinned under — NOT the current df
     // table: an increment-built index carries its founding order
     // forward, and mixing orders across the cross-pair join would
-    // silently lose candidates (r18; [[Dedup.corpusNgramOrder]])
+    // silently lose candidates ([[Dedup.corpusNgramOrder]])
     val corpusDf = Dedup.corpusNgramOrder(spark, corpusDir, k)
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, destDir, idxDir,
-          corpusIdx, corpusDf, k, threshold); ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    EventStream.runAvailableNowForeach(docs, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, destDir, idxDir, corpusIdx, corpusDf, k, threshold); ()
+    }
   }
 }

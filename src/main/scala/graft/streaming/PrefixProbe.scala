@@ -4,44 +4,50 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Self-excluding, prefix-pruned read of a `batch=<id>/hp=<xx>` table —
-  * the layout [[IngestDedup]]'s digest table and [[ChunkStoreIngest]]'s
-  * chunk store share, and the one probe both use against it.
+/** Self-excluding read of the standing history of a `batch=<id>` table —
+  * the layout every ingest module writes its per-batch state in, and the
+  * one reader all of them probe it with.
   *
-  * The leaf directories are resolved on the driver with ONE
-  * `globStatus` of every batch's `hp={p1,…}` leaves, so listing is
-  * O(touched partitions) rather than O(every partition ever written):
-  * the read never hands Spark the table root, whose partition discovery
-  * would list (and, past the parallel-discovery threshold, launch a
-  * listing job over) the whole history. The glob names `batch=` and
-  * `hp=` literally, so hidden `_*` / `.*` paths — staging dirs,
-  * checksums — never match, as partition discovery would skip them.
+  * The leaf directories are resolved on the driver with ONE `globStatus`
+  * (of every batch's directory, or of every batch's `hp={p1,…}` leaves
+  * for an `hp`-sharded table), so listing is O(touched leaves): the read
+  * never hands Spark the table root, whose partition discovery would list
+  * (and, past the parallel-discovery threshold, launch a listing job
+  * over) the whole history. The glob names `batch=` and `hp=` literally, so hidden
+  * `_*` / `.*` paths — staging dirs, checksums — never match. The
+  * replaying batch's own leaves are dropped: a crash-replay must not see
+  * its own earlier write.
+  *
+  * The rows come back with exactly the declared columns — the data
+  * columns the writer puts in the files, never inferred (inference costs
+  * a footer-read job per probe) — and as an empty frame of that schema,
+  * with no Spark job, when no leaf matches.
   */
 private[graft] object PrefixProbe {
 
-  /** Rows of every batch OTHER than `batchId` (a replaying batch must
-    * not see its own earlier write) whose `hp` is in `prefixes`, read
-    * with the declared `schema` (data columns plus the `hp` and `batch`
-    * partition columns — never inferred, which would cost a footer-read
-    * job per probe). Empty, with that schema and no Spark job, when no
-    * leaf matches.
-    */
-  def scan(spark: SparkSession, dir: String, schema: String,
-      batchId: Long, prefixes: Seq[String]): DataFrame = {
-    val declared = StructType.fromDDL(schema)
+  /** Every other batch's rows of the table at `dir`. */
+  def scan(spark: SparkSession, dir: String, schema: StructType, batchId: Long): DataFrame =
+    read(spark, dir, schema, batchId, "batch=*", identity)
+
+  /** Every other batch's rows whose `hp` shard is in `prefixes`. */
+  def scan(spark: SparkSession, dir: String, schema: StructType,
+      batchId: Long, prefixes: Seq[String]): DataFrame =
+    if (prefixes.isEmpty) empty(spark, schema)
+    else read(spark, dir, schema, batchId, s"batch=*/hp={${prefixes.mkString(",")}}", _.getParent)
+
+  private def read(spark: SparkSession, dir: String, schema: StructType,
+      batchId: Long, glob: String, batchDir: Path => Path): DataFrame = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val self = s"batch=$batchId"
-    val leaves =
-      if (prefixes.isEmpty) Seq.empty
-      else Option(fs.globStatus(new Path(root, s"batch=*/hp={${prefixes.mkString(",")}}")))
-        .map(_.toSeq).getOrElse(Seq.empty)
-        .map(_.getPath)
-        .filter(_.getParent.getName != self)
-        .map(_.toString)
-    if (leaves.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), declared)
-    else
-      spark.read.schema(declared).option("basePath", dir).parquet(leaves: _*)
+    val leaves = Option(fs.globStatus(new Path(root, glob))).toSeq.flatten
+      .map(_.getPath)
+      .filter(batchDir(_).getName != self)
+      .map(_.toString)
+    if (leaves.isEmpty) empty(spark, schema)
+    else spark.read.schema(schema).parquet(leaves: _*)
   }
+
+  private def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 }

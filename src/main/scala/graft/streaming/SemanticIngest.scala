@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Similarity
 
@@ -10,7 +9,7 @@ import graft.operators.Similarity
   * [[graft.operators.Similarity.cosineIncremental]], completing the
   * ingest-tier matrix — exact digests ([[IngestDedup]]), lexical
   * n-gram Jaccard ([[NearDupIngest]]), chunk storage
-  * ([[ChunkStoreIngest]]), and now embedding cosine: the tier that
+  * ([[ChunkStoreIngest]]), and embedding cosine: the tier that
   * stops a PARAPHRASE of standing content, which every lexical screen
   * passes. Every micro-batch of (vec_id, embedding) rows is banded
   * once, probed against the standing corpus's materialized band asset
@@ -32,45 +31,23 @@ import graft.operators.Similarity
   *     replay-stable.
   *   - Destination vectors and band rows write into deterministic
   *     `batch=<id>` partitions with overwrite semantics, and both
-  *     standing scans exclude the batch's OWN partition — a
-  *     crash-replay rewrites the same files and converges (without
-  *     self-exclusion a replay would near-dup against itself and land
-  *     nothing).
+  *     standing reads ([[PrefixProbe]], each declared as the schema of
+  *     the rows the batch itself writes there) exclude the batch's OWN
+  *     partition — a crash-replay rewrites the same files and converges
+  *     (without self-exclusion a replay would near-dup against itself and
+  *     land nothing).
   */
 object SemanticIngest {
 
-  /** Prior batches' accreted band rows (empty on the first batch),
-    * excluding `batchId`'s own partition for replay safety.
+  /** (vec_id, t, b) LSH band rows of `vectors` — the rows each batch
+    * accretes into `idxDir/batch=<id>`.
     */
-  private[graft] def priorBands(
-      spark: SparkSession, idxDir: String, batchId: Long): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(idxDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path))
-      spark.read.parquet(idxDir)
-        .filter(col("batch") =!= lit(batchId))
-        .select(col("vec_id"), col("t"), col("b"))
-    else
-      spark.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0).as("t"), lit(0L).as("b")).limit(0)
-  }
-
-  /** Prior batches' kept vectors (the verification side for matches
-    * against accreted history), excluding `batchId`'s own partition.
-    */
-  private[graft] def priorVectors(
-      spark: SparkSession, destDir: String, batchId: Long): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(destDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path))
-      spark.read.parquet(destDir)
-        .filter(col("batch") =!= lit(batchId))
-        .select(col("vec_id"), col("embedding"))
-    else
-      spark.emptyDataFrame
-        .select(lit(0L).as("vec_id"),
-          array().cast("array<float>").as("embedding")).limit(0)
-  }
+  private[graft] def bandRows(vectors: DataFrame, bits: Int, tables: Int, dim: Int,
+      seedBase: Long): DataFrame =
+    vectors
+      .select(col("vec_id"),
+        explode(Similarity.tableBuckets(col("embedding"), bits, tables, dim, seedBase)).as("bk"))
+      .select(col("vec_id"), col("bk.t"), col("bk.b"))
 
   /** Process one micro-batch (columns `vec_id`, `embedding`): write
     * novel vectors + their band rows, return vectors written. Exposed
@@ -95,14 +72,13 @@ object SemanticIngest {
       .filter(col("embedding").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val batchBands = rows
-        .select(col("vec_id"),
-          explode(Similarity.tableBuckets(col("embedding"), bits, tables, dim, seedBase)).as("bk"))
-        .select(col("vec_id"), col("bk.t"), col("bk.b"))
+      val batchBands = bandRows(rows, bits, tables, dim, seedBase)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val standingBands = corpusBands.unionByName(priorBands(spark, idxDir, batchId))
-        val standingVecs = corpusVectors.unionByName(priorVectors(spark, destDir, batchId))
+        val standingBands = corpusBands.unionByName(
+          PrefixProbe.scan(spark, idxDir, batchBands.schema, batchId))
+        val standingVecs = corpusVectors.unionByName(
+          PrefixProbe.scan(spark, destDir, rows.schema, batchId))
         def verified(cand: DataFrame, aVecs: DataFrame): DataFrame = cand
           .join(aVecs.select(col("vec_id").as("id_a"), col("embedding").as("v_a")), Seq("id_a"))
           .join(rows.select(col("vec_id").as("id_b"), col("embedding").as("v_b")), Seq("id_b"))
@@ -163,14 +139,9 @@ object SemanticIngest {
     val corpusVectors = graft.Tables.embeddings(spark, corpusDir)
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val q = vectors.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, destDir, idxDir,
-          corpusBands, corpusVectors, threshold, bits, tables, dim, seedBase); ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    EventStream.runAvailableNowForeach(vectors, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, destDir, idxDir,
+        corpusBands, corpusVectors, threshold, bits, tables, dim, seedBase); ()
+    }
   }
 }

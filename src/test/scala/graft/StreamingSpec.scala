@@ -2039,7 +2039,7 @@ class StreamingSpec extends SparkSpec {
     // replay convergence end-to-end: re-running batch 1 changes nothing
     CuratedIngest.processBatch(
       Seq(4L, 5L, 6L).map(i => (i, texts(i))).toDF("doc_id", "text"),
-      1L, weights, 0L, dest, digest, store, manifest, divisor = 16)
+      1L, weights, dest, digest, store, manifest, divisor = 16)
     val landed2 = spark.read.parquet(dest).select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val st2 = spark.read.parquet(store)
@@ -2286,7 +2286,7 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .parquet(src + "/*")
     CuratedIngest.runCuratedIngest(stream, weights, dest, digest, store, manifest,
-      ckpt, divisor = 16, noveltyStanding = Some(standingGrams), minNoveltyBp = 5000L)
+      ckpt, gates = Seq(new NoveltyGate.Static(standingGrams, 5000L)), divisor = 16)
     val all = texts.toSeq.toDF("doc_id", "text")
     // batch twin: quality gate -> novelty gate (same standing set) ->
     // first-seen exact dedup (min doc_id per content)
@@ -2345,8 +2345,8 @@ class StreamingSpec extends SparkSpec {
     val builds0 = DecontaminationGate.evalGramBuilds.get()
     val (dest, digest, store, manifest) = outDirs()
     CuratedIngest.runCuratedIngest(stream(), weights, dest, digest, store, manifest,
-      ckpt, divisor = 16, noveltyStanding = Some(standingGrams), minNoveltyBp = 5000L,
-      decontamEvalDir = Some(evalDir))
+      ckpt, gates = Seq(new DecontaminationGate(spark, evalDir),
+        new NoveltyGate.Static(standingGrams, 5000L)), divisor = 16)
     // the frozen suite was shingled exactly once across the two
     // micro-batches (the committed-asset contract, r20)
     assert(DecontaminationGate.evalGramBuilds.get() == builds0 + 1,
@@ -2384,14 +2384,119 @@ class StreamingSpec extends SparkSpec {
     val (dest2, digest2, store2, manifest2) = outDirs()
     CuratedIngest.runCuratedIngest(stream(), weights, dest2, digest2, store2, manifest2,
       Files.createTempDirectory("graft_cde_ck2").toString,
-      divisor = 16, noveltyStanding = Some(standingGrams), minNoveltyBp = 5000L,
-      decontamEvalDir = Some(evalDir))
+      gates = Seq(new DecontaminationGate(spark, evalDir),
+        new NoveltyGate.Static(standingGrams, 5000L)), divisor = 16)
     assert(DecontaminationGate.evalGramBuilds.get() == builds0 + 1,
       "a second run on the same frozen suite must reuse the committed asset")
     val landed2 = spark.read.parquet(dest2).select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(landed2 == landed, s"replay diverged: $landed2 vs $landed")
     spark.catalog.clearCache()
+  }
+
+  test("curated ingest with the accreting novelty gate: batch-1 admissions reject a redundant batch-2 doc; every persist released") {
+    import graft.streaming.{ChunkStoreIngest, CuratedIngest, DecontaminationGate}
+    import graft.operators.{Dedup, TextAnalysis}
+    val weights = TextAnalysis.classifierWeights()
+    val src = Files.createTempDirectory("graft_cia_src").toString
+    val evalDir = Files.createTempDirectory("graft_cia_eval").toString
+    val root = Files.createTempDirectory("graft_cia").toString
+    // words from the probed classifier-positive pool, so every verdict
+    // below comes from the intended gate
+    Seq((900L, "alpha theta cedar forest lambda autumn willow thunder"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$evalDir/documents.parquet")
+    val standingGrams = Dedup.gramDf(
+      Seq((1L, "trout stone golden alpha theta cedar")).toDF("doc_id", "text"), 3)
+    val texts = Map(
+      11L -> "voyage valley heron cloud crimson zeta",                        // novel: admitted, accretes
+      12L -> "alpha theta cedar forest lambda autumn willow thunder sigma",   // leaks the eval 8-gram
+      13L -> "zzzz qqqq zzzz qqqq zzzz qqqq xxqz",                            // quality reject
+      21L -> "valley heron cloud crimson zeta falcon",                        // 3 of 4 shingles from doc 11
+      22L -> "falcon copper salmon trout stone golden")                       // 3 of 4 shingles novel
+    Seq(11L, 12L, 13L).map(i => (i, texts(i))).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(src + "/f1")
+    Seq(21L, 22L).map(i => (i, texts(i))).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(src + "/f2")
+    val stream = spark.readStream
+      .schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", 1)
+      .parquet(src + "/*")
+    spark.catalog.clearCache()
+    CuratedIngest.runCuratedIngest(stream, weights, s"$root/docs", s"$root/digests",
+      s"$root/store", s"$root/manifest", s"$root/ckpt",
+      gates = Seq(new DecontaminationGate(spark, evalDir),
+        new NoveltyGate.Accreting(s"$root/grams", standingGrams, 5000L)),
+      divisor = 16)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"a batch must release everything it persists: ${spark.sparkContext.getPersistentRDDs.keys}")
+    val landed = spark.read.parquet(s"$root/docs").select("doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(landed == Map(11L -> texts(11L), 22L -> texts(22L)), s"$landed")
+    // the pin is sharp: against the standing set alone doc 21 is novel —
+    // only batch 1's accreted admission rejects it
+    val static21 = NoveltyGate.gate(Seq((21L, texts(21L))).toDF("doc_id", "text"),
+      standingGrams, 5000L).select("admitted").as[Boolean].collect().toSeq
+    assert(static21 == Seq(true), s"pin is vacuous: the static gate rejects doc 21 too")
+    assert(ChunkStoreIngest.reassemble(spark, s"$root/store", s"$root/manifest")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap == landed)
+  }
+
+  test("curated ingest: empty- and null-text docs come back from reassembly with their landed text") {
+    import graft.streaming.{ChunkStoreIngest, CuratedIngest}
+    val weights = graft.operators.TextAnalysis.classifierWeights()
+    def docs(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def landAndRestore(rows: Seq[(Long, String)]) = {
+      val root = Files.createTempDirectory("graft_ci_empty").toString
+      CuratedIngest.processBatch(rows.toDF("doc_id", "text"), 0L, weights, s"$root/docs",
+        s"$root/digests", s"$root/store", s"$root/manifest", divisor = 16)
+      (docs(spark.read.parquet(s"$root/docs")),
+        docs(ChunkStoreIngest.reassemble(spark, s"$root/store", s"$root/manifest")))
+    }
+    val forest = "forest lambda autumn willow thunder sigma"
+    val (landed, restored) = landAndRestore(Seq((1L, forest), (2L, "")))
+    assert(landed == Map(1L -> forest, 2L -> ""), s"both docs pass the gate and land: $landed")
+    assert(restored == landed, s"reassembly must return every landed doc: $restored")
+    // a null text dedups against "" (same digest), so it lands alone
+    val (landedNull, restoredNull) = landAndRestore(Seq((3L, forest), (4L, null)))
+    assert(landedNull.contains(4L) && landedNull(4L) == null, s"$landedNull")
+    assert(restoredNull == landedNull, s"reassembly must return the null doc as null: $restoredNull")
+  }
+
+  test("standing-table reads declare exactly the schema each writer writes") {
+    import graft.streaming.{ChunkStoreIngest, IngestDedup, NearDupIngest, SemanticIngest}
+    import graft.operators.Dedup
+    // names and types; nullability is not compared, because a file
+    // source reads every column (and array element) as nullable
+    def fields(schema: org.apache.spark.sql.types.StructType) =
+      schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    // the files' columns: partition columns live in the path, not the files
+    def written(table: String, partitionCols: String*) =
+      fields(spark.read.parquet(table).schema) -- partitionCols
+    val root = Files.createTempDirectory("graft_schemas").toString
+    val batch = Seq((1L, "a1 a2 a3 a4 a5 a6 and a chunkable body of text"), (2L, "b1 b2 b3 b4"))
+      .toDF("doc_id", "text")
+    IngestDedup.processBatch(batch, 0L, s"$root/docs", s"$root/digests")
+    assert(fields(IngestDedup.DigestSchema) == written(s"$root/digests", "batch", "hp"))
+    ChunkStoreIngest.processBatch(batch, 0L, s"$root/store", s"$root/manifest", divisor = 16)
+    assert(fields(ChunkStoreIngest.StoreSchema) == written(s"$root/store", "batch", "hp"))
+    assert(fields(ChunkStoreIngest.BloomSchema) ==
+      written(ChunkStoreIngest.bloomDir(s"$root/store"), "batch"))
+    // near dedup declares the schema of the index rows the batch builds
+    val corpusDf = Dedup.gramDf(batch, 3)
+    val fresh = Seq((10L, "c1 c2 c3 c4 c5 c6")).toDF("doc_id", "text")
+    NearDupIngest.processBatch(fresh, 0L, s"$root/nd", s"$root/ndidx",
+      Dedup.ngramIndex(batch, 3, Some(corpusDf)), corpusDf, k = 3, threshold = 0.5)
+    assert(fields(Dedup.ngramIndex(fresh, 3, Some(corpusDf)).schema) == written(s"$root/ndidx", "batch"))
+    // semantic ingest declares the batch's own vector schema and its band rows'
+    val vectors = Seq((20L, Array(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    val bands = SemanticIngest.bandRows(vectors, 4, 8, 4, 42L)
+    SemanticIngest.processBatch(vectors, 0L, s"$root/sem", s"$root/semidx",
+      bands.limit(0), vectors.limit(0), 0.9, 4, 8, 4, 42L)
+    assert(fields(vectors.schema) == written(s"$root/sem", "batch"))
+    assert(fields(bands.schema) == written(s"$root/semidx", "batch"))
+    new NoveltyGate.Accreting(s"$root/grams", corpusDf.limit(0))(fresh, 0L).unpersist()
+    assert(fields(NoveltyGate.GramSchema) == written(s"$root/grams", "batch"))
   }
 
   test("streaming profile gate: standing-corpus median/MAD screen equals the batch operator; cold sources pass") {
@@ -2461,13 +2566,13 @@ class StreamingSpec extends SparkSpec {
     // existing checkpoint at all, so only this (production) runner
     // ever reaches the state schema check on restart; the sink must
     // ACT on the batch or the stateful operator never commits
-    EventStream.runAvailableNowForeach(old.toDF(), ckpt, OutputMode.Update)(b => { b.count(); () })
+    EventStream.runAvailableNowForeach(old.toDF(), ckpt, OutputMode.Update)((b, _) => { b.count(); () })
     // a new file so the restarted query plans a real micro-batch
     Seq((1L, "click", 2000000L))
       .toDF("user_id", "event_type", "ts_ns").coalesce(1).write.parquet(s"$src/b_part")
     val e = intercept[IllegalStateException] {
       EventStream.runAvailableNowForeach(
-        EventStream.funnelStepsStream(stream).toDF(), ckpt, OutputMode.Update)(b => { b.count(); () })
+        EventStream.funnelStepsStream(stream).toDF(), ckpt, OutputMode.Update)((b, _) => { b.count(); () })
     }
     assert(e.getMessage.contains("FRESH checkpoint") && e.getMessage.contains(ckpt),
       s"expected the migration contract, got: ${e.getMessage.take(300)}")
