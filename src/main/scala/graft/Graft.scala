@@ -18,12 +18,15 @@ import graft.transform._
   *
   * Task lifecycle (SURVEY §3):
   *   - [[addTask]] = POST /tasks/:id — validate (referenced transforms
-  *     must exist, `tasks.js:79-80`), plan subtasks, build the backlog
-  *     minus already-completed work (resume, `subtasks.js:369-396`).
-  *   - [[runTask]] = the worker loop — execute each backlog subtask,
-  *     record completion/errors/progress, continue past failures
+  *     must exist, `tasks.js:79-80`), plan subtasks with
+  *     [[graft.engine.Planner.expand]], build the backlog minus
+  *     already-completed work (resume, `subtasks.js:369-396`).
+  *   - [[runTask]] = the worker loop — execute each backlog subtask with
+  *     [[graft.engine.Transfer.transferSubtask]], record
+  *     completion/errors/progress, continue past failures
   *     (`worker.js:106-111`), stop between subtasks when the run flag
-  *     drops (`manager.js:111-118`).
+  *     drops (`manager.js:111-118`). This is the one route by which a
+  *     reindex moves data.
   *   - [[status]] = GET /tasks/:id — `{total, completed, backlog,
   *     percentComplete}` (`tasks.controller.js:14-27`).
   *   - [[progress]] = the per-subtask `{tick, transferred, total,
@@ -35,7 +38,7 @@ import graft.transform._
   *     namespaced transforms (`tasks.js:89-97`).
   *
   * `connectors` maps a task spec to its (source, sink) connector pair;
-  * the default is the parquet layout rooted at the spec's directories,
+  * the default dispatches on the spec's roots ([[Graft.parquetConnectors]]),
   * and tests plug an in-memory mock (the worker-E2E seam).
   */
 final class Graft(
@@ -43,7 +46,6 @@ final class Graft(
     connectors: TaskSpec => (DocConnector, DocConnector) = Graft.parquetConnectors
 ) {
 
-  val catalog  = new Catalog
   val mutators = new TransformRegistry[ColumnMutator]
   val filters  = new TransformRegistry[StoredFilter]
   val errors   = new ErrorLog
@@ -95,16 +97,18 @@ final class Graft(
     activeGroups.forEach(g => spark.sparkContext.cancelJobGroup(g))
   }
 
-  /** Submit a task: existence pre-check of referenced mutators AND
-    * filters (`tasks.js:79-80` checks both stores), subtask planning,
+  /** Submit a task and return its backlog: existence pre-check of
+    * referenced mutators AND filters (`tasks.js:79-80` checks both
+    * stores), subtask planning over the task's source connector, and a
     * resume-aware backlog. Re-adding an existing task replans and
-    * subtracts completed subtasks — the reference's resume.
+    * subtracts completed subtasks — the reference's resume. Refuses a
+    * task whose drain is in flight.
     *
-    * Stored filters referenced by `spec.indexFilters` prune the table
-    * list at PLAN time (index-kind ones; type-kind stored filters are
-    * retained and applied by [[transferTaskMetadata]]), OR-combined with
-    * any programmatic `indexFilters` passed directly — multiple filters
-    * widen, never narrow (`subtasks.js:164`).
+    * Index-kind stored filters referenced by `spec.indexFilters` prune
+    * the table list at plan time, OR-combined with any programmatic
+    * `indexFilters` — multiple filters widen, never narrow
+    * (`subtasks.js:164`). Type-kind stored filters are kept for
+    * [[transferTaskMetadata]].
     */
   def addTask(
       spec: TaskSpec,
@@ -112,10 +116,8 @@ final class Graft(
       indexFilters: Seq[MetadataFilters.IndexPred] = Seq.empty,
       buckets: Int = 3
   ): Seq[SubtaskSpec] = {
-    // re-adding while a drain is in flight would orphan the running
-    // TaskState: the drain keeps recording completions into the REPLACED
-    // state, the live one re-queues work already done (hours of
-    // duplicated transfer at scale). Refuse; stop the run first.
+    // a drain in flight would keep recording completions into the
+    // replaced state while the new one re-queues work already done
     if (isTaskRunning(spec.name))
       throw new IllegalStateException(
         s"task '${spec.name}' has a run in flight; stop it before re-adding")
@@ -128,9 +130,7 @@ final class Graft(
     val allIndexPreds = indexFilters ++
       storedFilters.filter(_.kind == StoredFilter.Index).map(_.indexPred)
     val typePreds = storedFilters.filter(_.kind == StoredFilter.Type).map(_.typePred)
-    val configs = spec.tables.map(t => IndexConfig(t))
-    val potential = Planner.expand(
-      spark, spec, sizeCols, configs, allIndexPreds, buckets, (s, t) => source.scan(s, t))
+    val potential = Planner.expand(spark, spec, source, sizeCols, allIndexPreds, buckets)
     val prior = Option(tasks.get(spec.name)).map(_.completed).getOrElse(Set.empty[String])
     val backlog = Planner.buildBacklog(potential, prior)
     val priorProgress = Option(tasks.get(spec.name)).map(_.progress)
@@ -144,10 +144,9 @@ final class Graft(
   /** Run a task's METADATA transfer (K3/K4): index configs and templates
     * flow source→dest through the task's index/template mutators, and the
     * task's TYPE-kind stored filters prune mapping types (F2 — the
-    * reference applies them at type expansion, `subtasks.js:165`; our
-    * data subtasks have no type axis, so the mapping-key prune here is
-    * where a stored type filter acts — previously they were validated at
-    * add and then silently ignored).
+    * reference applies them at type expansion, `subtasks.js:165`; data
+    * subtasks have no type axis, so this mapping-key prune is where a
+    * stored type filter acts).
     */
   def transferTaskMetadata(
       name: String,
@@ -164,28 +163,30 @@ final class Graft(
       tolerateMissingTemplates, st.typeFilters)
   }
 
-  /** Execute the backlog. Failures are recorded (P8) and do not abort the
-    * remaining subtasks, matching the worker loop's error handling; a
-    * dropped run flag stops consumption and leaves the rest queued.
-    * `onProgress`/`onComplete` are the worker callbacks
-    * (`worker.spec.js:92-104`'s updateCallback/completedCallback).
+  /** Execute the backlog, one [[graft.engine.Transfer.transferSubtask]]
+    * per subtask inside the task's Spark job group, and return what each
+    * successful subtask wrote, with `outputPath` resolved to the sink's
+    * location when it has one. A failed subtask is recorded in
+    * [[errors]] (P8) and stays in the backlog; the remaining subtasks
+    * still run (`worker.js:106-111`). A dropped run flag stops consumption
+    * and leaves the rest queued. Refuses to start while the manager is
+    * stopped or the task is already draining. `onProgress`/`onComplete`
+    * are the worker callbacks (`worker.spec.js:92-104`'s
+    * updateCallback/completedCallback).
     */
   def runTask(
       name: String,
       worker: String = "driver",
       onProgress: (String, SubtaskSpec, Progress) => Unit = (_, _, _) => (),
       onComplete: (String, SubtaskSpec) => Unit = (_, _) => ()
-  ): Seq[Transfer.TableResult] = {
+  ): Seq[Transfer.SubtaskResult] = {
     val st = Option(tasks.get(name))
       .getOrElse(throw new NoSuchElementException(s"no such task: $name"))
-    // a run submitted while the manager is stopped would skip every
-    // subtask and report a convincing-but-false "done, 0 transferred";
-    // reject it instead (409 over HTTP)
+    // a stopped manager would skip every subtask and report a false
+    // "done, 0 transferred" (409 over HTTP)
     if (!runFlag.get)
       throw new IllegalStateException("manager is stopped; POST /_start before running")
     val group = groupFor(name)
-    // per-task single-drain claim at the facade level too (HttpApi has
-    // its own; direct embedders get the same protection)
     if (!activeGroups.add(group))
       throw new IllegalStateException(s"task '$name' is already running")
     spark.sparkContext.setJobGroup(group, s"graft task $name", interruptOnCancel = true)
@@ -202,7 +203,6 @@ final class Graft(
                 st.progress.put(sub.subtaskId, p)
                 onProgress(name, sub, p)
               })
-            // resolve outputPath to a real location when the sink has one
             val resolved = st.sink.location(r.outputPath).fold(r)(loc => r.copy(outputPath = loc))
             // synchronized: completed/backlog are read from HTTP threads
             // (status) while the drain thread writes them, and += on an
@@ -273,15 +273,15 @@ final class Graft(
       graft.engine.AssetStore.gcStale(spark, corpora, graceMs, sweepOlderFormats, dryRun)
     // a real sweep may delete paths the in-JVM handle maps still point
     // at, and it marks a generation boundary anyway — drop every driver
-    // handle cache (r18); the next consumer re-resolves from disk
+    // handle cache; the next consumer re-resolves from disk
     // (metadata-only) and the append-proof memo re-proves on demand
     if (!dryRun) Graft.dropDriverHandleCaches()
     removed
   }
 
   /** POST /maintenance/assets_increment — the append workflow's ONE
-    * call, made ops-reachable (round 16): after a batch lands under
-    * `dir` (a pure append of `oldDir`), publish the requested durable
+    * call, made ops-reachable: after a batch lands under `dir` (a pure
+    * append of `oldDir`), publish the requested durable
     * asset families at `dir`'s content addresses by INCREMENT —
     * `knn_edges` (copy-forward partition publish, co-publishes the
     * band asset), `bands` (standalone copy-forward), `gram_stats`
@@ -311,13 +311,13 @@ final class Graft(
       case "tristats" =>
         Seq("tristats" -> graft.operators.Similarity.corpusTriangleStatsIncrement(spark, oldDir, dir).count())
       case "ngram_index" =>
-        // a pinned chain also reports its order-staleness rows (r19,
-        // 4 rows as of r20) — runbook triggers: collision_bp or
-        // new_collision_bp > ~30000 (both calibrated), overlap < ~7000
-        // secondary, new-gram share = context
+        // a pinned chain also reports its 4 order-staleness rows —
+        // runbook triggers: collision_bp or new_collision_bp > ~30000
+        // (both calibrated), overlap < ~7000 secondary, new-gram share =
+        // context
         // oldDir keeps the probe vocabulary-sized: an uncommitted
         // gram-stats asset is published by the increment merge here,
-        // never by an implicit full corpus shingle (r20 advice fix)
+        // never by an implicit full corpus shingle
         val n = graft.operators.Dedup.corpusNgramIndexIncrement(spark, oldDir, dir).count()
         Seq("ngram_index" -> n) ++
           graft.operators.Dedup.ngramOrderStaleness(spark, dir, oldDir = Some(oldDir))
@@ -346,8 +346,7 @@ final class Graft(
 }
 
 object Graft {
-  /** The asset families an unconditional append publish covers (r17,
-    * extended r18): the graph pair (edges + co-published bands), the
+  /** The asset families an unconditional append publish covers: the graph pair (edges + co-published bands), the
     * gram stats, the three per-document signature/digest assets, and
     * the two SECOND-TIER derivations — the verified minhash pair graph
     * and the triangle stats — so every standing consumer serves with

@@ -93,9 +93,10 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
   private val runExec = Executors.newCachedThreadPool(daemonFactory("graft-run"))
 
   /** Poll payload for `GET /tasks/{id}/_run`. `state` is one of
-    * `running` | `done` | `failed`; a `/_stop`-interrupted run still
-    * lands `done` (with the skipped subtasks recorded as errors and left
-    * in the backlog for resume, matching [[Graft.runTask]]).
+    * `planning` | `plan_failed` | `running` | `done` | `failed`; a
+    * `/_stop`-interrupted run still lands `done`. As in [[Graft.runTask]],
+    * only the cancelled in-flight subtask is recorded as an error; it and
+    * the subtasks never started stay in the backlog for resume.
     */
   private final case class RunSummary(
       state: String, completed: Int, rowsWritten: Long, error: Option[String])
@@ -467,15 +468,9 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
 
   private def addFilter(ex: HttpExchange, ns: String, id: String): Unit = {
     val body = mapper.readTree(ex.getRequestBody)
+    // the constructor rejects a bad pattern, so it 400s here, at the store
     val f = graft.transform.StoredFilter(
       ObjectId(ns, id), reqText(body, "type"), reqText(body, "pattern"))
-    // force the (lazy) regex NOW: a broken pattern must 400 here, at the
-    // store, not later inside task planning attributed to the wrong call
-    try java.util.regex.Pattern.compile(f.pattern)
-    catch {
-      case e: java.util.regex.PatternSyntaxException =>
-        throw new IllegalArgumentException(s"invalid pattern: ${e.getMessage}")
-    }
     g.filters.add(f.id, f)
     json(ex, 200, Map.empty)
   }

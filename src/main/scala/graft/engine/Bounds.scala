@@ -34,12 +34,15 @@ object Bounds {
     math.min(MaxFlushSize, math.max(MinFlushSize, raw.toInt))
   }
 
-  /** Plan `buckets` equi-depth size ranges over `sizeCol` (bytes).
+  /** Plan up to `buckets` equi-depth size ranges over `sizeCol` (bytes).
     *
     * One `approxQuantile` pass for the boundaries + one aggregation for
-    * per-bucket counts and max sizes. Returned ranges are [min, max)
-    * except the last, which is closed at +inf (maxSize = Double.MaxValue)
-    * — matching the reference's unbounded top bucket.
+    * per-bucket counts and max sizes. Ranges are [min, max); the first
+    * has `minSize = -Infinity` and owns null sizes, the last has
+    * `maxSize = Double.MaxValue` and is open above — the reference's
+    * unbounded top bucket. A quantile equal to either sentinel is not a
+    * cut: its rows already belong to the first or last bucket, and
+    * [[Transfer.sizeRangePred]] reads the sentinels as open ends.
     */
   def plan(
       df: DataFrame,
@@ -53,7 +56,8 @@ object Bounds {
     val probs = (1 until buckets).map(_.toDouble / buckets).toArray
     val cuts =
       if (probs.isEmpty) Array.empty[Double]
-      else df.stat.approxQuantile(sizeCol, probs, relErr).distinct.sorted
+      else df.stat.approxQuantile(sizeCol, probs, relErr)
+        .filterNot(c => c.isNegInfinity || c == Double.MaxValue).distinct.sorted
 
     val lowers = Double.MinValue +: cuts.toSeq
     val uppers = cuts.toSeq :+ Double.MaxValue
@@ -82,9 +86,8 @@ object Bounds {
       val (cnt, maxSz) = stats.getOrElse(i, (0L, 0.0))
       SubtaskSpec(
         table = table,
-        // bucket 0 is unbounded below (and owns null sizes — the when-
-        // chain's `otherwise` counts them here, so the transfer predicate
-        // must match; see Transfer.transferSubtask)
+        // bucket 0 is unbounded below and owns null sizes: the when-
+        // chain's `otherwise` counts them here, as sizeRangePred reads them
         minSize = if (i == 0) Double.NegativeInfinity else lowers(i),
         maxSize = uppers(i),
         flushSize = flushSize(maxSz, shards),

@@ -17,8 +17,8 @@ final class Catalog {
 
   def getIndices(pattern: String = "*"): Seq[IndexConfig] = {
     import scala.jdk.CollectionConverters._
-    val rx = globToRegex(pattern)
-    indices.values.asScala.toSeq.filter(ic => rx.matches(ic.name)).sortBy(_.name)
+    val matches = graft.sources.DocConnector.glob(pattern)
+    indices.values.asScala.toSeq.filter(ic => matches(ic.name)).sortBy(_.name)
   }
 
   // -- S4: template scan with system filter (`transfer.js:383-406`) ------
@@ -30,8 +30,8 @@ final class Catalog {
     */
   def getTemplates(pattern: String = "*"): Seq[Template] = {
     import scala.jdk.CollectionConverters._
-    val rx = globToRegex(pattern)
-    val all = templates.values.asScala.toSeq.filter(t => rx.matches(t.name))
+    val matches = graft.sources.DocConnector.glob(pattern)
+    val all = templates.values.asScala.toSeq.filter(t => matches(t.name))
     // error-if-none runs AFTER the system (dot) filter: a pattern that
     // matches only system templates is as typo'd as one matching nothing,
     // and returning empty here would hide it as success
@@ -59,7 +59,4 @@ final class Catalog {
   // -- K4: template DDL sink --------------------------------------------
 
   def createTemplate(t: Template): Template = { templates.put(t.name, t); t }
-
-  private def globToRegex(glob: String): scala.util.matching.Regex =
-    ("^" + java.util.regex.Pattern.quote(glob).replace("*", "\\E.*\\Q") + "$").r
 }

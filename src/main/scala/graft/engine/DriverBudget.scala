@@ -30,7 +30,7 @@ import org.apache.spark.sql.{DataFrame, Row}
   *   - result dumps owned by the harness (Verify writes parquet,
   *     Bench counts) — a query's RESULT size is its documented
   *     contract, not driver state;
-  *   - diagnostics under `tools/` (PlanProbe, AssetBench) — operator
+  *   - diagnostics under `tools/` (Profile, AssetBench) — operator
   *     cost there is the point of the tool.
   *
   * Bounds are stated in ROWS because row counts survive scale-factor

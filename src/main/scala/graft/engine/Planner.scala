@@ -3,53 +3,40 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 
 import graft.model._
+import graft.sources.DocConnector
 import graft.transform.MetadataFilters
 
-/** P1/P5 task planning (`subtasks.js:369-396`): expand a task into the
-  * cross product (filtered tables) x (size buckets), subtract the
-  * completed set by content-addressed subtask id, and return only the
-  * unfinished backlog — the reference's resume semantics.
-  *
-  * In Spark the "queue" is the scheduler; this planner exists for
-  * resumable multi-table batch runs where each subtask becomes one
-  * filtered batch job (and for parity with the reference's observable
-  * planning behavior).
+/** Task planning (P1/P5, `subtasks.js:369-396`): a task expands into
+  * (tables kept by its index filters) x (size buckets), and the backlog
+  * is that set minus the subtasks already completed, diffed on the
+  * content-addressed subtask id.
   */
 object Planner {
 
-  /** Generate all potential subtasks for a task: per surviving table,
-    * equi-depth size buckets from [[Bounds.plan]] over `sizeCol`.
+  /** Every subtask of `task`. A table survives when no index filter is
+    * given or any filter accepts its [[IndexConfig]] (F1, OR-combined);
+    * pruned tables are never scanned. A table with a size column in
+    * `sizeCols` gets `buckets` equi-depth size ranges from [[Bounds.plan]]
+    * over its `source` scan; any other table is one subtask spanning the
+    * same sentinels as a bucket plan, counted with one job.
     */
   def expand(
       spark: SparkSession,
       task: TaskSpec,
+      source: DocConnector,
       sizeCols: Map[String, String],
-      indexConfigs: Seq[IndexConfig],
       indexFilters: Seq[MetadataFilters.IndexPred] = Seq.empty,
-      buckets: Int = 3,
-      scan: (SparkSession, String) => org.apache.spark.sql.DataFrame = null
-  ): Seq[SubtaskSpec] = {
-    // default scan: the parquet layout rooted at the task's sourceDir
-    val doScan = Option(scan).getOrElse(
-      (s: SparkSession, t: String) => s.read.parquet(s"${task.sourceDir}/$t.parquet"))
-    // no catalog metadata at all = nothing to filter AGAINST, keep every
-    // task table — the same empty-catalog-keeps-everything invariant
-    // Transfer.runTask guards; an empty `kept` here would silently plan
-    // zero subtasks and report a vacuous "done"
-    val kept =
-      if (indexConfigs.isEmpty) task.tables.toSet
-      else MetadataFilters.applyIndexFilters(indexConfigs, indexFilters).map(_.name).toSet
-    task.tables.filter(kept).flatMap { t =>
-      val df = doScan(spark, t)
-      sizeCols.get(t) match {
-        case Some(sizeCol) => Bounds.plan(df, t, sizeCol, buckets)
-        case None          => // unbucketed table: one subtask covering everything —
-          // same sentinels as Bounds.plan's first/last buckets, so the
-          // null/NaN/open-above handling in transferSubtask applies
-          Seq(SubtaskSpec(t, Double.NegativeInfinity, Double.MaxValue, Bounds.MaxFlushSize, df.count()))
+      buckets: Int = 3
+  ): Seq[SubtaskSpec] =
+    MetadataFilters.applyIndexFilters(task.tables.map(IndexConfig(_)), indexFilters)
+      .map(_.name).flatMap { t =>
+        val df = source.scan(spark, t)
+        sizeCols.get(t) match {
+          case Some(sizeCol) => Bounds.plan(df, t, sizeCol, buckets)
+          case None =>
+            Seq(SubtaskSpec(t, Double.NegativeInfinity, Double.MaxValue, Bounds.MaxFlushSize, df.count()))
+        }
       }
-    }
-  }
 
   /** `buildBacklog` (`subtasks.js:369-396`): potential minus completed,
     * diffed on the content-addressed id (`subtask.js:20-25` — count is

@@ -27,9 +27,10 @@ object ObjectId {
 }
 
 /** The document envelope the reference streams (`transfer.js:119-124,175-189`):
-  * `{_index, _type, _id, _source}` where `_source` is arbitrary JSON.
-  * We keep `source` as a flat string map for the schema-agnostic path; the
-  * typed path is a plain DataFrame with declared schema.
+  * `{_index, _type, _id, _source}` where `_source` is arbitrary JSON, kept
+  * here as a flat string map. It is the unit of the reference mutator fold
+  * ([[graft.transform.MutatorPipeline.applyDocs]]); transfers move typed
+  * DataFrames.
   */
 final case class Doc(
     index: String,

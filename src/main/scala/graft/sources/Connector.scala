@@ -34,11 +34,18 @@ trait DocConnector {
     * one (filesystem paths); None for opaque stores.
     */
   def location(table: String): Option[String] = None
+}
 
-  protected final def globMatches(pattern: String, name: String): Boolean =
-    java.util.regex.Pattern
+object DocConnector {
+
+  /** The `*`-glob over whole names that table and index listings share:
+    * `*` matches any run of characters, everything else is literal.
+    */
+  def glob(pattern: String): String => Boolean = {
+    val rx = java.util.regex.Pattern
       .compile(pattern.split("\\*", -1).map(java.util.regex.Pattern.quote).mkString(".*"))
-      .matcher(name).matches()
+    name => rx.matcher(name).matches()
+  }
 }
 
 /** Count-as-you-write: the row count of a written DataFrame collected
@@ -112,11 +119,17 @@ class FormatConnector(
     reader.load(scanPath(table))
   }
 
+  /** A frame with an `_index` column (the reference's dynamic index
+    * rename, M2) writes one `_index=<value>` directory per destination
+    * index under the table.
+    */
   override def bulk(df: DataFrame, table: String): Long = {
     val dest = s"$root/$table"
-    WriteMetrics.countingWrite(df)(
-      _.write.format(format).options(fmtDefaults ++ writeOptions)
-        .mode(SaveMode.Overwrite).save(dest))
+    WriteMetrics.countingWrite(df) { d =>
+      val writer = d.write.format(format).options(fmtDefaults ++ writeOptions)
+        .mode(SaveMode.Overwrite)
+      (if (d.columns.contains("_index")) writer.partitionBy("_index") else writer).save(dest)
+    }
   }
 
   override def listTables(pattern: String): Seq[String] = {
@@ -125,7 +138,7 @@ class FormatConnector(
     if (!fs.exists(rootPath)) Seq.empty
     else fs.listStatus(rootPath).toSeq
       .map(_.getPath.getName.stripSuffix(s".$format"))
-      .distinct.filter(globMatches(pattern, _)).sorted
+      .distinct.filter(DocConnector.glob(pattern)).sorted
   }
 
   override def location(table: String): Option[String] = Some(s"$root/$table")
@@ -159,7 +172,7 @@ final class InMemoryConnector extends DocConnector {
   }
 
   override def listTables(pattern: String): Seq[String] =
-    tables.keySet.toSeq.filter(globMatches(pattern, _)).sorted
+    tables.keySet.toSeq.filter(DocConnector.glob(pattern)).sorted
 
   def count(table: String): Long = tables.get(table).map(_._2.size.toLong).getOrElse(0L)
 

@@ -177,7 +177,7 @@ class HttpScrollConnector(
     require(resp.status == 200, s"_tables returned ${resp.status}")
     val arr = resp.json
     (0 until arr.size()).map(arr.get(_).asText())
-      .filter(globMatches(pattern, _)).sorted
+      .filter(DocConnector.glob(pattern)).sorted
   }
 }
 

@@ -10,8 +10,11 @@ import scala.util.control.NonFatal
   * the wall time into `plan` (the query function building its DataFrame
   * — construct-time jobs included — plus analysis, optimization and
   * physical planning, forced via `queryExecution.executedPlan`) and
-  * EXECUTION, and report executed stage count / task count / shuffle
-  * bytes / task-time sum from a listener. This tells us, per query,
+  * EXECUTION, and report executed stage count / task count / stage
+  * input bytes / shuffle bytes / task-time sum from a listener. Counts
+  * come from completed stages, so a stage that exchange or AQE reuse
+  * skips adds nothing; Spark reads `spark.*` JVM system properties, so
+  * `-Dspark.sql.exchange.reuse=false` gives the run without reuse. This tells us, per query,
   * whether the driver (construct and Catalyst) or the cluster (stages)
   * is the bottleneck — guide §1 "measure first".
   *
@@ -32,12 +35,14 @@ object Profile {
     spark.sparkContext.setLogLevel("ERROR")
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
+    val inputBytes = new AtomicLong(0L)
     val shuffleWrite = new AtomicLong(0L)
     val taskTimeMs = new AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         tasks.addAndGet(sc.stageInfo.numTasks)
+        inputBytes.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.bytesRead)
         shuffleWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
         taskTimeMs.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
       }
@@ -51,14 +56,15 @@ object Profile {
           catch { case NonFatal(e) => System.err.println(s"$name warmup failed: $e") }
           var bestPlan = Double.MaxValue
           var bestExec = Double.MaxValue
-          var lastStages = 0; var lastTasks = 0; var lastShuffle = 0L; var lastTaskTime = 0L
+          var lastStages = 0; var lastTasks = 0; var lastInput = 0L; var lastShuffle = 0L
+          var lastTaskTime = 0L
           // timed iterations tolerate failures like the warmup does
           // (ADVICE r21): one failing query must not abort the whole
           // run, and a query with ZERO successful iterations prints an
           // explicit FAILED line instead of Double.MaxValue totals
           (1 to iters).foreach { _ =>
             spark.catalog.clearCache()
-            stages.set(0); tasks.set(0); shuffleWrite.set(0L); taskTimeMs.set(0L)
+            stages.set(0); tasks.set(0); inputBytes.set(0L); shuffleWrite.set(0L); taskTimeMs.set(0L)
             try {
               val t0 = System.nanoTime()
               val df = fn(spark, sfDir)
@@ -71,7 +77,7 @@ object Profile {
               val exec = (t2 - t1) / 1e9
               if (plan + exec < bestPlan + bestExec) {
                 bestPlan = plan; bestExec = exec
-                lastStages = stages.get(); lastTasks = tasks.get()
+                lastStages = stages.get(); lastTasks = tasks.get(); lastInput = inputBytes.get()
                 lastShuffle = shuffleWrite.get(); lastTaskTime = taskTimeMs.get()
               }
             } catch {
@@ -82,7 +88,7 @@ object Profile {
             println(f"PROFILE $name%-28s FAILED (no iteration succeeded)")
           else
             println(f"PROFILE $name%-28s total=${bestPlan + bestExec}%6.3f plan=$bestPlan%6.3f exec=$bestExec%6.3f " +
-              f"stages=$lastStages%3d tasks=$lastTasks%4d shufMB=${lastShuffle / 1e6}%8.2f taskSumS=${lastTaskTime / 1e3}%7.2f")
+              f"stages=$lastStages%3d tasks=$lastTasks%4d inMB=${lastInput / 1e6}%8.2f shufMB=${lastShuffle / 1e6}%8.2f taskSumS=${lastTaskTime / 1e3}%7.2f")
       }
     }
     spark.stop()

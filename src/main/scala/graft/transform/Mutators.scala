@@ -13,14 +13,15 @@ import graft.model.ObjectId
   * short-circuits the rest of the pipeline.
   *
   * Two surfaces:
-  *   - [[ColumnMutator]] / [[MutatorPipeline.applyColumnar]]: the scalable
-  *     path. Each mutator is expressed in Catalyst `Column`s; the fold
-  *     compiles to chained projections + filters that Catalyst collapses
-  *     into a single whole-stage-codegen'd select, so a 10-mutator pipeline
-  *     costs one pass with full predicate pushdown.
-  *   - [[DocMutator]] / [[MutatorPipeline.applyDocs]]: the schema-agnostic
-  *     row path over the [[graft.model.Doc]] envelope, property-tested for
-  *     the exact fold/drop/arg-override laws.
+  *   - [[ColumnMutator]] / [[MutatorPipeline.applyColumnar]]: the fold a
+  *     transfer runs. Each mutator is expressed in Catalyst `Column`s; the
+  *     fold compiles to chained projections + filters that Catalyst
+  *     collapses into a single whole-stage-codegen'd select, so a
+  *     10-mutator pipeline costs one pass with full predicate pushdown.
+  *   - [[DocMutator]] / [[MutatorPipeline.applyDocs]]: the reference fold
+  *     over one [[graft.model.Doc]] at a time, with the exact
+  *     fold/drop/arg-override laws; the columnar fold is property-tested
+  *     against it.
   */
 sealed trait ColumnMutator {
   def id: ObjectId
@@ -131,21 +132,6 @@ object MutatorPipeline {
       applyColumnar(d, Seq(m)).observe(name, count(lit(1)).as("rows"))
     }
     (observed, names)
-  }
-
-  /** Distributed fold over the schema-agnostic envelope: the Dataset path
-    * for documents whose shape is unknown at plan time (`SURVEY.md` §1.2).
-    * Mutators must be serializable (plain functions); drops become the
-    * flatMap's empty case.
-    */
-  def applyDataset(
-      ds: org.apache.spark.sql.Dataset[graft.model.Doc],
-      mutators: Seq[DocMutator],
-      taskArgs: Map[String, String] = Map.empty
-  ): org.apache.spark.sql.Dataset[graft.model.Doc] = {
-    implicit val enc: org.apache.spark.sql.Encoder[graft.model.Doc] =
-      org.apache.spark.sql.Encoders.product[graft.model.Doc]
-    ds.flatMap(d => applyDoc(d, mutators, taskArgs))
   }
 }
 

@@ -7,11 +7,13 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.engine.{Bounds, Catalog, Transfer}
 import graft.model._
+import graft.sources.ParquetConnector
 import graft.transform._
 
 /** Engine modules: bounds planner invariants (mirroring the golden
   * expectations of `subtasks.bounds.spec.js`), catalog DDL semantics,
-  * and the end-to-end transfer pipeline with idempotent re-run.
+  * and the reindex path (`Graft.addTask`/`runTask` over parquet
+  * connectors) with idempotent re-run.
   */
 class EngineSpec extends SparkSpec {
   import spark.implicits._
@@ -253,31 +255,54 @@ class EngineSpec extends SparkSpec {
 
   // -- Transfer pipeline -------------------------------------------------
 
-  test("transferTable: mutate+drop+route, idempotent on re-run") {
+  /** Plan and drain `tables` of `src` through the facade into `dest`
+    * (parquet connectors on both sides), with `mutators` registered and
+    * referenced by the task. Returns the planned backlog and the results.
+    */
+  private def reindex(
+      name: String,
+      src: String,
+      tables: Seq[String],
+      mutators: Seq[ColumnMutator] = Seq.empty,
+      sizeCols: Map[String, String] = Map.empty,
+      indexFilters: Seq[MetadataFilters.IndexPred] = Seq.empty,
+      dest: String = Files.createTempDirectory("graft_reindex").toString
+  ): (Seq[SubtaskSpec], Seq[Transfer.SubtaskResult]) = {
+    val g = new Graft(spark)
+    mutators.foreach(m => g.mutators.add(m.id, m))
+    val spec = TaskSpec(name, src, dest, tables, mutators = mutators.map(m => ActionRef(m.id)))
+    val backlog = g.addTask(spec, sizeCols, indexFilters)
+    val results = g.runTask(name)
+    assert(g.errors.getErrors(name).isEmpty, s"subtask errors: ${g.errors.getErrors(name)}")
+    (backlog, results)
+  }
+
+  test("reindex: mutate+drop+route, idempotent on re-run") {
     val out = Files.createTempDirectory("graft_transfer").toString
-    val pipeline = Transfer.Pipeline(columnMutators = Seq(
+    val mutators = Seq(
       WithColumnMutator(ObjectId("tst", "route"), "_index",
         concat(lit("r-"), col("r_name"))),
       DropMutator(ObjectId("tst", "drop"), col("r_regionkey") === 0)
-    ))
-    val res1 = Transfer.transferTable(spark, s"$sf/region.parquet", out, pipeline)
-    val res2 = Transfer.transferTable(spark, s"$sf/region.parquet", out, pipeline)
-    assert(res1.rowsWritten == res2.rowsWritten, "overwrite must be idempotent")
-    val written = spark.read.parquet(out)
+    )
+    val (_, res1) = reindex("route", sf, Seq("region"), mutators, dest = out)
+    val (_, res2) = reindex("route", sf, Seq("region"), mutators, dest = out)
+    assert(res1.map(_.rowsWritten) == res2.map(_.rowsWritten), "overwrite must be idempotent")
+    val written = spark.read.parquet(res2.map(_.outputPath): _*)
+    assert(written.count() == res2.map(_.rowsWritten).sum)
     assert(written.columns.contains("_index"))
     assert(written.filter(col("r_regionkey") === 0).count() == 0)
-    assert(res1.rowsWritten == Tables.region(spark, sf).filter(col("r_regionkey") =!= 0).count())
+    assert(res1.map(_.rowsWritten).sum ==
+      Tables.region(spark, sf).filter(col("r_regionkey") =!= 0).count())
+    // M2: each row lands under its computed destination index
+    val routed = res2.flatMap(r => new java.io.File(r.outputPath).list().toSeq)
+      .filter(_.startsWith("_index="))
+    assert(routed.size == 4, s"expected one directory per destination index, got $routed")
   }
 
   test("runTask: index filters prune tables before read (F1, README.md:209)") {
-    val out = Files.createTempDirectory("graft_task").toString
-    val task = TaskSpec("t1", sf, out, tables = Seq("region", "nation"))
-    val configs = Seq(IndexConfig("region"), IndexConfig("nation"))
-    val results = Transfer.runTask(
-      spark, task, Transfer.Pipeline(), configs,
-      indexFilters = Seq(_.name == "nation")
-    )
-    assert(results.size == 1 && results.head.table.contains("nation"))
+    val (_, results) = reindex("t1", sf, Seq("region", "nation"),
+      indexFilters = Seq(_.name == "nation"))
+    assert(results.size == 1 && results.head.subtaskId.contains("nation"))
   }
 
   test("transferMetadata applies index mutators before DDL (M3, transfer.js:290-292)") {
@@ -319,18 +344,15 @@ class EngineSpec extends SparkSpec {
 
   test("planner: empty catalog keeps every task table (no silent zero-subtask plan)") {
     val task = TaskSpec("planEmpty", sf, "/tmp/unused", tables = Seq("region", "nation"))
-    val potential = graft.engine.Planner.expand(
-      spark, task, sizeCols = Map.empty, indexConfigs = Seq.empty)
+    val potential = new Graft(spark).addTask(task)
     assert(potential.map(_.table).toSet == Set("region", "nation"))
   }
 
   test("planner: expand x buckets, resume diff skips completed (P1/P5, subtasks.js:369-396)") {
     val task = TaskSpec("plan1", sf, "/tmp/unused", tables = Seq("lineitem", "region", "nation"))
-    val configs = Seq(IndexConfig("lineitem"), IndexConfig("region"), IndexConfig("nation"))
     val potential = graft.engine.Planner.expand(
-      spark, task,
+      spark, task, new ParquetConnector(sf),
       sizeCols = Map("lineitem" -> "l_extendedprice"),
-      indexConfigs = configs,
       indexFilters = Seq(ic => ic.name != "nation") // F1 prunes nation pre-read
     )
     // 3 buckets for lineitem + 1 whole-table subtask for region; nation pruned
@@ -356,20 +378,15 @@ class EngineSpec extends SparkSpec {
 
   test("subtask execution: union of planned slices equals whole-table transfer (P1+S1+F5)") {
     val li = Tables.lineitem(spark, sf)
-    val plan = graft.engine.Bounds.plan(li, "lineitem", "l_extendedprice", buckets = 3)
-    val destRoot = Files.createTempDirectory("graft_subtasks").toString
-    val pipeline = Transfer.Pipeline(columnMutators = Seq(
-      DropMutator(ObjectId("tst", "dropQ"), col("l_quantity") > 45)
-    ))
+    val drop = DropMutator(ObjectId("tst", "dropQ"), col("l_quantity") > 45)
+    val (plan, results) = reindex("slices", sf, Seq("lineitem"), Seq(drop),
+      sizeCols = Map("lineitem" -> "l_extendedprice"))
     plan.foreach(st => info(s"planned: $st"))
-    val results = plan.map(st =>
-      Transfer.transferSubtask(spark, s"$sf/lineitem.parquet", destRoot, st, "l_extendedprice", pipeline))
     results.foreach(r => info(s"written: $r"))
     // every subtask wrote its own dir; union == single whole-table run
     assert(results.map(_.outputPath).distinct.size == 3)
     val unionCount = results.map(_.rowsWritten).sum
-    val whole = MutatorPipeline
-      .applyColumnar(li, pipeline.columnMutators).count()
+    val whole = MutatorPipeline.applyColumnar(li, Seq(drop)).count()
     assert(unionCount == whole, s"subtask union $unionCount != whole $whole")
     // no row lands in two slices: the size ranges are disjoint by
     // construction, so the physical union must match the whole count too
@@ -379,49 +396,42 @@ class EngineSpec extends SparkSpec {
     assert(unionRead == whole)
   }
 
-  test("subtask union invariant holds for null, NaN, and infinite sizes") {
-    import spark.implicits._
-    val weird = Seq(
-      (1L, Some(5.0)), (2L, Some(500.0)), (3L, Some(50000.0)),
-      (4L, None), (5L, Some(Double.NaN)), (6L, Some(Double.PositiveInfinity)),
-      (7L, Some(Double.NegativeInfinity)), (8L, Some(0.0))
-    ).toDF("id", "sz")
-    val src = Files.createTempDirectory("graft_weird").toString + "/t.parquet"
-    weird.write.parquet(src)
-    val df = spark.read.parquet(src)
-    val plan = graft.engine.Bounds.plan(df, "t", "sz", buckets = 3)
-    val destRoot = Files.createTempDirectory("graft_weird_out").toString
-    val results = plan.map(st =>
-      Transfer.transferSubtask(spark, src, destRoot, st, "sz", Transfer.Pipeline()))
-    val unionCount = results.map(_.rowsWritten).sum
-    assert(unionCount == 8, s"union lost rows: $unionCount != 8 (plan: $plan)")
-    // and the planner's per-bucket counts agree with what was written
-    assert(plan.map(_.count).sum == 8, s"planner counts: ${plan.map(_.count)}")
+  /** Reindex one table of `(id, sz)` rows bucketed on `sz` (3 buckets);
+    * returns the plan and the ids written, sorted.
+    */
+  private def reindexSizes(sizes: Seq[Option[Double]]): (Seq[SubtaskSpec], Seq[Long]) = {
+    val src = Files.createTempDirectory("graft_sizes").toString
+    sizes.zipWithIndex.map { case (sz, i) => (i.toLong, sz) }.toDF("id", "sz")
+      .write.parquet(s"$src/t.parquet")
+    val (plan, results) = reindex("sizes", src, Seq("t"), sizeCols = Map("t" -> "sz"))
+    val ids = spark.read.parquet(results.map(_.outputPath): _*).select("id").as[Long]
+      .collect().sorted.toSeq
+    (plan, ids)
   }
 
-  test("Dataset[Doc] distributed fold matches the local fold (schema-agnostic path)") {
-    implicit val enc: org.apache.spark.sql.Encoder[Doc] =
-      org.apache.spark.sql.Encoders.product[Doc]
-    val docs = (1 to 100).map(i => Doc("idx", "t", i.toString, Map("n" -> i.toString)))
-    val ds = spark.createDataset(docs)
-    val mutators = Seq(
-      graft.transform.DocMutator(
-        ObjectId("tst", "tag"),
-        (d, _) => d.source("n").toInt % 2 == 0,
-        (d, _) => Some(d.copy(source = d.source + ("even" -> "yes")))
-      ),
-      graft.transform.DocMutator(
-        ObjectId("tst", "dropBig"),
-        (d, _) => d.source("n").toInt > 90,
-        (_, _) => None
-      )
+  test("subtask union invariant holds for null, NaN, and infinite sizes") {
+    val finite = Seq(100.0, 200.0, 300.0, 900.0, 1000.0, 1100.0, 1200.0, 1300.0).map(Some(_))
+    val cases = Seq(
+      "mixed" -> Seq(Some(5.0), Some(500.0), Some(50000.0), None, Some(Double.NaN),
+        Some(Double.PositiveInfinity), Some(Double.NegativeInfinity), Some(0.0)),
+      // a quantile equal to a bucket sentinel: at -Infinity buckets 0 and
+      // 1 both started there, at Double.MaxValue the last two were both
+      // open above
+      "-Infinity cut" ->
+        (Seq.fill(4)(Some(Double.NegativeInfinity)) ++ Seq(None) ++ finite.take(7)),
+      "Double.MaxValue cut" -> (Seq.fill(4)(Some(Double.MaxValue)) ++ finite),
+      "+Infinity cut" -> (Seq.fill(4)(Some(Double.PositiveInfinity)) ++ finite),
+      "NaN cut" -> (Seq.fill(4)(Some(Double.NaN)) ++ finite),
+      "all -Infinity" -> Seq.fill(6)(Some(Double.NegativeInfinity)),
+      "all Double.MaxValue" -> Seq.fill(6)(Some(Double.MaxValue))
     )
-    val distributed = graft.transform.MutatorPipeline.applyDataset(ds, mutators)
-      .collect().sortBy(_.id.toInt)
-    val local = graft.transform.MutatorPipeline.applyDocs(docs, mutators)
-    assert(distributed.toSeq == local)
-    assert(distributed.length == 90)
-    assert(distributed.count(_.source.contains("even")) == 45)
+    cases.foreach { case (label, sizes) =>
+      val (plan, ids) = reindexSizes(sizes)
+      assert(ids == sizes.indices.map(_.toLong),
+        s"$label: union lost or repeated rows: $ids (plan: $plan)")
+      // and the planner's per-bucket counts agree with what was written
+      assert(plan.map(_.count).sum == sizes.size, s"$label planner counts: $plan")
+    }
   }
 
   test("bucketed tables join without a shuffle (co-located join at scale)") {

@@ -2,37 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.model.DocEnvelope
 import graft.functions.text
 import graft.operators.Multimodal
 
-/** Doc-envelope round trip, multimodal resize, and langId on real
-  * crafted sentences.
-  */
+/** Multimodal resize and decoders, and langId on real crafted sentences. */
 class EnvelopeSpec extends SparkSpec {
   import spark.implicits._
-
-  test("DataFrame -> Doc envelope -> DataFrame round trip") {
-    val region = Tables.region(spark, sf)
-    val docs = DocEnvelope.fromDataFrame(region, "region", "doc", "r_regionkey")
-    val collected = docs.collect()
-    assert(collected.length == region.count())
-    assert(collected.forall(d => d.index == "region" && d.docType == "doc"))
-    assert(collected.map(_.id).sorted.toSeq ==
-      region.select(col("r_regionkey").cast("string")).as[String].collect().sorted.toSeq)
-
-    val back = DocEnvelope.toDataFrame(docs, Seq("r_regionkey", "r_name"))
-    assert(back.columns.toSeq == Seq("_index", "_type", "_id", "r_regionkey", "r_name"))
-    val names = back.select(col("r_name")).as[String].collect().sorted.toSeq
-    assert(names == region.select(col("r_name")).as[String].collect().sorted.toSeq)
-  }
-
-  test("envelope: null columns become absent source keys") {
-    val df = Seq((1L, Some("x")), (2L, None)).toDF("id", "v")
-    val docs = DocEnvelope.fromDataFrame(df, "t", "d", "id").collect()
-    assert(docs.find(_.id == "1").get.source.contains("v"))
-    assert(!docs.find(_.id == "2").get.source.contains("v"))
-  }
 
   test("multimodal resize: dims replaced, features rescaled deterministically") {
     val feats = Multimodal.extractFeatures(Multimodal.assets(spark, sf), Multimodal.FakeDecoder)

@@ -4,21 +4,26 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.Sources
+import graft.sources.{FormatConnector, ParquetConnector}
 
-/** Multi-format source/sink round trips through the interchange on-ramp. */
+/** File-format connectors: csv/json round trips under a declared schema,
+  * non-local roots, and the bulk write's row count.
+  */
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("csv and json round-trip region through the parquet on-ramp") {
     val region = Tables.region(spark, sf)
     for (fmt <- Seq("csv", "json")) {
-      val raw = Files.createTempDirectory(s"graft_src_$fmt").toString + "/raw"
-      val conv = Files.createTempDirectory(s"graft_src_$fmt").toString + "/pq"
-      Sources.write(region, raw, fmt)
-      val n = Sources.convert(spark, raw, fmt, conv, Some(region.schema))
-      assert(n == region.count(), s"$fmt round trip lost rows")
-      val back = spark.read.parquet(conv)
+      val raw = new FormatConnector(
+        Files.createTempDirectory(s"graft_src_$fmt").toString, fmt, Some(region.schema))
+      assert(raw.bulk(region, "region") == region.count())
+      val scanned = raw.scan(spark, "region")
+      assert(scanned.schema == region.schema, s"$fmt schema drift: ${scanned.schema}")
+      // the on-ramp: the text table bulked into the parquet layout
+      val pq = new ParquetConnector(Files.createTempDirectory(s"graft_src_$fmt").toString)
+      assert(pq.bulk(scanned, "region") == region.count(), s"$fmt round trip lost rows")
+      val back = pq.scan(spark, "region")
       assert(back.schema == region.schema, s"$fmt schema drift: ${back.schema}")
       assert(back.select("r_name").as[String].collect().sorted.toSeq ==
         region.select("r_name").as[String].collect().sorted.toSeq)
@@ -26,8 +31,9 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("unsupported format rejected by name") {
-    intercept[IllegalArgumentException](
-      Sources.read(spark, "/tmp/x", "avro"))
+    val conn = new FormatConnector(Files.createTempDirectory("graft_src_avro").toString, "avro")
+    val e = intercept[org.apache.spark.sql.AnalysisException](conn.scan(spark, "x"))
+    assert(e.getMessage.contains("avro"), e.getMessage)
   }
 
   test("ParquetConnector works on a non-local-FS root (file: URI scheme)") {
@@ -37,7 +43,7 @@ class SourcesSpec extends SparkSpec {
     // a scheme-qualified root exercises the Hadoop FileSystem path — the
     // old java.io.File probe can't see through "file:" and would fall
     // back to the wrong path for scan and return nothing for listTables
-    val conn = new graft.sources.ParquetConnector(s"file:$dir")
+    val conn = new ParquetConnector(s"file:$dir")
     assert(conn.listTables("*") == Seq("region"))
     assert(conn.scan(spark, "region").count() == Tables.region(spark, sf).count())
     // engine write layout: <root>/<table> DIRECTORY, scanned back
@@ -49,7 +55,7 @@ class SourcesSpec extends SparkSpec {
 
   test("bulk counts rows via the write job's observe metric, no second read job") {
     val dir = Files.createTempDirectory("graft_conn_jobs").toString
-    val conn = new graft.sources.ParquetConnector(dir)
+    val conn = new ParquetConnector(dir)
     val df = spark.range(100).toDF("id")
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
