@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Benchmark main. Prints ONE JSON line (kept compact — see OUTPUT
   * BUDGET below):
@@ -44,13 +45,22 @@ object Bench {
     spark
   }
 
-  /** Per-query stats plus the wall-clock window the query was measured
-    * in (epoch millis) — with the run's own start/end in the sidecar,
-    * an interference window on the host can be lined up against exactly
-    * the queries measured inside it.
+  /** Per-query stats over the SUCCESSFUL timed samples, plus the
+    * wall-clock window the query was measured in (epoch millis) — with
+    * the run's own start/end in the sidecar, an interference window on
+    * the host can be lined up against exactly the queries measured
+    * inside it. `failures` counts timed attempts that threw; they are
+    * never samples.
     */
   final case class QStat(min: Double, med: Double, max: Double, gc: Double,
-                         t0: Long, t1: Long)
+                         t0: Long, t1: Long, failures: Int = 0)
+
+  /** A query with no successful timed sample: how many timed attempts
+    * failed, the last error, and the measurement window. It has no
+    * time — the headline lists it as failed and keeps it out of
+    * `value`.
+    */
+  final case class QFail(attempts: Int, error: String, t0: Long, t1: Long)
 
   /** max/min ratio above which a query's samples are treated as evidence of
     * external interference (another process stealing the cores mid-run) and
@@ -96,21 +106,30 @@ object Bench {
     * same fix lives in build.sbt: `outputStrategy := StdoutOutput`
     * strips sbt's `[info] ` prefix, without which the line is not
     * valid JSON to a `json.loads(line)` consumer no matter its shape.
+    *
+    * FAILED queries (no successful sample) have no time: they stay out
+    * of `queries`, `value` and `elided`, count in `n_queries`, and are
+    * named in `failed`, which follows `elided` only when non-empty.
     */
   private[graft] val LineBudget = 1600 // < the ~2000-char collector tail window
   private[graft] val MaxEntries = 64
   private[graft] def headline(
-      stats: Map[String, QStat], sfDir: String, suspect: Boolean): String = {
+      stats: Map[String, QStat], sfDir: String, suspect: Boolean,
+      failed: Seq[String] = Nil): String = {
     val FixedOverhead = 190 // metric/value/unit/n_queries/elided/disp/suspect + braces
-    val byCost = stats.toSeq.sortBy(-_._2.min)
-      .map { case (k, s) => (s.min, "\"" + k + "\":" + r2(s.min)) }
-    var used = FixedOverhead + sfDir.length
-    val admitted = byCost.takeWhile { case (_, e) =>
-      val fits = used + e.length + 1 <= LineBudget
+    var used = FixedOverhead + sfDir.length + (if (failed.isEmpty) 0 else 12)
+    def admit(entries: Seq[String], limit: Int): Seq[String] = entries.takeWhile { e =>
+      val fits = used + e.length + 1 <= limit
       if (fits) used += e.length + 1
       fits
-    }.take(MaxEntries)
-    val qs = admitted.sortBy(_._1).map(_._2).mkString("{", ",", "}")
+    }
+    // failed queries are named first, within half the budget
+    val shownFailed = admit(failed.sorted.map("\"" + _ + "\""), LineBudget / 2)
+    val failedField = if (failed.isEmpty) "" else
+      s""","failed":${shownFailed.mkString("[", ",", "]")}"""
+    val admitted = admit(stats.toSeq.sortBy(-_._2.min)
+      .map { case (k, s) => "\"" + k + "\":" + r2(s.min) }, LineBudget).take(MaxEntries)
+    val qs = admitted.reverse.mkString("{", ",", "}")
     val ratios = stats.values.map(s => s.max / math.max(s.min, 0.01)).toIndexedSeq.sorted
     val disp = if (ratios.isEmpty) "" else {
       val p50 = ratios(ratios.length / 2)
@@ -123,21 +142,37 @@ object Bench {
     val suspectField = if (suspect) ""","suspect":true""" else ""
     s"""{"metric":"total","value":${r2(total)},"unit":"sec",""" +
       s""""queries":$qs,"sf":"$sfDir",""" +
-      s""""n_queries":${stats.size},"elided":${stats.size - admitted.size}""" +
-      s"""$disp$suspectField}"""
+      s""""n_queries":${stats.size + failed.size},"elided":${stats.size - admitted.size}""" +
+      s"""$failedField$disp$suspectField}"""
   }
 
-  /** One measured pass over a query: fresh isolated session, one untimed
-    * warmup, then adaptive timed sampling (see rules inline). */
-  private def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                      sfDir: String, cpus: String, iters: Int): QStat = {
-    val tStart = System.currentTimeMillis()
+  /** Runs `body` in a brand-new SparkSession and tears it down after:
+    * stop the SparkContext and give the JVM a chance to return the heap
+    * before the next query's session starts.
+    */
+  private def isolated[A](cpus: String)(body: SparkSession => A): A = {
     val spark = freshSession(cpus)
-    def runOnce(): Unit =
+    try body(spark)
+    finally { spark.stop(); System.gc() }
+  }
+
+  /** One measured pass over a query in `spark`: one untimed warmup,
+    * then adaptive timed sampling (see rules inline). A run that throws
+    * (non-fatal) is logged and never becomes a sample; after `iters`
+    * failed timed attempts the query stops, and with no successful
+    * sample it is reported as [[QFail]].
+    */
+  private[graft] def measure(name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      spark: SparkSession, sfDir: String, iters: Int): Either[QFail, QStat] = {
+    val tStart = System.currentTimeMillis()
+    var lastError = ""
+    def runOnce(): Boolean =
       // noop sink materializes every output column (count() would let
       // Catalyst prune projections and under-report the work)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e"); lastError = e.toString; false }
     // one untimed warmup pass: JIT + codegen + parquet footer caches, so
     // reported numbers are steady-state throughput, not first-query warmup
     runOnce()
@@ -152,32 +187,48 @@ object Bench {
     //    2-iteration min lands anywhere on that curve and swung
     //    2.8/5.8/9.0s across idle runs of IDENTICAL code. "Improving"
     //    = the newest sample beat the running min by >20%.
+    // Failed attempts add no sample, so they are bounded on their own.
     val samples = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var failures = 0
     var spent = 0.0
     var improving = true
-    while (samples.length < iters || (spent < 2.0 && samples.length < 10) ||
-           (improving && samples.length < 8)) {
+    while (failures < iters &&
+           (samples.length < iters || (spent < 2.0 && samples.length < 10) ||
+            (improving && samples.length < 8))) {
       // drop blocks persisted by the previous iteration BEFORE the clock
       // starts: several operators persist a shared stage, and carried-over
       // blocks both under-report the re-run and pile up memory pressure.
       spark.catalog.clearCache()
       val prevMin = if (samples.isEmpty) Double.MaxValue else samples.min
       val t0 = System.nanoTime()
-      runOnce()
-      val dt = (System.nanoTime() - t0) / 1e9
-      improving = dt < prevMin * 0.8
-      samples += dt
-      spent += dt
+      if (runOnce()) {
+        val dt = (System.nanoTime() - t0) / 1e9
+        improving = dt < prevMin * 0.8
+        samples += dt
+        spent += dt
+      } else failures += 1
     }
     val times = samples.toIndexedSeq.sorted
-    val stat = QStat(times.head, times(times.length / 2), times.last, gcSeconds() - gc0,
-      tStart, System.currentTimeMillis())
-    // full teardown between queries: stop the SparkContext and give the JVM
-    // a chance to return the heap before the next query's session starts.
-    spark.stop()
-    System.gc()
-    stat
+    if (times.isEmpty) Left(QFail(failures, lastError, tStart, System.currentTimeMillis()))
+    else Right(QStat(times.head, times(times.length / 2), times.last, gcSeconds() - gc0,
+      tStart, System.currentTimeMillis(), failures))
   }
+
+  /** The sidecar's per-query map: full-precision stats and
+    * `"status":"ok"` for a measured query, `"status":"failed"` with the
+    * attempt count and last error (quotes, backslashes and control
+    * characters blanked) for one with no successful sample.
+    */
+  private[graft] def sidecarStats(results: Iterable[(String, Either[QFail, QStat])]): String =
+    results.map {
+      case (k, Right(s)) =>
+        s""""$k":{"min":${s.min},"med":${s.med},"max":${s.max},"gc":${s.gc},""" +
+          s""""t0":${s.t0},"t1":${s.t1},"failures":${s.failures},"status":"ok"}"""
+      case (k, Left(f)) =>
+        val err = f.error.take(300).map(c => if (c == '"' || c == '\\' || c < ' ') ' ' else c)
+        s""""$k":{"status":"failed","attempts":${f.attempts},"error":"$err",""" +
+          s""""t0":${f.t0},"t1":${f.t1}}"""
+    }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val benchStart = System.currentTimeMillis()
@@ -198,7 +249,7 @@ object Bench {
     }
 
     val firstPass = selected.map { case (name, fn) =>
-      name -> measure(name, fn, sfDir, cpus, iters)
+      name -> isolated(cpus)(measure(name, fn, _, sfDir, iters))
     }
 
     // SELF-HEALING RE-RUN: a query whose own samples swing >3x within one
@@ -210,16 +261,16 @@ object Bench {
     // likely passed, and take the better (min) of the two measurements.
     // The artifact still carries "suspect":true so a consumer knows the run
     // saw interference and should weigh cross-round deltas accordingly.
-    val suspects = firstPass.collect { case (n, s) if isSuspect(s) => n }.toList
+    val suspects = firstPass.collect { case (n, Right(s)) if isSuspect(s) => n }.toList
     val results = if (suspects.isEmpty) firstPass else {
       System.err.println(s"[bench] suspect (max/min>${SuspectRatio}x), re-running: ${suspects.mkString(",")}")
-      firstPass.map { case (name, s0) =>
-        if (!isSuspect(s0)) name -> s0
-        else {
-          val s1 = measure(name, SparkEntry.queries(name), sfDir, cpus, iters)
-          val best = if (s1.min < s0.min) s1 else s0
-          name -> best
-        }
+      firstPass.map {
+        case (name, Right(s0)) if isSuspect(s0) =>
+          isolated(cpus)(measure(name, SparkEntry.queries(name), _, sfDir, iters)) match {
+            case Right(s1) if s1.min < s0.min => name -> Right(s1)
+            case _ => name -> Right(s0)
+          }
+        case other => other
       }
     }
 
@@ -241,11 +292,7 @@ object Bench {
     // The budget holds at any suite size: entries stop admitting when the
     // projected line would cross LineBudget chars, so 200 or 2000 queries
     // print the same bounded headline.
-    val stats = results.map { case (k, s) =>
-      "\"" + k + "\":{\"min\":" + s.min + ",\"med\":" + s.med +
-        ",\"max\":" + s.max + ",\"gc\":" + s.gc +
-        ",\"t0\":" + s.t0 + ",\"t1\":" + s.t1 + "}"
-    }.mkString("{", ",", "}")
+    val stats = sidecarStats(results)
     val statsPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_STATS", "bench_stats.json")
     val suspectJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
     try {
@@ -257,7 +304,9 @@ object Bench {
           s""""bench_end":${System.currentTimeMillis()},""" +
           s""""suspect_rerun":$suspectJson,"stats":$stats}""")
       finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] stats write failed: $e") }
-    println(headline(results, sfDir, suspects.nonEmpty))
+    } catch { case NonFatal(e) => System.err.println(s"[bench] stats write failed: $e") }
+    val measured = results.collect { case (k, Right(s)) => k -> s }
+    val failed = results.collect { case (k, Left(_)) => k }.toSeq
+    println(headline(measured, sfDir, suspects.nonEmpty, failed))
   }
 }

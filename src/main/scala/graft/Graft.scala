@@ -282,11 +282,21 @@ final class Graft(
   /** POST /maintenance/assets_increment — the append workflow's ONE
     * call, made ops-reachable: after a batch lands under `dir` (a pure
     * append of `oldDir`), publish the requested durable
-    * asset families at `dir`'s content addresses by INCREMENT —
-    * `knn_edges` (copy-forward partition publish, co-publishes the
-    * band asset), `bands` (standalone copy-forward), `gram_stats`
-    * (exact vocabulary-sized merge). Each family carries its own
-    * pure-append precondition and falls back to the full rebuild on a
+    * asset families at `dir`'s content addresses by INCREMENT
+    * (default: all of [[Graft.DefaultIncrementFamilies]]):
+    *   - `knn_edges`: copy-forward partition publish; co-publishes the
+    *     band asset;
+    *   - `bands`: standalone copy-forward;
+    *   - `gram_stats`: exact vocabulary-sized merge;
+    *   - `minhash_sigs`, `simhash_sigs`, `cdc_digests`: per-document
+    *     copy-forward;
+    *   - `minhash_pairs`: pair-graph increment over the incremented
+    *     signature asset;
+    *   - `tristats`: the edge increment, then one wedge join over it;
+    *   - `ngram_index`: order-pinned index increment, plus its
+    *     order-staleness rows.
+    * Each family carries its own pure-append precondition (or inherits
+    * its upstream's) and falls back to the full rebuild on a
     * removed/edited row, so the call is safe to run unconditionally
     * after every append. Returns rows per published family — the
     * smoke number an orchestration step logs.

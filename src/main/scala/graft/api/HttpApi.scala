@@ -389,7 +389,8 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
   /** POST /maintenance/assets_increment — publish `dir`'s durable
     * assets by increment from `oldDir`'s after an append lands. Body:
     * `{"oldDir": "...", "dir": "...", "families": ["knn_edges", ...]}`
-    * (families optional — defaults to knn_edges + gram_stats). Every
+    * (families optional — defaults to all eight
+    * [[graft.Graft.DefaultIncrementFamilies]]). Every
     * family validates the pure-append precondition itself and falls
     * back to a full rebuild, so the route is safe to call
     * unconditionally; runs synchronously and returns rows per family.

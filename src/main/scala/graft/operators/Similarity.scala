@@ -1306,41 +1306,14 @@ object Similarity {
     triangleStatsOn(undirectedKnn(spark, dir))
 
   /** [[triangleStats]]' body over a prebuilt undirected `(a, b)` edge
-    * table — split out (r18) so the incremental publisher can run the
-    * same derivation over the edge asset at a non-default parameter
-    * vector and so [[triangleStatsFor]] can share the orientation and
-    * wedge machinery.
+    * table — [[corpusTriangleStats]] runs it over the edge asset at an
+    * explicit parameter vector.
     */
   private[graft] def triangleStatsOn(und0: DataFrame): DataFrame = {
     val und = und0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = und.select(col("a").as("vec_id"))
       .unionAll(und.select(col("b").as("vec_id")))
       .groupBy("vec_id").agg(count(lit(1)).as("degree"))
-    val (triangles, oriented) = orientedTriangles(und, deg)
-    val perNode = triangles
-      .select(explode(array(col("u"), col("v"), col("w"))).as("vec_id"))
-      .groupBy("vec_id").agg(count(lit(1)).as("n_triangles"))
-    val out = deg.join(perNode, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("degree"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-      .withColumn("lcc_bp",
-        when(col("degree") >= 2,
-          expr("(20000 * n_triangles) DIV (degree * (degree - 1))"))
-          .otherwise(lit(0L)))
-      .orderBy("vec_id")
-    graft.engine.Caching.handoff(out, und, oriented)
-  }
-
-  /** Degree-ordered triangle enumeration over undirected edges `und`
-    * with per-vertex degrees `deg` (which may be the degrees of a
-    * SUPERGRAPH — orientation only needs a consistent total order, so
-    * the incremental path orients an induced subgraph's edges by the
-    * full graph's degrees and finds exactly the same triangles the
-    * full enumeration would on those edges). Returns the lazy triangle
-    * frame plus the persisted `oriented` stage the caller must include
-    * in its final [[graft.engine.Caching.handoff]].
-    */
-  private def orientedTriangles(und: DataFrame, deg: DataFrame): (DataFrame, DataFrame) = {
     // Orient each edge from lower (degree, id) to higher (degree, id).
     val withDeg = und
       .join(deg.select(col("vec_id").as("a"), col("degree").as("da")), Seq("a"))
@@ -1365,51 +1338,18 @@ object Similarity {
       .join(oriented.select(col("u").as("u2"), col("v").as("v2")),
         col("v") === col("u2") && col("w") === col("v2"))
       .select(col("u"), col("v"), col("w"))
-    (triangles, oriented)
-  }
-
-  /** Triangle stats for the `centers` vertex set only (r18 — the
-    * incremental tristats publisher's recompute kernel). Every triangle
-    * containing a center lies inside the subgraph induced on
-    * centers ∪ N_sym(centers), so the wedge join runs over THAT induced
-    * edge set — O(|closure|·k²) probes instead of the full corpus —
-    * while degrees (and the orientation order) come from the FULL
-    * undirected table, keeping per-center `degree`/`lcc_bp` exactly the
-    * full derivation's values. Triangles of non-centers that slip into
-    * the induced subgraph are dropped by the final center restriction.
-    */
-  private def triangleStatsFor(und0: DataFrame, centers0: DataFrame): DataFrame = {
-    val und = und0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centers = centers0.select(col("vec_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = und.select(col("a").as("vec_id"))
-      .unionAll(und.select(col("b").as("vec_id")))
-      .groupBy("vec_id").agg(count(lit(1)).as("degree"))
-    // induced vertex set: centers plus their symmetric neighbors
-    val hood = und.join(centers.select(col("vec_id").as("a")), Seq("a"), "left_semi")
-      .select(col("b").as("vec_id"))
-      .unionAll(und.join(centers.select(col("vec_id").as("b")), Seq("b"), "left_semi")
-        .select(col("a").as("vec_id")))
-      .unionAll(centers.select(col("vec_id")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val induced = und
-      .join(hood.select(col("vec_id").as("a")), Seq("a"), "left_semi")
-      .join(hood.select(col("vec_id").as("b")), Seq("b"), "left_semi")
-    val (triangles, oriented) = orientedTriangles(induced, deg)
     val perNode = triangles
       .select(explode(array(col("u"), col("v"), col("w"))).as("vec_id"))
-      .join(centers, Seq("vec_id"), "left_semi")
       .groupBy("vec_id").agg(count(lit(1)).as("n_triangles"))
-    val out = deg.join(centers, Seq("vec_id"), "left_semi")
-      .join(perNode, Seq("vec_id"), "left")
+    val out = deg.join(perNode, Seq("vec_id"), "left")
       .select(col("vec_id"), col("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .withColumn("lcc_bp",
         when(col("degree") >= 2,
           expr("(20000 * n_triangles) DIV (degree * (degree - 1))"))
           .otherwise(lit(0L)))
-    graft.engine.Caching.handoff(out, und, centers, hood, oriented)
+      .orderBy("vec_id")
+    graft.engine.Caching.handoff(out, und, oriented)
   }
 
   /** CLUSTERING COEFFICIENT BY DEGREE (round 17) — [[triangleStats]]'
@@ -1857,25 +1797,22 @@ object Similarity {
     mutualKnn(spark, dir)
   // (asset id) -> parquet path of the materialized triangle table —
   // the same "derive once per corpus, consume many" contract as the
-  // signature/edge assets. Triangle counting is the bench's most
-  // expensive standing computation (the wedge join), consumed by TWO
-  // queries (per-node report + degree rollup) and re-derived by every
-  // JVM before r17.
+  // signature/edge assets: the wedge join is the most expensive
+  // standing graph computation and three queries consume its output.
   private val triangleTables =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Wedge joins [[corpusTriangleStats]] ran this JVM — spec seam. */
   private[graft] val triangleAssetBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The materialized [[triangleStats]] table for `dir` (round 17) —
-    * per-node (vec_id, degree, n_triangles, lcc_bp), derived from the
-    * durable k-NN edge asset under the same parameter vector and
-    * published next to it. The wedge join runs once per corpus
-    * generation; graph_triangles and graph_cc_by_degree (and any
-    * future neighborhood-redundancy consumer) load the skinny
-    * four-long table. Address = edge-asset parameters + corpus
-    * fingerprint, so a corpus rebuild or an LSH-constant change
-    * retires it automatically; an APPEND publishes it by the
-    * touched-range closure increment (r18 —
-    * [[corpusTriangleStatsIncrement]]).
+  /** The materialized [[triangleStats]] table for `dir`: per-node
+    * (vec_id, degree, n_triangles, lcc_bp), derived by one wedge join
+    * ([[triangleStatsOn]]) over the durable k-NN edge asset under the
+    * same parameter vector and published next to it. graph_triangles,
+    * graph_cc_by_degree and graph_lcc_hist load the skinny four-long
+    * table. Address = edge-asset parameters + corpus fingerprint, so a
+    * corpus rebuild or an LSH-constant change retires it; after an
+    * append [[corpusTriangleStatsIncrement]] publishes it over the
+    * incremented edge asset.
     */
   def corpusTriangleStats(spark: SparkSession, dir: String, kTop: Int = 5,
       bits: Int = 4, tables: Int = 8, dim: Int = 64,
@@ -1901,9 +1838,9 @@ object Similarity {
       s"_s${scale}_v${graft.engine.AssetStore.FormatVersion}_$fp"
   }
 
-  /** [[undirectedKnn]] at an explicit parameter vector — the increment
-    * publisher reads the edge asset the spec (or deployment) actually
-    * published rather than the query defaults.
+  /** [[undirectedKnn]] at an explicit parameter vector — the publisher
+    * reads the edge asset the spec (or deployment) actually published
+    * rather than the query defaults.
     */
   private def undirectedKnnAt(spark: SparkSession, dir: String, kTop: Int,
       bits: Int, tables: Int, dim: Int, seedBase: Long, scale: Int,
@@ -1914,189 +1851,28 @@ object Similarity {
         greatest(col("vec_id"), col("nbr_id")).as("b"))
       .dropDuplicates("a", "b")
 
-  /** Increment-path publishes / detected fallbacks / last recompute
-    * closure size — spec seams.
-    */
-  private[graft] val triangleIncrementBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] val triangleIncrementFallbacks = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] val triangleIncrementRecomputed = new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** Past this fraction of touched pt ranges (per mille) the increment
-    * recomputes everything in one derivation instead of building the
-    * closure: the induced subgraph approaches the whole graph and the
-    * closure joins stop paying for themselves. Also the honest degrade
-    * when the edge asset was published by a full rebuild (all file
-    * names fresh → every range "touched"). `var` is a spec seam.
-    */
-  private[graft] var triangleIncrementMaxTouchedPermille: Long = 500L
-
-  /** Below this standing-corpus size the one-pass wedge-join recompute
-    * over the (already-incremented) edge asset beats the closure
-    * increment OUTRIGHT — measured r19 on the cross-generation fixture
-    * built to put the closure on its winning side (isolated append,
-    * 22% touched ranges at partWidth 16, sf1 = 20k vectors): recompute
-    * 9.0 s vs closure 40.9 s. The wedge join is k-bounded (Σdeg² ≈
-    * k²·n), so compute stays cheap at any local size; the closure's
-    * remaining argument was I/O (read a sliver of a fragmented edge
-    * store instead of all of it) — same crossover class as the
-    * per-doc families' 1 GiB gate, inherited here after the
-    * measurement falsified the "touched fraction alone decides"
-    * assumption. `var` is a spec seam.
-    *
-    * ROUND 20 — THE I/O CLAIM IS FALSIFIED TOO; THE CLOSURE IS
-    * DORMANT. The fragmented-store fixture the r19 verdict asked for
-    * (AssetBench `tristats_b12_w16frag_*`: the standing edge asset
-    * re-laid into ~32 small files per pt range so listing + per-file
-    * open cost dominates, crossgen corpus, closure-favorable 22%
-    * touched) measured recompute 15.7 s vs closure 25.1 s cold-cache
-    * and 6.1 vs 19.7 s warm — the closure loses 1.6–3.3× IN the
-    * regime its claim appealed to. The
-    * structural reason, visible in the code below: the closure scans
-    * the FULL new edge table anyway (the in-edge semi-join over
-    * `newEdges`, then `undirectedKnnAt` as the wedge recompute's
-    * base), so fragmentation taxes it at least as hard as the
-    * recompute while it additionally reads the standing tristats
-    * asset and pays three joins; the only thing it skips — wedge
-    * COMPUTE on untouched vertices — is k-bounded and was never the
-    * cost. Realizing the sliver-read would take a dedicated in-edge
-    * index asset, which no measurement motivates. The path stays
-    * spec-pinned equal and double-gated (this bytes gate routes every
-    * reachable corpus to the recompute; the permille gate guards the
-    * rest), kept as the fallback shape in case a future store makes
-    * the in-edge index worth publishing — it should be treated as
-    * DORMANT code with no known winning case, not as a pending
-    * optimization (SCALING.md r20 checkpoint).
-    */
-  private[graft] var triangleIncrementMinStandingBytes: Long = 1L << 30
-
-  /** Times the bytes gate chose the recompute — spec seam. */
-  private[graft] val triangleIncrementRebuildSelections = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Publish `dir`'s triangle-stats asset by INCREMENT from `oldDir`'s
-    * (round 18 — closing the second-tier gap: before this, the first
-    * query after an append re-ran the wedge join over the whole merged
-    * graph). Per-node triangle counts change only inside the CLOSURE of
-    * the edge delta: a vertex v's (degree, n_triangles) depends on its
-    * symmetric neighborhood and the edges among it, so it can move only
-    * if v's own adjacency list changed, an edge into v appeared or
-    * disappeared, or some symmetric neighbor's list changed. The edge
-    * asset's copy-forward publish localizes all three: every changed
-    * adjacency list lives in a REWRITTEN pt range (fresh part-file
-    * names — a file copy preserves name+length, a rewrite cannot), so
-    *
-    *   touched  = vec_ids of rows in rewritten ranges (old or new side)
-    *   closure  = touched ∪ out_old(touched) ∪ out_new(touched)
-    *              ∪ in_new(touched)
-    *
-    * is a superset of every vertex whose row can differ. The publisher
-    * recomputes [[triangleStatsFor]] over that closure (wedge join on
-    * the induced subgraph only) and copies every other row from the
-    * standing tristats asset. Range detection is driver metadata
-    * (listings already proven by the edge increment); the only
-    * corpus-wide work is one skinny edge scan for degrees and the
-    * in-edge semi-join.
+  /** Publish `dir`'s triangle-stats asset after an append from
+    * `oldDir`: an already-committed asset is served with zero builds;
+    * otherwise the edge asset is published by
+    * [[corpusKnnEdgesIncrement]] (a no-op when already committed, a
+    * full rebuild when the append precondition fails) and
+    * [[corpusTriangleStats]] runs its one wedge join over it. `oldDir`'s
+    * triangle-stats asset is never read: the wedge join is k-bounded
+    * (Σ out_deg² over a k-NN graph), and a recompute restricted to the
+    * edge delta's closure measured slower at every tested scale
+    * (SCALING.md r19/r20).
     */
   def corpusTriangleStatsIncrement(spark: SparkSession, oldDir: String, dir: String,
       kTop: Int = 5, bits: Int = 4, tables: Int = 8, dim: Int = 64,
       seedBase: Long = 42L, scale: Int = 1000, partWidth: Long = 1024L): DataFrame = {
     val assetId = tristatsAssetId(spark, dir, kTop, bits, tables, dim, seedBase, scale)
-    // already published? serve it with zero builds
     graft.engine.AssetStore.resolveIfCommitted(spark, assetId).foreach { d =>
       triangleTables.putIfAbsent(assetId, d)
       return spark.read.parquet(d)
     }
-    // bytes crossover gate (r19, measured): below the threshold the
-    // one-pass recompute beats the closure outright — the wedge join is
-    // k-bounded compute, the closure's win is full-table-I/O avoidance
-    // that local sizes never reach (see triangleIncrementMinStandingBytes)
-    if (graft.engine.AssetStore.tableBytes(spark, oldDir, "embeddings.parquet")
-        < triangleIncrementMinStandingBytes) {
-      triangleIncrementRebuildSelections.incrementAndGet()
-      return corpusTriangleStats(spark, dir, kTop, bits, tables, dim, seedBase, scale, partWidth)
-    }
-    // the edge asset first, by increment (no-op when already committed).
-    // This is also the APPEND VALIDATION: an edited/removed row makes
-    // the edge increment fall back to a full rebuild, whose fresh file
-    // names mark every range touched below — the tristats increment
-    // then degrades to the full recompute without a precondition of its
-    // own.
     corpusKnnEdgesIncrement(spark, oldDir, dir, kTop, bits, tables, dim,
       seedBase, scale, partWidth)
-    val newEdgePath = corpusKnnEdgesPath(spark, dir, kTop, bits, tables, dim, seedBase, scale, partWidth)
-    val oldEdgePath = corpusKnnEdgesPath(spark, oldDir, kTop, bits, tables, dim, seedBase, scale, partWidth)
-    // touched ranges from the two listings — driver metadata only
-    def ptFiles(path: String): Map[Long, Set[(String, Long)]] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("pt="))
-        .map { st =>
-          st.getPath.getName.stripPrefix("pt=").toLong ->
-            fs.listStatus(st.getPath)
-              .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-              .map(f => (f.getPath.getName, f.getLen)).toSet
-        }.toMap
-    }
-    val oldPts = ptFiles(oldEdgePath)
-    val newPts = ptFiles(newEdgePath)
-    val touchedPts = (newPts.keySet ++ oldPts.keySet)
-      .filter(pt => oldPts.get(pt) != newPts.get(pt)).toSeq.sorted
-    // gate FIRST (round 19): the degrade path never reads the standing
-    // tristats asset, so resolving/building it (a full wedge join over
-    // oldDir when absent) before knowing which path runs would be
-    // wasted work exactly when the increment is about to recompute
-    // everything anyway
-    val gateDegrades = touchedPts.size * 1000L >
-      newPts.size.max(1) * triangleIncrementMaxTouchedPermille
-    // standing tristats BEFORE entering the handle map (recursive-update
-    // guard, same as every other increment publisher) — closure path only
-    val oldTriPath = if (gateDegrades) null else {
-      corpusTriangleStats(spark, oldDir, kTop, bits, tables, dim, seedBase, scale, partWidth)
-      triangleTables.get(tristatsAssetId(spark, oldDir, kTop, bits, tables, dim, seedBase, scale))
-    }
-    val path = triangleTables.computeIfAbsent(assetId, _ =>
-      graft.engine.AssetStore.resolve(spark, assetId,
-        staging => {
-          val und = undirectedKnnAt(spark, dir, kTop, bits, tables, dim, seedBase, scale, partWidth)
-          if (gateDegrades) {
-            triangleIncrementFallbacks.incrementAndGet()
-            triangleAssetBuilds.incrementAndGet()
-            triangleIncrementRecomputed.set(-1L)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"tristats increment $oldDir -> $dir: ${touchedPts.size}/${newPts.size} " +
-                "edge ranges rewritten; recomputing in full")
-            triangleStatsOn(und).write.mode("overwrite").parquet(staging)
-          } else {
-            triangleIncrementBuilds.incrementAndGet()
-            val newEdges = spark.read.parquet(newEdgePath)
-            val oldEdges = spark.read.parquet(oldEdgePath)
-            // cast keeps the IN a partition filter whatever width the
-            // directory values were inferred at — only touched ranges
-            // are ever read here
-            val tNew = newEdges.filter(col("pt").cast("long").isin(touchedPts: _*))
-            val tOld = oldEdges.filter(col("pt").cast("long").isin(touchedPts: _*))
-            // a vertex's rows all live in its own range (pt = id div W),
-            // so out(touched) is exactly the touched rows' nbr_ids
-            val touchedIds = tNew.select(col("vec_id"))
-              .unionAll(tOld.select(col("vec_id"))).distinct()
-            val closure = touchedIds
-              .unionAll(tNew.select(col("nbr_id").as("vec_id")))
-              .unionAll(tOld.select(col("nbr_id").as("vec_id")))
-              .unionAll(newEdges
-                .join(touchedIds.select(col("vec_id").as("nbr_id")), Seq("nbr_id"), "left_semi")
-                .select(col("vec_id")))
-              .distinct()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            triangleIncrementRecomputed.set(closure.count())
-            val fresh = triangleStatsFor(und, closure)
-            val out = spark.read.parquet(oldTriPath)
-              .join(closure, Seq("vec_id"), "left_anti")
-              .unionByName(fresh)
-            try out.write.mode("overwrite").parquet(staging)
-            finally { closure.unpersist(blocking = false); fresh.unpersist(blocking = false); () }
-          }
-        }))
-    spark.read.parquet(path)
+    corpusTriangleStats(spark, dir, kTop, bits, tables, dim, seedBase, scale, partWidth)
   }
 
   def triangleStatsQuery(spark: SparkSession, dir: String): DataFrame =

@@ -88,41 +88,10 @@ object AssetBench {
         _.filter(_.getFileName.toString.endsWith(".parquet"))
           .forEach(p => JF.move(p, newTable.resolve(s"part-batch-${p.getFileName}"))))
     }
-    def incSetup(bits: Int, partWidth: Long = 1024L): () => Unit = () => {
+    def incSetup(bits: Int): () => Unit = () => {
       appendLayout("embeddings.parquet", "vec_id")
-      Similarity.corpusKnnEdges(spark, incOldDir, bits = bits, partWidth = partWidth).count()
+      Similarity.corpusKnnEdges(spark, incOldDir, bits = bits).count()
       Similarity.corpusBandedEmbeddings(spark, incOldDir, bits = bits).count()
-    }
-    // Re-lay a committed pt-partitioned asset into ~`pieces` small part
-    // files per pt range, in place (r20): one Spark job scatters rows
-    // across `pieces` tasks (each task holding rows of most pt values
-    // writes one small file per value), then the fresh files replace
-    // the originals per range. Listing-level structure (pt dirs, commit
-    // marker) is untouched, so copy-forward increments and touched-range
-    // detection behave exactly as on a naturally fragmented store.
-    def fragmentPtRanges(assetPath: String, pieces: Int): Unit = {
-      import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-      import java.nio.file.{Files => JF, Paths}
-      val tmp = JF.createTempDirectory("graft_frag").toString + "/e"
-      spark.read.parquet(assetPath)
-        .repartition(pieces, pmod(xxhash64(col("vec_id"), col("nbr_id")), lit(pieces.toLong)))
-        .write.partitionBy("pt").parquet(tmp)
-      def ls(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-        val b = Seq.newBuilder[java.nio.file.Path]
-        withStream(JF.list(p))(_.forEach(b += _))
-        b.result()
-      }
-      ls(Paths.get(tmp))
-        .filter(p => JF.isDirectory(p) && p.getFileName.toString.startsWith("pt="))
-        .foreach { ptDir =>
-          val dest = Paths.get(assetPath, ptDir.getFileName.toString)
-          ls(dest).filter { f =>
-            val n = f.getFileName.toString
-            !n.startsWith("_") && !n.startsWith(".")
-          }.foreach(JF.delete(_))
-          ls(ptDir).filter(_.getFileName.toString.endsWith(".parquet"))
-            .foreach(f => JF.move(f, dest.resolve(s"part-frag-${f.getFileName}")))
-        }
     }
     def noSetup: () => Unit = () => ()
     val builds = Seq[(String, () => Unit, () => Long)](
@@ -172,9 +141,9 @@ object AssetBench {
       ("embbands_b12_increment", incSetup(12),
         () => Similarity.corpusBandedEmbeddingsIncrement(spark, incOldDir, incNewDir, bits = 12).count()),
       ("bpemerges_r3", noSetup, () => TextAnalysis.corpusBpeMerges(spark, sfDir, 3).count()),
-      // SECOND-TIER assets (r18): the verified pair graph and the
-      // triangle stats, full derivation vs their closure/copy-forward
-      // increments riding the already-incremented upstream assets
+      // SECOND-TIER assets: the verified pair graph and the triangle
+      // stats, full derivation vs their increments riding the
+      // already-incremented upstream assets
       ("minhashpairs_t700", noSetup, () => Dedup.corpusMinhashPairs(spark, sfDir).count()),
       ("minhashpairs_t700_increment", () => {
         appendLayout("documents.parquet", "doc_id")
@@ -193,78 +162,13 @@ object AssetBench {
         Dedup.corpusNgramIndex(spark, incOldDir).count()
         Dedup.corpusGramDf(spark, incOldDir).count(); ()
       }, () => Dedup.corpusNgramIndexIncrement(spark, incOldDir, incNewDir).count()),
-      ("tristats_b12_increment_forced", () => {
+      // timed: the edge increment plus one wedge join over its output;
+      // the standing tristats asset is prebuilt as in an append
+      // workflow, though the publish never reads it
+      ("tristats_b12_increment", () => {
         incSetup(12)()
-        // machinery row: ScaleGen's append touches most edge ranges, so
-        // this forces the closure recompute the 50% gate would refuse —
-        // the number that PROVES the gate right at this fixture shape
-        Similarity.triangleIncrementMaxTouchedPermille = 1000L
-        Similarity.triangleIncrementMinStandingBytes = 0L
         Similarity.corpusTriangleStats(spark, incOldDir, bits = 12).count(); ()
-      }, () => Similarity.corpusTriangleStatsIncrement(spark, incOldDir, incNewDir, bits = 12).count()),
-      ("tristats_b12_increment_gated", () => {
-        incSetup(12)()
-        // shipped behavior: the default gate measures the touched
-        // fraction and degrades to the one-pass full derivation
-        Similarity.triangleIncrementMaxTouchedPermille = 500L
-        Similarity.corpusTriangleStats(spark, incOldDir, bits = 12).count(); ()
-      }, () => Similarity.corpusTriangleStatsIncrement(spark, incOldDir, incNewDir, bits = 12).count()),
-      // CROSS-GENERATION fixture rows (r19): on a ScaleGen corpus built
-      // with the crossgen mode (plantNearDups + isolateAppendSlice) the
-      // append touches a sliver of edge ranges at partWidth 16, so the
-      // SHIPPED gate takes the closure path. The edge asset is
-      // prebuilt/pre-incremented in SETUP on both sides — in the
-      // runbook flow `assets_increment` publishes knn_edges as its own
-      // family first, so the tristats step pays ONLY the wedge join
-      // (full) vs the closure recompute + copy (increment); the r18
-      // tristats rows above keep the edge work inside the timer for
-      // round-over-round comparability
-      ("tristats_b12_w16", () => {
-        Similarity.corpusKnnEdges(spark, sfDir, bits = 12, partWidth = 16L).count(); ()
-      }, () => Similarity.corpusTriangleStats(spark, sfDir, bits = 12, partWidth = 16L).count()),
-      ("tristats_b12_w16_increment", () => {
-        incSetup(12, partWidth = 16L)()
-        // machinery row: the shipped r19 bytes gate routes local sizes
-        // to the recompute — zero it so the CLOSURE path is what this
-        // row tracks round-over-round
-        Similarity.triangleIncrementMinStandingBytes = 0L
-        Similarity.corpusTriangleStats(spark, incOldDir, bits = 12, partWidth = 16L).count()
-        Similarity.corpusKnnEdgesIncrement(spark, incOldDir, incNewDir,
-          bits = 12, partWidth = 16L).count(); ()
-      }, () => Similarity.corpusTriangleStatsIncrement(spark, incOldDir, incNewDir,
-        bits = 12, partWidth = 16L).count()),
-      // FRAGMENTED STANDING STORE (r20 — the r19 verdict's item 4): the
-      // closure's surviving production claim is an I/O argument ("read
-      // a sliver of a TB-scale FRAGMENTED edge store instead of all of
-      // it"), which the contiguous local fixtures never price. These
-      // two rows re-lay the standing edge asset into ~32 small files
-      // per pt range BEFORE the append (listing + per-file open cost
-      // becomes real), publish the new edge asset outside the timer
-      // (fragments copy forward by name), and time the same tristats
-      // publish both ways on the same fragmented store: the shipped
-      // recompute (bytes gate at default) vs the forced closure. The
-      // verdict this pair renders is written up in SCALING.md.
-      ("tristats_b12_w16frag_recompute", () => {
-        incSetup(12, partWidth = 16L)()
-        fragmentPtRanges(Similarity.corpusKnnEdgesPath(spark, incOldDir,
-          bits = 12, partWidth = 16L), 32)
-        Similarity.corpusKnnEdgesIncrement(spark, incOldDir, incNewDir,
-          bits = 12, partWidth = 16L).count(); ()
-      }, () => Similarity.corpusTriangleStatsIncrement(spark, incOldDir, incNewDir,
-        bits = 12, partWidth = 16L).count()),
-      ("tristats_b12_w16frag_closure", () => {
-        incSetup(12, partWidth = 16L)()
-        fragmentPtRanges(Similarity.corpusKnnEdgesPath(spark, incOldDir,
-          bits = 12, partWidth = 16L), 32)
-        // machinery row: zero the bytes gate so the closure runs; the
-        // standing tristats asset is prebuilt (untimed) as in the
-        // production append flow
-        Similarity.triangleIncrementMinStandingBytes = 0L
-        Similarity.corpusTriangleStats(spark, incOldDir, bits = 12, partWidth = 16L).count()
-        Similarity.corpusKnnEdgesIncrement(spark, incOldDir, incNewDir,
-          bits = 12, partWidth = 16L).count(); ()
-      }, () => Similarity.corpusTriangleStatsIncrement(spark, incOldDir, incNewDir,
-        bits = 12, partWidth = 16L).count())
+      }, () => Similarity.corpusTriangleStatsIncrement(spark, incOldDir, incNewDir, bits = 12).count())
     )
     // SPARK_GRAFT_ASSETBENCH_ONLY=a,b filters rows for local iteration
     // (same contract as Bench's SPARK_GRAFT_BENCH_ONLY)
@@ -278,8 +182,6 @@ object AssetBench {
       freshRoot()
       val gram0 = Dedup.gramIncrementMinStandingBytes
       val perDoc0 = Dedup.perDocIncrementMinStandingBytes
-      val tri0 = Similarity.triangleIncrementMaxTouchedPermille
-      val triBytes0 = Similarity.triangleIncrementMinStandingBytes
       try {
         setup()
         val t0 = System.nanoTime()
@@ -289,8 +191,6 @@ object AssetBench {
       } finally {
         Dedup.gramIncrementMinStandingBytes = gram0
         Dedup.perDocIncrementMinStandingBytes = perDoc0
-        Similarity.triangleIncrementMaxTouchedPermille = tri0
-        Similarity.triangleIncrementMinStandingBytes = triBytes0
       }
     }
     val json = timed.map { case (n, s) => s""""$n": $s""" }.mkString(", ")

@@ -32,7 +32,11 @@ import org.apache.spark.sql.functions._
   *   - lineitem: row replicas with l_orderkey/l_partkey shifted so
   *     distinct counts scale with the factor.
   *
-  * Usage: runMain graft.tools.ScaleGen <srcDir> <outDir> <factor>
+  * Usage: runMain graft.tools.ScaleGen <srcDir> <outDir> <factor> [crossgenPermille]
+  *
+  * A positive `crossgenPermille` plants near-duplicate documents across
+  * the 90%-by-id append cut ([[plantNearDups]]); embeddings are scaled
+  * the same way in either mode.
   */
 object ScaleGen {
 
@@ -160,40 +164,6 @@ object ScaleGen {
         length(coalesce(planted, col("text"))).cast("long").as("n_chars"))
   }
 
-  /** GEOMETRICALLY ISOLATED APPEND SLICE (round 19) — the embeddings
-    * half of the cross-generation fixture. The stock corpus's batch
-    * vectors share LSH buckets with standing vectors uniformly, so a
-    * 10% append marks most standing sources affected and the tristats
-    * increment honestly degrades to the full recompute. Real appends
-    * are often NOT uniform — new data lands in new regions (a new
-    * source, a new topic, a new modality batch). This mode models
-    * that: every vector ABOVE the 90%-by-id cut is shifted by
-    * `mag · c` where `c` is one of `centers` deterministic ±1 pattern
-    * directions (hash-chosen per vector). With `mag` ≫ the corpus's
-    * ~0.8 vector norms, every sign projection of a shifted vector is
-    * decided by the center direction alone, so the batch occupies at
-    * most `centers` buckets per LSH table — the affected standing set
-    * shrinks to those buckets' standing occupants (≈ tables ·
-    * centers / 2^bits of the corpus at bits=12) and the touched
-    * edge-range fraction drops under the tristats gate. Within-center
-    * geometry is the original corpus's (the shift is constant per
-    * center), so batch k-NN structure stays non-degenerate.
-    */
-  def isolateAppendSlice(emb: DataFrame, centers: Int = 4, mag: Double = 10.0): DataFrame = {
-    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
-    val cut = maxId * 9 / 10
-    val center = pmod(xxhash64(col("vec_id"), lit("ctr")), lit(centers.toLong))
-    val shifted = zip_with(
-      col("embedding"),
-      sequence(lit(0), size(col("embedding")) - 1),
-      (x, j) => x + (lit(mag) * (pmod(xxhash64(center, j), lit(2L)) * 2 - 1)).cast("float"))
-    emb.select(
-      col("vec_id"),
-      when(col("vec_id") > cut && col("embedding").isNotNull,
-        shifted.cast("array<float>")).otherwise(col("embedding")).as("embedding"),
-      col("label"))
-  }
-
   def main(args: Array[String]): Unit = {
     val (srcDir, outDir, factorS, crossgenPermille) = args match {
       case Array(s, o, f) => (s, o, f, 0)
@@ -213,10 +183,9 @@ object ScaleGen {
       println(s"[scalegen] $name: ${spark.read.parquet(s"$outDir/$name.parquet").count()} rows")
     }
     val docsScaled = scaleDocuments(spark.read.parquet(s"$srcDir/documents.parquet"), factor)
-    val embScaled = scaleEmbeddings(spark.read.parquet(s"$srcDir/embeddings.parquet"), factor)
     write(if (crossgenPermille > 0) plantNearDups(docsScaled, crossgenPermille) else docsScaled,
       "documents")
-    write(if (crossgenPermille > 0) isolateAppendSlice(embScaled) else embScaled,
+    write(scaleEmbeddings(spark.read.parquet(s"$srcDir/embeddings.parquet"), factor),
       "embeddings")
     write(scaleLineitem(spark.read.parquet(s"$srcDir/lineitem.parquet"), factor), "lineitem")
     write(scaleEvents(spark.read.parquet(s"$srcDir/events.parquet"), factor), "events")

@@ -1596,18 +1596,15 @@ class AssetStoreSpec extends SparkSpec {
     }
   }
 
-  test("cross-generation fixture: planted near-dups cross the cut; both second-tier increments take their winning path (r19)") {
-    import graft.operators.{Dedup, Similarity}
+  test("cross-generation fixture: planted near-dups cross the cut and the pair increment equals the rebuild") {
+    import graft.operators.Dedup
     import graft.tools.ScaleGen
     import org.apache.spark.sql.functions._
     import java.nio.file.{Files, Paths, StandardCopyOption}
     withRoot { _ =>
-      // the r18 verdict's missing fixture: batch docs near-duplicating
-      // STANDING docs (pair increment's winning side) and an append
-      // touching a SLIVER of edge ranges (tristats' winning side)
+      // batch docs near-duplicating STANDING docs: the pair increment's
+      // winning side
       val docs = ScaleGen.plantNearDups(Tables.documents(spark, sf), 300)
-        .persist()
-      val emb = ScaleGen.isolateAppendSlice(Tables.embeddings(spark, sf))
         .persist()
       // planting must never mint byte-identical texts (that would trip
       // the exact-dup-collapse residual and make rebuild-vs-increment
@@ -1622,37 +1619,27 @@ class AssetStoreSpec extends SparkSpec {
       val newDir = Files.createTempDirectory("graft_xgen_new").toString
       // file-level append layout (copy standing parts + move batch parts
       // in) so the metadata-only pure-append proof applies
-      def appendLayout(df: org.apache.spark.sql.DataFrame, table: String,
-          idCol: String, cut: Long): Unit = {
-        df.filter(col(idCol) < cut).write.parquet(s"$oldDir/$table")
-        val newTable = Paths.get(s"$newDir/$table")
-        Files.createDirectories(newTable)
-        val s1 = Files.list(Paths.get(s"$oldDir/$table"))
-        try s1.forEach(p => Files.copy(p, newTable.resolve(p.getFileName.toString),
-          StandardCopyOption.COPY_ATTRIBUTES))
-        finally s1.close()
-        val tmp = Files.createTempDirectory("graft_xgen_batch").toString
-        df.filter(col(idCol) >= cut).write.parquet(s"$tmp/b.parquet")
-        val s2 = Files.list(Paths.get(s"$tmp/b.parquet"))
-        try s2.filter(_.getFileName.toString.endsWith(".parquet"))
-          .forEach(p => Files.move(p, newTable.resolve(s"part-batch-${p.getFileName}")))
-        finally s2.close()
-      }
       val docCut = docs.agg(max(col("doc_id"))).head().getLong(0) * 9 / 10
-      val vecCut = emb.agg(max(col("vec_id"))).head().getLong(0) * 9 / 10
-      appendLayout(docs, "documents.parquet", "doc_id", docCut)
-      appendLayout(emb, "embeddings.parquet", "vec_id", vecCut)
-      docs.unpersist(); emb.unpersist()
-      Dedup.dropInMemoryNgramTables(); Similarity.dropInMemoryIndexes()
+      docs.filter(col("doc_id") < docCut).write.parquet(s"$oldDir/documents.parquet")
+      val newTable = Paths.get(s"$newDir/documents.parquet")
+      Files.createDirectories(newTable)
+      val s1 = Files.list(Paths.get(s"$oldDir/documents.parquet"))
+      try s1.forEach(p => Files.copy(p, newTable.resolve(p.getFileName.toString),
+        StandardCopyOption.COPY_ATTRIBUTES))
+      finally s1.close()
+      val tmp = Files.createTempDirectory("graft_xgen_batch").toString
+      docs.filter(col("doc_id") >= docCut).write.parquet(s"$tmp/b.parquet")
+      val s2 = Files.list(Paths.get(s"$tmp/b.parquet"))
+      try s2.filter(_.getFileName.toString.endsWith(".parquet"))
+        .forEach(p => Files.move(p, newTable.resolve(s"part-batch-${p.getFileName}")))
+      finally s2.close()
+      docs.unpersist()
+      Dedup.dropInMemoryNgramTables()
       val perDoc0 = Dedup.perDocIncrementMinStandingBytes
-      val triBytes0 = Similarity.triangleIncrementMinStandingBytes
       try {
+        // the shipped bytes gate routes local sizes to the signature
+        // rebuild; zeroed so the pair increment rides incremented sigs
         Dedup.perDocIncrementMinStandingBytes = 0L
-        // bytes gates zeroed: the fixture pins the ROUTING of the
-        // touched-range gate and the answer equality; the shipped
-        // bytes gates (measured r19) route local sizes to the rebuild
-        Similarity.triangleIncrementMinStandingBytes = 0L
-        // ---- pair increment: cross-cut pairs exist and equal the rebuild
         Dedup.corpusMinhashPairs(spark, oldDir).count()
         val inc0 = Dedup.minhashPairIncrementBuilds.get()
         val viaInc = Dedup.corpusMinhashPairsIncrement(spark, oldDir, newDir)
@@ -1670,208 +1657,145 @@ class AssetStoreSpec extends SparkSpec {
         val rebuilt = Dedup.corpusMinhashPairs(spark, newDir)
           .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
         assert(viaInc == rebuilt, "fixture increment diverged from the rebuild")
-        // ---- tristats: the DEFAULT 500-permille gate takes the closure
-        // path on the isolated append (the stock corpus degrades here)
-        Similarity.corpusTriangleStats(spark, oldDir, bits = 12, partWidth = 16L).count()
-        val tri0 = Similarity.triangleIncrementBuilds.get()
-        val fb0 = Similarity.triangleIncrementFallbacks.get()
-        val viaTri = Similarity.corpusTriangleStatsIncrement(spark, oldDir, newDir,
-          bits = 12, partWidth = 16L)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .sorted.toSeq
-        assert(Similarity.triangleIncrementBuilds.get() == tri0 + 1 &&
-            Similarity.triangleIncrementFallbacks.get() == fb0,
-          "the isolated append must pass the DEFAULT touched-range gate " +
-            "(closure path, no degrade)")
-        val und = Similarity.corpusKnnEdges(spark, newDir, bits = 12, partWidth = 16L)
-          .select(least(col("vec_id"), col("nbr_id")).as("a"),
-            greatest(col("vec_id"), col("nbr_id")).as("b"))
-          .dropDuplicates("a", "b")
-        assert(viaTri == Similarity.triangleStatsOn(und)
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-            .sorted.toSeq,
-          "fixture tristats increment diverged from the full derivation")
       } finally {
         Dedup.perDocIncrementMinStandingBytes = perDoc0
-        Similarity.triangleIncrementMinStandingBytes = triBytes0
-        Dedup.dropInMemoryNgramTables(); Similarity.dropInMemoryIndexes()
+        Dedup.dropInMemoryNgramTables()
         spark.catalog.clearCache()
       }
     }
   }
+
+  /** Corpus generations over the spec's embeddings, each a file-level
+   *  append of the previous one (standing parts copied with attributes,
+   *  batch parts moved in) so the edge increment's metadata-only
+   *  pure-append proof applies; generation g holds vec_id < cuts(g). */
+  private def embeddingGenerations(cuts: Seq[Long]): Seq[String] = {
+    import org.apache.spark.sql.functions._
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val emb = Tables.embeddings(spark, sf)
+    val dirs = cuts.map(_ => Files.createTempDirectory("graft_tri_gen").toString)
+    emb.filter(col("vec_id") < cuts(0)).write.parquet(s"${dirs(0)}/embeddings.parquet")
+    for (g <- 1 until cuts.size) {
+      val table = Paths.get(s"${dirs(g)}/embeddings.parquet")
+      Files.createDirectories(table)
+      val s1 = Files.list(Paths.get(s"${dirs(g - 1)}/embeddings.parquet"))
+      try s1.forEach(p => Files.copy(p, table.resolve(p.getFileName.toString),
+        StandardCopyOption.COPY_ATTRIBUTES))
+      finally s1.close()
+      val tmp = Files.createTempDirectory("graft_tri_batch").toString
+      emb.filter(col("vec_id") >= cuts(g - 1) && col("vec_id") < cuts(g))
+        .write.parquet(s"$tmp/b.parquet")
+      val s2 = Files.list(Paths.get(s"$tmp/b.parquet"))
+      try s2.filter(_.getFileName.toString.endsWith(".parquet"))
+        .forEach(p => Files.move(p, table.resolve(s"part-batch$g-${p.getFileName}")))
+      finally s2.close()
+    }
+    dirs
+  }
+
+  private def maxVecId(): Long = {
+    import org.apache.spark.sql.functions._
+    Tables.embeddings(spark, sf).agg(max(col("vec_id"))).head().getLong(0)
+  }
+
+  private def canonTri(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
+
+  private def triAssets(root: String) = new java.io.File(root).listFiles()
+    .filter(_.getName.startsWith("tristats_")).map(_.getName).toSeq
 
   test("tristats increment: the degrade path never builds the standing tristats asset (r19)") {
     import graft.operators.Similarity
-    import org.apache.spark.sql.functions._
     withRoot { root =>
-      val oldDir = java.nio.file.Files.createTempDirectory("graft_trid_old").toString
-      val newDir = java.nio.file.Files.createTempDirectory("graft_trid_new").toString
-      val emb = Tables.embeddings(spark, sf)
-      val cut = emb.agg(max(col("vec_id"))).head().getLong(0) * 9 / 10
-      emb.filter(col("vec_id") < cut).write.parquet(s"$oldDir/embeddings.parquet")
-      emb.write.parquet(s"$newDir/embeddings.parquet")
+      val Seq(oldDir, newDir) = embeddingGenerations(Seq(maxVecId() * 9 / 10, maxVecId() + 1))
       Similarity.dropInMemoryIndexes()
-      val gate0 = Similarity.triangleIncrementMaxTouchedPermille
-      val bgate0 = Similarity.triangleIncrementMinStandingBytes
       try {
-        // force the degrade with NO standing tristats asset anywhere:
-        // the gate must be evaluated BEFORE the standing resolve, so
-        // the full recompute is the only wedge join the publisher runs
-        // (bytes gate zeroed so the permille gate is what routes)
-        Similarity.triangleIncrementMinStandingBytes = 0L
-        Similarity.triangleIncrementMaxTouchedPermille = -1L
-        val full0 = Similarity.triangleAssetBuilds.get()
-        Similarity.corpusTriangleStatsIncrement(spark, oldDir, newDir,
-          bits = 12, partWidth = 16L).count()
-        assert(Similarity.triangleAssetBuilds.get() == full0 + 1,
-          "the degrade recompute must be the ONLY wedge join — building " +
+        // only the standing EDGE asset exists; oldDir's tristats is never built
+        Similarity.corpusKnnEdges(spark, oldDir).count()
+        val tri0 = Similarity.triangleAssetBuilds.get()
+        val knn0 = Similarity.knnAssetBuilds.get()
+        val inc0 = Similarity.knnIncrementBuilds.get()
+        // `tristats` asked for alone through the facade
+        assert(new graft.Graft(spark).incrementAssets(oldDir, newDir, Seq("tristats"))
+          .keySet == Set("tristats"))
+        assert(Similarity.knnIncrementBuilds.get() == inc0 + 1 &&
+            Similarity.knnAssetBuilds.get() == knn0,
+          "the edge asset must be published by increment, not rebuilt")
+        assert(Similarity.triangleAssetBuilds.get() == tri0 + 1,
+          "the publish must run exactly one wedge join — building " +
             "oldDir's standing tristats first is wasted work")
-        val triAssets = new java.io.File(root).listFiles()
-          .filter(_.getName.startsWith("tristats_"))
-        assert(triAssets.length == 1,
-          s"only newDir's asset may exist: ${triAssets.map(_.getName).toSeq}")
-        // the SHIPPED bytes gate (r19, measured): at local sizes the
-        // increment routes to the one-pass recompute before any
-        // listing/permille logic runs — fresh store so the committed
-        // asset doesn't short-circuit
-        spark.conf.set("spark.graft.index.dir",
-          java.nio.file.Files.createTempDirectory("graft_trid_root2").toString)
-        Similarity.dropInMemoryIndexes()
-        Similarity.triangleIncrementMinStandingBytes = bgate0
-        Similarity.triangleIncrementMaxTouchedPermille = gate0
-        val sel0 = Similarity.triangleIncrementRebuildSelections.get()
-        Similarity.corpusTriangleStatsIncrement(spark, oldDir, newDir,
-          bits = 12, partWidth = 16L).count()
-        assert(Similarity.triangleIncrementRebuildSelections.get() == sel0 + 1,
-          "a sub-GiB standing corpus must route to the wedge-join recompute")
+        assert(triAssets(root).size == 1,
+          s"only newDir's asset may exist: ${triAssets(root)}")
       } finally {
-        Similarity.triangleIncrementMaxTouchedPermille = gate0
-        Similarity.triangleIncrementMinStandingBytes = bgate0
         Similarity.dropInMemoryIndexes()
         spark.catalog.clearCache()
       }
     }
   }
 
-  test("tristats increment: only the edge-delta closure is recomputed; equals the full derivation (r18)") {
+  test("tristats increment: one wedge join over the incremented edges equals the full derivation") {
     import graft.operators.Similarity
     import org.apache.spark.sql.functions._
     withRoot { _ =>
-      val oldDir = java.nio.file.Files.createTempDirectory("graft_tri_old").toString
-      val newDir = java.nio.file.Files.createTempDirectory("graft_tri_new").toString
-      val emb = Tables.embeddings(spark, sf)
-      // a 10% append over narrow ranges so untouched edge ranges exist
-      val cut = emb.agg(max(col("vec_id"))).head().getLong(0) * 9 / 10
-      emb.filter(col("vec_id") < cut).write.parquet(s"$oldDir/embeddings.parquet")
-      emb.write.parquet(s"$newDir/embeddings.parquet")
+      val Seq(oldDir, newDir) = embeddingGenerations(Seq(maxVecId() * 9 / 10, maxVecId() + 1))
       Similarity.dropInMemoryIndexes()
-      val B = 12; val W = 16L
-      def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
-      def und(dir: String) = Similarity.corpusKnnEdges(spark, dir, bits = B, partWidth = W)
-        .select(least(col("vec_id"), col("nbr_id")).as("a"),
-          greatest(col("vec_id"), col("nbr_id")).as("b"))
-        .dropDuplicates("a", "b")
-      val gateOuter = Similarity.triangleIncrementMaxTouchedPermille
-      val bgateOuter = Similarity.triangleIncrementMinStandingBytes
       try {
-        // ScaleGen at W=16 leaves only a handful of ranges, so the
-        // append touches more than the deployment-shaped 50% ceiling —
-        // open the gate for the increment-path half (the gate itself is
-        // pinned below); bytes gate zeroed for the same machinery reason
-        Similarity.triangleIncrementMaxTouchedPermille = 1000L
-        Similarity.triangleIncrementMinStandingBytes = 0L
-        // standing assets: edges + tristats at the spec's parameters
-        Similarity.corpusTriangleStats(spark, oldDir, bits = B, partWidth = W).count()
-        val full0 = Similarity.triangleAssetBuilds.get()
-        val inc0 = Similarity.triangleIncrementBuilds.get()
-        val inc = canon(Similarity.corpusTriangleStatsIncrement(spark, oldDir, newDir,
-          bits = B, partWidth = W))
-        assert(Similarity.triangleIncrementBuilds.get() == inc0 + 1,
-          "a pure append must publish tristats via the closure increment")
-        assert(Similarity.triangleAssetBuilds.get() == full0,
-          "the increment must not re-run the corpus-wide wedge join")
-        // the recompute was RESTRICTED: closure strictly smaller than the graph
-        val total = emb.filter(col("embedding").isNotNull).count()
-        val recomputed = Similarity.triangleIncrementRecomputed.get()
-        assert(recomputed > 0 && recomputed < total,
-          s"closure must be a strict subset: $recomputed vs $total merged vectors")
-        // row-identical to the full derivation over the merged edge asset
-        val full = canon(Similarity.triangleStatsOn(und(newDir)))
-        assert(inc == full, s"tristats increment diverged: ${inc.size} vs ${full.size} rows")
-        // consumers LOAD the published address, zero builds
-        Similarity.dropInMemoryIndexes()
-        val full1 = Similarity.triangleAssetBuilds.get()
-        val served = canon(Similarity.corpusTriangleStats(spark, newDir,
-          bits = B, partWidth = W).orderBy("vec_id"))
-        assert(Similarity.triangleAssetBuilds.get() == full1,
-          "consumers must load the incremented tristats asset, not rebuild")
-        assert(served == inc)
-        // saturation gate: past the touched-range ceiling the publisher
-        // degrades to the full recompute (fresh store so the committed
-        // asset doesn't short-circuit)
-        spark.conf.set("spark.graft.index.dir",
-          java.nio.file.Files.createTempDirectory("graft_tri_root2").toString)
-        Similarity.dropInMemoryIndexes()
-        Similarity.corpusTriangleStats(spark, oldDir, bits = B, partWidth = W).count()
-        val gate0 = Similarity.triangleIncrementMaxTouchedPermille
-        try {
-          Similarity.triangleIncrementMaxTouchedPermille = -1L
-          val fb0 = Similarity.triangleIncrementFallbacks.get()
-          val viaFb = canon(Similarity.corpusTriangleStatsIncrement(spark, oldDir, newDir,
-            bits = B, partWidth = W))
-          assert(Similarity.triangleIncrementFallbacks.get() == fb0 + 1,
-            "past the gate the publisher must degrade to the full recompute")
-          assert(viaFb == full, "the degraded path must publish the same rows")
-        } finally Similarity.triangleIncrementMaxTouchedPermille = gate0
-      } finally {
-        Similarity.triangleIncrementMaxTouchedPermille = gateOuter
-        Similarity.triangleIncrementMinStandingBytes = bgateOuter
-        Similarity.dropInMemoryIndexes()
-        spark.catalog.clearCache()
-      }
-    }
-  }
-
-  test("tristats increment chains: two successive appends recompute closures only and equal the full derivation (r18)") {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions._
-    withRoot { _ =>
-      val dirs = Seq.fill(3)(java.nio.file.Files.createTempDirectory("graft_tric_gen").toString)
-      val emb = Tables.embeddings(spark, sf)
-      val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
-      val cuts = Seq(maxId * 8 / 10, maxId * 9 / 10, maxId + 1)
-      for (g <- 0 to 2)
-        emb.filter(col("vec_id") < cuts(g)).write.parquet(s"${dirs(g)}/embeddings.parquet")
-      Similarity.dropInMemoryIndexes()
-      val B = 12; val W = 16L
-      val gate0 = Similarity.triangleIncrementMaxTouchedPermille
-      val bgate0 = Similarity.triangleIncrementMinStandingBytes
-      def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
-      try {
-        Similarity.triangleIncrementMaxTouchedPermille = 1000L
-        Similarity.triangleIncrementMinStandingBytes = 0L
-        Similarity.corpusTriangleStats(spark, dirs(0), bits = B, partWidth = W).count()
-        val full0 = Similarity.triangleAssetBuilds.get()
-        val inc0 = Similarity.triangleIncrementBuilds.get()
-        Similarity.corpusTriangleStatsIncrement(spark, dirs(0), dirs(1),
-          bits = B, partWidth = W).count()
-        val viaChain = canon(Similarity.corpusTriangleStatsIncrement(spark, dirs(1), dirs(2),
-          bits = B, partWidth = W))
-        assert(Similarity.triangleIncrementBuilds.get() == inc0 + 2,
-          "both appends must publish via the closure increment")
-        assert(Similarity.triangleAssetBuilds.get() == full0,
-          "no generation may re-run the corpus-wide wedge join")
-        val und = Similarity.corpusKnnEdges(spark, dirs(2), bits = B, partWidth = W)
+        Similarity.corpusKnnEdges(spark, oldDir).count()
+        val inc = canonTri(Similarity.corpusTriangleStatsIncrement(spark, oldDir, newDir))
+        // row-identical to the derivation over the merged edge asset
+        val und = Similarity.corpusKnnEdges(spark, newDir)
           .select(least(col("vec_id"), col("nbr_id")).as("a"),
             greatest(col("vec_id"), col("nbr_id")).as("b"))
           .dropDuplicates("a", "b")
-        assert(viaChain == canon(Similarity.triangleStatsOn(und)),
-          "the chained increments must equal the full derivation over the merged edges")
+        val full = canonTri(Similarity.triangleStatsOn(und))
+        assert(inc == full, s"tristats increment diverged: ${inc.size} vs ${full.size} rows")
+        // consumers LOAD the published address with zero builds
+        Similarity.dropInMemoryIndexes()
+        val tri1 = Similarity.triangleAssetBuilds.get()
+        val knn1 = Similarity.knnAssetBuilds.get()
+        assert(canonTri(Similarity.corpusTriangleStats(spark, newDir)) == inc)
+        assert(Similarity.triangleAssetBuilds.get() == tri1,
+          "consumers must load the published tristats asset, not rebuild")
+        // an already-committed generation is served with zero builds
+        Similarity.corpusTriangleStatsIncrement(spark, oldDir, newDir).count()
+        assert(Similarity.triangleAssetBuilds.get() == tri1 &&
+          Similarity.knnAssetBuilds.get() == knn1)
       } finally {
-        Similarity.triangleIncrementMaxTouchedPermille = gate0
-        Similarity.triangleIncrementMinStandingBytes = bgate0
+        Similarity.dropInMemoryIndexes()
+        spark.catalog.clearCache()
+      }
+    }
+  }
+
+  test("tristats increment chains: two successive appends publish edges by increment and equal the full derivation") {
+    import graft.operators.Similarity
+    withRoot { root =>
+      val maxId = maxVecId()
+      val dirs = embeddingGenerations(Seq(maxId * 8 / 10, maxId * 9 / 10, maxId + 1))
+      Similarity.dropInMemoryIndexes()
+      try {
+        Similarity.corpusKnnEdges(spark, dirs(0)).count()
+        for (gen <- 1 to 2) {
+          val tri0 = Similarity.triangleAssetBuilds.get()
+          val knn0 = Similarity.knnAssetBuilds.get()
+          val inc0 = Similarity.knnIncrementBuilds.get()
+          Similarity.corpusTriangleStatsIncrement(spark, dirs(gen - 1), dirs(gen)).count()
+          assert(Similarity.knnIncrementBuilds.get() == inc0 + 1 &&
+              Similarity.knnAssetBuilds.get() == knn0,
+            s"generation $gen: the edge asset must be published by increment, not rebuilt")
+          assert(Similarity.triangleAssetBuilds.get() == tri0 + 1,
+            s"generation $gen: exactly one wedge join")
+          assert(triAssets(root).size == gen,
+            s"only the published generations' tristats may exist: ${triAssets(root)}")
+        }
+        Similarity.dropInMemoryIndexes()
+        val knn1 = Similarity.knnAssetBuilds.get()
+        assert(canonTri(Similarity.corpusTriangleStats(spark, dirs(2))) ==
+            canonTri(Similarity.triangleStats(spark, dirs(2))),
+          "the chained publishes must equal the full derivation over the merged edges")
+        assert(Similarity.knnAssetBuilds.get() == knn1,
+          "the full derivation reads the committed edge asset")
+      } finally {
         Similarity.dropInMemoryIndexes()
         spark.catalog.clearCache()
       }

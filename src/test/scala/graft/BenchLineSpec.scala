@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * past the current query count. r19: admitted entries carry
   * [min, med, max] and the line carries a run-level dispersion block,
   * so a consumer can separate host noise from regression without the
-  * sidecar.
+  * sidecar. A query that fails is reported as failed, never timed.
   */
 class BenchLineSpec extends AnyFunSuite {
 
@@ -63,5 +63,41 @@ class BenchLineSpec extends AnyFunSuite {
     // empty suite never divides by zero or emits a malformed map
     val empty = Bench.headline(Map.empty, "/x", suspect = false)
     assert(empty.contains(""""queries":{},""") && empty.startsWith("""{"metric":"total","value":0.00,"""))
+  }
+
+  test("measure reports a failing query as failed, never as a fast sample") {
+    val spark = SparkSpec.spark
+    var calls = 0
+    val broken: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => { calls += 1; s.sql("SELECT raise_error('deliberate bench failure') AS x") }
+    val res = Bench.measure("broken", broken, spark, "/unused", iters = 2)
+    res match {
+      case Left(f) =>
+        assert(f.attempts == 2 && f.error.contains("deliberate bench failure"), f)
+      case Right(s) => fail(s"a failing query was timed: $s")
+    }
+    assert(calls == 3, s"warmup + `iters` failed attempts, then stop; ran $calls")
+    // a query failing on every other run keeps only its successful samples
+    var n = 0
+    val flaky: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => {
+        n += 1
+        if (n % 2 == 0) throw new IllegalStateException("flaky")
+        s.range(1000).toDF()
+      }
+    Bench.measure("flaky", flaky, spark, "/unused", iters = 2) match {
+      case Right(s) => assert(s.failures == 2 && s.min > 0.0, s)
+      case Left(f) => fail(s"a query with successful samples was reported failed: $f")
+    }
+    // the headline keeps the failed query out of `queries` and `value`
+    // and names it after `sf`; the sidecar records its status
+    val ok = Map("q_ok" -> Bench.QStat(1.0, 1.1, 1.3, 0.1, 0L, 1L))
+    val line = Bench.headline(ok, "/x", suspect = false, failed = Seq("broken"))
+    assert(!line.contains("\"broken\":"), line)
+    assert(line.startsWith("""{"metric":"total","value":1.00,"unit":"sec","queries":{"q_ok":1.00},"sf":"/x",""" +
+      """"n_queries":2,"elided":0,"failed":["broken"],"""), line)
+    val side = Bench.sidecarStats(Seq("broken" -> res, "q_ok" -> Right(ok("q_ok"))))
+    assert(side.contains(""""broken":{"status":"failed","attempts":2,"error":"""), side)
+    assert(side.contains(""""q_ok":{"min":1.0,""") && side.contains(""""status":"ok"}"""), side)
   }
 }
