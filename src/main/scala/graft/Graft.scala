@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
@@ -19,21 +20,23 @@ import graft.transform._
   * Task lifecycle (SURVEY §3):
   *   - [[addTask]] = POST /tasks/:id — validate (referenced transforms
   *     must exist, `tasks.js:79-80`), plan subtasks with
-  *     [[graft.engine.Planner.expand]], build the backlog minus
+  *     [[graft.engine.Planner.expand]] (or reuse the recorded plan when
+  *     the source is unchanged), build the backlog minus
   *     already-completed work (resume, `subtasks.js:369-396`).
-  *   - [[runTask]] = the worker loop — execute each backlog subtask with
-  *     [[graft.engine.Transfer.transferSubtask]], record
-  *     completion/errors/progress, continue past failures
-  *     (`worker.js:106-111`), stop between subtasks when the run flag
-  *     drops (`manager.js:111-118`). This is the one route by which a
-  *     reindex moves data.
+  *   - [[runTask]] = the workers — a bounded set of concurrent workers
+  *     drains the backlog, each subtask one
+  *     [[graft.engine.Transfer.transferSubtask]] over its table's planned
+  *     frame; completion/errors/progress are recorded, failures do not
+  *     stop the others (`worker.js:106-111`), and no subtask starts
+  *     after the run flag drops (`manager.js:111-118`). This is the one
+  *     route by which a reindex moves data.
   *   - [[status]] = GET /tasks/:id — `{total, completed, backlog,
   *     percentComplete}` (`tasks.controller.js:14-27`).
   *   - [[progress]] = the per-subtask `{tick, transferred, total,
   *     worker, lastModified}` records (`app/models/progress.js:6-32`).
   *   - [[start]]/[[stop]] = POST /_start, /_stop — the global run flag;
-  *     stop also cancels the in-flight Spark job group so a running
-  *     subtask is interrupted, not just the backlog drained.
+  *     stop also cancels the task's Spark job group, so every in-flight
+  *     subtask is interrupted, not just the backlog left queued.
   *   - [[removeTask]] = DELETE /tasks/:id — drops the task and its
   *     namespaced transforms (`tasks.js:89-97`).
   *
@@ -50,11 +53,21 @@ final class Graft(
   val filters  = new TransformRegistry[StoredFilter]
   val errors   = new ErrorLog
 
-  private final case class TaskState(
+  /** What a plan was made from: equal keys whose fingerprints are all
+    * present mean the recorded plan still describes the source.
+    */
+  private final case class PlanKey(
       spec: TaskSpec,
-      pipeline: Transfer.Pipeline,
       sizeCols: Map[String, String],
-      source: DocConnector,
+      buckets: Int,
+      kept: Seq[String],
+      fingerprints: Seq[Option[String]]
+  )
+
+  private final case class TaskState(
+      pipeline: Transfer.Pipeline,
+      planKey: PlanKey,
+      plan: Planner.Plan,
       sink: DocConnector,
       var backlog: Seq[SubtaskSpec],
       var completed: Set[String],
@@ -66,7 +79,7 @@ final class Graft(
 
   // the reference's global run flag (`manager.js:111-118`): workers only
   // pick up subtasks while set; dropping it stops BETWEEN subtasks, and
-  // cancelJobGroup interrupts the one in flight
+  // cancelJobGroup interrupts those in flight
   private val runFlag = new AtomicBoolean(true)
   private val activeGroups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -87,7 +100,7 @@ final class Graft(
   /** POST /_start — allow [[runTask]] to consume backlogs again. */
   def start(): Unit = runFlag.set(true)
 
-  /** POST /_stop — stop consuming backlogs and cancel any in-flight
+  /** POST /_stop — stop consuming backlogs and cancel every in-flight
     * task's Spark job group (interrupt-on-cancel). Unfinished subtasks
     * stay in the backlog, so a later [[start]]+[[runTask]] resumes
     * exactly where the stop landed.
@@ -100,9 +113,13 @@ final class Graft(
   /** Submit a task and return its backlog: existence pre-check of
     * referenced mutators AND filters (`tasks.js:79-80` checks both
     * stores), subtask planning over the task's source connector, and a
-    * resume-aware backlog. Re-adding an existing task replans and
-    * subtracts completed subtasks — the reference's resume. Refuses a
-    * task whose drain is in flight.
+    * resume-aware backlog. Re-adding an existing task subtracts completed
+    * subtasks — the reference's resume. It reuses the recorded plan,
+    * running no Spark job, when the spec, `sizeCols`, `buckets`, the
+    * kept-table list and every kept table's
+    * [[graft.sources.DocConnector.fingerprint]] are unchanged; otherwise
+    * (or when the source has no fingerprint) it re-plans. Refuses a task
+    * whose drain is in flight.
     *
     * Index-kind stored filters referenced by `spec.indexFilters` prune
     * the table list at plan time, OR-combined with any programmatic
@@ -130,14 +147,18 @@ final class Graft(
     val allIndexPreds = indexFilters ++
       storedFilters.filter(_.kind == StoredFilter.Index).map(_.indexPred)
     val typePreds = storedFilters.filter(_.kind == StoredFilter.Type).map(_.typePred)
-    val potential = Planner.expand(spark, spec, source, sizeCols, allIndexPreds, buckets)
-    val prior = Option(tasks.get(spec.name)).map(_.completed).getOrElse(Set.empty[String])
-    val backlog = Planner.buildBacklog(potential, prior)
-    val priorProgress = Option(tasks.get(spec.name)).map(_.progress)
-      .getOrElse(TrieMap.empty[String, Progress])
+    // listed before planning: a file landing mid-plan changes the next key
+    val kept = Planner.keptTables(spec, allIndexPreds)
+    val key = PlanKey(spec, sizeCols, buckets, kept, kept.map(source.fingerprint))
+    val priorState = Option(tasks.get(spec.name))
+    val plan = priorState
+      .filter(p => p.planKey == key && key.fingerprints.forall(_.isDefined)).map(_.plan)
+      .getOrElse(Planner.expand(spark, spec, source, sizeCols, allIndexPreds, buckets))
+    val prior = priorState.map(_.completed).getOrElse(Set.empty[String])
+    val backlog = Planner.buildBacklog(plan.subtasks, prior)
+    val priorProgress = priorState.map(_.progress).getOrElse(TrieMap.empty[String, Progress])
     tasks.put(spec.name,
-      TaskState(spec, pipeline, sizeCols, source, sink, backlog, prior, priorProgress,
-        typePreds))
+      TaskState(pipeline, key, plan, sink, backlog, prior, priorProgress, typePreds))
     backlog
   }
 
@@ -163,16 +184,33 @@ final class Graft(
       tolerateMissingTemplates, st.typeFilters)
   }
 
-  /** Execute the backlog, one [[graft.engine.Transfer.transferSubtask]]
-    * per subtask inside the task's Spark job group, and return what each
-    * successful subtask wrote, with `outputPath` resolved to the sink's
-    * location when it has one. A failed subtask is recorded in
-    * [[errors]] (P8) and stays in the backlog; the remaining subtasks
-    * still run (`worker.js:106-111`). A dropped run flag stops consumption
-    * and leaves the rest queued. Refuses to start while the manager is
-    * stopped or the task is already draining. `onProgress`/`onComplete`
-    * are the worker callbacks (`worker.spec.js:92-104`'s
-    * updateCallback/completedCallback).
+  /** Drain the backlog with a bounded set of concurrent workers —
+    * `min(backlog, defaultParallelism, availableProcessors)`, started for
+    * this call and joined before it returns — and return what each
+    * successful subtask wrote, in backlog order, with `outputPath`
+    * resolved to the sink's location when it has one. Each subtask is
+    * one [[graft.engine.Transfer.transferSubtask]] over its table's
+    * planned frame, inside the task's Spark job group (interrupt on
+    * cancel).
+    *
+    *   - Callbacks: `onProgress` (one [[graft.model.Progress]] record,
+    *     `progress.js:6-32`; a slice is one bulk, so tick == transferred)
+    *     and then `onComplete` run back to back under one lock, never
+    *     interleaved with another subtask's callbacks. They are the
+    *     worker callbacks of `worker.spec.js:92-104`
+    *     (updateCallback/completedCallback).
+    *   - Failures: a failed subtask is recorded in [[errors]] (P8) and
+    *     stays in the backlog; the others still run
+    *     (`worker.js:106-111`). Only non-fatal errors are caught; a
+    *     fatal one propagates out of this call.
+    *   - Stop: no subtask starts after the run flag drops. [[stop]]
+    *     cancels the job group, so every in-flight subtask fails, is
+    *     recorded in [[errors]] and stays queued; one whose write
+    *     returns after the flag dropped is recorded there too, not
+    *     complete, and the next run rewrites its slice.
+    *
+    * Refuses to start while the manager is stopped or the task is
+    * already draining.
     */
   def runTask(
       name: String,
@@ -189,29 +227,37 @@ final class Graft(
     val group = groupFor(name)
     if (!activeGroups.add(group))
       throw new IllegalStateException(s"task '$name' is already running")
-    spark.sparkContext.setJobGroup(group, s"graft task $name", interruptOnCancel = true)
     try {
       val queue = st.synchronized(st.backlog)
-      val results = queue.flatMap { sub =>
+      val callbacks = new Object
+      val results = Workers.map(queue, Workers.count(spark, queue.size), group) { sub =>
+        spark.sparkContext.setJobGroup(group, s"graft task $name", interruptOnCancel = true)
         if (!runFlag.get) None
         else
           try {
             val r = Transfer.transferSubtask(
-              spark, st.source, st.sink, sub, st.sizeCols.get(sub.table), st.pipeline,
-              worker = worker,
-              onProgress = p => {
+              st.plan.scans(sub.table), st.sink, sub, st.planKey.sizeCols.get(sub.table), st.pipeline)
+            val p = Progress(tick = r.rowsWritten, transferred = r.rowsWritten, total = sub.count,
+              worker = worker, lastModified = java.time.Instant.now())
+            val recorded = callbacks.synchronized {
+              runFlag.get && {
                 st.progress.put(sub.subtaskId, p)
                 onProgress(name, sub, p)
-              })
-            val resolved = st.sink.location(r.outputPath).fold(r)(loc => r.copy(outputPath = loc))
-            // synchronized: completed/backlog are read from HTTP threads
-            // (status) while the drain thread writes them, and += on an
-            // immutable Set var is a lost-update race unguarded
-            st.synchronized { st.completed += sub.subtaskId }
-            onComplete(name, sub)
-            Some(resolved)
+                // synchronized: completed/backlog are read from HTTP
+                // threads (status) while the workers write them
+                st.synchronized { st.completed += sub.subtaskId }
+                onComplete(name, sub)
+                true
+              }
+            }
+            if (recorded) Some(st.sink.location(r.outputPath).fold(r)(loc => r.copy(outputPath = loc)))
+            else {
+              errors.record(name, sub.subtaskId,
+                "run stopped before the subtask was recorded complete; it stays in the backlog")
+              None
+            }
           } catch {
-            case e: Exception =>
+            case NonFatal(e) =>
               errors.record(name, sub.subtaskId, e.toString)
               None
           }
@@ -219,11 +265,8 @@ final class Graft(
       st.synchronized {
         st.backlog = st.backlog.filterNot(s => st.completed.contains(s.subtaskId))
       }
-      results
-    } finally {
-      activeGroups.remove(group)
-      spark.sparkContext.clearJobGroup()
-    }
+      results.flatten
+    } finally activeGroups.remove(group)
   }
 
   /** The GET /tasks/:id payload shape. */

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, Executors, ThreadFactory}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -95,7 +96,7 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
   /** Poll payload for `GET /tasks/{id}/_run`. `state` is one of
     * `planning` | `plan_failed` | `running` | `done` | `failed`; a
     * `/_stop`-interrupted run still lands `done`. As in [[Graft.runTask]],
-    * only the cancelled in-flight subtask is recorded as an error; it and
+    * every cancelled in-flight subtask is recorded as an error; they and
     * the subtasks never started stay in the backlog for resume.
     */
   private final case class RunSummary(
@@ -266,6 +267,26 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
       // residue, not run history — don't resurrect it after success
       cur.filter(s => s.state != "plan_failed")
     }
+    // a failed RE-plan leaves the existing task (and its plan) fully
+    // live — don't destroy its real run history or make a healthy task
+    // read as broken; only a first add's failure surfaces as plan_failed
+    // on the poll target. The re-plan failure is logged AND recorded in
+    // [[planErrors]] so a polling client can distinguish it from a
+    // successful re-plan (the submit already returned 202).
+    def planFailed(e: Throwable): Unit = {
+      org.slf4j.LoggerFactory.getLogger(getClass)
+        .warn(s"async planning for task '$id' failed: $e")
+      runs.synchronized {
+        if (g.listTasks.contains(id)) {
+          planErrors.put(id, e.toString)
+          prev match {
+            case Some(s) => runs.put(id, s)
+            case None    => runs.remove(id)
+          }
+        }
+        else runs.put(id, RunSummary("plan_failed", 0, 0L, Some(e.toString)))
+      }
+    }
     runExec.submit(new Runnable {
       def run(): Unit =
         try {
@@ -280,26 +301,8 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
             }
           }
         } catch {
-          case e: Throwable =>
-            // a failed RE-plan leaves the existing task (and its plan)
-            // fully live — don't destroy its real run history or make a
-            // healthy task read as broken; only a first add's failure
-            // surfaces as plan_failed on the poll target. The re-plan
-            // failure is logged AND recorded in [[planErrors]] so a
-            // polling client can distinguish it from a successful
-            // re-plan (the submit already returned 202).
-            org.slf4j.LoggerFactory.getLogger(getClass)
-              .warn(s"async planning for task '$id' failed: $e")
-            runs.synchronized {
-              if (g.listTasks.contains(id)) {
-                planErrors.put(id, e.toString)
-                prev match {
-                  case Some(s) => runs.put(id, s)
-                  case None    => runs.remove(id)
-                }
-              }
-              else runs.put(id, RunSummary("plan_failed", 0, 0L, Some(e.toString)))
-            }
+          case NonFatal(e) => planFailed(e)
+          case e: Throwable => planFailed(e); throw e
         }
     })
     json(ex, 202, Map("state" -> "planning"))
@@ -330,7 +333,8 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
           val results = g.runTask(id)
           runs.put(id, RunSummary("done", results.size, results.map(_.rowsWritten).sum, None))
         } catch {
-          case e: Throwable => runs.put(id, RunSummary("failed", 0, 0L, Some(e.toString)))
+          case NonFatal(e) => runs.put(id, RunSummary("failed", 0, 0L, Some(e.toString)))
+          case e: Throwable => runs.put(id, RunSummary("failed", 0, 0L, Some(e.toString))); throw e
         }
     })
     json(ex, 202, Map("state" -> "running"))

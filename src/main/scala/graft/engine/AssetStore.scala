@@ -80,7 +80,13 @@ object AssetStore {
     */
   def corpusFingerprint(spark: SparkSession, dir: String, table: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir, table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    listingFingerprint(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** Digest of `p`'s recursive file listing (name, length, mtime), read
+    * on the driver without a Spark job; an absent `p` digests its path.
+    */
+  def listingFingerprint(fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): String = {
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     if (fs.exists(p)) {
       val it = fs.listFiles(p, true)

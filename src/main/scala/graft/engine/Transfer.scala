@@ -1,14 +1,14 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model._
 import graft.sources.DocConnector
 import graft.transform._
 
-/** The reindex data path (`SURVEY.md` §3.2): one planned subtask is
-  * scanned from a source connector, sliced by its size range, folded
+/** The reindex data path (`SURVEY.md` §3.2): one planned subtask's
+  * slice of its table's planned scan is cut by its size range, folded
   * through the column mutators and bulk-written into a sink connector.
   * [[transferSubtask]] is the only method that moves documents;
   * [[transferMetadata]] moves index configs and templates.
@@ -50,32 +50,23 @@ object Transfer {
     subtask.subtaskId.replaceAll("[^a-zA-Z0-9._-]", "_")
 
   /** Execute one planned subtask (`worker.js:125-144`, `subtask.js:50-77`):
-    * scan `subtask.table` from `source`, keep its size range when the
-    * table has a size column, apply the mutator fold and bulk the slice
-    * into `sink` under `<table>/<subtaskDir>`, so subtasks retry and
-    * resume independently and their union is the whole table. Reports
-    * one [[graft.model.Progress]] record (`progress.js:6-32`); a slice is
-    * one atomic bulk, so tick == transferred.
+    * keep `subtask`'s size range of `scanned` — the frame its plan
+    * counted — when the table has a size column, apply the mutator fold
+    * and bulk the slice into `sink` under `<table>/<subtaskDir>`, so
+    * subtasks retry and resume independently and their union is the
+    * whole table. One slice is one bulk, so one Spark job on a file sink.
     */
   def transferSubtask(
-      spark: SparkSession,
-      source: DocConnector,
+      scanned: DataFrame,
       sink: DocConnector,
       subtask: SubtaskSpec,
       sizeCol: Option[String],
-      pipeline: Pipeline,
-      worker: String = "driver",
-      onProgress: Progress => Unit = _ => ()
+      pipeline: Pipeline
   ): SubtaskResult = {
-    val scanned = source.scan(spark, subtask.table)
     val src = sizeCol.fold(scanned)(c => scanned.filter(sizeRangePred(subtask, c)))
     val mutated = MutatorPipeline.applyColumnar(src, pipeline.columnMutators)
     val dest = s"${subtask.table}/${subtaskDirName(subtask)}"
-    val written = sink.bulk(mutated, dest)
-    onProgress(Progress(
-      tick = written, transferred = written, total = subtask.count,
-      worker = worker, lastModified = java.time.Instant.now()))
-    SubtaskResult(subtask.subtaskId, written, dest)
+    SubtaskResult(subtask.subtaskId, sink.bulk(mutated, dest), dest)
   }
 
   /** Metadata transfer (M3/M4 + K3/K4): apply index/template mutators and

@@ -34,6 +34,13 @@ trait DocConnector {
     * one (filesystem paths); None for opaque stores.
     */
   def location(table: String): Option[String] = None
+
+  /** An identity of the table's current contents that costs no Spark
+    * job, or None when the connector has none. A task re-added with the
+    * same spec and equal fingerprints for every kept table reuses its
+    * recorded plan ([[graft.Graft.addTask]]); None always re-plans.
+    */
+  def fingerprint(table: String): Option[String] = None
 }
 
 object DocConnector {
@@ -142,6 +149,14 @@ class FormatConnector(
   }
 
   override def location(table: String): Option[String] = Some(s"$root/$table")
+
+  /** The table's driver-local recursive listing (name, length, mtime),
+    * digested: a new, removed or rewritten file changes it.
+    */
+  override def fingerprint(table: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(scanPath(table))
+    Some(graft.engine.AssetStore.listingFingerprint(p.getFileSystem(hconf), p))
+  }
 }
 
 /** The parquet steady state (self-describing schema, column pruning +

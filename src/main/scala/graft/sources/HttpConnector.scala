@@ -41,9 +41,11 @@ import graft.engine.ResilientSink
   * Addressing uses query parameters (`?table=...`) rather than
   * path-embedded names so slice-qualified tables ("t/slice1") stay
   * URL-safe. Documents travel as JSON objects; `scan` rebuilds the
-  * DataFrame via JSON inference, which costs an extra pass — like the
-  * csv/json [[FormatConnector]], pass a schema-bearing format for the
-  * 100 TB steady state, or keep this connector for ingest/egress edges.
+  * DataFrame via JSON inference, which costs an extra pass over every
+  * slice when the scan is resolved (once per kept table in a reindex
+  * plan) — like the csv/json [[FormatConnector]], pass a schema-bearing
+  * format for the 100 TB steady state, or keep this connector for
+  * ingest/egress edges.
   *
   * Wire shapes (the stub server in ConnectorContractSpec speaks the
   * same):

@@ -354,7 +354,7 @@ class EngineSpec extends SparkSpec {
       spark, task, new ParquetConnector(sf),
       sizeCols = Map("lineitem" -> "l_extendedprice"),
       indexFilters = Seq(ic => ic.name != "nation") // F1 prunes nation pre-read
-    )
+    ).subtasks
     // 3 buckets for lineitem + 1 whole-table subtask for region; nation pruned
     assert(potential.count(_.table == "lineitem") == 3)
     assert(potential.count(_.table == "region") == 1)
@@ -432,6 +432,93 @@ class EngineSpec extends SparkSpec {
       // and the planner's per-bucket counts agree with what was written
       assert(plan.map(_.count).sum == sizes.size, s"$label planner counts: $plan")
     }
+  }
+
+  /** Spark jobs launched under job group `group` while `body` runs,
+    * counted after a sentinel job has flushed the listener bus.
+    */
+  private def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.incrementAndGet()
+        else if (g == s"$group-flush") flushed.countDown()
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(s"$group-flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `addTask` on this thread under its own job group; the backlog and
+    * the Spark jobs planning launched (planning workers inherit the group).
+    */
+  private def addTaskJobs(g: Graft, spec: TaskSpec, sizeCols: Map[String, String]): (Seq[SubtaskSpec], Int) = {
+    val group = s"plan-${java.util.UUID.randomUUID()}"
+    var backlog = Seq.empty[SubtaskSpec]
+    val jobs = jobsIn(group) {
+      spark.sparkContext.setJobGroup(group, "planning")
+      try backlog = g.addTask(spec, sizeCols) finally spark.sparkContext.clearJobGroup()
+    }
+    (backlog, jobs)
+  }
+
+  /** A multi-file parquet table `t` of `(id, sz)` rows under a fresh root. */
+  private def multiFileSource(rows: Int): String = {
+    val src = Files.createTempDirectory("graft_multifile").toString
+    (0 until rows).map(i => (i.toLong, (i % 97).toDouble)).toDF("id", "sz")
+      .repartition(3).write.parquet(s"$src/t")
+    src
+  }
+
+  test("reindex: each subtask over a parquet source runs exactly one Spark job") {
+    val src = multiFileSource(300)
+    val g = new Graft(spark)
+    val spec = TaskSpec("onejob", src, Files.createTempDirectory("graft_onejob").toString, Seq("t"))
+    val backlog = g.addTask(spec, Map("t" -> "sz"))
+    var results = Seq.empty[Transfer.SubtaskResult]
+    val jobs = jobsIn("graft-task-onejob") { results = g.runTask("onejob") }
+    assert(g.errors.getErrors("onejob").isEmpty, s"subtask errors: ${g.errors.getErrors("onejob")}")
+    assert(backlog.size == 3 && results.map(_.rowsWritten).sum == 300L)
+    // the bulk write is the only job: the subtask scans its planned frame
+    assert(jobs == backlog.size, s"$jobs jobs for ${backlog.size} subtasks")
+  }
+
+  test("addTask: re-adding an unchanged parquet task reuses its plan and runs no Spark job") {
+    val src = multiFileSource(200)
+    val g = new Graft(spark)
+    val spec = TaskSpec("reuse", src, Files.createTempDirectory("graft_reuse").toString, Seq("t"))
+    g.addTask(spec, Map("t" -> "sz"))
+    assert(g.runTask("reuse").map(_.rowsWritten).sum == 200L)
+    val (again, jobs) = addTaskJobs(g, spec, Map("t" -> "sz"))
+    assert(again.isEmpty, s"a finished task must resume to an empty backlog: $again")
+    assert(jobs == 0, s"an unchanged source must not be re-planned ($jobs jobs)")
+  }
+
+  test("addTask: a new file in a source table forces a re-plan whose counts include it") {
+    val src = multiFileSource(200)
+    val g = new Graft(spark)
+    val spec = TaskSpec("replan", src, Files.createTempDirectory("graft_replan").toString, Seq("t"))
+    val first = g.addTask(spec, Map("t" -> "sz"))
+    assert(first.map(_.count).sum == 200L)
+    val (same, reuseJobs) = addTaskJobs(g, spec, Map("t" -> "sz"))
+    assert(same == first && reuseJobs == 0)
+    (200 until 250).map(i => (i.toLong, (i % 97).toDouble)).toDF("id", "sz")
+      .coalesce(1).write.mode("append").parquet(s"$src/t")
+    val (replanned, replanJobs) = addTaskJobs(g, spec, Map("t" -> "sz"))
+    assert(replanJobs > 0, "a changed listing must re-plan")
+    assert(replanned.map(_.count).sum == 250L, s"re-plan counts miss the new file: $replanned")
+    // every subtask reads the listing its plan counted
+    assert(g.runTask("replan").map(_.rowsWritten).sum == 250L)
   }
 
   test("bucketed tables join without a shuffle (co-located join at scale)") {

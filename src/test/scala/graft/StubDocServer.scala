@@ -50,6 +50,8 @@ final class StubDocServer(
   private val scrollFailsLeft = new AtomicInteger(failFirstScrolls)
   private val pagesServed = new AtomicInteger(0)
   val bulkPosts = new AtomicInteger(0)
+  /** `_search` calls served: one per scroll opened. */
+  val scrollOpens = new AtomicInteger(0)
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/", (ex: HttpExchange) => handle(ex))
@@ -119,6 +121,7 @@ final class StubDocServer(
         else respond(ex, 404, """{"error":"no such table"}""")
 
       case ("POST", "/_search") =>
+        scrollOpens.incrementAndGet()
         val table = q("table")
         if (!tables.contains(table)) { respond(ex, 404, """{"error":"no such table"}"""); return }
         val scrollId = java.util.UUID.randomUUID().toString

@@ -113,6 +113,73 @@ class WorkerE2ESpec extends SparkSpec {
     } finally { srcServer.stop(); dstServer.stop() }
   }
 
+  /** An in-memory sink whose `bulk` returns only once two bulks are in
+    * flight at the same time (bounded at 30 s, then it fails the subtask).
+    */
+  private def pairingSink(): DocConnector = new DocConnector {
+    private val inner = new InMemoryConnector
+    private val pair = new java.util.concurrent.CountDownLatch(2)
+    override def scan(spark: SparkSession, table: String): DataFrame = inner.scan(spark, table)
+    override def bulk(df: DataFrame, table: String): Long = {
+      pair.countDown()
+      if (!pair.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        throw new IllegalStateException(s"no other subtask in flight while writing $table")
+      inner.bulk(df, table)
+    }
+    override def listTables(pattern: String): Seq[String] = inner.listTables(pattern)
+  }
+
+  test("runTask: two subtasks are in flight at once") {
+    val g = new Graft(spark, _ => (seeded(), pairingSink()))
+    g.addTask(TaskSpec("pair", "mem://s", "mem://d", Seq("first", "second")))
+    val results = g.runTask("pair")
+    assert(g.errors.getErrors("pair").isEmpty, s"subtask errors: ${g.errors.getErrors("pair")}")
+    assert(results.map(_.rowsWritten) == Seq(10L, 5L))
+  }
+
+  test("runTask: concurrent subtasks' progress and completion callbacks never interleave") {
+    val src = seeded()
+    src.bulk((0 until 7).map(n => (n.toLong, s"data$n")).toDF("id", "something"), "third")
+    src.bulk((0 until 3).map(n => (n.toLong, s"data$n")).toDF("id", "something"), "fourth")
+    val g = new Graft(spark, _ => (src, pairingSink()))
+    g.addTask(TaskSpec("paired", "mem://s", "mem://d", Seq("first", "second", "third", "fourth")))
+    // plain, unsynchronized state, as a caller's callbacks keep it
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    var ticks = 0L
+    g.runTask("paired",
+      onProgress = (_, sub, p) => { events += s"P ${sub.table}"; ticks += p.tick; Thread.sleep(50) },
+      onComplete = (_, sub) => events += s"C ${sub.table}")
+    assert(g.errors.getErrors("paired").isEmpty, s"subtask errors: ${g.errors.getErrors("paired")}")
+    assert(events.size == 8, s"events: $events")
+    events.grouped(2).foreach { pc =>
+      assert(pc(0).startsWith("P ") && pc(1) == "C " + pc(0).drop(2), s"interleaved callbacks: $events")
+    }
+    assert(events.filter(_.startsWith("C ")).map(_.drop(2)).toSet == Set("first", "second", "third", "fourth"))
+    assert(ticks == 25L, s"progress ticks must sum to the corpus: $ticks")
+  }
+
+  test("runTask over the HTTP connector: each subtask opens one scroll per slice") {
+    val srcServer = new StubDocServer()
+    val dstServer = new StubDocServer()
+    try {
+      val src = new graft.sources.HttpScrollConnector(
+        srcServer.url, pageSize = 4, slices = 2, flushSize = 4, sleepMs = _ => ())
+      val sink = new graft.sources.HttpScrollConnector(
+        dstServer.url, pageSize = 4, slices = 2, flushSize = 4, sleepMs = _ => ())
+      src.bulk((0 until 10).map(n => (n.toLong, s"data$n")).toDF("id", "something"), "first")
+      src.bulk((0 until 5).map(n => (n.toLong, s"data$n")).toDF("id", "something"), "second")
+      val g = new Graft(spark, _ => (src, sink))
+      val backlog = g.addTask(TaskSpec("scrolls", srcServer.url, dstServer.url, Seq("first", "second")))
+      val before = srcServer.scrollOpens.get
+      val results = g.runTask("scrolls")
+      assert(results.map(_.rowsWritten).sum == 15L)
+      // the planned frame is scrolled once by the bulk; no per-subtask
+      // schema inference scrolls the source a second time
+      assert(srcServer.scrollOpens.get - before == 2 * backlog.size,
+        s"${srcServer.scrollOpens.get - before} scrolls opened for ${backlog.size} subtasks")
+    } finally { srcServer.stop(); dstServer.stop() }
+  }
+
   test("default connector factory dispatches http(s) roots to the wire connector") {
     val mixed = Graft.parquetConnectors(TaskSpec(
       "t", sourceDir = "http://example.invalid:9200", destDir = "/tmp/out",
