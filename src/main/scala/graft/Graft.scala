@@ -114,7 +114,9 @@ final class Graft(
     * referenced mutators AND filters (`tasks.js:79-80` checks both
     * stores), subtask planning over the task's source connector, and a
     * resume-aware backlog. Re-adding an existing task subtracts completed
-    * subtasks — the reference's resume. It reuses the recorded plan,
+    * subtasks — the reference's resume — except those of a kept table
+    * whose fingerprint was recorded and has changed: its subtasks rerun,
+    * each overwriting its own slice. It reuses the recorded plan,
     * running no Spark job, when the spec, `sizeCols`, `buckets`, the
     * kept-table list and every kept table's
     * [[graft.sources.DocConnector.fingerprint]] are unchanged; otherwise
@@ -154,7 +156,17 @@ final class Graft(
     val plan = priorState
       .filter(p => p.planKey == key && key.fingerprints.forall(_.isDefined)).map(_.plan)
       .getOrElse(Planner.expand(spark, spec, source, sizeCols, allIndexPreds, buckets))
-    val prior = priorState.map(_.completed).getOrElse(Set.empty[String])
+    // a kept table whose recorded fingerprint differs from its new one
+    // changed contents: its completed ids no longer cover its rows, so
+    // its subtasks rerun and overwrite their own slices
+    val stale = priorState.toSeq.flatMap { p =>
+      val before = p.planKey.kept.zip(p.planKey.fingerprints).toMap
+      val changed = kept.zip(key.fingerprints).collect {
+        case (t, Some(fp)) if before.get(t).flatten.exists(_ != fp) => t
+      }.toSet
+      p.plan.subtasks.filter(st => changed(st.table)).map(_.subtaskId)
+    }
+    val prior = priorState.map(_.completed).getOrElse(Set.empty[String]) -- stale
     val backlog = Planner.buildBacklog(plan.subtasks, prior)
     val priorProgress = priorState.map(_.progress).getOrElse(TrieMap.empty[String, Progress])
     tasks.put(spec.name,
@@ -325,21 +337,22 @@ final class Graft(
   /** POST /maintenance/assets_increment — the append workflow's ONE
     * call, made ops-reachable: after a batch lands under `dir` (a pure
     * append of `oldDir`), publish the requested durable
-    * asset families at `dir`'s content addresses by INCREMENT
+    * asset families at `dir`'s content addresses
     * (default: all of [[Graft.DefaultIncrementFamilies]]):
     *   - `knn_edges`: copy-forward partition publish; co-publishes the
     *     band asset;
     *   - `bands`: standalone copy-forward;
-    *   - `gram_stats`: exact vocabulary-sized merge;
-    *   - `minhash_sigs`, `simhash_sigs`, `cdc_digests`: per-document
-    *     copy-forward;
-    *   - `minhash_pairs`: pair-graph increment over the incremented
-    *     signature asset;
+    *   - `gram_stats`, `minhash_sigs`, `simhash_sigs`, `cdc_digests`:
+    *     the cold build at `dir` (measured no slower than an increment
+    *     at every size run, SCALING.md); an asset already committed
+    *     loads with zero builds;
+    *   - `minhash_pairs`: pair-graph increment over `dir`'s signature
+    *     asset;
     *   - `tristats`: the edge increment, then one wedge join over it;
     *   - `ngram_index`: order-pinned index increment, plus its
     *     order-staleness rows.
-    * Each family carries its own pure-append precondition (or inherits
-    * its upstream's) and falls back to the full rebuild on a
+    * Each increment carries its own pure-append precondition (or
+    * inherits its upstream's) and falls back to the full rebuild on a
     * removed/edited row, so the call is safe to run unconditionally
     * after every append. Returns rows per published family — the
     * smoke number an orchestration step logs.
@@ -352,13 +365,13 @@ final class Graft(
       case "bands" =>
         Seq("bands" -> graft.operators.Similarity.corpusBandedEmbeddingsIncrement(spark, oldDir, dir).count())
       case "gram_stats" =>
-        Seq("gram_stats" -> graft.operators.Dedup.corpusGramDfIncrement(spark, oldDir, dir).count())
+        Seq("gram_stats" -> graft.operators.Dedup.corpusGramDf(spark, dir).count())
       case "minhash_sigs" =>
-        Seq("minhash_sigs" -> graft.operators.Dedup.corpusMinhashSignaturesIncrement(spark, oldDir, dir).count())
+        Seq("minhash_sigs" -> graft.operators.Dedup.corpusMinhashSignatures(spark, dir).count())
       case "simhash_sigs" =>
-        Seq("simhash_sigs" -> graft.operators.Dedup.corpusSimhashSignaturesIncrement(spark, oldDir, dir).count())
+        Seq("simhash_sigs" -> graft.operators.Dedup.corpusSimhashSignatures(spark, dir).count())
       case "cdc_digests" =>
-        Seq("cdc_digests" -> graft.operators.Dedup.corpusChunkDigestsIncrement(spark, oldDir, dir).count())
+        Seq("cdc_digests" -> graft.operators.Dedup.corpusChunkDigests(spark, dir).count())
       case "minhash_pairs" =>
         Seq("minhash_pairs" -> graft.operators.Dedup.corpusMinhashPairsIncrement(spark, oldDir, dir).count())
       case "tristats" =>
@@ -368,13 +381,9 @@ final class Graft(
         // runbook triggers: collision_bp or new_collision_bp > ~30000
         // (both calibrated), overlap < ~7000 secondary, new-gram share =
         // context
-        // oldDir keeps the probe vocabulary-sized: an uncommitted
-        // gram-stats asset is published by the increment merge here,
-        // never by an implicit full corpus shingle
         val n = graft.operators.Dedup.corpusNgramIndexIncrement(spark, oldDir, dir).count()
         Seq("ngram_index" -> n) ++
-          graft.operators.Dedup.ngramOrderStaleness(spark, dir, oldDir = Some(oldDir))
-            .toSeq.flatMap(_.toSeq)
+          graft.operators.Dedup.ngramOrderStaleness(spark, dir).toSeq.flatMap(_.toSeq)
       case other =>
         throw new IllegalArgumentException(
           s"unknown asset family '$other' (expected knn_edges | bands | gram_stats | " +
@@ -399,16 +408,19 @@ final class Graft(
 }
 
 object Graft {
-  /** The asset families an unconditional append publish covers: the graph pair (edges + co-published bands), the
-    * gram stats, the three per-document signature/digest assets, and
-    * the two SECOND-TIER derivations — the verified minhash pair graph
-    * and the triangle stats — so every standing consumer serves with
-    * zero builds after one `assets_increment` call. `bands` alone stays
-    * opt-in (the edge increment co-publishes it). Order matters only
-    * for economy: `minhash_pairs` rides the signature asset published
-    * by `minhash_sigs`, `tristats` rides the edge asset published by
-    * `knn_edges` — each would publish its upstream itself if asked
-    * first.
+  /** The asset families an unconditional append publish covers: the
+    * graph pair (edges + co-published bands), the gram stats and the
+    * three per-document signature/digest assets (cold-built at the new
+    * address), and the SECOND-TIER derivations — the verified minhash
+    * pair graph, the triangle stats and the ngram index — so every
+    * standing consumer serves with zero builds after one
+    * `assets_increment` call. `bands` alone stays opt-in (the edge
+    * increment co-publishes it). Order matters only for economy:
+    * `minhash_pairs` rides the signature asset published by
+    * `minhash_sigs`, `tristats` the edge asset published by
+    * `knn_edges`, and the ngram staleness rows the gram stats
+    * published by `gram_stats` — each would build its upstream itself
+    * if asked first.
     */
   val DefaultIncrementFamilies: Seq[String] =
     Seq("knn_edges", "gram_stats", "minhash_sigs", "simhash_sigs", "cdc_digests",

@@ -391,13 +391,15 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
   }
 
   /** POST /maintenance/assets_increment — publish `dir`'s durable
-    * assets by increment from `oldDir`'s after an append lands. Body:
+    * assets after an append of `oldDir` lands ([[graft.Graft.incrementAssets]]:
+    * the graph, pair and index families by increment, the gram stats
+    * and per-document assets by cold build). Body:
     * `{"oldDir": "...", "dir": "...", "families": ["knn_edges", ...]}`
     * (families optional — defaults to all eight
-    * [[graft.Graft.DefaultIncrementFamilies]]). Every
-    * family validates the pure-append precondition itself and falls
-    * back to a full rebuild, so the route is safe to call
-    * unconditionally; runs synchronously and returns rows per family.
+    * [[graft.Graft.DefaultIncrementFamilies]]). Every increment
+    * validates the pure-append precondition itself and falls back to a
+    * full rebuild, so the route is safe to call unconditionally; runs
+    * synchronously and returns rows per family.
     */
   private def incrementAssets(ex: HttpExchange): Unit = {
     val body = mapper.readTree(ex.getRequestBody)
@@ -414,18 +416,16 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
     * pinned-order drift metric (round 19; the `assets_increment` rows
     * map carries the same numbers at publish time — this route lets
     * ops re-read them between appends without publishing anything).
-    * Body: `{"dir": "..."}`, optional `"old_dir"`: with it an
-    * uncommitted gram-stats asset is published by the vocabulary-sized
-    * increment merge instead of a full corpus shingle (r20). 200 with
-    * the staleness rows for a pinned chain; 200 `{"pinned": false}`
-    * when the corpus's index is full-built (its order IS the current
-    * df — nothing to drift).
+    * Body: `{"dir": "..."}`; other fields (such as a legacy
+    * `"old_dir"`) are ignored. The current-df side is `dir`'s gram-stats
+    * asset, built once if `assets_increment` has not published it.
+    * 200 with the staleness rows for a pinned chain; 200
+    * `{"pinned": false}` when the corpus's index is full-built (its
+    * order IS the current df — nothing to drift).
     */
   private def ngramStaleness(ex: HttpExchange): Unit = {
     val body = mapper.readTree(ex.getRequestBody)
-    val oldDir = Option(body.get("old_dir")).map(_.asText()).filter(_.nonEmpty)
-    graft.operators.Dedup.ngramOrderStaleness(g.spark, reqText(body, "dir"),
-        oldDir = oldDir) match {
+    graft.operators.Dedup.ngramOrderStaleness(g.spark, reqText(body, "dir")) match {
       case Some(rows) =>
         json(ex, 200, Map("pinned" -> java.lang.Boolean.TRUE,
           "staleness" -> rows.map { case (k, v) =>

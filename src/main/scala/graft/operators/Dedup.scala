@@ -650,118 +650,17 @@ object Dedup {
     spark.read.parquet(path)
   }
 
-  /** Per-doc-asset increments ran this JVM, by family — spec seams. */
-  private[graft] val minhashSigIncrementBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] val simhashSigIncrementBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] val cdcDigestIncrementBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Crossover gate for the per-doc asset increments — same shape as
-    * [[gramIncrementMinStandingBytes]] and measured the same way
-    * (SCALING.md r17): below ~1 GiB the signature/digest rebuilds are
-    * a 1–2 s corpus pass and the increment's fixed costs (listing
-    * proof, file copies, a second write) measure level or above them
-    * (sf1: cdc 0.93×, minhash 1.07×, simhash 1.9× of rebuild); past it
-    * the rebuild's full-text scan grows linearly while the increment
-    * tracks the batch. `var` is a spec/bench seam.
+  /** Default standing `documents.parquet` bytes below which the
+    * minhash-pair and ngram-index increments return the cold build
+    * instead (their `minStandingBytes` parameter): below it the
+    * rebuild's corpus pass costs no more than the increment's fixed
+    * costs (listing proof, file copies, a second write; SCALING.md).
+    * The size comes from the file listing — zero jobs.
     */
-  private[graft] var perDocIncrementMinStandingBytes: Long = 1L << 30
+  val IncrementMinStandingBytes: Long = 1L << 30
 
-  /** Times the per-doc gate chose the rebuild — spec seam. */
-  private[graft] val perDocIncrementRebuildSelections = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** COPY-FORWARD INCREMENT for per-document derived assets (round 17)
-    * — minhash signatures, simhash signatures, CDC chunk digests. The
-    * derivation is PER-ROW deterministic (a doc's signature/digest set
-    * depends only on its own text), so under a pure append the merged
-    * asset is literally (old asset ∪ derive(batch)): every old part
-    * file moves by byte-level FILE COPY (no decode, no shuffle) and
-    * only the batch is shingled/signed/chunked. Before this, every
-    * corpus append re-derived all three assets from the FULL corpus —
-    * at 100 TB, three extra full-text scans per append. Same
-    * precondition discipline as the band/edge/gram increments:
-    * metadata-proven appends skip even the digest join
-    * ([[graft.engine.AssetStore.pureAppendByMetadata]]); ambiguous
-    * listings run the digest join; an actual edit falls back to the
-    * full rebuild (a stale signature row would poison every pair join
-    * served from the address).
-    */
-  private def perDocAssetIncrement(
-      spark: SparkSession, oldDir: String, dir: String,
-      tables: java.util.concurrent.ConcurrentHashMap[String, String],
-      assetId: String,
-      oldAssetPath: () => String,
-      incrementCounter: java.util.concurrent.atomic.AtomicInteger,
-      fullBuild: () => DataFrame,
-      derive: DataFrame => DataFrame,
-      family: String): DataFrame = {
-    // crossover gate (r17): below the measured threshold the rebuild's
-    // corpus pass is cheaper than the increment's fixed costs
-    if (graft.engine.AssetStore.tableBytes(spark, oldDir, "documents.parquet")
-        < perDocIncrementMinStandingBytes) {
-      perDocIncrementRebuildSelections.incrementAndGet()
-      return fullBuild()
-    }
-    val meta = graft.engine.AssetStore.pureAppendByMetadata(
-      spark, oldDir, dir, "documents.parquet", "doc_id")
-    if (meta.isEmpty && docsPureAppendViolated(spark, oldDir, dir)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$family increment $oldDir -> $dir is not a pure append; rebuilding")
-      return fullBuild()
-    }
-    // already published? serve it with zero builds — neither the new
-    // nor the STANDING asset needs resolving
-    graft.engine.AssetStore.resolveIfCommitted(spark, assetId).foreach { dir =>
-      tables.putIfAbsent(assetId, dir)
-      return spark.read.parquet(dir)
-    }
-    // resolve the STANDING asset before entering the handle map:
-    // oldAssetPath() itself runs computeIfAbsent on the same map, and
-    // ConcurrentHashMap forbids recursive mapping-function updates
-    // (IllegalStateException when the two keys share a bin) — a fresh
-    // JVM whose old asset is committed on disk but not yet in the map
-    // would crash nondeterministically otherwise (r17 review fix)
-    val oldPath = oldAssetPath()
-    val path = tables.computeIfAbsent(assetId, _ =>
-      graft.engine.AssetStore.resolve(spark, assetId,
-        staging => {
-          incrementCounter.incrementAndGet()
-          val conf = spark.sparkContext.hadoopConfiguration
-          val src = new org.apache.hadoop.fs.Path(oldPath)
-          val fs = src.getFileSystem(conf)
-          fs.listStatus(src).foreach { st =>
-            val n = st.getPath.getName
-            if (!n.startsWith("_") && !n.startsWith("."))
-              org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-                new org.apache.hadoop.fs.Path(staging, n), false, conf)
-          }
-          val batch = meta match {
-            case Some(files) if files.nonEmpty => spark.read.parquet(files: _*)
-            case _ => Tables.documents(spark, dir)
-              .join(Tables.documents(spark, oldDir).select("doc_id"),
-                Seq("doc_id"), "left_anti")
-          }
-          val derived = derive(batch)
-          try derived.write.mode("append").parquet(staging)
-          finally { derived.unpersist(blocking = false); () }
-        }))
-    spark.read.parquet(path)
-  }
-
-  /** Publish `dir`'s minhash signature asset by increment from
-    * `oldDir`'s (see [[perDocAssetIncrement]]).
-    */
-  def corpusMinhashSignaturesIncrement(spark: SparkSession, oldDir: String, dir: String,
-      shingleK: Int = 3, numHashes: Int = 128): DataFrame =
-    perDocAssetIncrement(spark, oldDir, dir, minhashSigTables,
-      minhashSigAssetId(spark, dir, shingleK, numHashes),
-      () => {
-        corpusMinhashSignatures(spark, oldDir, shingleK, numHashes)
-        minhashSigTables.get(minhashSigAssetId(spark, oldDir, shingleK, numHashes))
-      },
-      minhashSigIncrementBuilds,
-      () => corpusMinhashSignatures(spark, dir, shingleK, numHashes),
-      b => signedHashed(b, shingleK, numHashes),
-      "minhash signature")
+  /** Times a crossover gate chose the cold build — spec seam. */
+  private[graft] val incrementRebuildSelections = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Candidate pairs via banding: signature split into `bands` bands of
     * `numHashes/bands` rows; docs agreeing on any band's hash co-locate
@@ -914,18 +813,23 @@ object Dedup {
     * doc on at least one side, so candidates come from banding ONLY the
     * batch signatures against the full signature table (batch×batch
     * collisions surface there too and the least/greatest normalization
-    * dedups the doubled orientation). Rides the already-incremented
-    * signature asset — the one corpus-shaped input is a column-pruned
-    * scan of it. Same precondition discipline as the signature
-    * increment (metadata proof, digest-join fallback, full rebuild on
-    * an edit); shares its residual too: exact-duplicate collapse is
-    * per-generation, so a batch doc byte-identical to standing text
-    * keeps its own signature row where a from-scratch rebuild would
-    * collapse it into the standing representative.
+    * dedups the doubled orientation). Reads the cold-built signature
+    * table of `dir` ([[corpusMinhashSignatures]]) — the one
+    * corpus-shaped input is a column-pruned scan of it — so the
+    * exact-duplicate collapse is the rebuild's: a batch doc
+    * byte-identical to standing text has no signature row of its own
+    * when its id lies above its standing twin's (every metadata-proven
+    * append). The one corner that differs from a rebuild is a
+    * digest-validated append whose byte-identical batch doc has the
+    * LOWER id: the rebuild elects the batch doc as representative,
+    * while the copied standing pairs still name the standing twin.
+    * Metadata proof, digest-join fallback, full rebuild on an edit.
+    * Below `minStandingBytes` of standing documents the cold build
+    * runs instead ([[IncrementMinStandingBytes]]).
     */
   def corpusMinhashPairsIncrement(spark: SparkSession, oldDir: String, dir: String,
       threshold: Double = 0.7, shingleK: Int = 3, numHashes: Int = 128,
-      bands: Int = 32): DataFrame = {
+      bands: Int = 32, minStandingBytes: Long = IncrementMinStandingBytes): DataFrame = {
     val assetId = minhashPairAssetId(spark, dir, threshold, shingleK, numHashes, bands)
     // already published? serve it with zero builds
     graft.engine.AssetStore.resolveIfCommitted(spark, assetId).foreach { d =>
@@ -939,8 +843,8 @@ object Dedup {
     // pair-verify mass the increment skips (and the copy-forward of
     // the standing pair bytes) dominates
     if (graft.engine.AssetStore.tableBytes(spark, oldDir, "documents.parquet")
-        < perDocIncrementMinStandingBytes) {
-      perDocIncrementRebuildSelections.incrementAndGet()
+        < minStandingBytes) {
+      incrementRebuildSelections.incrementAndGet()
       return corpusMinhashPairs(spark, dir, threshold, shingleK, numHashes, bands)
     }
     val meta = graft.engine.AssetStore.pureAppendByMetadata(
@@ -951,10 +855,7 @@ object Dedup {
         s"minhash pair increment $oldDir -> $dir is not a pure append; rebuilding")
       return corpusMinhashPairs(spark, dir, threshold, shingleK, numHashes, bands)
     }
-    // the signature asset first, by increment (its own crossover gate
-    // may pick the rebuild below ~1 GiB standing bytes — either way the
-    // table below is the full merged signature set)
-    val allSigs = corpusMinhashSignaturesIncrement(spark, oldDir, dir, shingleK, numHashes)
+    val allSigs = corpusMinhashSignatures(spark, dir, shingleK, numHashes)
     // standing pair asset BEFORE entering the handle map
     // (recursive-update guard, same as every other increment publisher)
     val oldPath = minhashPairAssetPath(spark, oldDir, threshold, shingleK, numHashes, bands)
@@ -1196,21 +1097,6 @@ object Dedup {
     val fp = graft.engine.AssetStore.corpusFingerprint(spark, dir, "documents.parquet")
     s"simhashsig_v${graft.engine.AssetStore.FormatVersion}_$fp"
   }
-
-  /** Publish `dir`'s simhash signature asset by increment from
-    * `oldDir`'s (see [[perDocAssetIncrement]]).
-    */
-  def corpusSimhashSignaturesIncrement(spark: SparkSession, oldDir: String, dir: String): DataFrame =
-    perDocAssetIncrement(spark, oldDir, dir, simhashSigTables,
-      simhashSigAssetId(spark, dir),
-      () => {
-        corpusSimhashSignatures(spark, oldDir)
-        simhashSigTables.get(simhashSigAssetId(spark, oldDir))
-      },
-      simhashSigIncrementBuilds,
-      () => corpusSimhashSignatures(spark, dir),
-      b => simhashSignatures(b, md5Hash = true),
-      "simhash signature")
 
   /** [[simhashPairs]]' tail over a prebuilt (doc_id, sim) signature
     * table — the asset entry point.
@@ -1578,13 +1464,11 @@ object Dedup {
     *
     * Cost: vocabulary-sized — three bounded TakeOrdered heads (never an
     * unpartitioned window), two semi-joins, three counts over the two
-    * committed gram tables. The current-df side is resolved from the
-    * COMMITTED gram-stats asset (round 20, advice fix): with `oldDir`
-    * given (the `assets_increment` flow) an uncommitted asset is
-    * published by the vocabulary-sized increment merge; standalone
-    * (`POST /maintenance/ngram_staleness` with no `old_dir`) an
-    * uncommitted asset triggers the one corpus-sized shingle build,
-    * WARN-logged with the cost named — never silently. Computed at
+    * committed gram tables. The current-df side is `dir`'s gram-stats
+    * asset ([[corpusGramDf]]); the `assets_increment` flow publishes it
+    * before this probe runs, and an uncommitted asset triggers the one
+    * corpus-sized shingle build, WARN-logged with the cost named —
+    * never silently. Computed at
     * `assets_increment` time and returned in the rows map
     * (`Graft.incrementAssets`); runbook threshold guidance in
     * SCALING.md (rebuild at collision_bp > ~30000 or
@@ -1599,22 +1483,15 @@ object Dedup {
     * runbook must never act on.
     */
   def ngramOrderStaleness(spark: SparkSession, dir: String, k: Int = 3,
-      topK: Int = 1024, oldDir: Option[String] = None): Option[Map[String, Long]] =
+      topK: Int = 1024): Option[Map[String, Long]] =
     pinnedOrderPath(spark, dir, k).map { ordPath =>
       val pinned = spark.read.parquet(ordPath).select(col("g"), col("__df"))
-      val current = graft.engine.AssetStore
-        .resolveIfCommitted(spark, gramDfAssetId(spark, dir, k))
-        .map(p => spark.read.parquet(p))
-        .orElse(oldDir.map(o => corpusGramDfIncrement(spark, o, dir, k)))
-        .getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"ngram staleness at $dir: gram-stats asset not committed and no " +
-              "old_dir given — the full corpus shingle pass runs now; publish " +
-              "the gram_stats family by increment to keep this probe " +
-              "vocabulary-sized")
-          corpusGramDf(spark, dir, k)
-        }
-        .select(col("g"), col("__df"))
+      if (graft.engine.AssetStore.resolveIfCommitted(spark, gramDfAssetId(spark, dir, k)).isEmpty)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"ngram staleness at $dir: gram-stats asset not committed — the " +
+            "full corpus shingle pass runs now; publish the gram_stats " +
+            "family first to keep this probe vocabulary-sized")
+      val current = corpusGramDf(spark, dir, k).select(col("g"), col("__df"))
       val shared = current.join(pinned.select("g"), Seq("g"), "left_semi")
       val currentVocab = current.count()
       val sharedVocab = shared.count()
@@ -1686,11 +1563,12 @@ object Dedup {
     * generation stays complete and the exact verify makes every
     * consumer's ANSWER identical to a from-scratch rebuild's; only
     * pruning efficiency drifts as true frequencies move, which a
-    * periodic rebuild resets. Same precondition/crossover discipline
-    * as the per-doc family ([[perDocIncrementMinStandingBytes]]).
+    * periodic rebuild resets. Same precondition discipline as the
+    * pair increment; below `minStandingBytes` of standing documents
+    * the cold build runs instead ([[IncrementMinStandingBytes]]).
     */
   def corpusNgramIndexIncrement(spark: SparkSession, oldDir: String, dir: String,
-      k: Int = 3): DataFrame = {
+      k: Int = 3, minStandingBytes: Long = IncrementMinStandingBytes): DataFrame = {
     val assetId = ngramIdxAssetId(spark, dir, k)
     // already published? serve it with zero builds
     graft.engine.AssetStore.resolveIfCommitted(spark, assetId).foreach { d =>
@@ -1698,11 +1576,11 @@ object Dedup {
       return spark.read.parquet(d)
     }
     // crossover gate: below the measured threshold the rebuild's corpus
-    // pass beats the increment's fixed costs (shared with the per-doc
-    // family — same cost shape: one text scan vs listing + copies)
+    // pass beats the increment's fixed costs (one text scan vs listing
+    // + copies)
     if (graft.engine.AssetStore.tableBytes(spark, oldDir, "documents.parquet")
-        < perDocIncrementMinStandingBytes) {
-      perDocIncrementRebuildSelections.incrementAndGet()
+        < minStandingBytes) {
+      incrementRebuildSelections.incrementAndGet()
       return corpusNgramIndex(spark, dir, k)
     }
     val meta = graft.engine.AssetStore.pureAppendByMetadata(
@@ -1852,28 +1730,6 @@ object Dedup {
       .orderBy("decile")
   }
 
-  /** Gram-stats increments ran this JVM — spec seam. */
-  private[graft] val gramDfIncrementBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** CROSSOVER GATE for the gram-stats increment (r17): below this
-    * standing-corpus byte size [[corpusGramDfIncrement]] auto-selects
-    * the full rebuild. Measured basis (SCALING.md r16/r17): at every
-    * locally reachable scale the increment's standing-asset read +
-    * merged-vocabulary exchange costs MORE than the corpus re-shingle
-    * it avoids — the increment wins only when corpus gram VOLUME
-    * dwarfs distinct-gram vocabulary (high document frequency), which
-    * a few-hundred-MB corpus never exhibits (and the disjoint-vocab
-    * scale generator exhibits by design only far above local sizes).
-    * 1 GiB is deliberately conservative: past it the rebuild's
-    * corpus×grams exchange grows linearly while the increment's
-    * standing-side cost tracks vocabulary. The size signal comes from
-    * the FILE LISTING — zero jobs. `var` is a spec/bench seam.
-    */
-  private[graft] var gramIncrementMinStandingBytes: Long = 1L << 30
-
-  /** Times the crossover gate chose the rebuild — spec seam. */
-  private[graft] val gramIncrementRebuildSelections = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Documents-side pure-append validation (the embeddings-side twin
     * lives in Similarity): every old doc_id present in `dir` with
     * unchanged text, compared by DIGEST so the validation join
@@ -1884,8 +1740,9 @@ object Dedup {
     * shingle to nothing, so the guarded asset cannot tell them apart
     * either).
     */
-  // verdict memo keyed by both fingerprints (r17): four derived-asset
-  // families validate the same documents pair per append publish —
+  // verdict memo keyed by both fingerprints: two derived-asset
+  // families (minhash pairs, ngram index) validate the same documents
+  // pair per append publish —
   // the corpus digest join runs once, not once per family; the
   // fingerprints content-address the verdict (same contract as
   // AssetStore's proof memo)
@@ -1904,75 +1761,6 @@ object Dedup {
           Seq("doc_id"), "left")
         .filter(col("__new").isNull || col("__old") =!= col("__new"))
         .isEmpty)
-  }
-
-  /** Publish `dir`'s gram-stats asset by INCREMENT from `oldDir`'s
-    * (round 16): `__df` is a sum and `first_doc` a min over disjoint
-    * doc sets, so the merged table is EXACTLY (old asset ∪ batch
-    * grams) re-aggregated — the batch is shingled, the standing corpus
-    * is NOT re-read, and the merge is a vocabulary-sized exchange.
-    * At 100 TB that replaces the asset family's one remaining
-    * corpus-proportional append cost (re-shingling every standing
-    * document) with batch-sized text work; every consumer — both
-    * novelty queries, the accreting novelty gate, the prefix-index df
-    * side — loads the incremented table at the same content address
-    * with no code change.
-    *
-    * Same precondition discipline as the embedding-side increments: a
-    * removed or edited document falls back to the full rebuild (an
-    * edited doc would leave phantom df mass under the honest-looking
-    * address). Spec-pinned row-identical to the full rebuild.
-    */
-  def corpusGramDfIncrement(spark: SparkSession, oldDir: String, dir: String,
-      k: Int = 3): DataFrame = {
-    // crossover gate (r17): a small standing corpus re-shingles faster
-    // than the increment merges — auto-select the rebuild below the
-    // measured threshold (byte size from the listing, zero jobs)
-    if (graft.engine.AssetStore.tableBytes(spark, oldDir, "documents.parquet")
-        < gramIncrementMinStandingBytes) {
-      gramIncrementRebuildSelections.incrementAndGet()
-      return corpusGramDf(spark, dir, k)
-    }
-    // metadata-first (r17): listing subset + footer doc_id disjointness
-    // prove the append with zero data jobs; the digest join runs only
-    // on an ambiguous listing and stays the ground-truth validator
-    val meta = graft.engine.AssetStore.pureAppendByMetadata(
-      spark, oldDir, dir, "documents.parquet", "doc_id")
-    if (meta.isEmpty && docsPureAppendViolated(spark, oldDir, dir)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"gram-stats increment $oldDir -> $dir is not a pure append; rebuilding")
-      return corpusGramDf(spark, dir, k)
-    }
-    val fp = graft.engine.AssetStore.corpusFingerprint(spark, dir, "documents.parquet")
-    val assetId = s"gramdffd_k${k}_v${graft.engine.AssetStore.FormatVersion}_$fp"
-    // already published? serve with zero builds
-    graft.engine.AssetStore.resolveIfCommitted(spark, assetId).foreach { d =>
-      gramDfTables.putIfAbsent(assetId, d)
-      return spark.read.parquet(d)
-    }
-    // resolve the standing asset BEFORE computeIfAbsent: the builder
-    // would otherwise recursively update gramDfTables (same fix as
-    // perDocAssetIncrement — CHM forbids recursive mapping updates)
-    val old = corpusGramDf(spark, oldDir, k)
-    val path = gramDfTables.computeIfAbsent(assetId, _ =>
-      graft.engine.AssetStore.resolve(spark, assetId,
-        staging => {
-          gramDfIncrementBuilds.incrementAndGet()
-          // metadata-proven appends read the batch files directly; the
-          // anti-join (both corpora's doc_id columns) only runs for
-          // digest-validated appends (r17)
-          val batch = meta match {
-            case Some(files) if files.nonEmpty => spark.read.parquet(files: _*)
-            case _ => Tables.documents(spark, dir)
-              .join(Tables.documents(spark, oldDir).select("doc_id"), Seq("doc_id"), "left_anti")
-          }
-          gramDf(batch, k)
-            .unionByName(old)
-            .groupBy("g")
-            .agg(sum(col("__df")).as("__df"), min(col("first_doc")).as("first_doc"))
-            .write.mode("overwrite").parquet(staging)
-        }))
-    spark.read.parquet(path)
   }
 
   /** Candidate (id_a, id_b) pairs from the rarest-first prefix index of
@@ -2458,22 +2246,6 @@ object Dedup {
     s"cdcdigests_k${k}_w${divisor}_v${graft.engine.AssetStore.FormatVersion}_$fp"
   }
 
-  /** Publish `dir`'s CDC chunk-digest asset by increment from
-    * `oldDir`'s (see [[perDocAssetIncrement]]).
-    */
-  def corpusChunkDigestsIncrement(spark: SparkSession, oldDir: String, dir: String,
-      k: Int = 8, divisor: Int = 64): DataFrame =
-    perDocAssetIncrement(spark, oldDir, dir, chunkDigestTables,
-      cdcDigestAssetId(spark, dir, k, divisor),
-      () => {
-        corpusChunkDigests(spark, oldDir, k, divisor)
-        chunkDigestTables.get(cdcDigestAssetId(spark, oldDir, k, divisor))
-      },
-      cdcDigestIncrementBuilds,
-      () => corpusChunkDigests(spark, dir, k, divisor),
-      b => chunkDigests(b, k, divisor),
-      "cdc chunk-digest")
-
   /** The accounting half over any (doc_id, digest, len) frame — fed by
     * the in-plan chunking pass (batch API) or a slice of the
     * materialized [[corpusChunkDigests]] asset (driver query).
@@ -2539,10 +2311,8 @@ object Dedup {
     * and the bucket's share of all postings in basis points. This is
     * the sizing audit for EVERY gram-keyed path here — the n-gram
     * prefix index's candidate bound is Σ df² over prefix grams, the
-    * novelty queries' join cost tracks posting mass, and the
-    * [[corpusGramDfIncrement]] crossover (vocabulary vs gram volume)
-    * is literally this table's shape — so it is the chart a deployment
-    * reads before sizing any of them.
+    * novelty queries' join cost tracks posting mass — so it is the
+    * chart a deployment reads before sizing any of them.
     *
     * Scale shape: one scan of the skinny materialized gram-stats asset
     * (`gramdffd`, built once per corpus); the rollup keys on ≤64

@@ -799,15 +799,6 @@ object Similarity {
     */
   private[graft] val knnIncrementFallbacks = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Ceiling on the affected-range set the increment will track
-    * individually; above it the publisher degrades to the one-job
-    * merged write instead of collecting the range list (r17 — the
-    * saturation pre-check runs as a COUNT, so the over-budget case
-    * never pulls rows to the driver). 2²⁰ ranges ≈ 10⁹ vectors at the
-    * default width. `var` is a spec seam only.
-    */
-  private[graft] var knnAffectedPtBudget: Long = 1L << 20
-
   /** Times the saturation pre-check chose the degraded merged write —
     * spec seam.
     */
@@ -853,10 +844,17 @@ object Similarity {
     * writes the whole merged frame in one job, same as r15. Any
     * untouched range is worth copying: the copy is a byte move the
     * filesystem can satisfy without decode or shuffle.
+    *
+    * `affectedPtBudget` caps the affected-range set the increment
+    * tracks individually; above it the publisher degrades to the
+    * one-job merged write instead of collecting the range list (the
+    * over-budget case never pulls more than budget+1 rows to the
+    * driver). 2²⁰ ranges ≈ 10⁹ vectors at the default width.
     */
   def corpusKnnEdgesIncrement(spark: SparkSession, oldDir: String, dir: String,
       kTop: Int = 5, bits: Int = 4, tables: Int = 8, dim: Int = 64,
-      seedBase: Long = 42L, scale: Int = 1000, partWidth: Long = 1024L): DataFrame = {
+      seedBase: Long = 42L, scale: Int = 1000, partWidth: Long = 1024L,
+      affectedPtBudget: Long = 1L << 20): DataFrame = {
     val assetId = knnEdgesAssetId(spark, dir, kTop, bits, tables, dim, seedBase, scale, partWidth)
     // already published? serve it with zero builds
     graft.engine.AssetStore.resolveIfCommitted(spark, assetId).foreach { d =>
@@ -932,7 +930,7 @@ object Similarity {
               val affectedPtsDf = affected.select(ptCol(partWidth).as("pt")).distinct()
               val affectedPtsOpt =
                 try Some(graft.engine.DriverBudget.collect(
-                    "Similarity.corpusKnnEdgesIncrement.affectedPts", knnAffectedPtBudget)(
+                    "Similarity.corpusKnnEdgesIncrement.affectedPts", affectedPtBudget)(
                     affectedPtsDf)
                   .map(_.getLong(0)).toSet)
                 catch { case _: graft.engine.DriverBudget.BudgetExceeded =>

@@ -97,35 +97,9 @@ object AssetBench {
     val builds = Seq[(String, () => Unit, () => Long)](
       ("ngramidx_k3", noSetup, () => Dedup.corpusNgramIndex(spark, sfDir).count()),
       ("gramdf_k3", noSetup, () => Dedup.corpusGramDf(spark, sfDir).count()),
-      ("gramdf_k3_increment", () => {
-        appendLayout("documents.parquet", "doc_id")
-        // measure the increment MACHINERY (comparable across rounds):
-        // the shipped r17 crossover gate would route every local-sized
-        // corpus to the rebuild, which the gramdf_k3 row already times
-        Dedup.gramIncrementMinStandingBytes = 0L
-        Dedup.corpusGramDf(spark, incOldDir).count(); ()
-      }, () => Dedup.corpusGramDfIncrement(spark, incOldDir, incNewDir).count()),
       ("cdcdigests", noSetup, () => Dedup.corpusChunkDigests(spark, sfDir).count()),
-      ("cdcdigests_increment", () => {
-        appendLayout("documents.parquet", "doc_id")
-        // machinery row: the shipped gate routes local sizes to rebuild
-        Dedup.perDocIncrementMinStandingBytes = 0L
-        Dedup.corpusChunkDigests(spark, incOldDir).count(); ()
-      }, () => Dedup.corpusChunkDigestsIncrement(spark, incOldDir, incNewDir).count()),
       ("minhashsig_k3_h128", noSetup, () => Dedup.corpusMinhashSignatures(spark, sfDir).count()),
-      ("minhashsig_k3_h128_increment", () => {
-        appendLayout("documents.parquet", "doc_id")
-        // machinery row: the shipped gate routes local sizes to rebuild
-        Dedup.perDocIncrementMinStandingBytes = 0L
-        Dedup.corpusMinhashSignatures(spark, incOldDir).count(); ()
-      }, () => Dedup.corpusMinhashSignaturesIncrement(spark, incOldDir, incNewDir).count()),
       ("simhashsig", noSetup, () => Dedup.corpusSimhashSignatures(spark, sfDir).count()),
-      ("simhashsig_increment", () => {
-        appendLayout("documents.parquet", "doc_id")
-        // machinery row: the shipped gate routes local sizes to rebuild
-        Dedup.perDocIncrementMinStandingBytes = 0L
-        Dedup.corpusSimhashSignatures(spark, incOldDir).count(); ()
-      }, () => Dedup.corpusSimhashSignaturesIncrement(spark, incOldDir, incNewDir).count()),
       ("knnedges_k5", noSetup, () => Similarity.corpusKnnEdges(spark, sfDir).count()),
       ("knnedges_k5_increment", incSetup(4),
         () => Similarity.corpusKnnEdgesIncrement(spark, incOldDir, incNewDir).count()),
@@ -142,26 +116,25 @@ object AssetBench {
         () => Similarity.corpusBandedEmbeddingsIncrement(spark, incOldDir, incNewDir, bits = 12).count()),
       ("bpemerges_r3", noSetup, () => TextAnalysis.corpusBpeMerges(spark, sfDir, 3).count()),
       // SECOND-TIER assets: the verified pair graph and the triangle
-      // stats, full derivation vs their increments riding the
-      // already-incremented upstream assets
+      // stats, full derivation vs their increments. Increment rows
+      // pass minStandingBytes = 0 to time the increment machinery: the
+      // shipped gate routes every local-sized corpus to the rebuild,
+      // which the full rows already time. The pair increment's timed
+      // number includes the cold signature build at the new address.
       ("minhashpairs_t700", noSetup, () => Dedup.corpusMinhashPairs(spark, sfDir).count()),
       ("minhashpairs_t700_increment", () => {
         appendLayout("documents.parquet", "doc_id")
-        // machinery row: the shipped per-doc gate routes local sizes
-        // to the sig rebuild — zero it so the pair increment rides the
-        // production-shaped incremented signature asset
-        Dedup.perDocIncrementMinStandingBytes = 0L
         Dedup.corpusMinhashPairs(spark, incOldDir).count(); ()
-      }, () => Dedup.corpusMinhashPairsIncrement(spark, incOldDir, incNewDir).count()),
+      }, () => Dedup.corpusMinhashPairsIncrement(spark, incOldDir, incNewDir,
+        minStandingBytes = 0L).count()),
       ("tristats_b12", noSetup,
         () => Similarity.corpusTriangleStats(spark, sfDir, bits = 12).count()),
       ("ngramidx_k3_increment", () => {
         appendLayout("documents.parquet", "doc_id")
-        // machinery row: the shipped gate routes local sizes to rebuild
-        Dedup.perDocIncrementMinStandingBytes = 0L
         Dedup.corpusNgramIndex(spark, incOldDir).count()
         Dedup.corpusGramDf(spark, incOldDir).count(); ()
-      }, () => Dedup.corpusNgramIndexIncrement(spark, incOldDir, incNewDir).count()),
+      }, () => Dedup.corpusNgramIndexIncrement(spark, incOldDir, incNewDir,
+        minStandingBytes = 0L).count()),
       // timed: the edge increment plus one wedge join over its output;
       // the standing tristats asset is prebuilt as in an append
       // workflow, though the publish never reads it
@@ -175,23 +148,13 @@ object AssetBench {
     val only = sys.env.get("SPARK_GRAFT_ASSETBENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(builds)(names => builds.filter(b => names(b._1)))
-    // machinery rows mutate process-global gates; each row restores
-    // them so later rows (and anything after the bench in-process) run
-    // under the shipped defaults — same discipline as the specs
     val timed = selected.map { case (name, setup, run) =>
       freshRoot()
-      val gram0 = Dedup.gramIncrementMinStandingBytes
-      val perDoc0 = Dedup.perDocIncrementMinStandingBytes
-      try {
-        setup()
-        val t0 = System.nanoTime()
-        run()
-        val sec = (System.nanoTime() - t0) / 1e9
-        name -> math.round(sec * 1000) / 1000.0
-      } finally {
-        Dedup.gramIncrementMinStandingBytes = gram0
-        Dedup.perDocIncrementMinStandingBytes = perDoc0
-      }
+      setup()
+      val t0 = System.nanoTime()
+      run()
+      val sec = (System.nanoTime() - t0) / 1e9
+      name -> math.round(sec * 1000) / 1000.0
     }
     val json = timed.map { case (n, s) => s""""$n": $s""" }.mkString(", ")
     println(s"""{"sf_dir": "$sfDir", "builds": {$json}}""")

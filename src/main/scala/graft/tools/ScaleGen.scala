@@ -125,9 +125,10 @@ object ScaleGen {
     * 0.83, safely above the 0.7 verify threshold; every planted text
     * also gets a doc-unique suffix token (one extra shingle, J stays
     * ≥ (n−5)/(n−1) ≈ 0.79), so no two planted docs are ever
-    * byte-identical — byte-identical texts would trip the documented
-    * exact-dup-collapse residual and make rebuild-vs-increment answers
-    * legitimately differ, which is NOT what this fixture measures.
+    * byte-identical: the signature stage collapses byte-identical
+    * texts into one representative before banding, so an exact twin
+    * adds no pair to verify — the near-dup verification mass is what
+    * this fixture measures.
     */
   def plantNearDups(docs: DataFrame, permille: Int): DataFrame = {
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)

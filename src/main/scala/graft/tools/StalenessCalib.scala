@@ -73,7 +73,6 @@ object StalenessCalib {
     def withStream[A](s: java.util.stream.Stream[A])(f: java.util.stream.Stream[A] => Unit): Unit =
       try f(s) finally s.close()
 
-    val gate0 = Dedup.perDocIncrementMinStandingBytes
     // one independent pinned chain per rung: build gen1 = gen0 + batch,
     // pin the order by increment, read the staleness rows, count
     // candidates under the pinned and fresh orders
@@ -97,11 +96,10 @@ object StalenessCalib {
       spark.conf.set("spark.graft.index.dir",
         java.nio.file.Files.createTempDirectory(s"graft_cal_wh_$tag").toString)
       Dedup.dropInMemoryNgramTables()
-      Dedup.perDocIncrementMinStandingBytes = 0L
       Dedup.corpusNgramIndex(spark, oldDir).count()
       Dedup.corpusGramDf(spark, oldDir).count()
-      val pinnedIdx = Dedup.corpusNgramIndexIncrement(spark, oldDir, newDir)
-      val stale = Dedup.ngramOrderStaleness(spark, newDir, oldDir = Some(oldDir))
+      val pinnedIdx = Dedup.corpusNgramIndexIncrement(spark, oldDir, newDir, minStandingBytes = 0L)
+      val stale = Dedup.ngramOrderStaleness(spark, newDir)
         .getOrElse(sys.error("chain must be pinned"))
       val candPinned = Dedup.prefixCandidatesIdx(pinnedIdx, 0.7).count()
       // fresh rebuild in a scratch warehouse (current df order)
@@ -142,7 +140,6 @@ object StalenessCalib {
       }
       s"""{"t": $t, ${measureChain(s"t$t", batch)}}"""
     }
-    Dedup.perDocIncrementMinStandingBytes = gate0
     println(s"""{"sf_dir": "$sfDir", "rows": [${rows.mkString(", ")}], """ +
       s""""template_rows": [${templateRows.mkString(", ")}]}""")
     spark.stop()

@@ -419,17 +419,16 @@ class AssetStoreSpec extends SparkSpec {
       emb.filter(col("vec_id") < cut).write.parquet(s"$oldDir/embeddings.parquet")
       emb.write.parquet(s"$newDir/embeddings.parquet")
       Similarity.dropInMemoryIndexes()
-      val budget0 = Similarity.knnAffectedPtBudget
       try {
         val B = 12
         Similarity.corpusKnnEdges(spark, oldDir, bits = B).count()
         // force the saturation pre-check: with a zero budget the range
         // COUNT exceeds it, so the publisher must take the one-job
         // merged write — no driver collect, no budget exception
-        Similarity.knnAffectedPtBudget = 0L
         val sat0 = Similarity.knnIncrementSaturatedWrites.get()
         val inc0 = Similarity.knnIncrementBuilds.get()
-        val inc = Similarity.corpusKnnEdgesIncrement(spark, oldDir, newDir, bits = B)
+        val inc = Similarity.corpusKnnEdgesIncrement(spark, oldDir, newDir, bits = B,
+            affectedPtBudget = 0L)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
         assert(Similarity.knnIncrementSaturatedWrites.get() == sat0 + 1,
           "the over-budget range set must route through the degraded merged write")
@@ -439,7 +438,6 @@ class AssetStoreSpec extends SparkSpec {
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
         assert(inc == full, s"degraded write diverged: ${inc.size} vs ${full.size} rows")
       } finally {
-        Similarity.knnAffectedPtBudget = budget0
         Similarity.dropInMemoryIndexes()
         spark.catalog.clearCache()
       }
@@ -550,218 +548,6 @@ class AssetStoreSpec extends SparkSpec {
       assert(canon3(Dedup.simhashQuery(spark, sf)) == pairsViaAsset)
       assert(Dedup.simhashAssetBuilds.get() == b0 + 1, "fresh handles must load the asset")
       spark.catalog.clearCache()
-    }
-  }
-
-  test("gram-stats increment: batch-only shingling merges exactly; edits fall back") {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.functions._
-    withRoot { _ =>
-      val oldDir = java.nio.file.Files.createTempDirectory("graft_gdinc_old").toString
-      val newDir = java.nio.file.Files.createTempDirectory("graft_gdinc_new").toString
-      val docs = Tables.documents(spark, sf)
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) * 9 / 10
-      docs.filter(col("doc_id") < cut).write.parquet(s"$oldDir/documents.parquet")
-      docs.write.parquet(s"$newDir/documents.parquet")
-      Dedup.dropInMemoryNgramTables()
-      val gate0 = Dedup.gramIncrementMinStandingBytes
-      // force the increment MACHINERY on the small fixture (the r17
-      // crossover gate would honestly pick the rebuild here — pinned
-      // in its own spec below)
-      Dedup.gramIncrementMinStandingBytes = 0L
-      try {
-        Dedup.corpusGramDf(spark, oldDir).count()
-        val full0 = Dedup.ngramAssetBuilds.get()
-        val inc0 = Dedup.gramDfIncrementBuilds.get()
-        def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-        val inc = canon(Dedup.corpusGramDfIncrement(spark, oldDir, newDir))
-        assert(Dedup.gramDfIncrementBuilds.get() == inc0 + 1)
-        assert(Dedup.ngramAssetBuilds.get() == full0,
-          "a pure append must not re-shingle the standing corpus")
-        // row-identical to the full rebuild on the merged corpus
-        val want = canon(Dedup.gramDf(Tables.documents(spark, newDir)))
-        assert(inc == want, s"gram merge diverged: ${inc.size} vs ${want.size} rows")
-        // consumers load the published address, builds stay flat
-        Dedup.dropInMemoryNgramTables()
-        assert(canon(Dedup.corpusGramDf(spark, newDir)) == inc)
-        assert(Dedup.ngramAssetBuilds.get() == full0)
-
-        // an EDITED standing doc must trip the fallback (phantom df
-        // mass otherwise)
-        val edDir = java.nio.file.Files.createTempDirectory("graft_gdinc_ed").toString
-        docs.withColumn("text",
-            when(col("doc_id") === 1L, lit("edited body text here")).otherwise(col("text")))
-          .write.parquet(s"$edDir/documents.parquet")
-        val inc1 = Dedup.gramDfIncrementBuilds.get()
-        val got = canon(Dedup.corpusGramDfIncrement(spark, oldDir, edDir))
-        assert(Dedup.gramDfIncrementBuilds.get() == inc1,
-          "the increment path must NOT run on an edited corpus")
-        assert(got == canon(Dedup.gramDf(Tables.documents(spark, edDir))),
-          "the fallback must serve the correct rebuilt stats")
-      } finally {
-        Dedup.gramIncrementMinStandingBytes = gate0
-        Dedup.dropInMemoryNgramTables()
-        spark.catalog.clearCache()
-      }
-    }
-  }
-
-  test("per-doc signature/digest assets publish appends by copy-forward increment; edits fall back (r17)") {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.functions._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    withRoot { root =>
-      val oldDir = Files.createTempDirectory("graft_sig_old").toString
-      val newDir = Files.createTempDirectory("graft_sig_new").toString
-      val docs = Tables.documents(spark, sf)
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) * 9 / 10
-      docs.filter(col("doc_id") < cut).write.parquet(s"$oldDir/documents.parquet")
-      // append layout: standing files byte-copied, batch part files in
-      Files.createDirectories(Paths.get(s"$newDir/documents.parquet"))
-      Files.list(Paths.get(s"$oldDir/documents.parquet")).forEach(p =>
-        Files.copy(p, Paths.get(s"$newDir/documents.parquet/${p.getFileName}"),
-          StandardCopyOption.COPY_ATTRIBUTES))
-      val bTmp = Files.createTempDirectory("graft_sig_batch").toString
-      docs.filter(col("doc_id") >= cut).write.parquet(s"$bTmp/b.parquet")
-      Files.list(Paths.get(s"$bTmp/b.parquet"))
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .forEach(p => Files.move(p, Paths.get(s"$newDir/documents.parquet/part-batch-${p.getFileName}")))
-      Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-      def files(dir: String): Set[(String, Long)] =
-        new java.io.File(dir).listFiles()
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.length())).toSet
-      val gate0 = Dedup.perDocIncrementMinStandingBytes
-      try {
-        // the r17 crossover gate honestly routes this sub-GiB fixture
-        // to the rebuild — pin that against a throwaway warehouse so
-        // the gated rebuild doesn't pre-publish the increment's address
-        spark.conf.set("spark.graft.index.dir",
-          java.nio.file.Files.createTempDirectory("graft_sig_root0").toString)
-        val sel0 = Dedup.perDocIncrementRebuildSelections.get()
-        val mi0 = Dedup.minhashSigIncrementBuilds.get()
-        Dedup.corpusMinhashSignaturesIncrement(spark, oldDir, newDir).count()
-        assert(Dedup.perDocIncrementRebuildSelections.get() == sel0 + 1,
-          "a sub-threshold standing corpus must route to the rebuild")
-        assert(Dedup.minhashSigIncrementBuilds.get() == mi0)
-        Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-        spark.conf.set("spark.graft.index.dir", root)
-        Dedup.perDocIncrementMinStandingBytes = 0L
-        // one case per family: (prebuild-old, increment, counter, canon)
-        val cases = Seq[(String, () => Unit, () => org.apache.spark.sql.DataFrame,
-            java.util.concurrent.atomic.AtomicInteger,
-            org.apache.spark.sql.DataFrame => Seq[String])](
-          ("minhashsig",
-            () => { Dedup.corpusMinhashSignatures(spark, oldDir).count(); () },
-            () => Dedup.corpusMinhashSignaturesIncrement(spark, oldDir, newDir),
-            Dedup.minhashSigIncrementBuilds,
-            df => df.select(col("doc_id"), col("hs").cast("string"), col("sig").cast("string"))
-              .collect().map(_.mkString("|")).sorted.toSeq),
-          ("simhashsig",
-            () => { Dedup.corpusSimhashSignatures(spark, oldDir).count(); () },
-            () => Dedup.corpusSimhashSignaturesIncrement(spark, oldDir, newDir),
-            Dedup.simhashSigIncrementBuilds,
-            df => df.collect().map(_.mkString("|")).sorted.toSeq),
-          ("cdcdigests",
-            () => { Dedup.corpusChunkDigests(spark, oldDir).count(); () },
-            () => Dedup.corpusChunkDigestsIncrement(spark, oldDir, newDir),
-            Dedup.cdcDigestIncrementBuilds,
-            df => df.collect().map(_.mkString("|")).sorted.toSeq))
-        cases.foreach { case (family, prebuild, increment, counter, canon) =>
-          prebuild()
-          val c0 = counter.get()
-          val inc = canon(increment())
-          assert(counter.get() == c0 + 1, s"$family must publish via the increment path")
-          // the standing asset's data files were byte-copied forward
-          val oldAsset = new java.io.File(root).listFiles()
-            .filter(f => f.getName.startsWith(family)).map(_.toString)
-          assert(oldAsset.length == 2, s"$family: expected old+new assets, saw ${oldAsset.toSeq}")
-          val (a, b) = (files(oldAsset(0)), files(oldAsset(1)))
-          val (oldFiles, newFiles) = if (a.size <= b.size) (a, b) else (b, a)
-          assert(oldFiles.subsetOf(newFiles),
-            s"$family: standing part files must be copied verbatim: ${oldFiles.diff(newFiles)}")
-          // and the published table equals the from-scratch rebuild
-          val root2 = java.nio.file.Files.createTempDirectory("graft_sig_root2").toString
-          spark.conf.set("spark.graft.index.dir", root2)
-          Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-          val full = family match {
-            case "minhashsig" => canon(Dedup.corpusMinhashSignatures(spark, newDir))
-            case "simhashsig" => canon(Dedup.corpusSimhashSignatures(spark, newDir))
-            case _            => canon(Dedup.corpusChunkDigests(spark, newDir))
-          }
-          assert(inc == full, s"$family increment diverged: ${inc.size} vs ${full.size} rows")
-          spark.conf.set("spark.graft.index.dir", root)
-          Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-        }
-        // an edited corpus must fall back to the full rebuild
-        val edDir = java.nio.file.Files.createTempDirectory("graft_sig_ed").toString
-        docs.withColumn("text",
-            when(col("doc_id") === 1L, lit("edited body text")).otherwise(col("text")))
-          .write.parquet(s"$edDir/documents.parquet")
-        val c1 = Dedup.simhashSigIncrementBuilds.get()
-        val viaFb = Dedup.corpusSimhashSignaturesIncrement(spark, oldDir, edDir)
-          .collect().map(_.mkString("|")).sorted.toSeq
-        assert(Dedup.simhashSigIncrementBuilds.get() == c1,
-          "an edited corpus must not take the increment path")
-        spark.conf.set("spark.graft.index.dir",
-          java.nio.file.Files.createTempDirectory("graft_sig_root3").toString)
-        Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-        val fullEd = Dedup.corpusSimhashSignatures(spark, edDir)
-          .collect().map(_.mkString("|")).sorted.toSeq
-        assert(viaFb == fullEd, "the fallback must serve the rebuilt signatures")
-      } finally {
-        Dedup.perDocIncrementMinStandingBytes = gate0
-        Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-        spark.catalog.clearCache()
-      }
-    }
-  }
-
-  test("gram-stats crossover gate: small standing corpus auto-selects rebuild; past the threshold the increment runs (r17)") {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.functions._
-    withRoot { _ =>
-      val oldDir = java.nio.file.Files.createTempDirectory("graft_ggate_old").toString
-      val newDir = java.nio.file.Files.createTempDirectory("graft_ggate_new").toString
-      val docs = Tables.documents(spark, sf)
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) * 9 / 10
-      docs.filter(col("doc_id") < cut).write.parquet(s"$oldDir/documents.parquet")
-      docs.write.parquet(s"$newDir/documents.parquet")
-      Dedup.dropInMemoryNgramTables()
-      val gate0 = Dedup.gramIncrementMinStandingBytes
-      def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      try {
-        Dedup.corpusGramDf(spark, oldDir).count()
-        // DEFAULT threshold: this fixture is far below 1 GiB — the gate
-        // must pick the rebuild (correct answer, no increment build)
-        val inc0 = Dedup.gramDfIncrementBuilds.get()
-        val sel0 = Dedup.gramIncrementRebuildSelections.get()
-        val viaGate = canon(Dedup.corpusGramDfIncrement(spark, oldDir, newDir))
-        assert(Dedup.gramIncrementRebuildSelections.get() == sel0 + 1,
-          "a sub-threshold standing corpus must route to the rebuild")
-        assert(Dedup.gramDfIncrementBuilds.get() == inc0,
-          "the increment machinery must not run below the crossover")
-        assert(viaGate == canon(Dedup.gramDf(Tables.documents(spark, newDir))))
-        // PAST the threshold (forced to 0): the increment path runs —
-        // both sides of the heuristic pinned
-        Dedup.dropInMemoryNgramTables()
-        // fresh stores so the gated result above doesn't serve the call
-        spark.conf.set("spark.graft.index.dir",
-          java.nio.file.Files.createTempDirectory("graft_ggate_root2").toString)
-        Dedup.corpusGramDf(spark, oldDir).count()
-        Dedup.gramIncrementMinStandingBytes = 0L
-        val inc1 = Dedup.gramDfIncrementBuilds.get()
-        val viaInc = canon(Dedup.corpusGramDfIncrement(spark, oldDir, newDir))
-        assert(Dedup.gramDfIncrementBuilds.get() == inc1 + 1,
-          "past the crossover the increment path must run")
-        assert(viaInc == viaGate, "both routes must publish identical stats")
-      } finally {
-        Dedup.gramIncrementMinStandingBytes = gate0
-        Dedup.dropInMemoryNgramTables()
-        spark.catalog.clearCache()
-      }
     }
   }
 
@@ -1108,7 +894,6 @@ class AssetStoreSpec extends SparkSpec {
         new java.io.File(dir).listFiles()
           .filter(f => f.isFile && f.getName.endsWith(".parquet"))
           .map(f => (f.getName, f.length())).toSet
-      val gate0 = Dedup.perDocIncrementMinStandingBytes
       try {
         // the r18 crossover gate honestly routes sub-threshold standing
         // corpora to the rebuild — pin that first against a throwaway
@@ -1116,19 +901,18 @@ class AssetStoreSpec extends SparkSpec {
         // increment's address
         spark.conf.set("spark.graft.index.dir",
           java.nio.file.Files.createTempDirectory("graft_mhp_root0").toString)
-        val sel0 = Dedup.perDocIncrementRebuildSelections.get()
+        val sel0 = Dedup.incrementRebuildSelections.get()
         val gi0 = Dedup.minhashPairIncrementBuilds.get()
         Dedup.corpusMinhashPairsIncrement(spark, oldDir, newDir).count()
-        assert(Dedup.perDocIncrementRebuildSelections.get() == sel0 + 1,
+        assert(Dedup.incrementRebuildSelections.get() == sel0 + 1,
           "a sub-threshold standing corpus must route to the rebuild")
         assert(Dedup.minhashPairIncrementBuilds.get() == gi0)
         Dedup.dropInMemoryNgramTables()
         spark.conf.set("spark.graft.index.dir", root)
-        Dedup.perDocIncrementMinStandingBytes = 0L
         Dedup.corpusMinhashPairs(spark, oldDir).count()
         val full0 = Dedup.minhashPairBuilds.get()
         val inc0 = Dedup.minhashPairIncrementBuilds.get()
-        val inc = canon(Dedup.corpusMinhashPairsIncrement(spark, oldDir, newDir))
+        val inc = canon(Dedup.corpusMinhashPairsIncrement(spark, oldDir, newDir, minStandingBytes = 0L))
         assert(Dedup.minhashPairIncrementBuilds.get() == inc0 + 1,
           "a pure append must publish the pair asset via the increment path")
         assert(Dedup.minhashPairBuilds.get() == full0,
@@ -1163,7 +947,7 @@ class AssetStoreSpec extends SparkSpec {
           .write.parquet(s"$edDir/documents.parquet")
         val fb0 = Dedup.minhashPairIncrementFallbacks.get()
         val inc1 = Dedup.minhashPairIncrementBuilds.get()
-        val viaFb = canon(Dedup.corpusMinhashPairsIncrement(spark, oldDir, edDir))
+        val viaFb = canon(Dedup.corpusMinhashPairsIncrement(spark, oldDir, edDir, minStandingBytes = 0L))
         assert(Dedup.minhashPairIncrementFallbacks.get() == fb0 + 1,
           "an edited corpus must not take the increment path")
         assert(Dedup.minhashPairIncrementBuilds.get() == inc1)
@@ -1173,7 +957,6 @@ class AssetStoreSpec extends SparkSpec {
         assert(viaFb == canon(Dedup.corpusMinhashPairs(spark, edDir)),
           "the fallback must serve the rebuilt pair graph")
       } finally {
-        Dedup.perDocIncrementMinStandingBytes = gate0
         Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
         spark.catalog.clearCache()
       }
@@ -1206,7 +989,6 @@ class AssetStoreSpec extends SparkSpec {
             Paths.get(s"${dirs(g)}/documents.parquet/part-batch-g$g-${p.getFileName}")))
       }
       Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-      val gate0 = Dedup.perDocIncrementMinStandingBytes
       def pairs(idx: org.apache.spark.sql.DataFrame) =
         Dedup.ngramJaccardPairsIndexed(idx, 0.2).collect()
           .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
@@ -1215,7 +997,6 @@ class AssetStoreSpec extends SparkSpec {
         idx.select(col("doc_id"), col("n"), col("hs").cast("string"))
           .collect().map(_.mkString("|")).sorted.toSeq
       try {
-        Dedup.perDocIncrementMinStandingBytes = 0L
         Dedup.corpusNgramIndex(spark, dirs(0)).count()
         // the founding corpus's gram asset exists in the runbook flow
         // (the gram_stats family publishes it every generation) — the
@@ -1223,8 +1004,8 @@ class AssetStoreSpec extends SparkSpec {
         Dedup.corpusGramDf(spark, dirs(0)).count()
         val full0 = Dedup.ngramAssetBuilds.get()
         val inc0 = Dedup.ngramIdxIncrementBuilds.get()
-        val idx1 = Dedup.corpusNgramIndexIncrement(spark, dirs(0), dirs(1))
-        val idx2 = Dedup.corpusNgramIndexIncrement(spark, dirs(1), dirs(2))
+        val idx1 = Dedup.corpusNgramIndexIncrement(spark, dirs(0), dirs(1), minStandingBytes = 0L)
+        val idx2 = Dedup.corpusNgramIndexIncrement(spark, dirs(1), dirs(2), minStandingBytes = 0L)
         assert(Dedup.ngramIdxIncrementBuilds.get() == inc0 + 2,
           "both appends must publish via the increment path")
         assert(Dedup.ngramAssetBuilds.get() == full0,
@@ -1275,7 +1056,7 @@ class AssetStoreSpec extends SparkSpec {
             when(col("doc_id") === 1L, lit("edited body text")).otherwise(col("text")))
           .write.parquet(s"$edDir/documents.parquet")
         val fb0 = Dedup.ngramIdxIncrementFallbacks.get()
-        val viaFb = pairs(Dedup.corpusNgramIndexIncrement(spark, dirs(2), edDir))
+        val viaFb = pairs(Dedup.corpusNgramIndexIncrement(spark, dirs(2), edDir, minStandingBytes = 0L))
         assert(Dedup.ngramIdxIncrementFallbacks.get() == fb0 + 1)
         spark.conf.set("spark.graft.index.dir",
           java.nio.file.Files.createTempDirectory("graft_ngix_root3").toString)
@@ -1283,7 +1064,6 @@ class AssetStoreSpec extends SparkSpec {
         assert(viaFb == pairs(Dedup.corpusNgramIndex(spark, edDir)),
           "the fallback must serve the rebuilt index's answers")
       } finally {
-        Dedup.perDocIncrementMinStandingBytes = gate0
         Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
         spark.catalog.clearCache()
       }
@@ -1314,17 +1094,15 @@ class AssetStoreSpec extends SparkSpec {
             Paths.get(s"${dirs(g)}/documents.parquet/part-batch-g$g-${p.getFileName}")))
       }
       Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-      val gate0 = Dedup.perDocIncrementMinStandingBytes
       def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
         .sorted.toSeq
       try {
-        Dedup.perDocIncrementMinStandingBytes = 0L
         Dedup.corpusMinhashPairs(spark, dirs(0)).count()
         val full0 = Dedup.minhashPairBuilds.get()
         val inc0 = Dedup.minhashPairIncrementBuilds.get()
-        Dedup.corpusMinhashPairsIncrement(spark, dirs(0), dirs(1)).count()
-        val viaChain = canon(Dedup.corpusMinhashPairsIncrement(spark, dirs(1), dirs(2)))
+        Dedup.corpusMinhashPairsIncrement(spark, dirs(0), dirs(1), minStandingBytes = 0L).count()
+        val viaChain = canon(Dedup.corpusMinhashPairsIncrement(spark, dirs(1), dirs(2), minStandingBytes = 0L))
         assert(Dedup.minhashPairIncrementBuilds.get() == inc0 + 2,
           "both appends must publish via the increment path")
         assert(Dedup.minhashPairBuilds.get() == full0,
@@ -1348,7 +1126,6 @@ class AssetStoreSpec extends SparkSpec {
           "the chained increments must equal the from-scratch rebuild")
         assert(viaChain.nonEmpty, "a pairless fixture is vacuous")
       } finally {
-        Dedup.perDocIncrementMinStandingBytes = gate0
         Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
         spark.catalog.clearCache()
       }
@@ -1384,15 +1161,13 @@ class AssetStoreSpec extends SparkSpec {
       val probe = docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
       Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
-      val gate0 = Dedup.perDocIncrementMinStandingBytes
       def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
         .sorted.toSeq
       try {
-        Dedup.perDocIncrementMinStandingBytes = 0L
         Dedup.corpusNgramIndex(spark, oldDir).count()
         Dedup.corpusGramDf(spark, oldDir).count()
-        Dedup.corpusNgramIndexIncrement(spark, oldDir, newDir).count()
+        Dedup.corpusNgramIndexIncrement(spark, oldDir, newDir, minStandingBytes = 0L).count()
         val viaInc = canon(Dedup.ngramIncrementalPairs(
           Dedup.corpusNgramIndex(spark, newDir), probe,
           Dedup.corpusNgramOrder(spark, newDir), 3, 0.2))
@@ -1406,7 +1181,6 @@ class AssetStoreSpec extends SparkSpec {
           s"gate answers diverged: ${viaInc.size} vs ${viaRebuild.size} pairs")
         assert(viaInc.nonEmpty, "a pairless probe is vacuous")
       } finally {
-        Dedup.perDocIncrementMinStandingBytes = gate0
         Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
         spark.catalog.clearCache()
       }
@@ -1474,9 +1248,7 @@ class AssetStoreSpec extends SparkSpec {
       finally s2.close()
       (oldDir, newDir)
     }
-    val gate0 = Dedup.perDocIncrementMinStandingBytes
     try {
-      Dedup.perDocIncrementMinStandingBytes = 0L
       // ---- drifted chain: the batch pumps gen0's rarest gram from
       // df=1 to df=11, pushing it OUT of the current rare head
       withRoot { _ =>
@@ -1484,7 +1256,7 @@ class AssetStoreSpec extends SparkSpec {
         Dedup.dropInMemoryNgramTables()
         Dedup.corpusNgramIndex(spark, o1).count()
         Dedup.corpusGramDf(spark, o1).count()
-        Dedup.corpusNgramIndexIncrement(spark, o1, n1).count()
+        Dedup.corpusNgramIndexIncrement(spark, o1, n1, minStandingBytes = 0L).count()
         val drifted = Dedup.ngramOrderStaleness(spark, n1)
           .getOrElse(fail("a pinned chain must report staleness"))
         // shared vocab 6 -> head 3; pinned head {r,s,t}, current {s,t,u}
@@ -1507,7 +1279,7 @@ class AssetStoreSpec extends SparkSpec {
         Dedup.dropInMemoryNgramTables()
         Dedup.corpusNgramIndex(spark, o2).count()
         Dedup.corpusGramDf(spark, o2).count()
-        Dedup.corpusNgramIndexIncrement(spark, o2, n2).count()
+        Dedup.corpusNgramIndexIncrement(spark, o2, n2, minStandingBytes = 0L).count()
         val benign = Dedup.ngramOrderStaleness(spark, n2)
           .getOrElse(fail("a pinned chain must report staleness"))
         assert(benign("ngram_order_rare_overlap_bp") == 10000L,
@@ -1538,7 +1310,7 @@ class AssetStoreSpec extends SparkSpec {
         Dedup.dropInMemoryNgramTables()
         Dedup.corpusNgramIndex(spark, o3).count()
         Dedup.corpusGramDf(spark, o3).count()
-        Dedup.corpusNgramIndexIncrement(spark, o3, n3).count()
+        Dedup.corpusNgramIndexIncrement(spark, o3, n3, minStandingBytes = 0L).count()
         // the probe rides the COMMITTED gram-stats asset (advice fix):
         // once it is published, no corpus shingle build runs
         Dedup.corpusGramDf(spark, n3).count()
@@ -1558,7 +1330,6 @@ class AssetStoreSpec extends SparkSpec {
         assert(tpl("ngram_order_new_gram_bp") == 11L * 10000L / 17L, s"$tpl")
       }
     } finally {
-      Dedup.perDocIncrementMinStandingBytes = gate0
       Dedup.dropInMemoryNgramTables()
       spark.catalog.clearCache()
     }
@@ -1606,9 +1377,10 @@ class AssetStoreSpec extends SparkSpec {
       // winning side
       val docs = ScaleGen.plantNearDups(Tables.documents(spark, sf), 300)
         .persist()
-      // planting must never mint byte-identical texts (that would trip
-      // the exact-dup-collapse residual and make rebuild-vs-increment
-      // answers legitimately differ)
+      // planting must never mint byte-identical texts: the signature
+      // stage collapses exact twins before banding, so they would add
+      // no near-dup pair to verify (exact twins across an append are
+      // pinned by their own spec below)
       val nTexts = docs.filter(col("text").isNotNull).count()
       val nDistinct = docs.filter(col("text").isNotNull)
         .select(countDistinct(col("text"))).head().getLong(0)
@@ -1635,14 +1407,12 @@ class AssetStoreSpec extends SparkSpec {
       finally s2.close()
       docs.unpersist()
       Dedup.dropInMemoryNgramTables()
-      val perDoc0 = Dedup.perDocIncrementMinStandingBytes
       try {
-        // the shipped bytes gate routes local sizes to the signature
-        // rebuild; zeroed so the pair increment rides incremented sigs
-        Dedup.perDocIncrementMinStandingBytes = 0L
+        // minStandingBytes = 0: the shipped gate routes local sizes to
+        // the rebuild
         Dedup.corpusMinhashPairs(spark, oldDir).count()
         val inc0 = Dedup.minhashPairIncrementBuilds.get()
-        val viaInc = Dedup.corpusMinhashPairsIncrement(spark, oldDir, newDir)
+        val viaInc = Dedup.corpusMinhashPairsIncrement(spark, oldDir, newDir, minStandingBytes = 0L)
           .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
         assert(Dedup.minhashPairIncrementBuilds.get() == inc0 + 1,
           "the fixture append must publish pairs via the increment")
@@ -1658,7 +1428,62 @@ class AssetStoreSpec extends SparkSpec {
           .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
         assert(viaInc == rebuilt, "fixture increment diverged from the rebuild")
       } finally {
-        Dedup.perDocIncrementMinStandingBytes = perDoc0
+        Dedup.dropInMemoryNgramTables()
+        spark.catalog.clearCache()
+      }
+    }
+  }
+
+  test("minhash pair increment: a batch doc byte-identical to standing text collapses as in the rebuild") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.functions._
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    withRoot { _ =>
+      val docs = Tables.documents(spark, sf)
+      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+      val cut = maxId * 9 / 10
+      // the twin copies a shingle-bearing standing doc; its id lies above
+      // the standing max, so the metadata-only append proof applies
+      val twinOf = docs.filter(col("doc_id") < cut)
+        .filter(size(split(trim(col("text")), "\\s+")) >= 10)
+        .agg(min(col("doc_id"))).head().getLong(0)
+      val twinId = maxId + 1
+      val twin = docs.filter(col("doc_id") === twinOf).withColumn("doc_id", lit(twinId))
+      val oldDir = Files.createTempDirectory("graft_twin_old").toString
+      val newDir = Files.createTempDirectory("graft_twin_new").toString
+      docs.filter(col("doc_id") < cut).write.parquet(s"$oldDir/documents.parquet")
+      val newTable = Paths.get(s"$newDir/documents.parquet")
+      Files.createDirectories(newTable)
+      val s1 = Files.list(Paths.get(s"$oldDir/documents.parquet"))
+      try s1.forEach(p => Files.copy(p, newTable.resolve(p.getFileName.toString),
+        StandardCopyOption.COPY_ATTRIBUTES))
+      finally s1.close()
+      val tmp = Files.createTempDirectory("graft_twin_batch").toString
+      docs.filter(col("doc_id") >= cut).unionByName(twin).write.parquet(s"$tmp/b.parquet")
+      val s2 = Files.list(Paths.get(s"$tmp/b.parquet"))
+      try s2.filter(_.getFileName.toString.endsWith(".parquet"))
+        .forEach(p => Files.move(p, newTable.resolve(s"part-batch-${p.getFileName}")))
+      finally s2.close()
+      Dedup.dropInMemoryNgramTables()
+      def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
+        .sorted.toSeq
+      try {
+        Dedup.corpusMinhashPairs(spark, oldDir).count()
+        val inc0 = Dedup.minhashPairIncrementBuilds.get()
+        val viaInc = canon(Dedup.corpusMinhashPairsIncrement(spark, oldDir, newDir,
+          minStandingBytes = 0L))
+        assert(Dedup.minhashPairIncrementBuilds.get() == inc0 + 1,
+          "the append must publish pairs via the increment")
+        spark.conf.set("spark.graft.index.dir",
+          Files.createTempDirectory("graft_twin_root2").toString)
+        Dedup.dropInMemoryNgramTables()
+        val rebuilt = canon(Dedup.corpusMinhashPairs(spark, newDir))
+        assert(!rebuilt.exists { case (a, b, _) => a == twinId || b == twinId },
+          s"the rebuild collapses doc $twinId into its standing twin $twinOf")
+        assert(viaInc == rebuilt,
+          s"increment vs rebuild: extra ${viaInc.diff(rebuilt)}, missing ${rebuilt.diff(viaInc)}")
+      } finally {
         Dedup.dropInMemoryNgramTables()
         spark.catalog.clearCache()
       }

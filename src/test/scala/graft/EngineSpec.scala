@@ -521,6 +521,27 @@ class EngineSpec extends SparkSpec {
     assert(g.runTask("replan").map(_.rowsWritten).sum == 250L)
   }
 
+  test("addTask: a drained table that gains a file reruns its subtasks; the destination holds every row") {
+    val src = Files.createTempDirectory("graft_resume_append").toString
+    val dest = Files.createTempDirectory("graft_resume_append_out").toString
+    (0 until 100).map(i => (i.toLong, s"r$i")).toDF("id", "v").coalesce(1).write.parquet(s"$src/t")
+    val g = new Graft(spark)
+    // no size column: the table plans as one subtask whose id does not
+    // move when rows are added
+    val spec = TaskSpec("resumeappend", src, dest, Seq("t"))
+    g.addTask(spec)
+    assert(g.runTask("resumeappend").map(_.rowsWritten).sum == 100L)
+    (100 until 150).map(i => (i.toLong, s"r$i")).toDF("id", "v")
+      .coalesce(1).write.mode("append").parquet(s"$src/t")
+    val backlog = g.addTask(spec)
+    assert(backlog.map(_.count).sum == 150L, s"the changed table must rerun: $backlog")
+    g.runTask("resumeappend")
+    assert(g.errors.getErrors("resumeappend").isEmpty, s"${g.errors.getErrors("resumeappend")}")
+    val landed = spark.read.option("recursiveFileLookup", "true").parquet(dest)
+    assert(landed.count() == 150L && landed.select("id").distinct().count() == 150L,
+      s"destination holds ${landed.count()} rows")
+  }
+
   test("bucketed tables join without a shuffle (co-located join at scale)") {
     val s = spark.newSession() // isolated runtime conf; default warehouse dir
     // a fresh in-memory catalog can't overwrite locations it doesn't know:

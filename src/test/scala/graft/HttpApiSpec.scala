@@ -424,7 +424,6 @@ class HttpApiSpec extends SparkSpec {
     val g = new Graft(spark)
     val api = new HttpApi(g).start()
     val base = s"http://127.0.0.1:${api.boundPort}"
-    val gateOuter = Dedup.gramIncrementMinStandingBytes
     try {
       val oldDir = java.nio.file.Files.createTempDirectory("graft_inc_api_old").toString
       val newDir = java.nio.file.Files.createTempDirectory("graft_inc_api_new").toString
@@ -442,30 +441,23 @@ class HttpApiSpec extends SparkSpec {
       Similarity.corpusBandedEmbeddings(spark, oldDir).count()
       Dedup.corpusGramDf(spark, oldDir).count()
       val inc0 = Similarity.knnIncrementBuilds.get()
-      val ginc0 = Dedup.gramDfIncrementBuilds.get()
-      // force the gram increment machinery on the small fixture (the
-      // r17 crossover gate would route this sub-GiB corpus to the
-      // rebuild; the gate has its own both-sides spec in AssetStoreSpec);
-      // restored in the outer finally so an assertion failure cannot
-      // leak a zeroed gate into later tests
-      Dedup.gramIncrementMinStandingBytes = 0L
       val r = send("POST", s"$base/maintenance/assets_increment",
         s"""{"oldDir": "$oldDir", "dir": "$newDir"}""")
       assert(r.statusCode() == 200, r.body())
       val pub = mapper.readTree(r.body()).get("published")
       assert(pub.get("knn_edges").asLong() > 0 && pub.get("gram_stats").asLong() > 0, r.body())
       assert(Similarity.knnIncrementBuilds.get() == inc0 + 1, "edges must publish by increment")
-      assert(Dedup.gramDfIncrementBuilds.get() == ginc0 + 1, "gram stats must publish by increment")
       // the published addresses now serve loads with no further builds
       Similarity.dropInMemoryIndexes(); Dedup.dropInMemoryNgramTables()
       val kb0 = Similarity.knnAssetBuilds.get()
+      val gb0 = Dedup.ngramAssetBuilds.get()
       Similarity.corpusKnnEdges(spark, newDir).count()
       Dedup.corpusGramDf(spark, newDir).count()
-      assert(Similarity.knnAssetBuilds.get() == kb0, "consumers must LOAD the published assets")
+      assert(Similarity.knnAssetBuilds.get() == kb0 && Dedup.ngramAssetBuilds.get() == gb0,
+        "consumers must LOAD the published assets")
       assert(send("POST", s"$base/maintenance/assets_increment",
         s"""{"oldDir": "$oldDir", "dir": "$newDir", "families": ["nope"]}""").statusCode() == 400)
     } finally {
-      Dedup.gramIncrementMinStandingBytes = gateOuter
       api.close()
       Similarity.dropInMemoryIndexes(); Dedup.dropInMemoryNgramTables()
       spark.conf.unset("spark.graft.index.dir")
@@ -494,6 +486,10 @@ class HttpApiSpec extends SparkSpec {
       assert(r.statusCode() == 200, r.body())
       val node = mapper.readTree(r.body())
       assert(!node.get("pinned").asBoolean() && node.get("staleness") == null, r.body())
+      // a legacy old_dir field is ignored
+      val r2 = send("POST", s"$base/maintenance/ngram_staleness",
+        s"""{"dir": "$dir", "old_dir": "$dir"}""")
+      assert(r2.statusCode() == 200 && r2.body() == r.body(), r2.body())
     } finally {
       api.close()
       Dedup.dropInMemoryNgramTables()
