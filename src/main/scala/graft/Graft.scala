@@ -116,7 +116,9 @@ final class Graft(
     * resume-aware backlog. Re-adding an existing task subtracts completed
     * subtasks — the reference's resume — except those of a kept table
     * whose fingerprint was recorded and has changed: its subtasks rerun,
-    * each overwriting its own slice. It reuses the recorded plan,
+    * each overwriting its own slice. When a re-plan writing to the same
+    * `destDir` no longer plans a slice a kept table's prior plan wrote,
+    * that slice is dropped from the sink. It reuses the recorded plan,
     * running no Spark job, when the spec, `sizeCols`, `buckets`, the
     * kept-table list and every kept table's
     * [[graft.sources.DocConnector.fingerprint]] are unchanged; otherwise
@@ -167,6 +169,16 @@ final class Graft(
       p.plan.subtasks.filter(st => changed(st.table)).map(_.subtaskId)
     }
     val prior = priorState.map(_.completed).getOrElse(Set.empty[String]) -- stale
+    // a re-plan that moves a kept table's cuts (new rows, `buckets` or
+    // `sizeCols`) renames its slices: drop each slice of the prior plan
+    // the new one does not write, or readers of the table see its rows
+    // twice. A reused plan writes every prior slice, so drops nothing.
+    def slice(st: SubtaskSpec) = s"${st.table}/${Transfer.subtaskDirName(st)}"
+    priorState.filter(_.planKey.spec.destDir == spec.destDir).foreach { p =>
+      val planned = plan.subtasks.map(slice).toSet
+      p.plan.subtasks.filter(st => kept.contains(st.table)).map(slice)
+        .filterNot(planned).foreach(sink.drop)
+    }
     val backlog = Planner.buildBacklog(plan.subtasks, prior)
     val priorProgress = priorState.map(_.progress).getOrElse(TrieMap.empty[String, Progress])
     tasks.put(spec.name,

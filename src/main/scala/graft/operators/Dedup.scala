@@ -162,14 +162,13 @@ object Dedup {
 
   /** THE sharded-Bloom screen kernel, shared by every tier that fronts
     * an exact digest join with per-prefix filters
-    * ([[incrementalBloomSharded]], [[cdcIncrementalBloomOn]], the chunk
-    * store's persisted sidecars): build one filter per shard off the
-    * standing (key, hp) rows, sized from the LARGEST shard's exact
-    * count — and dispatch probes through a lazy CASE on the prefix so
-    * a row pays exactly its shard's `might_contain`s (several per
-    * shard when un-compacted generations coexist). Probes whose prefix
-    * has no filter are definitively novel. The no-false-negative
-    * invariant lives HERE, once.
+    * ([[incrementalBloomSharded]], [[cdcIncrementalBloomOn]]): build
+    * one filter per shard off the standing (key, hp) rows, sized from
+    * the LARGEST shard's exact count — and dispatch probes through a
+    * lazy CASE on the prefix so a row pays exactly its shard's
+    * `might_contain`s (several when a shard carries several filters).
+    * Probes whose prefix has no filter are definitively novel. The
+    * no-false-negative invariant lives HERE, once.
     */
   private[graft] def buildShardBlooms(standing: DataFrame, keyCol: String,
       bitsPerItem: Long): Seq[(String, Array[Byte])] = {
@@ -206,10 +205,8 @@ object Dedup {
     * (foreachPartition), so nothing filter-sized ever transits the
     * driver or a query plan — at p=2/n=10^11 that is the difference
     * between ~125 GB of plan literals and 256 files probed lazily by
-    * the executors that touch them. This is the batch twin of the
-    * chunk store's parquet sidecars ([[graft.streaming.ChunkStoreIngest]]
-    * loads only touched prefixes per micro-batch); both carry the
-    * kernel's no-false-negative invariant.
+    * the executors that touch them. The files carry the kernel's
+    * no-false-negative invariant.
     */
   private[graft] def persistShardBloomFiles(standing: DataFrame, keyCol: String,
       bitsPerItem: Long, outDir: String): Unit = {
@@ -2477,9 +2474,7 @@ object Dedup {
     * have no false negatives, and false positives are re-checked by the
     * exact join); what changes is the 100 TB probe economics — a batch
     * chunk pays one lazy CASE-dispatched `might_contain` on its digest
-    * prefix, and only probable hits join the standing digest set. The
-    * streaming twin ([[graft.streaming.ChunkStoreIngest]]) runs the
-    * same screen against its persisted per-batch Bloom sidecars.
+    * prefix, and only probable hits join the standing digest set.
     */
   private def cdcIncrementalBloomOn(ch: DataFrame, splitId: Long,
       shardHexChars: Int, bitsPerItem: Long): DataFrame = {

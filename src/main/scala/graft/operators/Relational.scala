@@ -1190,8 +1190,8 @@ object Relational {
     // comparisons in ONE final zero-shuffle projection over the
     // persisted user table. Tiebreak semantics are exact: a row's
     // bucket is 1 + (boundaries strictly before it) under the same
-    // (key DESC, user_id ASC) total order the ranks used, so the
-    // result equals ntileFromRank(rank) row for row.
+    // (key DESC NULLS LAST, user_id ASC) total order the ranks used, so
+    // the result equals ntileFromRank(rank) row for row.
     val uc = u.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def quartileExpr(keyName: String): Column = {
       val (rows, _) = graft.engine.GlobalRank.rowsAtRanks(
@@ -1203,13 +1203,20 @@ object Relational {
           .filter { case (_, s, e) => e >= s && e < total }.map(_._3))
       val bounds = graft.engine.DriverBudget.collect("Relational.rfmQuartile", 3L)(
           rows.select(col(keyName), col("user_id"), col("__grank")))
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .map(r => (Option.when(!r.isNullAt(0))(r.getLong(0)), r.getLong(1), r.getLong(2)))
         .sortBy(_._3)
-      bounds.foldLeft(lit(1L)) { case (acc, (k, uid, _)) =>
-        // boundary tuple strictly BEFORE the row under (key DESC,
-        // user_id ASC): larger key, or same key and smaller user_id
-        acc + when(lit(k) > col(keyName) ||
-          (lit(k) === col(keyName) && lit(uid) < col("user_id")), 1L).otherwise(0L)
+      val key = col(keyName)
+      bounds.foldLeft(lit(1L)) { case (acc, (bound, uid, _)) =>
+        // boundary tuple strictly BEFORE the row under (key DESC NULLS
+        // LAST, user_id ASC): a non-null boundary precedes every null
+        // key, a larger key, and the same key with a larger user_id; a
+        // null boundary precedes only null keys with a larger user_id
+        val before = bound match {
+          case Some(k) =>
+            key.isNull || lit(k) > key || (lit(k) === key && lit(uid) < col("user_id"))
+          case None => key.isNull && lit(uid) < col("user_id")
+        }
+        acc + when(before, 1L).otherwise(0L)
       }
     }
     // the persisted stages (user table + the three narrow ranged

@@ -27,6 +27,11 @@ trait DocConnector {
     */
   def bulk(df: DataFrame, table: String): Long
 
+  /** Remove the table and its contents; a table that does not exist is
+    * left as it is.
+    */
+  def drop(table: String): Unit
+
   /** S3 index-metadata scan: table names matching a `*` glob. */
   def listTables(pattern: String = "*"): Seq[String]
 
@@ -139,6 +144,11 @@ class FormatConnector(
     }
   }
 
+  override def drop(table: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(scanPath(table))
+    p.getFileSystem(hconf).delete(p, true); ()
+  }
+
   override def listTables(pattern: String): Seq[String] = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(hconf)
@@ -191,5 +201,5 @@ final class InMemoryConnector extends DocConnector {
 
   def count(table: String): Long = tables.get(table).map(_._2.size.toLong).getOrElse(0L)
 
-  def drop(table: String): Unit = { tables.remove(table); () }
+  override def drop(table: String): Unit = { tables.remove(table); () }
 }

@@ -113,10 +113,15 @@ class HttpScrollConnector(
     )(Encoders.STRING)
   }
 
-  override def bulk(df: DataFrame, table: String): Long = {
-    // replace semantics: drop, then write. 404 = table didn't exist yet.
+  /** 404 = the table did not exist. */
+  override def drop(table: String): Unit = {
     val del = request("DELETE", s"$baseUrl/_table?table=${enc(table)}", None)
     require(del.status == 200 || del.status == 404, s"delete '$table' returned ${del.status}")
+  }
+
+  override def bulk(df: DataFrame, table: String): Long = {
+    // replace semantics: drop, then write
+    drop(table)
     val spark = df.sparkSession
     // successful-item count via accumulator: Spark discards updates from
     // failed task attempts, and ids are deterministic per (partition,

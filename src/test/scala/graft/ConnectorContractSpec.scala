@@ -108,6 +108,11 @@ class ConnectorContractSpec extends SparkSpec with BeforeAndAfterAll {
       c.bulk(seed(5), "t/slice2")
       assert(c.scan(spark, "t/slice1").count() == 3L)
       assert(c.scan(spark, "t/slice2").count() == 5L)
+      // dropping one slice leaves its sibling; an absent one is a no-op
+      c.drop("t/slice1")
+      c.drop("t/absent")
+      intercept[Exception](c.scan(spark, "t/slice1").collect())
+      assert(c.scan(spark, "t/slice2").count() == 5L)
     }
   }
 

@@ -524,22 +524,49 @@ class EngineSpec extends SparkSpec {
   test("addTask: a drained table that gains a file reruns its subtasks; the destination holds every row") {
     val src = Files.createTempDirectory("graft_resume_append").toString
     val dest = Files.createTempDirectory("graft_resume_append_out").toString
-    (0 until 100).map(i => (i.toLong, s"r$i")).toDF("id", "v").coalesce(1).write.parquet(s"$src/t")
+    def rows(ids: Range) = ids.map(i => (i.toLong, s"r$i", (i * i).toDouble)).toDF("id", "v", "sz")
+    // `t` is sized: the appended file's larger sizes move its cuts, so
+    // every subtask id changes. `u` has no size column: it plans as one
+    // subtask whose id does not move when rows are added
+    Seq("t", "u").foreach(tbl => rows(0 until 100).coalesce(1).write.parquet(s"$src/$tbl"))
     val g = new Graft(spark)
-    // no size column: the table plans as one subtask whose id does not
-    // move when rows are added
-    val spec = TaskSpec("resumeappend", src, dest, Seq("t"))
-    g.addTask(spec)
-    assert(g.runTask("resumeappend").map(_.rowsWritten).sum == 100L)
-    (100 until 150).map(i => (i.toLong, s"r$i")).toDF("id", "v")
-      .coalesce(1).write.mode("append").parquet(s"$src/t")
-    val backlog = g.addTask(spec)
-    assert(backlog.map(_.count).sum == 150L, s"the changed table must rerun: $backlog")
+    val spec = TaskSpec("resumeappend", src, dest, Seq("t", "u"))
+    val first = g.addTask(spec, Map("t" -> "sz"))
+    assert(g.runTask("resumeappend").map(_.rowsWritten).sum == 200L)
+    Seq("t", "u").foreach(tbl =>
+      rows(100 until 150).coalesce(1).write.mode("append").parquet(s"$src/$tbl"))
+    val backlog = g.addTask(spec, Map("t" -> "sz"))
+    assert(backlog.map(_.count).sum == 300L, s"the changed tables must rerun: $backlog")
+    val firstT = first.filter(_.table == "t").map(_.subtaskId).toSet
+    assert(backlog.filter(_.table == "t").forall(st => !firstT(st.subtaskId)),
+      s"fixture: the appended file must move t's cuts: $first -> $backlog")
     g.runTask("resumeappend")
     assert(g.errors.getErrors("resumeappend").isEmpty, s"${g.errors.getErrors("resumeappend")}")
-    val landed = spark.read.option("recursiveFileLookup", "true").parquet(dest)
-    assert(landed.count() == 150L && landed.select("id").distinct().count() == 150L,
+    Seq("t", "u").foreach { tbl =>
+      val landed = spark.read.option("recursiveFileLookup", "true").parquet(s"$dest/$tbl")
+      assert(landed.count() == 150L && landed.select("id").distinct().count() == 150L,
+        s"destination $tbl holds ${landed.count()} rows")
+    }
+  }
+
+  test("addTask: re-planning a drained task with more buckets leaves each source row in the destination once") {
+    val src = multiFileSource(300)
+    val dest = Files.createTempDirectory("graft_rebucket_out").toString
+    val g = new Graft(spark)
+    val spec = TaskSpec("rebucket", src, dest, Seq("t"))
+    val first = g.addTask(spec, Map("t" -> "sz"))
+    assert(first.size == 3 && g.runTask("rebucket").map(_.rowsWritten).sum == 300L)
+    // the table is unchanged: only the bucket count re-plans it
+    val again = g.addTask(spec, Map("t" -> "sz"), buckets = 4)
+    assert(again.size == 4 && again.map(_.subtaskId).intersect(first.map(_.subtaskId)).isEmpty,
+      s"fixture: four new slices must replace three: $again")
+    g.runTask("rebucket")
+    assert(g.errors.getErrors("rebucket").isEmpty, s"${g.errors.getErrors("rebucket")}")
+    val landed = spark.read.option("recursiveFileLookup", "true").parquet(s"$dest/t")
+    assert(landed.count() == 300L && landed.select("id").distinct().count() == 300L,
       s"destination holds ${landed.count()} rows")
+    assert(new java.io.File(s"$dest/t").list().sorted.toSeq ==
+      again.map(Transfer.subtaskDirName).sorted, "only the new plan's slices remain")
   }
 
   test("bucketed tables join without a shuffle (co-located join at scale)") {

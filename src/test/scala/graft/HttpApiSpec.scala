@@ -201,6 +201,7 @@ class HttpApiSpec extends SparkSpec {
         df.count()
       }
       override def listTables(pattern: String): Seq[String] = Seq.empty
+      override def drop(table: String): Unit = ()
     }
     val g = new Graft(spark, _ => (src, slowSink))
     val api = new HttpApi(g).start()
@@ -241,6 +242,7 @@ class HttpApiSpec extends SparkSpec {
         df.count()
       }
       override def listTables(pattern: String): Seq[String] = Seq.empty
+      override def drop(table: String): Unit = ()
     }
     val g = new Graft(spark, _ => (src, slowSink))
     val api = new HttpApi(g).start()
@@ -314,6 +316,7 @@ class HttpApiSpec extends SparkSpec {
       }
       override def bulk(df: DataFrame, table: String): Long = inner.bulk(df, table)
       override def listTables(pattern: String): Seq[String] = inner.listTables(pattern)
+      override def drop(table: String): Unit = inner.drop(table)
     }
     val sink = new InMemoryConnector
     val g = new Graft(spark, _ => (slowSrc, sink))
@@ -362,6 +365,7 @@ class HttpApiSpec extends SparkSpec {
         if (broken.get) sys.error("source exploded during planning") else inner.scan(spark, table)
       override def bulk(df: DataFrame, table: String): Long = inner.bulk(df, table)
       override def listTables(pattern: String): Seq[String] = inner.listTables(pattern)
+      override def drop(table: String): Unit = inner.drop(table)
     }
     val g = new Graft(spark, _ => (src, new InMemoryConnector))
     val api = new HttpApi(g).start()

@@ -2035,6 +2035,34 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("rfmSegments: null keys rank last, on and off a quartile boundary, as ntile(4) does") {
+    import graft.operators.Relational
+    import org.apache.spark.sql.expressions.Window
+    // 9 users: ntile(4) ends buckets at ranks 3, 5 and 7. recency's three
+    // nulls take ranks 7-9 (one on the rank-7 boundary), frequency's one
+    // null takes rank 9 and monetary's two take ranks 8-9 (off-boundary)
+    val u = Seq[(Long, Option[Long], Option[Long], Option[Long])](
+      (1L, Some(900L), Some(5L), None),
+      (2L, None, Some(3L), Some(200L)),
+      (3L, Some(500L), Some(8L), Some(150L)),
+      (4L, Some(700L), None, Some(150L)),
+      (5L, None, Some(3L), Some(90L)),
+      (6L, Some(100L), Some(1L), Some(40L)),
+      (7L, Some(700L), Some(2L), Some(300L)),
+      (8L, None, Some(8L), Some(10L)),
+      (9L, Some(300L), Some(4L), None)
+    ).toDF("user_id", "recency_us", "frequency", "monetary_c")
+    def quartile(key: String) =
+      ntile(4).over(Window.orderBy(col(key).desc_nulls_last, col("user_id"))).cast("long")
+    val want = u.select(col("user_id"), quartile("recency_us"), quartile("frequency"),
+        quartile("monetary_c"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sortBy(_._1).toSeq
+    val got = Relational.rfmSegments(u).select("user_id", "r_q", "f_q", "m_q")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got == want, "quartiles must follow key DESC NULLS LAST, user_id")
+  }
+
   test("q_audience_overlap: pair matrix equals the collected user-set reference") {
     import graft.operators.Relational
     val m = Tables.events(spark, sf)

@@ -1581,10 +1581,10 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("chunk-store Bloom tier: sidecars published, no false negatives, store byte-identical to the unscreened semantics") {
+  test("chunk-store ingest: each chunk lands once, in the first batch that references it; replay converges") {
     import graft.streaming.ChunkStoreIngest
-    val storeDir = Files.createTempDirectory("graft_csbloom").toString + "/store"
-    val manifestDir = Files.createTempDirectory("graft_csbloom_m").toString + "/manifest"
+    val storeDir = Files.createTempDirectory("graft_csonce").toString + "/store"
+    val manifestDir = Files.createTempDirectory("graft_csonce_m").toString + "/manifest"
     val rnd = new scala.util.Random(37)
     def blob(n: Int) = (1 to n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
     val shared = blob(180)
@@ -1600,9 +1600,9 @@ class StreamingSpec extends SparkSpec {
         ids.map(id => (id, texts(id))).toDF("doc_id", "text"),
         b.toLong, storeDir, manifestDir, divisor = 16)
     }
-    // --- the UNSCREENED reference semantics, computed independently:
-    // a chunk lands in the store partition of the FIRST batch whose
-    // manifest references its digest; chunk text comes from the corpus
+    // --- the reference semantics, computed independently: a chunk
+    // lands in the store partition of the FIRST batch whose manifest
+    // references its digest; chunk text comes from the corpus
     val manifest = spark.read.parquet(manifestDir)
       .select(col("doc_id"), col("digest"), col("batch").cast("long")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -1614,35 +1614,16 @@ class StreamingSpec extends SparkSpec {
     assert(store.length == expectedBatch.size, "store must hold each digest exactly once")
     store.foreach { case (digest, (len, chunk, hp, batch)) =>
       assert(batch == expectedBatch(digest),
-        s"chunk $digest must land in its first-referencing batch (screen may not re-store or drop)")
+        s"chunk $digest must land in its first-referencing batch (never re-stored or dropped)")
       assert(org.apache.commons.codec.digest.DigestUtils.md5Hex(chunk) == digest &&
         chunk.length.toLong == len, "stored bytes must be the chunk content")
       assert(hp == digest.take(2), "store rows carry the 2-hex pruning prefix")
     }
-    // --- reassembly still byte-exact through the screened path
+    // --- reassembly is byte-exact
     val got = ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == texts, "screened store + manifests must reproduce the corpus byte-for-byte")
-    // --- sidecars: one (hp, bf) table per chunk-storing batch, hidden
-    // from plain store reads (sibling path)
-    val bloomRoot = new java.io.File(ChunkStoreIngest.bloomDir(storeDir))
-    assert(bloomRoot.isDirectory, "Bloom sidecar dir must be published")
-    val bloomBatches = bloomRoot.listFiles().map(_.getName).filter(_.startsWith("batch=")).sorted
-    assert(bloomBatches.length == batches.length, s"one sidecar per storing batch: ${bloomBatches.toSeq}")
-    assert(!spark.read.parquet(storeDir).columns.contains("bf"),
-      "store reads must never discover the sidecar")
-    // --- no false negatives: every digest batches 0/1 stored is flagged
-    // candidate by the standing filters a LATER batch would consult
-    val standing = store.filter(_._2._4 < 2L)
-    val prefixes = standing.map(_._2._3).distinct.toSeq
-    val blooms = ChunkStoreIngest.standingBlooms(spark, storeDir, 2L, prefixes)
-    assert(blooms.nonEmpty && blooms.forall { case (hp, bf) => hp.length == 2 && bf.nonEmpty })
-    val probeDf = standing.map { case (d, (_, _, hp, _)) => (d, hp) }.toSeq
-      .toDF("digest", "hp")
-    val flagged = ChunkStoreIngest.probeForSpec(probeDf, blooms)
-      .filter(!col("__cand")).count()
-    assert(flagged == 0L, "a stored digest must never screen as definitely-novel")
-    // --- replay of the middle batch converges under the screen
+    assert(got == texts, "store + manifests must reproduce the corpus byte-for-byte")
+    // --- replay of the middle batch converges
     val (m1, s1) = ChunkStoreIngest.processBatch(
       batches(1).map(id => (id, texts(id))).toDF("doc_id", "text"),
       1L, storeDir, manifestDir, divisor = 16)
@@ -1686,11 +1667,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("chunk-store crash between sidecar and store writes: replay converges, nothing lost or duplicated") {
-    // the scaladoc's write-order argument, executed: blooms land BEFORE
-    // the store partition, so the worst crash leaves a filter claiming
-    // chunks the store doesn't hold — the exact join refutes it on
-    // replay. (The reverse order would leave stored chunks invisible to
-    // the screen: silent duplicates.)
+    // the scaladoc's replay argument, executed: the manifest lands
+    // BEFORE the store partition, and a replay that lost the store
+    // partition re-derives it against the same prior batches
     import graft.streaming.ChunkStoreIngest
     val storeDir = Files.createTempDirectory("graft_cscrash").toString + "/store"
     val manifestDir = Files.createTempDirectory("graft_cscrash_m").toString + "/manifest"
@@ -1701,8 +1680,8 @@ class StreamingSpec extends SparkSpec {
     val t2 = shared + blob(60)
     ChunkStoreIngest.processBatch(Seq((1L, t1)).toDF("doc_id", "text"),
       0L, storeDir, manifestDir, divisor = 16)
-    // batch 1 runs fully, then we simulate the crash window: sidecar
-    // and manifest written, the STORE partition lost before commit
+    // batch 1 runs fully, then we simulate the crash window: manifest
+    // written, the STORE partition lost before commit
     ChunkStoreIngest.processBatch(Seq((2L, t2)).toDF("doc_id", "text"),
       1L, storeDir, manifestDir, divisor = 16)
     val b1Store = new java.io.File(s"$storeDir/batch=1")
@@ -1712,11 +1691,8 @@ class StreamingSpec extends SparkSpec {
       f.delete(); ()
     }
     rmrf(b1Store)
-    assert(new java.io.File(s"${ChunkStoreIngest.bloomDir(storeDir)}/batch=1").isDirectory,
-      "crash window: sidecar present, store partition gone")
-    // REPLAY batch 1: its own sidecar is self-excluded; batch-0 filters
-    // flag the shared chunks (present in the store) and the exact join
-    // keeps them deduped, while batch-1-only chunks land again
+    // REPLAY batch 1: the probe finds the shared chunks in batch 0's
+    // leaves and keeps them deduped, while batch-1-only chunks land again
     ChunkStoreIngest.processBatch(Seq((2L, t2)).toDF("doc_id", "text"),
       1L, storeDir, manifestDir, divisor = 16)
     val store = spark.read.parquet(storeDir)
@@ -1725,116 +1701,6 @@ class StreamingSpec extends SparkSpec {
     val got = ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> t1, 2L -> t2), "reassembly must be lossless after the crash-replay")
-  }
-
-  test("bloom-sidecar compaction: one row per shard, screen stays exact, old-batch replay converges") {
-    import graft.streaming.ChunkStoreIngest
-    val storeDir = Files.createTempDirectory("graft_cscompact").toString + "/store"
-    val manifestDir = Files.createTempDirectory("graft_cscompact_m").toString + "/manifest"
-    val rnd = new scala.util.Random(53)
-    def blob(n: Int) = (1 to n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val shared = blob(140)
-    val texts = Map(1L -> (blob(60) + shared), 2L -> (shared + blob(50)), 3L -> blob(130))
-    (0 to 2).foreach { b =>
-      ChunkStoreIngest.processBatch(Seq((b + 1L, texts(b + 1L))).toDF("doc_id", "text"),
-        b.toLong, storeDir, manifestDir, divisor = 16)
-    }
-    val preStore = spark.read.parquet(storeDir).select("digest", "chunk")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    ChunkStoreIngest.compactBlooms(spark, storeDir)
-    val bloomRoot = new java.io.File(ChunkStoreIngest.bloomDir(storeDir))
-    def generations() =
-      bloomRoot.listFiles().map(_.getName).filter(_.startsWith("batch=")).sorted.toSeq
-    assert(generations() == Seq("batch=-1"),
-      s"compaction must leave exactly one negative generation: ${generations()}")
-    val compacted = spark.read.parquet(ChunkStoreIngest.bloomDir(storeDir))
-    assert(compacted.count() == compacted.select("hp").distinct().count(),
-      "one filter per shard")
-    // no false negatives against the compacted generation
-    val standing = spark.read.parquet(storeDir).select("digest", "hp")
-    val blooms = ChunkStoreIngest.standingBlooms(spark, storeDir, 99L,
-      standing.select("hp").distinct().as[String].collect().toSeq)
-    assert(ChunkStoreIngest.probeForSpec(standing, blooms)
-      .filter(!col("__cand")).count() == 0L,
-      "every stored digest must screen as a maybe post-compaction")
-    // a NEW batch (one dup of stored content + one novel doc) behaves
-    // exactly as pre-compaction semantics demand
-    val t4 = blob(45) + shared
-    ChunkStoreIngest.processBatch(Seq((4L, texts(1L)), (5L, t4)).toDF("doc_id", "text"),
-      3L, storeDir, manifestDir, divisor = 16)
-    val store = spark.read.parquet(storeDir)
-    assert(store.count() == store.select("digest").distinct().count())
-    // pre-compaction batch replay: the compacted generation is NOT
-    // self-excluded (batch=-1 is never a real id) yet replay converges
-    ChunkStoreIngest.processBatch(Seq((2L, texts(2L))).toDF("doc_id", "text"),
-      1L, storeDir, manifestDir, divisor = 16)
-    val store2 = spark.read.parquet(storeDir)
-    assert(store2.count() == store2.select("digest").distinct().count())
-    preStore.foreach { case (d, c) =>
-      assert(store2.filter(col("digest") === d).select("chunk").head().getString(0) == c)
-    }
-    val got = ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == texts ++ Map(4L -> texts(1L), 5L -> t4),
-      "reassembly stays lossless across compaction, new batches and replay")
-    // RE-compaction alternates the generation id (never overwrites the
-    // only covering generation in place) and stays exact
-    ChunkStoreIngest.compactBlooms(spark, storeDir)
-    assert(generations() == Seq("batch=-2"),
-      s"second compaction must land on the alternate id: ${generations()}")
-    val standing2 = spark.read.parquet(storeDir).select("digest", "hp")
-    val blooms2 = ChunkStoreIngest.standingBlooms(spark, storeDir, 99L,
-      standing2.select("hp").distinct().as[String].collect().toSeq)
-    assert(ChunkStoreIngest.probeForSpec(standing2, blooms2)
-      .filter(!col("__cand")).count() == 0L,
-      "no false negatives after re-compaction")
-    ChunkStoreIngest.processBatch(Seq((6L, blob(90))).toDF("doc_id", "text"),
-      4L, storeDir, manifestDir, divisor = 16)
-    val store3 = spark.read.parquet(storeDir)
-    assert(store3.count() == store3.select("digest").distinct().count())
-  }
-
-  test("bloom-sidecar compaction: a batch landing mid-compaction keeps its sidecar (no coverage hole)") {
-    import graft.streaming.ChunkStoreIngest
-    val storeDir = Files.createTempDirectory("graft_csconc").toString + "/store"
-    val manifestDir = Files.createTempDirectory("graft_csconc_m").toString + "/manifest"
-    val rnd = new scala.util.Random(71)
-    def blob(n: Int) = (1 to n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val t1 = blob(150); val t2 = blob(140); val t3 = blob(160)
-    ChunkStoreIngest.processBatch(Seq((1L, t1)).toDF("doc_id", "text"),
-      0L, storeDir, manifestDir, divisor = 16)
-    ChunkStoreIngest.processBatch(Seq((2L, t2)).toDF("doc_id", "text"),
-      1L, storeDir, manifestDir, divisor = 16)
-    // batch 2 lands AFTER compaction snapshots the sidecar list but
-    // before it scans store digests — the advisor's race, made
-    // deterministic via the seam
-    ChunkStoreIngest.compactBlooms(spark, storeDir,
-      midCompactionHook = () =>
-        ChunkStoreIngest.processBatch(Seq((3L, t3)).toDF("doc_id", "text"),
-          2L, storeDir, manifestDir, divisor = 16))
-    val bloomRoot = new java.io.File(ChunkStoreIngest.bloomDir(storeDir))
-    val gens = bloomRoot.listFiles().map(_.getName).filter(_.startsWith("batch=")).sorted.toSeq
-    assert(gens.contains("batch=2"),
-      s"the mid-compaction batch's sidecar must survive the post-commit delete: $gens")
-    assert(!gens.contains("batch=0") && !gens.contains("batch=1"),
-      s"pre-snapshot sidecars must be folded away: $gens")
-    // no stored digest screens as provably-novel — the coverage hole
-    // the unsnapshotted delete would open
-    val standing = spark.read.parquet(storeDir).select("digest", "hp")
-    val blooms = ChunkStoreIngest.standingBlooms(spark, storeDir, 99L,
-      standing.select("hp").distinct().as[String].collect().toSeq)
-    assert(ChunkStoreIngest.probeForSpec(standing, blooms)
-      .filter(!col("__cand")).count() == 0L,
-      "every stored digest (incl. the mid-compaction batch's) must screen as a maybe")
-    // re-sending batch 2's content in a new batch must store NOTHING new
-    ChunkStoreIngest.processBatch(Seq((4L, t3)).toDF("doc_id", "text"),
-      3L, storeDir, manifestDir, divisor = 16)
-    val store = spark.read.parquet(storeDir)
-    assert(store.count() == store.select("digest").distinct().count(),
-      "no duplicate store rows — the byte-exact reassembly invariant holds")
-    val got = ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == Map(1L -> t1, 2L -> t2, 3L -> t3, 4L -> t3))
   }
 
   test("chunk store refuses to write an hp-partitioned batch into a pre-hp flat store") {
@@ -1876,25 +1742,13 @@ class StreamingSpec extends SparkSpec {
     (storeDir, manifestDir, texts, blob _)
   }
 
-  /** Scans among `scans` that read the chunk store itself (not its
-    * sibling Bloom sidecar). */
+  /** Scans among `scans` that read the chunk store. */
   private def storeScans(scans: Seq[org.apache.spark.sql.execution.FileSourceScanExec],
       storeDir: String) =
     scans.filter(_.relation.location.rootPaths.exists { p =>
       val path = p.toUri.getPath
       path == storeDir || path.startsWith(storeDir + "/")
     })
-
-  /** Distinct (digest, hp) of batch `b`'s manifest with their screen
-    * verdict against the standing sidecars that batch consulted. */
-  private def screenedDigests(storeDir: String, manifestDir: String, b: Long) = {
-    import graft.streaming.ChunkStoreIngest
-    val digests = spark.read.parquet(manifestDir).filter(col("batch") === b)
-      .select(col("digest"), substring(col("digest"), 1, 2).as("hp")).distinct()
-    val prefixes = digests.select("hp").distinct().as[String].collect().toSeq
-    ChunkStoreIngest.probeForSpec(digests, ChunkStoreIngest.standingBlooms(spark, storeDir, b, prefixes))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq
-  }
 
   test("chunk-store layout check is driver-local: zero Spark jobs on a store with history") {
     import graft.streaming.ChunkStoreIngest
@@ -1912,70 +1766,45 @@ class StreamingSpec extends SparkSpec {
       texts ++ Map(9L -> texts(2L), 10L -> t9))
   }
 
-  test("chunk-store exact anti-join scans only the Bloom-maybe prefixes of the standing store") {
+  test("chunk-store exact anti-join scans only the batch's own prefixes of the standing store") {
     import graft.streaming.ChunkStoreIngest
-    val (storeDir, manifestDir, texts, blob) = twoBatchChunkStore("graft_csmaybe", 29)
-    // doc 9 repeats a batch-0 doc (every chunk a maybe), doc 10 is fresh
-    // (its chunks mostly screen as misses)
+    val (storeDir, manifestDir, texts, blob) = twoBatchChunkStore("graft_csprefix", 29)
+    // doc 9 repeats a batch-0 doc (every chunk already stored), doc 10
+    // is fresh
     val t10 = blob(480)
     val scans = fileScansOf {
       ChunkStoreIngest.processBatch(Seq((9L, texts(3L)), (10L, t10)).toDF("doc_id", "text"),
         2L, storeDir, manifestDir, divisor = 16)
     }
-    val screened = screenedDigests(storeDir, manifestDir, 2L)
-    val maybePrefixes = screened.filter(_._3).map(_._2).toSet
+    val batchDigests = spark.read.parquet(manifestDir).filter(col("batch") === 2)
+      .select("digest").distinct().as[String].collect().toSet
+    val batchPrefixes = batchDigests.map(_.take(2))
     def leafFiles(batch: Int, hp: String) =
       Option(new java.io.File(s"$storeDir/batch=$batch/hp=$hp")
         .listFiles((_, n) => n.endsWith(".parquet"))).map(_.length).getOrElse(0)
     val priorHps = (0 to 1).flatMap(b => new java.io.File(s"$storeDir/batch=$b").list()
       .filter(_.startsWith("hp=")).map(d => b -> d.stripPrefix("hp=")))
     val onDisk = priorHps.map { case (b, hp) => leafFiles(b, hp) }.sum
-    val underMaybes = priorHps.filter(bh => maybePrefixes(bh._2))
+    val underBatch = priorHps.filter(bh => batchPrefixes(bh._2))
       .map { case (b, hp) => leafFiles(b, hp) }.sum
-    val underBatch = priorHps.filter(bh => screened.exists(_._2 == bh._2))
-      .map { case (b, hp) => leafFiles(b, hp) }.sum
-    // the fixture separates the two prunings: some standing leaves share
-    // a prefix with the batch without holding a maybe
-    assert(maybePrefixes.nonEmpty && underMaybes < underBatch,
-      s"fixture: maybe leaves $underMaybes must be fewer than batch-prefix leaves $underBatch")
     val probe = storeScans(scans, storeDir)
-    assert(probe.nonEmpty, "the maybes must be checked against the standing store")
+    assert(probe.nonEmpty, "the batch must be checked against the standing store")
     probe.foreach { f =>
       val selected = f.selectedPartitions.totalNumberOfFiles.toInt
-      assert(selected == underMaybes && selected < onDisk,
-        s"the exact probe must read only the $underMaybes files under the maybe prefixes " +
-          s"(of $onDisk on disk), read $selected")
+      assert(selected == underBatch && selected < onDisk,
+        s"the exact probe must read only the $underBatch prior files under the batch's " +
+          s"prefixes (of $onDisk on disk), read $selected")
     }
-    // and the narrowed probe stays exact
+    // and the pruned probe stays exact
     val store = spark.read.parquet(storeDir)
     assert(store.count() == store.select("digest").distinct().count(),
       "every digest stored exactly once")
     val prior = store.filter(col("batch") < 2).select("digest").as[String].collect().toSet
-    assert(store.filter(col("batch") === 2).count() == screened.count(d => !prior(d._1)).toLong,
-      "batch 2 stores exactly its digests the prior batches lack")
+    assert(store.filter(col("batch") === 2).select("digest").as[String].collect().toSet ==
+      batchDigests -- prior, "batch 2 stores exactly the digests the prior batches lack")
     assert(ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
       texts ++ Map(9L -> texts(3L), 10L -> t10))
-  }
-
-  test("chunk-store batch whose chunks all screen as Bloom misses plans no store scan") {
-    import graft.streaming.ChunkStoreIngest
-    val (storeDir, manifestDir, texts, blob) = twoBatchChunkStore("graft_csmiss", 43)
-    val t9 = blob(240)
-    val scans = fileScansOf {
-      ChunkStoreIngest.processBatch(Seq((9L, t9)).toDF("doc_id", "text"),
-        2L, storeDir, manifestDir, divisor = 16)
-    }
-    val screened = screenedDigests(storeDir, manifestDir, 2L)
-    assert(screened.nonEmpty && screened.forall(!_._3),
-      s"fixture: every chunk of the fresh doc must screen as a miss: ${screened.filter(_._3)}")
-    assert(storeScans(scans, storeDir).isEmpty,
-      "with no Bloom maybes the standing store must not be scanned")
-    val store = spark.read.parquet(storeDir)
-    assert(store.filter(col("batch") === 2).count() == screened.size.toLong,
-      "every chunk of the batch is novel and stored")
-    assert(ChunkStoreIngest.reassemble(spark, storeDir, manifestDir)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap == texts + (9L -> t9))
   }
 
   test("composed curated ingest: gate → exact dedup → chunk store equals the batch composition; reassembly lossless") {
@@ -2480,8 +2309,6 @@ class StreamingSpec extends SparkSpec {
     assert(fields(IngestDedup.DigestSchema) == written(s"$root/digests", "batch", "hp"))
     ChunkStoreIngest.processBatch(batch, 0L, s"$root/store", s"$root/manifest", divisor = 16)
     assert(fields(ChunkStoreIngest.StoreSchema) == written(s"$root/store", "batch", "hp"))
-    assert(fields(ChunkStoreIngest.BloomSchema) ==
-      written(ChunkStoreIngest.bloomDir(s"$root/store"), "batch"))
     // near dedup declares the schema of the index rows the batch builds
     val corpusDf = Dedup.gramDf(batch, 3)
     val fresh = Seq((10L, "c1 c2 c3 c4 c5 c6")).toDF("doc_id", "text")

@@ -127,6 +127,7 @@ class WorkerE2ESpec extends SparkSpec {
       inner.bulk(df, table)
     }
     override def listTables(pattern: String): Seq[String] = inner.listTables(pattern)
+    override def drop(table: String): Unit = inner.drop(table)
   }
 
   test("runTask: two subtasks are in flight at once") {
@@ -238,6 +239,7 @@ class WorkerE2ESpec extends SparkSpec {
         df.count()
       }
       override def listTables(pattern: String): Seq[String] = Seq.empty
+      override def drop(table: String): Unit = ()
     }
     val g = new Graft(spark, _ => (src, slowSink))
     g.addTask(TaskSpec("task4", "mem://s", "mem://d", Seq("first")))
