@@ -447,7 +447,6 @@ object Graft {
   def dropDriverHandleCaches(): Unit = {
     graft.operators.Similarity.dropInMemoryIndexes()
     graft.operators.Dedup.dropInMemoryNgramTables()
-    graft.operators.Dedup.dropInMemoryShardBlooms()
     graft.operators.TextAnalysis.dropInMemoryBpeTables()
     graft.engine.AssetStore.dropAppendProofMemo()
   }

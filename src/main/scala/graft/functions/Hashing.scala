@@ -411,84 +411,6 @@ case class LangIdGuess(child: Expression) extends UnaryExpression
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** `might_contain` against a PERSISTED per-shard Bloom filter — the
-  * deployment shape of the sharded screen
-  * ([[graft.operators.Dedup.buildShardBlooms]] documents the tiers):
-  * filters live as raw `<hp>.bf` files next to the digest table
-  * (written by [[graft.operators.Dedup.persistShardBloomFiles]], the
-  * Spark-sketch serialization `BloomFilterMightContain` itself reads),
-  * and each EXECUTOR lazily loads only the shards its rows actually
-  * probe — no driver-collected state, no plan literals, which is what
-  * removes the ~125 GB-of-literals bound the literal dispatch carries
-  * at p=2/n=10^11 (SCALING.md). A missing shard file means no standing
-  * key has that prefix: definitively novel (`false`), preserving the
-  * no-false-negative invariant verbatim.
-  *
-  * The filter cache is PER EXPRESSION INSTANCE (`@transient lazy`),
-  * i.e. per deserialized task binary: invalidation-free by
-  * construction (a new plan re-reads disk; content-addressed sidecar
-  * dirs never mutate), bounded by the shards one task touches — one
-  * filter when the probe side is hash-partitioned on `hp`. Codegen
-  * stays whole-stage: `doGenCode` calls this instance through a
-  * reference object, no row round-trip.
-  */
-case class PersistedShardBloomProbe(dir: String, left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType, LongType)
-  override def dataType: DataType = BooleanType
-
-  // keyed by the probing UTF8String itself (bytes equality/hash):
-  // the hot-path lookup allocates NOTHING per row — no toString, no
-  // Option, no closure; only a MISS pays a defensive clone() for the
-  // stored key plus the file read. A missing shard file caches the
-  // Absent sentinel. The map converges to <= shard-count entries per
-  // task.
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[UTF8String, AnyRef]()
-
-  private def load(hp: UTF8String): AnyRef = {
-    val p = new org.apache.hadoop.fs.Path(dir, hp.toString + ".bf")
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (!fs.exists(p)) PersistedShardBloomProbe.Absent
-    else {
-      val in = fs.open(p)
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      finally in.close()
-    }
-  }
-
-  def probe(hp: UTF8String, h: Long): Boolean = {
-    var bf = cache.get(hp)
-    if (bf == null) {
-      bf = load(hp)
-      cache.putIfAbsent(hp.clone(), bf)
-    }
-    (bf ne PersistedShardBloomProbe.Absent) &&
-      bf.asInstanceOf[org.apache.spark.util.sketch.BloomFilter].mightContainLong(h)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Boolean.valueOf(probe(a.asInstanceOf[UTF8String], b.asInstanceOf[java.lang.Long]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shardBloomProbe", this,
-      classOf[PersistedShardBloomProbe].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.probe($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-object PersistedShardBloomProbe {
-  /** Cache sentinel for "shard file absent" (ConcurrentHashMap cannot
-    * hold null values; an Option would cost a closure per probe).
-    */
-  private[functions] object Absent
-}
-
 /** Column-level API. */
 object sketch {
   def shingleSet(tokens: Column, k: Int): Column =
@@ -526,10 +448,4 @@ object sketch {
   def scrubJoin(text: Column, removed: Column): Column =
     GraftExpressionBridge.column(ScrubJoin(
       GraftExpressionBridge.expression(text), GraftExpressionBridge.expression(removed)))
-  /** `hash64` must already be the xxhash64 of the probed key — the same
-    * hash the filters were built over.
-    */
-  def persistedShardBloom(dir: String, hp: Column, hash64: Column): Column =
-    GraftExpressionBridge.column(PersistedShardBloomProbe(dir,
-      GraftExpressionBridge.expression(hp), GraftExpressionBridge.expression(hash64)))
 }

@@ -11,6 +11,12 @@ import graft.functions.{text, sketch}
   * is: narrow per-row sketching (codegen), then ONE shuffle keyed so that
   * candidate duplicates co-locate, then per-bucket verification — never an
   * all-pairs comparison.
+  *
+  * A `shardblooms_*` directory in the asset warehouse, left by releases
+  * that screened the incremental dedup queries through persisted
+  * per-shard Bloom filters, is never read and can be deleted by hand;
+  * `AssetStore.gcStale` also removes it once its corpus's fingerprint
+  * is no longer live.
   */
 object Dedup {
 
@@ -112,6 +118,10 @@ object Dedup {
     * here both sides hash from the same table, split at `splitId`, and
     * the digest stage is persisted because old/new/first-seen all
     * consume it. One shuffle on the digest key for all three.
+    *
+    * The exact join is the one mechanism, and the `dedup_bloom*` query
+    * names route here: a Bloom screen in front of it cannot change a
+    * verdict and measured slower at every committed scale (SCALING.md).
     */
   def incremental(docs: DataFrame, splitId: Long): DataFrame = {
     // null-safe digest: md5(NULL) is NULL and a NULL key falls out of
@@ -144,343 +154,6 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val split = docs.agg(expr("max(doc_id) div 2").cast("long")).head().getLong(0)
     incremental(docs, split)
-  }
-
-  private[graft] def bloomAgg(c: Column, estItems: Long, numBits: Long): Column = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    org.apache.spark.sql.GraftExpressionBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        org.apache.spark.sql.GraftExpressionBridge.expression(c),
-        Literal(estItems), Literal(numBits)).toAggregateExpression())
-  }
-
-  private[graft] def mightContain(bloom: Column, c: Column): Column =
-    org.apache.spark.sql.GraftExpressionBridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        org.apache.spark.sql.GraftExpressionBridge.expression(bloom),
-        org.apache.spark.sql.GraftExpressionBridge.expression(c)))
-
-  /** THE sharded-Bloom screen kernel, shared by every tier that fronts
-    * an exact digest join with per-prefix filters
-    * ([[incrementalBloomSharded]], [[cdcIncrementalBloomOn]]): build
-    * one filter per shard off the standing (key, hp) rows, sized from
-    * the LARGEST shard's exact count — and dispatch probes through a
-    * lazy CASE on the prefix so a row pays exactly its shard's
-    * `might_contain`s (several when a shard carries several filters).
-    * Probes whose prefix has no filter are definitively novel. The
-    * no-false-negative invariant lives HERE, once.
-    */
-  private[graft] def buildShardBlooms(standing: DataFrame, keyCol: String,
-      bitsPerItem: Long): Seq[(String, Array[Byte])] = {
-    val maxShard = standing.groupBy("hp").agg(count(lit(1)).as("n"))
-      .agg(max(col("n"))).head()
-    if (maxShard.isNullAt(0)) Seq.empty
-    else {
-      val est = math.max(maxShard.getLong(0), 16L)
-      // hp is a 2-hex-char prefix: at most 256 shard rows ever
-      graft.engine.DriverBudget.collect("Dedup.buildShardBlooms", 256L)(
-        standing.groupBy("hp")
-          .agg(bloomAgg(xxhash64(col(keyCol)), est, est * bitsPerItem).as("bf")))
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
-        .sortBy(_._1).toSeq
-    }
-  }
-
-  private[graft] def bloomDispatch(
-      blooms: Seq[(String, Array[Byte])], key: Column, hp: Column): Column =
-    if (blooms.isEmpty) lit(false)
-    else blooms.groupBy(_._1).toSeq.sortBy(_._1)
-      .foldLeft(when(lit(false), lit(false))) { case (acc, (p, bfs)) =>
-        acc.when(hp === p,
-          bfs.map { case (_, bf) => mightContain(lit(bf), xxhash64(key)) }.reduce(_ || _))
-      }.otherwise(lit(false))
-
-  /** The ON-DISK DEPLOYMENT of the sharded screen — the build side of
-    * [[graft.functions.PersistedShardBloomProbe]]: one raw `<hp>.bf`
-    * file per shard under `outDir`, each holding that shard's filter in
-    * the Spark-sketch serialization. The grouped aggregation is the
-    * same one [[buildShardBlooms]] runs (filters sized from the largest
-    * shard's exact count — identical BYTES); what changes is the
-    * transport: EXECUTORS write their shards' files directly
-    * (foreachPartition), so nothing filter-sized ever transits the
-    * driver or a query plan — at p=2/n=10^11 that is the difference
-    * between ~125 GB of plan literals and 256 files probed lazily by
-    * the executors that touch them. The files carry the kernel's
-    * no-false-negative invariant.
-    */
-  private[graft] def persistShardBloomFiles(standing: DataFrame, keyCol: String,
-      bitsPerItem: Long, outDir: String): Unit = {
-    val maxShard = standing.groupBy("hp").agg(count(lit(1)).as("n"))
-      .agg(max(col("n"))).head()
-    if (!maxShard.isNullAt(0)) {
-      val est = math.max(maxShard.getLong(0), 16L)
-      standing.groupBy("hp")
-        .agg(bloomAgg(xxhash64(col(keyCol)), est, est * bitsPerItem).as("bf"))
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          if (rows.hasNext) {
-            val conf = new org.apache.hadoop.conf.Configuration()
-            // write-then-rename per shard: a speculative or zombie attempt
-            // racing a retry must never interleave bytes inside a committed
-            // .bf file (a torn filter would silently break the tier's
-            // no-false-negative contract). Each attempt writes its own
-            // temp file (attempt id in the name); the FIRST attempt to
-            // rename into the final name wins and later attempts discard
-            // their temp — every attempt aggregates identical bytes
-            // (filters sized from the same exact counts over the same
-            // shard rows), so first-wins == any-wins. There is no
-            // delete-before-rename, so the final path, once present, is
-            // never transiently absent — a racing reader can only ever
-            // observe "complete filter" or "not yet committed" (and the
-            // outer AssetStore marker means consumers don't address the
-            // dir until every shard landed anyway).
-            val attempt = Option(org.apache.spark.TaskContext.get())
-              .map(_.taskAttemptId()).getOrElse(0L)
-            rows.foreach { r =>
-              val fin = new org.apache.hadoop.fs.Path(outDir, r.getString(0) + ".bf")
-              val tmp = new org.apache.hadoop.fs.Path(
-                outDir, s".${r.getString(0)}.bf.tmp-$attempt")
-              val fs = fin.getFileSystem(conf)
-              if (!fs.exists(fin)) {
-                val out = fs.create(tmp, true)
-                try out.write(r.getAs[Array[Byte]](1)) finally out.close()
-                if (!fs.rename(tmp, fin)) {
-                  // lost the race (or a non-atomic store refused): the
-                  // winner's complete filter must be there — else fail
-                  // the task so the retry re-commits
-                  fs.delete(tmp, false)
-                  if (!fs.exists(fin))
-                    throw new java.io.IOException(s"bloom shard commit failed: $fin")
-                }
-              }
-            }
-          }
-        }
-    }
-  }
-
-  /** TWO-TIER incremental dedup: a broadcast Bloom filter pre-screens
-    * the incoming side so only probable hits pay the exact digest join
-    * — same OUTPUT contract as [[incremental]] (bit-identical verdicts:
-    * the Bloom has no false negatives, and its false positives are
-    * re-checked by the exact join), different 100 TB economics. The
-    * plain anti-join shuffles the ENTIRE incoming batch against the
-    * digest table; here the non-candidate bulk (the common case — most
-    * ingest is new) is cleared by a narrow scan against a driver-built
-    * Bloom literal (Catalyst `BloomFilterAggregate`, distributively
-    * merged; ~numBits/8 bytes of driver state, the centroid-literal
-    * pattern) and never reaches the join. Size `numBits` ~10x the seen
-    * count for a ~1% candidate rate; a digest table too big for one
-    * Bloom shards by digest prefix (the [[graft.streaming.IngestDedup]]
-    * partitioning) with one Bloom per shard.
-    */
-  def incrementalBloom(
-      docs: DataFrame,
-      splitId: Long,
-      estimatedItems: Long = 1L << 20,
-      numBits: Long = 1L << 23
-  ): DataFrame = {
-    val h = docs.select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val old = h.filter(col("doc_id") < splitId).select(col("h")).distinct()
-    val nw = h.filter(col("doc_id") >= splitId)
-    val firstNew = nw.groupBy("h").agg(min(col("doc_id")).as("first_id"))
-    val bloomRow = old
-      .agg(bloomAgg(xxhash64(col("h")), estimatedItems, numBits).as("bf")).head()
-    val tagged =
-      if (bloomRow.isNullAt(0)) nw.withColumn("is_old", lit(false)) // no seen set
-      else {
-        // the probe is defined ONCE and branched on; both branches scan
-        // the persisted digest projection (h), not the raw corpus, so
-        // the second pass re-reads 24-byte cached rows, not text
-        val bf = lit(bloomRow.getAs[Array[Byte]](0))
-        val probed = nw.withColumn("__cand", mightContain(bf, xxhash64(col("h"))))
-        val maybe = probed.filter(col("__cand"))
-          .join(old.withColumn("is_old", lit(true)), Seq("h"), "left")
-        val clean = probed.filter(!col("__cand")).withColumn("is_old", lit(false))
-        maybe.select("doc_id", "h", "is_old")
-          .unionByName(clean.select("doc_id", "h", "is_old"))
-      }
-    val out = tagged
-      .join(firstNew, "h")
-      .select(
-        col("doc_id"),
-        when(col("is_old"), "dup_of_old")
-          .when(col("doc_id") =!= col("first_id"), "dup_of_new")
-          .otherwise("kept").as("verdict"))
-      .orderBy("doc_id")
-    graft.engine.Caching.handoff(out, h)
-  }
-
-  /** Driver query: same cut as [[incrementalQuery]] — and the SAME
-    * oracle SQL, because the Bloom tier is an optimization, not a
-    * semantics change. The Bloom is sized to the seen half (~10 bits
-    * per item), the way a real caller sizes it from the digest-table
-    * count — an oversized default would embed a megabyte literal in
-    * the plan for a kilobyte problem.
-    */
-  def incrementalBloomQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val split = docs.agg(expr("max(doc_id) div 2").cast("long")).head().getLong(0)
-    incrementalBloom(docs, split,
-      estimatedItems = math.max(split, 16L), numBits = math.max(split, 16L) * 10)
-  }
-
-  /** SHARDED Bloom tier: [[incrementalBloom]] with the seen-digest Bloom
-    * split by digest prefix (`hp` = first `shardHexChars` hex chars of
-    * the md5 — the [[graft.streaming.IngestDedup]] partitioning), one
-    * filter per shard. Verdicts are bit-identical to [[incremental]] and
-    * [[incrementalBloom]] (no false negatives per shard; false positives
-    * re-checked by the exact join) — what changes is the MEMORY SHAPE:
-    *
-    *   - One filter over a 100 TB seen set does not fit a single
-    *     aggregation buffer (10^11 digests × 10 bits ≈ 125 GB in ONE
-    *     merge path); md5 prefixes are uniform, so `S = 16^shardHexChars`
-    *     shards hold `n/S` items each and every Bloom build is an
-    *     independently-mergeable `(n/S × bitsPerItem)/8`-byte buffer —
-    *     at 2 hex chars (256 shards), ~490 MB per shard for 10^11 seen
-    *     digests, executor-sized. Build cost stays ONE grouped
-    *     aggregation (each row feeds exactly its shard's filter).
-    *   - The probe stays one narrow scan: a lazy CASE dispatch on `hp`
-    *     (the [[graft.operators.Similarity.annIvfPqIndexed]] pattern)
-    *     evaluates only the matching shard's `might_contain` per row.
-    *   - At full deployment the per-shard filters live next to the
-    *     digest table's `hp=` partitions and each executor loads only
-    *     the shards it scans; here they ride the plan as literals, which
-    *     bounds THIS entry point to driver-literal scale (the same
-    *     documented bound as the single-filter tier).
-    *
-    * Filters are sized from the LARGEST shard's exact count (one tiny
-    * pre-aggregation), so skewed shards keep their false-positive rate
-    * and balanced shards are merely a little roomier.
-    */
-  def incrementalBloomSharded(
-      docs: DataFrame,
-      splitId: Long,
-      shardHexChars: Int = 2,
-      bitsPerItem: Long = 10
-  ): DataFrame = {
-    require(shardHexChars >= 1 && shardHexChars <= 4,
-      s"shardHexChars must be in [1,4], got $shardHexChars")
-    val h = docs.select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("h"))
-      .withColumn("hp", substring(col("h"), 1, shardHexChars))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val old = h.filter(col("doc_id") < splitId).select(col("h"), col("hp")).distinct()
-    val nw = h.filter(col("doc_id") >= splitId)
-    val firstNew = nw.groupBy("h").agg(min(col("doc_id")).as("first_id"))
-    // size to the largest shard's exact distinct count — counts are a
-    // tiny (<= 16^shardHexChars rows) aggregate over the persisted
-    // digest projection
-    val blooms = buildShardBlooms(old, "h", bitsPerItem)
-    val tagged =
-      if (blooms.isEmpty) nw.withColumn("is_old", lit(false)) // no seen set
-      else {
-        val probed = nw.withColumn("__cand",
-          bloomDispatch(blooms, col("h"), col("hp")))
-        val maybe = probed.filter(col("__cand"))
-          .join(old.select(col("h")).withColumn("is_old", lit(true)), Seq("h"), "left")
-        val clean = probed.filter(!col("__cand")).withColumn("is_old", lit(false))
-        maybe.select("doc_id", "h", "is_old")
-          .unionByName(clean.select("doc_id", "h", "is_old"))
-      }
-    val out = tagged
-      .join(firstNew, "h")
-      .select(
-        col("doc_id"),
-        when(col("is_old"), "dup_of_old")
-          .when(col("doc_id") =!= col("first_id"), "dup_of_new")
-          .otherwise("kept").as("verdict"))
-      .orderBy("doc_id")
-    graft.engine.Caching.handoff(out, h)
-  }
-
-  /** Driver query: same cut and SAME oracle as [[incrementalQuery]] /
-    * [[incrementalBloomQuery]] — sharding is a memory-shape change, not
-    * a semantics change. 1 hex char = 16 shards keeps the bench plan's
-    * CASE dispatch short at test SF; deployment uses 2+.
-    */
-  def incrementalBloomShardedQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val split = docs.agg(expr("max(doc_id) div 2").cast("long")).head().getLong(0)
-    incrementalBloomSharded(docs, split, shardHexChars = 1)
-  }
-
-  // (asset id) -> committed sidecar directory of persisted per-shard
-  // filters — the on-disk Bloom deployments, content-addressed like
-  // every other corpus asset (split and shard params are address
-  // components: a filter set built under one cut can never screen
-  // another).
-  private val shardBloomDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test seam: sidecar builds this JVM ran. */
-  private[graft] val shardBloomBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Test seam: forget the in-JVM sidecar handles. */
-  private[graft] def dropInMemoryShardBlooms(): Unit = shardBloomDirs.clear()
-
-  /** [[incrementalBloomSharded]] with the filters PROBED FROM DISK
-    * (the [[graft.functions.PersistedShardBloomProbe]] deployment
-    * shape) instead of carried as plan literals: verdicts are
-    * bit-identical — the probe reads the same filter bytes the literal
-    * path embeds, a missing shard file is the same "definitively
-    * novel" as an absent literal, and Bloom maybes pay the same exact
-    * re-check join. `sidecarDir` must hold files written by
-    * [[persistShardBloomFiles]] over the SAME standing slice and
-    * prefix width.
-    */
-  def incrementalBloomShardedOnDisk(
-      docs: DataFrame,
-      splitId: Long,
-      sidecarDir: String,
-      shardHexChars: Int = 2
-  ): DataFrame = {
-    require(shardHexChars >= 1 && shardHexChars <= 4,
-      s"shardHexChars must be in [1,4], got $shardHexChars")
-    val h = docs.select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("h"))
-      .withColumn("hp", substring(col("h"), 1, shardHexChars))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val old = h.filter(col("doc_id") < splitId).select(col("h"), col("hp")).distinct()
-    val nw = h.filter(col("doc_id") >= splitId)
-    val firstNew = nw.groupBy("h").agg(min(col("doc_id")).as("first_id"))
-    val probed = nw.withColumn("__cand",
-      sketch.persistedShardBloom(sidecarDir, col("hp"), xxhash64(col("h"))))
-    val maybe = probed.filter(col("__cand"))
-      .join(old.select(col("h")).withColumn("is_old", lit(true)), Seq("h"), "left")
-    val clean = probed.filter(!col("__cand")).withColumn("is_old", lit(false))
-    val out = maybe.select("doc_id", "h", "is_old")
-      .unionByName(clean.select("doc_id", "h", "is_old"))
-      .join(firstNew, "h")
-      .select(
-        col("doc_id"),
-        when(col("is_old"), "dup_of_old")
-          .when(col("doc_id") =!= col("first_id"), "dup_of_new")
-          .otherwise("kept").as("verdict"))
-      .orderBy("doc_id")
-    graft.engine.Caching.handoff(out, h)
-  }
-
-  /** Driver query: same cut and SAME oracle as the literal-dispatch
-    * [[incrementalBloomShardedQuery]] — the sidecar files are a durable
-    * asset (built once per (corpus, cut, prefix width), loaded by
-    * later JVMs), and the probe reads them from the executors.
-    */
-  def incrementalBloomShardedDiskQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val split = docs.agg(expr("max(doc_id) div 2").cast("long")).head().getLong(0)
-    val fp = graft.engine.AssetStore.corpusFingerprint(spark, dir, "documents.parquet")
-    val assetId =
-      s"shardblooms_inc_s${split}_p1_b10_v${graft.engine.AssetStore.FormatVersion}_$fp"
-    val sidecars = shardBloomDirs.computeIfAbsent(assetId, _ =>
-      graft.engine.AssetStore.resolve(spark, assetId,
-        staging => {
-          shardBloomBuilds.incrementAndGet()
-          val standing = docs.filter(col("doc_id") < split)
-            .select(md5(coalesce(col("text"), lit(""))).as("h"))
-            .withColumn("hp", substring(col("h"), 1, 1))
-            .distinct()
-          persistShardBloomFiles(standing, "h", bitsPerItem = 10, staging)
-        }))
-    incrementalBloomShardedOnDisk(docs, split, sidecars, shardHexChars = 1)
   }
 
   // --------------------------------------------------------------------
@@ -961,7 +634,7 @@ object Dedup {
     *
     * Exact-dup copies of standing text are OUT OF SCOPE by design: the
     * signature stage collapses identical texts to their min doc_id (the
-    * exact tier — [[incremental]]/[[incrementalBloom]] — owns those
+    * exact tier — [[incremental]] — owns those
     * verdicts), so this reports genuinely near-but-not-identical
     * arrivals, the ones no digest can catch.
     *
@@ -2432,9 +2105,8 @@ object Dedup {
     * the join is digest-keyed, and the driver query slices the
     * MATERIALIZED chunk-digest asset ([[corpusChunkDigests]]) on both
     * sides — the corpus is chunked once per warehouse, never per probe.
-    * [[cdcIncrementalBloom]] is this operator with the sharded Bloom
-    * tier actually wired in front of the join — not a different
-    * semantics, a different probe cost.
+    * The exact join is the one mechanism; the `dedup_cdc_incremental_bloom*`
+    * query names route here.
     */
   private def cdcIncrementalOn(ch: DataFrame, splitId: Long): DataFrame = {
     val standing = ch.filter(col("doc_id") < splitId)
@@ -2465,117 +2137,5 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val split = docs.agg(expr("max(doc_id) div 2").cast("long")).head().getLong(0)
     cdcIncrementalOn(corpusChunkDigests(spark, dir), split)
-  }
-
-  /** [[cdcIncremental]] with the SHARDED BLOOM TIER wired in front of
-    * the standing-chunk join — the [[incrementalBloomSharded]] kernel
-    * applied to chunk digests (a chunk digest is a digest). Same OUTPUT
-    * contract as [[cdcIncremental]] (bit-identical: per-shard filters
-    * have no false negatives, and false positives are re-checked by the
-    * exact join); what changes is the 100 TB probe economics — a batch
-    * chunk pays one lazy CASE-dispatched `might_contain` on its digest
-    * prefix, and only probable hits join the standing digest set.
-    */
-  private def cdcIncrementalBloomOn(ch: DataFrame, splitId: Long,
-      shardHexChars: Int, bitsPerItem: Long): DataFrame = {
-    require(shardHexChars >= 1 && shardHexChars <= 4,
-      s"shardHexChars must be in [1,4], got $shardHexChars")
-    val hp = substring(col("digest"), 1, shardHexChars)
-    val standing = ch.filter(col("doc_id") < splitId)
-      .select(col("digest"), hp.as("hp")).distinct()
-    val batch = ch.filter(col("doc_id") >= splitId).withColumn("hp", hp)
-    val blooms = buildShardBlooms(standing, "digest", bitsPerItem)
-    val tagged =
-      if (blooms.isEmpty) batch.withColumn("known", lit(false))
-      else {
-        val probed = batch.withColumn("__cand",
-          bloomDispatch(blooms, col("digest"), col("hp")))
-        val maybe = probed.filter(col("__cand"))
-          .join(standing.select(col("digest")).withColumn("known", lit(true)),
-            Seq("digest"), "left")
-        val clean = probed.filter(!col("__cand")).withColumn("known", lit(false))
-        maybe.select("doc_id", "digest", "len", "known")
-          .unionByName(clean.select("doc_id", "digest", "len", "known"))
-      }
-    tagged
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_chunks"),
-        sum(when(col("known"), 1L).otherwise(0L)).as("known_chunks"),
-        sum(when(col("known"), 0L).otherwise(col("len"))).as("novel_chars"))
-      .orderBy("doc_id")
-  }
-
-  def cdcIncrementalBloom(docs: DataFrame, splitId: Long,
-      k: Int = 8, divisor: Int = 64,
-      shardHexChars: Int = 1, bitsPerItem: Long = 10): DataFrame = {
-    val ch = chunkDigests(docs, k, divisor)
-    graft.engine.Caching.handoff(
-      cdcIncrementalBloomOn(ch, splitId, shardHexChars, bitsPerItem), ch)
-  }
-
-  /** Driver query: same cut and SAME oracle as [[cdcIncrementalQuery]]
-    * — the Bloom tier is a probe-cost change, not a semantics change
-    * (the [[incrementalBloomShardedQuery]] convention); runs off the
-    * digest asset like its unscreened twin.
-    */
-  def cdcIncrementalBloomQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val split = docs.agg(expr("max(doc_id) div 2").cast("long")).head().getLong(0)
-    cdcIncrementalBloomOn(corpusChunkDigests(spark, dir), split,
-      shardHexChars = 1, bitsPerItem = 10)
-  }
-
-  /** [[cdcIncrementalBloomOn]] with persisted filters — the CDC member
-    * of the on-disk tier ([[incrementalBloomShardedOnDisk]] documents
-    * the bit-identical contract). Runs off the digest asset like its
-    * twins; the screen probes `sidecarDir`'s files from the executors.
-    */
-  private def cdcIncrementalBloomDiskOn(ch: DataFrame, splitId: Long,
-      sidecarDir: String, shardHexChars: Int): DataFrame = {
-    require(shardHexChars >= 1 && shardHexChars <= 4,
-      s"shardHexChars must be in [1,4], got $shardHexChars")
-    val hp = substring(col("digest"), 1, shardHexChars)
-    val standing = ch.filter(col("doc_id") < splitId)
-      .select(col("digest"), hp.as("hp")).distinct()
-    val batch = ch.filter(col("doc_id") >= splitId).withColumn("hp", hp)
-    val probed = batch.withColumn("__cand",
-      sketch.persistedShardBloom(sidecarDir, col("hp"), xxhash64(col("digest"))))
-    val maybe = probed.filter(col("__cand"))
-      .join(standing.select(col("digest")).withColumn("known", lit(true)),
-        Seq("digest"), "left")
-    val clean = probed.filter(!col("__cand")).withColumn("known", lit(false))
-    maybe.select("doc_id", "digest", "len", "known")
-      .unionByName(clean.select("doc_id", "digest", "len", "known"))
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_chunks"),
-        sum(when(col("known"), 1L).otherwise(0L)).as("known_chunks"),
-        sum(when(col("known"), 0L).otherwise(col("len"))).as("novel_chars"))
-      .orderBy("doc_id")
-  }
-
-  /** Driver query: same cut and SAME oracle as
-    * [[cdcIncrementalBloomQuery]]; the standing chunk filters are a
-    * durable sidecar asset derived from the digest asset's standing
-    * slice.
-    */
-  def cdcIncrementalBloomDiskQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val split = docs.agg(expr("max(doc_id) div 2").cast("long")).head().getLong(0)
-    val ch = corpusChunkDigests(spark, dir)
-    val fp = graft.engine.AssetStore.corpusFingerprint(spark, dir, "documents.parquet")
-    val assetId =
-      s"shardblooms_cdc_s${split}_p1_b10_v${graft.engine.AssetStore.FormatVersion}_$fp"
-    val sidecars = shardBloomDirs.computeIfAbsent(assetId, _ =>
-      graft.engine.AssetStore.resolve(spark, assetId,
-        staging => {
-          shardBloomBuilds.incrementAndGet()
-          val standing = ch.filter(col("doc_id") < split)
-            .select(col("digest"), substring(col("digest"), 1, 1).as("hp"))
-            .distinct()
-          persistShardBloomFiles(standing, "digest", bitsPerItem = 10, staging)
-        }))
-    cdcIncrementalBloomDiskOn(ch, split, sidecars, shardHexChars = 1)
   }
 }

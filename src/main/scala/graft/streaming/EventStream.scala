@@ -883,13 +883,17 @@ object EventStream {
     * finalizer-transparent by construction: each finalizer's own
     * latest-row pick selects the same rows over the compacted table
     * (pinned in StreamingSpec). The window is keyed per user — parallel
-    * per-partition work, never a global sort.
+    * per-partition work, never a global sort. Rows tied on (key, seq) —
+    * a twin restarted from a fresh checkpoint into the same sink emits
+    * them — resolve by every remaining column ascending, so the kept
+    * row never depends on input order.
     */
   def compactUpdates(updates: DataFrame, keyCol: String, seqCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val tiebreak = updates.columns.toSeq.filterNot(Set(keyCol, seqCol)).map(col(_).asc)
     updates
       .withColumn("__rn", row_number().over(
-        Window.partitionBy(keyCol).orderBy(col(seqCol).desc)))
+        Window.partitionBy(keyCol).orderBy(col(seqCol).desc +: tiebreak: _*)))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }

@@ -32,7 +32,6 @@ object AssetBench {
       spark.conf.set("spark.graft.index.dir",
         java.nio.file.Files.createTempDirectory("graft_assetbench").toString)
       Dedup.dropInMemoryNgramTables()
-      Dedup.dropInMemoryShardBlooms()
       Similarity.dropInMemoryIndexes()
       TextAnalysis.dropInMemoryBpeTables()
       spark.catalog.clearCache()

@@ -800,46 +800,6 @@ class AssetStoreSpec extends SparkSpec {
     }
   }
 
-  test("shard-Bloom sidecar assets: disk-probed driver queries equal their literal twins; built once, loaded after") {
-    import graft.operators.Dedup
-    withRoot { root =>
-      val corpus = java.nio.file.Files.createTempDirectory("graft_bf_corpus").toString
-      Tables.documents(spark, sf).write.mode("overwrite")
-        .parquet(s"$corpus/documents.parquet")
-      Dedup.dropInMemoryShardBlooms()
-      Dedup.dropInMemoryNgramTables()
-      try {
-        val builds0 = Dedup.shardBloomBuilds.get()
-        val litInc = Dedup.incrementalBloomShardedQuery(spark, corpus).collect()
-        val diskInc = Dedup.incrementalBloomShardedDiskQuery(spark, corpus).collect()
-        assert(litInc.toSeq == diskInc.toSeq,
-          "disk-probed incremental verdicts must equal the literal tier")
-        val litCdc = Dedup.cdcIncrementalBloomQuery(spark, corpus).collect()
-        val diskCdc = Dedup.cdcIncrementalBloomDiskQuery(spark, corpus).collect()
-        assert(litCdc.toSeq == diskCdc.toSeq,
-          "disk-probed CDC accounting must equal the literal tier")
-        assert(Dedup.shardBloomBuilds.get() == builds0 + 2,
-          "one sidecar build per (family, corpus, cut)")
-        // fresh JVM: the committed sidecars are loaded, not rebuilt
-        Dedup.dropInMemoryShardBlooms()
-        Dedup.incrementalBloomShardedDiskQuery(spark, corpus).count()
-        Dedup.cdcIncrementalBloomDiskQuery(spark, corpus).count()
-        assert(Dedup.shardBloomBuilds.get() == builds0 + 2,
-          "a fresh JVM must load the committed sidecar assets")
-        val names = new java.io.File(root).listFiles().map(_.getName)
-          .filter(_.startsWith("shardblooms_")).sorted
-        assert(names.length == 2 &&
-          names.exists(_.startsWith("shardblooms_cdc_s")) &&
-          names.exists(_.startsWith("shardblooms_inc_s")),
-          s"two cut-addressed sidecar assets expected: ${names.toSeq}")
-      } finally {
-        Dedup.dropInMemoryShardBlooms()
-        Dedup.dropInMemoryNgramTables()
-        spark.catalog.clearCache()
-      }
-    }
-  }
-
   test("knn edge asset address is parameter-complete: changed LSH constants resolve a new asset") {
     import graft.operators.Similarity
     withRoot { root =>
@@ -886,7 +846,7 @@ class AssetStoreSpec extends SparkSpec {
       Files.list(Paths.get(s"$bTmp/b.parquet"))
         .filter(_.getFileName.toString.endsWith(".parquet"))
         .forEach(p => Files.move(p, Paths.get(s"$newDir/documents.parquet/part-batch-${p.getFileName}")))
-      Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
+      Dedup.dropInMemoryNgramTables()
       def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
         .sorted.toSeq
@@ -957,7 +917,7 @@ class AssetStoreSpec extends SparkSpec {
         assert(viaFb == canon(Dedup.corpusMinhashPairs(spark, edDir)),
           "the fallback must serve the rebuilt pair graph")
       } finally {
-        Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
+        Dedup.dropInMemoryNgramTables()
         spark.catalog.clearCache()
       }
     }
@@ -988,7 +948,7 @@ class AssetStoreSpec extends SparkSpec {
           .forEach(p => Files.move(p,
             Paths.get(s"${dirs(g)}/documents.parquet/part-batch-g$g-${p.getFileName}")))
       }
-      Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
+      Dedup.dropInMemoryNgramTables()
       def pairs(idx: org.apache.spark.sql.DataFrame) =
         Dedup.ngramJaccardPairsIndexed(idx, 0.2).collect()
           .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
@@ -1064,7 +1024,7 @@ class AssetStoreSpec extends SparkSpec {
         assert(viaFb == pairs(Dedup.corpusNgramIndex(spark, edDir)),
           "the fallback must serve the rebuilt index's answers")
       } finally {
-        Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
+        Dedup.dropInMemoryNgramTables()
         spark.catalog.clearCache()
       }
     }
@@ -1093,7 +1053,7 @@ class AssetStoreSpec extends SparkSpec {
           .forEach(p => Files.move(p,
             Paths.get(s"${dirs(g)}/documents.parquet/part-batch-g$g-${p.getFileName}")))
       }
-      Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
+      Dedup.dropInMemoryNgramTables()
       def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
         .sorted.toSeq
@@ -1126,7 +1086,7 @@ class AssetStoreSpec extends SparkSpec {
           "the chained increments must equal the from-scratch rebuild")
         assert(viaChain.nonEmpty, "a pairless fixture is vacuous")
       } finally {
-        Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
+        Dedup.dropInMemoryNgramTables()
         spark.catalog.clearCache()
       }
     }
@@ -1160,7 +1120,7 @@ class AssetStoreSpec extends SparkSpec {
       // corpus text, so cross pairs exist at any threshold
       val probe = docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-      Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
+      Dedup.dropInMemoryNgramTables()
       def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e6)))
         .sorted.toSeq
@@ -1181,7 +1141,7 @@ class AssetStoreSpec extends SparkSpec {
           s"gate answers diverged: ${viaInc.size} vs ${viaRebuild.size} pairs")
         assert(viaInc.nonEmpty, "a pairless probe is vacuous")
       } finally {
-        Dedup.dropInMemoryNgramTables(); Dedup.dropInMemoryShardBlooms()
+        Dedup.dropInMemoryNgramTables()
         spark.catalog.clearCache()
       }
     }

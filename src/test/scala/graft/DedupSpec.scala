@@ -11,132 +11,41 @@ import graft.functions.{sketch, text, vec}
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
-  test("incrementalBloom: bit-identical verdicts to the exact incremental path") {
+  test("incremental: dup_of_old, dup_of_new and kept verdicts; null text; an empty seen set marks nothing old") {
     // old half 1..9, new half 10..19 with: a dup of old (14), an
-    // intra-new dup pair (15, 16), and fresh docs
+    // intra-new dup pair (15, 16), a null-text doc (17) and fresh docs
     val docs = ((1 to 9).map(i => (i.toLong, s"old doc $i")) ++
       Seq((10L, "fresh ten"), (14L, "old doc 4"), (15L, "twin"), (16L, "twin"),
         (17L, null.asInstanceOf[String]), (19L, "fresh nineteen")))
       .toDF("doc_id", "text")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, String)].collect().sortBy(_._1).toSeq
-    val exact = canon(Dedup.incremental(docs, 10L))
-    val bloom = canon(Dedup.incrementalBloom(docs, 10L))
-    assert(bloom == exact, s"bloom path diverged:\n$bloom\nvs\n$exact")
-    assert(exact.toMap.apply(14L) == "dup_of_old" &&
-      exact.toMap.apply(16L) == "dup_of_new" && exact.toMap.apply(10L) == "kept")
-    // empty seen set: the bloom aggregate returns null; nothing is old
-    val cold = canon(Dedup.incrementalBloom(docs, 0L))
-    assert(cold.map(_._2).forall(v => v == "kept" || v == "dup_of_new"))
-    // tiny bloom (high FP rate): verdicts still exact — FPs are re-checked
-    val tiny = canon(Dedup.incrementalBloom(docs, 10L, estimatedItems = 4, numBits = 64))
-    assert(tiny == exact, "false positives must be resolved by the exact join")
+    def verdicts(split: Long) =
+      Dedup.incremental(docs, split).as[(Long, String)].collect().toMap
+    // a null text dedups as empty content: tagged, never dropped
+    assert(verdicts(10L) == Map(10L -> "kept", 14L -> "dup_of_old", 15L -> "kept",
+      16L -> "dup_of_new", 17L -> "kept", 19L -> "kept"))
+    // empty seen set: every doc is new, so nothing is old
+    val cold = verdicts(0L)
+    assert(cold.size == 15 && cold(14L) == "dup_of_new" && cold(16L) == "dup_of_new")
+    assert(cold.values.forall(v => v == "kept" || v == "dup_of_new"))
+    spark.catalog.clearCache()
   }
 
-  test("incrementalBloomSharded: verdict parity with the single-filter and exact paths (property)") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // small text pool -> guaranteed duplicates within and across the
-    // split; null/empty text exercise the coalesce'd digest
-    val textGen = Gen.oneOf(Seq(
-      "alpha", "beta", "gamma", "delta", "twin twin", "", null.asInstanceOf[String]))
-    val corpusGen = for {
-      n <- Gen.choose(0, 24)
-      texts <- Gen.listOfN(n, textGen)
-    } yield texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-    val p = Prop.forAll(corpusGen, Gen.choose(0L, 24L), Gen.choose(1, 2)) {
-      (rows, split, hexChars) =>
-        val docs = rows.toDF("doc_id", "text")
-        def canon(df: org.apache.spark.sql.DataFrame) =
-          df.as[(Long, String)].collect().sortBy(_._1).toSeq
-        val exact = canon(Dedup.incremental(docs, split))
-        val sharded = canon(Dedup.incrementalBloomSharded(docs, split, shardHexChars = hexChars))
-        spark.catalog.clearCache() // both paths handoff-persist
-        sharded == exact
-    }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), p)
-    assert(res.passed, res.status.toString)
-    // and once on the planted corpus for a direct single-filter cross-check
-    val docs = ((1 to 9).map(i => (i.toLong, s"old doc $i")) ++
-      Seq((10L, "fresh ten"), (14L, "old doc 4"), (15L, "twin"), (16L, "twin")))
-      .toDF("doc_id", "text")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(canon(Dedup.incrementalBloomSharded(docs, 10L)) ==
-      canon(Dedup.incrementalBloom(docs, 10L)))
-  }
-
-  test("cdcIncrementalBloom: bit-identical accounting to the exact cdcIncremental path (property)") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // texts long enough to chunk, with planted shared spans so known
-    // chunks exist across the split; short/empty/null texts exercise
-    // the sub-k edge
+  test("cdcIncremental: a batch doc wholly in the standing half is all known, a fresh doc all novel") {
     val span = "the quick brown fox jumps over the lazy dog again and again"
-    val textGen = Gen.oneOf(Seq(
-      "prefix " + span, span + " suffix", "wholly unrelated content here today",
-      span, "tiny", "", null.asInstanceOf[String]))
-    val corpusGen = for {
-      n <- Gen.choose(0, 16)
-      texts <- Gen.listOfN(n, textGen)
-    } yield texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-    val p = Prop.forAll(corpusGen, Gen.choose(0L, 16L), Gen.choose(1, 2)) {
-      (rows, split, hexChars) =>
-        val docs = rows.toDF("doc_id", "text")
-        def canon(df: org.apache.spark.sql.DataFrame) =
-          df.as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-        val exact = canon(Dedup.cdcIncremental(docs, split))
-        val bloom = canon(Dedup.cdcIncrementalBloom(docs, split, shardHexChars = hexChars))
-        spark.catalog.clearCache() // both paths handoff-persist
-        bloom == exact
-    }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), p)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("on-disk shard Bloom tier: bit-identical verdicts to the exact path, filters probed from sidecar files (property)") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    val textGen = Gen.oneOf(Seq(
-      "alpha", "beta", "gamma", "delta", "twin twin", "", null.asInstanceOf[String]))
-    val corpusGen = for {
-      n <- Gen.choose(0, 24)
-      texts <- Gen.listOfN(n, textGen)
-    } yield texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-    val p = Prop.forAll(corpusGen, Gen.choose(0L, 24L), Gen.choose(1, 2)) {
-      (rows, split, hexChars) =>
-        val docs = rows.toDF("doc_id", "text")
-        // build the sidecars exactly as the deployment would: from the
-        // standing slice, one .bf file per populated shard
-        val dir = java.nio.file.Files.createTempDirectory("graft_bfdisk").toString
-        val standing = docs.filter(col("doc_id") < split)
-          .select(md5(coalesce(col("text"), lit(""))).as("h"))
-          .withColumn("hp", substring(col("h"), 1, hexChars)).distinct()
-        Dedup.persistShardBloomFiles(standing, "h", 10L, dir)
-        def canon(df: org.apache.spark.sql.DataFrame) =
-          df.as[(Long, String)].collect().sortBy(_._1).toSeq
-        val exact = canon(Dedup.incremental(docs, split))
-        val disk = canon(Dedup.incrementalBloomShardedOnDisk(docs, split, dir, hexChars))
-        spark.catalog.clearCache() // both paths handoff-persist
-        disk == exact
-    }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), p)
-    assert(res.passed, res.status.toString)
-    // deterministic shape check: populated shards land as raw <hp>.bf
-    // files (the layout PersistedShardBloomProbe loads lazily), and an
-    // EMPTY sidecar dir means every probe is definitively novel
-    val docs = ((1 to 6).map(i => (i.toLong, s"seen doc $i")) ++
-      Seq((10L, "seen doc 3"), (11L, "fresh"))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bfdisk_det").toString
-    val standing = docs.filter(col("doc_id") < 10L)
-      .select(md5(coalesce(col("text"), lit(""))).as("h"))
-      .withColumn("hp", substring(col("h"), 1, 1)).distinct()
-    Dedup.persistShardBloomFiles(standing, "h", 10L, dir)
-    val files = new java.io.File(dir).listFiles().map(_.getName).filter(_.endsWith(".bf"))
-    assert(files.nonEmpty && files.forall(f => f.stripSuffix(".bf").matches("[0-9a-f]")),
-      s"expected per-shard .bf files, got ${files.toSeq}")
-    val empty = java.nio.file.Files.createTempDirectory("graft_bfdisk_empty").toString
-    val allNovel = Dedup.incrementalBloomShardedOnDisk(docs, 0L, empty, 1)
-      .as[(Long, String)].collect()
-    assert(allNovel.forall(r => r._2 == "kept" || r._2 == "dup_of_new"),
-      "no sidecars + no standing set must never claim dup_of_old")
+    // 18 distinct characters, none lower-case: no chunk can repeat
+    // inside it or occur in the standing half
+    val fresh = "ZQXJ0123456789KVWY"
+    val docs = Seq((1L, span), (2L, "wholly unrelated content here today"), (3L, "tiny"),
+      (10L, span), (12L, fresh), (13L, "tiny")).toDF("doc_id", "text")
+    val got = Dedup.cdcIncremental(docs, 10L)
+      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3, r._4)).toMap
+    assert(got.keySet == Set(10L, 12L, 13L))
+    val (n10, known10, novel10) = got(10L)
+    assert(n10 >= 1 && known10 == n10 && novel10 == 0L, got(10L))
+    val (n12, known12, novel12) = got(12L)
+    assert(n12 >= 1 && known12 == 0L && novel12 == fresh.length.toLong, got(12L))
+    // a text shorter than the window is one chunk
+    assert(got(13L) == ((1L, 1L, 0L)))
     spark.catalog.clearCache()
   }
 

@@ -135,7 +135,7 @@ class PlanAuditSpec extends SparkSpec {
     }
     Seq(
       "Similarity.ivfCoarseCentroids", "Similarity.collectQueries",
-      "Dedup.buildShardBlooms", "TextAnalysis.vocabCoverageTop",
+      "TextAnalysis.vocabCoverageTop",
       "GlobalRank.partitionCounts", "TextAnalysis.sourceCounts"
     ).foreach { site =>
       assert(obs.contains(site), s"expected budgeted site $site to fire; saw ${obs.keys}")

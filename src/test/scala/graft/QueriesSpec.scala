@@ -35,6 +35,35 @@ class QueriesSpec extends SparkSpec {
     assert(missing.isEmpty, s"queries without oracles: $missing")
   }
 
+  test("the five Bloom-named dedup queries return their exact twin's rows and plan no Bloom probe") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val twins = Seq(
+      "dedup_bloom" -> "dedup_incremental",
+      "dedup_bloom_sharded" -> "dedup_incremental",
+      "dedup_bloom_sharded_disk" -> "dedup_incremental",
+      "dedup_cdc_incremental_bloom" -> "dedup_cdc_incremental",
+      "dedup_cdc_incremental_bloom_disk" -> "dedup_cdc_incremental")
+    twins.foreach { case (name, twin) =>
+      val want = SparkEntry.queries(twin)(spark, sf).collect().toSeq
+      val df = SparkEntry.queries(name)(spark, sf)
+      assert(df.collect().toSeq == want, s"$name rows differ from $twin")
+      val probes = nodes(df.queryExecution.executedPlan)
+        .flatMap(_.expressions.flatMap(_.collect { case e => e.getClass.getSimpleName }))
+        .filter(c => c.endsWith("MightContain") || c.endsWith("BloomProbe"))
+      assert(probes.isEmpty, s"$name plans a Bloom probe: ${probes.distinct}")
+      assert(want.nonEmpty, s"$twin returned no rows")
+    }
+    spark.catalog.clearCache()
+  }
+
   test("split_assign: total coverage, content-hash determinism (dups share a split)") {
     import graft.operators.TextAnalysis
     import spark.implicits._
